@@ -145,6 +145,38 @@ def test_empty_edges(spark):
     assert connected_components(df).count() == 0
 
 
+def test_shuffle_partitions_auto(spark, monkeypatch):
+    """Some platforms accept spark.sql.shuffle.partitions='auto'. This
+    Spark rejects it on set, and a launch conf of 'auto' leaves the
+    session unusable, so the session's conf layer is made to hold it:
+    connected_components must size its loop without int('auto') and put
+    'auto' back afterwards."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.shuffle.partitions"
+    real_get, real_set = RuntimeConfig.get, RuntimeConfig.set
+    jvm_value = real_get(spark.conf, key)
+    held = {"value": "auto"}
+
+    def get(self, k, *args, **kwargs):
+        if k == key and held["value"] == "auto":
+            return "auto"
+        return real_get(self, k, *args, **kwargs)
+
+    def set_(self, k, v):
+        if k == key:
+            held["value"] = str(v)
+            if held["value"] == "auto":
+                v = jvm_value  # what this Spark can hold instead
+        real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    monkeypatch.setattr(RuntimeConfig, "set", set_)
+    _check(spark, [(1, 2), (2, 3), (7, 8)], cross_check=False)
+    assert held["value"] == "auto"
+    assert real_get(spark.conf, key) == jvm_value
+
+
 def test_nonconvergence_fails_loud(spark):
     df = spark.createDataFrame([(i, i + 1) for i in range(64)],
                                "src long, dst long")

@@ -111,6 +111,43 @@ def test_lineage_metrics_populated(spark, corpus_path, tmp_path):
     assert row["errors"] == truth
 
 
+def test_lineage_rows_written_without_python_scan(spark, tmp_path):
+    """Lineage rows enter Spark as an Arrow table (LocalTableScan), not as
+    a Python-RDD scan that starts a Python task; the JSON lines are the
+    ones the Python-list path wrote."""
+    import glob
+
+    from zpdfspark.spark.pipeline import _append_lineage, lineage_frame
+
+    def row(bucket, n_docs, wall):
+        return {"bucket": bucket, "n_docs": n_docs, "n_pages": 5,
+                "n_chars": 12345678901, "n_errors": 1, "n_encrypted": 0,
+                "objects_resolved": 40, "streams_decoded": 7,
+                "structured_pages": 2, "stream_pages": 3,
+                "geometric_pages": 0, "coverage_fallbacks": 0,
+                "wall_secs": wall, "status": "ok",
+                "finished_at": "2026-01-02T03:04:05Z"}
+
+    rows = [row(0, 3, 1.25), row(3, 6, 0.1 + 0.2)]
+    plan = lineage_frame(spark, rows)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    out = str(tmp_path / "_lineage")
+    _append_lineage(spark, rows, out)
+    parts = glob.glob(os.path.join(out, "part-*.json"))
+    assert len(parts) == 1
+    with open(parts[0]) as f:
+        got = f.read()
+    tail = ('"n_pages":5,"n_chars":12345678901,"n_errors":1,'
+            '"n_encrypted":0,"objects_resolved":40,"streams_decoded":7,'
+            '"structured_pages":2,"stream_pages":3,"geometric_pages":0,'
+            '"coverage_fallbacks":0,"wall_secs":%s,"status":"ok",'
+            '"finished_at":"2026-01-02T03:04:05Z"}\n')
+    assert got == ('{"bucket":0,"n_docs":3,' + tail % "1.25"
+                   + '{"bucket":3,"n_docs":6,' + tail % "0.30000000000000004")
+
+
 def test_maybe_salted_map_only_default(spark, corpus_path):
     """The 100 TB shape: by default no exchange touches the raw blobs —
     extraction runs on scan splits. Salt / big-doc isolation /

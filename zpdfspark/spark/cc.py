@@ -51,12 +51,15 @@ def _large_star(e: DataFrame) -> DataFrame:
     min(neighborhood(u) + {u}). Keeps the component connected while
     pointing big nodes at small ones; never increases edge count.
 
-    Output may contain duplicate (u, v) rows (bounded by the DIRECTED
-    edge count, so never more than 2x the canonical set): the r6
-    round-cost fix dropped the dedup shuffle here — _small_star's
-    groupBy collapses duplicates map-side and its final distinct
-    restores canonical form, so one large+small round pays one fewer
-    full exchange with an at-most-2x join fan inside small-star."""
+    Output may contain duplicate (u, v) rows, but never more rows than
+    the canonical input: the join keeps one row per symmetric edge
+    (u, v) with v > u, and each canonical edge appears in exactly one
+    such direction, so the output is at most 1x the canonical count.
+    The r6 round-cost fix dropped the dedup shuffle here —
+    _small_star's groupBy collapses duplicates map-side and its final
+    distinct restores canonical form, so one large+small round pays one
+    fewer full exchange, and small-star's input is never larger than
+    the canonical edge set."""
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # one explicit repartition on the group/join key: the aggregation
@@ -165,7 +168,10 @@ def connected_components(edges: DataFrame, src: str = "src",
         # adds edges), so the round-1 size holds for the whole loop.
         # Restored afterwards.
         spark.conf.set(_AQE, "false")
-        sess_par = int(old_sp) if old_sp else 200
+        try:
+            sess_par = int(old_sp)
+        except (TypeError, ValueError):  # unset, or non-numeric ('auto')
+            sess_par = 200
         spark.conf.set(_SP, str(max(1, min(n_e // 16_384 + 1, sess_par))))
         converged = False
         rounds = 0

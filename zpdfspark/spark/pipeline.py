@@ -173,6 +173,25 @@ def _lineage_rows_from_observation(obs: Observation, buckets: List[int],
     return rows
 
 
+def lineage_frame(spark: SparkSession, rows: List[dict]) -> DataFrame:
+    """Lineage rows as a DataFrame of LINEAGE_SCHEMA. The rows enter Spark
+    as an Arrow table, which plans a LocalTableScan; a Python list would
+    plan a Python-RDD scan and start a one-task Python stage just to write
+    at most n_buckets rows."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    return spark.createDataFrame(pa.Table.from_pylist(rows),
+                                 schema=StructType.fromDDL(LINEAGE_SCHEMA))
+
+
+def _append_lineage(spark: SparkSession, rows: List[dict],
+                    lineage_path: str) -> None:
+    """Append lineage rows to the sidecar as one JSON file."""
+    lineage_frame(spark, rows).coalesce(1).write.mode("append") \
+        .json(lineage_path)
+
+
 def _tune_scan_splits(spark: SparkSession, df: DataFrame,
                       partitions: int):
     """Size parquet scan splits so the source yields ≈``partitions``
@@ -479,8 +498,7 @@ def _run_buckets(spark, df, n_buckets, partitions, salt, resume, mode,
             "status": "ok",
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        spark.createDataFrame([lineage_row], schema=LINEAGE_SCHEMA) \
-            .coalesce(1).write.mode("append").json(lineage_path)
+        _append_lineage(spark, [lineage_row], lineage_path)
         summary["buckets_run"] += 1
         summary["docs"] += lineage_row["n_docs"]
         summary["errors"] += lineage_row["n_errors"]
@@ -556,8 +574,7 @@ def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, mode,
         summary["docs"] += row["n_docs"]
         summary["errors"] += row["n_errors"]
     if lineage_rows:
-        spark.createDataFrame(lineage_rows, schema=LINEAGE_SCHEMA) \
-            .coalesce(1).write.mode("append").json(lineage_path)
+        _append_lineage(spark, lineage_rows, lineage_path)
     return summary
 
 

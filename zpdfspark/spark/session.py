@@ -10,6 +10,20 @@ Tuning rationale (SURVEY.md §4):
   map-only pipeline and is sized explicitly via repartition.
 - local[N] in the sandbox; on a real cluster the same code ships via
   spark-submit --py-files (see zpdfspark/spark/pipeline.py docstring).
+- Python workers fork from ``zpdfspark.spark.worker_daemon`` instead of
+  ``pyspark.daemon``. Stock pyspark re-parses ``pyspark.zip``'s central
+  directory ~16 times per task (``importlib.invalidate_caches()`` in
+  ``worker.main``), about 0.3 s before every UDF starts; the daemon
+  memoizes that read and forks workers from a frozen heap with the
+  kernel already imported (see its module docstring).
+  Only ``get_spark`` names the daemon, and only when zpdfspark was
+  imported from a plain directory, which it also puts on the workers'
+  PYTHONPATH. Spark starts the daemon before any task, so with
+  ``--py-files`` alone (``pipeline.main``) the package reaches workers
+  too late and every task would fail with ``No module named
+  'zpdfspark'``. A cluster with zpdfspark installed on its executors
+  can pass ``--conf spark.python.daemon.module=zpdfspark.spark.worker_daemon``
+  itself.
 """
 
 from __future__ import annotations
@@ -17,6 +31,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+DAEMON_MODULE = "zpdfspark.spark.worker_daemon"
+
+
+def _package_root() -> str | None:
+    """The directory zpdfspark was imported from, or None when it came
+    from an archive such as a ``--py-files`` zip."""
+    import zpdfspark
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(zpdfspark.__file__)))
+    return root if os.path.isdir(root) else None
 
 
 def get_spark(
@@ -40,6 +65,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    root = _package_root()
+    if root is not None:
+        conf.setdefault("spark.python.daemon.module", DAEMON_MODULE)
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (root, conf.get("spark.executorEnv.PYTHONPATH")) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
