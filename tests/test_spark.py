@@ -57,6 +57,19 @@ def test_sql_udfs(spark, corpus_path):
     assert row["pages"] > 0
 
 
+def _drop_lineage_bucket(spark, out, bucket):
+    """Rewrite out/_lineage without ``bucket``'s row, as if the run had
+    died before recording it."""
+    lineage_dir = os.path.join(out, "_lineage")
+    lineage = spark.read.json(lineage_dir).where(F.col("bucket") != bucket)
+    rows = [r.asDict() for r in lineage.collect()]
+    shutil.rmtree(lineage_dir)
+    os.makedirs(lineage_dir)
+    with open(os.path.join(lineage_dir, "part-manual.json"), "w") as f:
+        for r in rows:
+            f.write(json.dumps(r) + "\n")
+
+
 def test_pipeline_resume(spark, corpus_path, tmp_path):
     from zpdfspark.spark.pipeline import completed_buckets, run_extraction_job
 
@@ -69,14 +82,7 @@ def test_pipeline_resume(spark, corpus_path, tmp_path):
 
     # simulate a crash: wipe one bucket's lineage and rerun — only the
     # missing bucket should re-execute (anti-join on completed lineage)
-    lineage_dir = os.path.join(out, "_lineage")
-    lineage = spark.read.json(lineage_dir).where(F.col("bucket") != 2)
-    rows = [r.asDict() for r in lineage.collect()]
-    shutil.rmtree(lineage_dir)
-    os.makedirs(lineage_dir)
-    with open(os.path.join(lineage_dir, "part-manual.json"), "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
+    _drop_lineage_bucket(spark, out, 2)
 
     s2 = run_extraction_job(spark, corpus_path, out, n_buckets=4, partitions=4)
     assert s2["buckets_skipped"] == 3
@@ -218,6 +224,140 @@ def test_pipeline_single_pass(spark, corpus_path, tmp_path):
     # a rerun (either mode) skips everything
     s2 = run_extraction_job(spark, corpus_path, out, n_buckets=4, partitions=4)
     assert s2["buckets_skipped"] == 4 and s2["buckets_run"] == 0
+
+
+def test_single_pass_partial_resume_keeps_session_conf(spark, corpus_path,
+                                                        tmp_path):
+    """A single-pass rerun after one bucket's lineage was lost overwrites
+    only that bucket=K partition (dynamic overwrite, set per write) and
+    leaves the session's partitionOverwriteMode as it found it."""
+    from zpdfspark.spark.pipeline import run_extraction_job
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    out = str(tmp_path / "outspr")
+    s1 = run_extraction_job(spark, corpus_path, out, n_buckets=4,
+                            partitions=4, single_pass=True)
+    assert s1["buckets_run"] == 4 and s1["docs"] == 150
+    assert spark.conf.get(key) == before
+
+    _drop_lineage_bucket(spark, out, 2)
+    s2 = run_extraction_job(spark, corpus_path, out, n_buckets=4,
+                            partitions=4, single_pass=True)
+    assert s2["buckets_skipped"] == 3 and s2["buckets_run"] == 1
+    assert spark.conf.get(key) == before
+    data = os.path.join(out, "data")
+    assert sorted(n for n in os.listdir(data) if n.startswith("bucket=")) \
+        == [f"bucket={b}" for b in range(4)]
+    result = spark.read.parquet(data)
+    assert result.count() == result.select("url").distinct().count() == 150
+
+
+def test_lineage_rollup_matches_groupby(spark):
+    """The observed per-bucket rollup equals a groupBy reference, with
+    null metric values, a boolean is_encrypted and a bucket that has no
+    rows (dropped, or all zeros with keep_empty)."""
+    from zpdfspark.spark.pipeline import (_LINEAGE_SUMS,
+                                          _lineage_observation,
+                                          _lineage_rows_from_observation)
+
+    cols = [c for _, c in _LINEAGE_SUMS]
+    schema = "bucket int, " + ", ".join(
+        f"{c} {'boolean' if c == 'is_encrypted' else 'long'}" for c in cols)
+
+    def rec(bucket, i):
+        return tuple([bucket] + [
+            (i % 2 == 0) if c == "is_encrypted"
+            else (None if (i + k) % 3 == 0 else 10 ** k + i)
+            for k, c in enumerate(cols)])
+
+    data = [rec(0, i) for i in range(5)] + [rec(2, i) for i in range(7)] \
+        + [rec(3, 0)]
+    df = spark.createDataFrame(data, schema)
+    obs, exprs = _lineage_observation([0, 1, 2, 3])
+    df.observe(obs, *exprs).collect()
+    got = _lineage_rows_from_observation(obs, [0, 1, 2, 3], 1.5, "t")
+
+    ref = df.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        *[F.sum(F.col(c).cast("long")).alias(c) for c in cols])
+    want = []
+    for r in sorted(ref.collect(), key=lambda r: r["bucket"]):
+        row = {"bucket": r["bucket"], "n_docs": r["n_docs"]}
+        row.update((f, r[c] or 0) for f, c in _LINEAGE_SUMS)
+        row.update(wall_secs=1.5, status="ok", finished_at="t")
+        want.append(row)
+    assert [r["bucket"] for r in want] == [0, 2, 3]
+    assert got == want
+
+    obs1, exprs1 = _lineage_observation([1])
+    df.observe(obs1, *exprs1).collect()
+    empty = _lineage_rows_from_observation(obs1, [1], 0.5, "t",
+                                           keep_empty=True)
+    assert empty == [{"bucket": 1, "n_docs": 0,
+                      **{f: 0 for f, _ in _LINEAGE_SUMS},
+                      "wall_secs": 0.5, "status": "ok", "finished_at": "t"}]
+
+
+def test_lineage_observation_gateway_commands(spark, monkeypatch):
+    """Building the rollup costs O(n_buckets) gateway round trips: at
+    most 2 py4j commands per expression, counted at 64 buckets."""
+    from zpdfspark.spark.pipeline import _LINEAGE_SUMS, _lineage_observation
+
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    _, exprs = _lineage_observation(list(range(64)))
+    monkeypatch.undo()
+    assert len(exprs) == 64 * (1 + len(_LINEAGE_SUMS))
+    assert len(sent) <= 2 * len(exprs), len(sent)
+
+
+def test_completed_buckets_missing_path_skips_read(spark, tmp_path,
+                                                   monkeypatch):
+    """A fresh output has no lineage directory: completed_buckets answers
+    from the file system without asking Spark to read a missing path."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from zpdfspark.spark.pipeline import completed_buckets
+
+    reads = []
+
+    def no_read(*args, **kwargs):
+        reads.append(args)
+        raise AssertionError("DataFrameReader.json called")
+
+    monkeypatch.setattr(DataFrameReader, "json", no_read)
+    assert completed_buckets(spark, str(tmp_path / "none" / "_lineage")) \
+        == []
+    assert reads == []
+
+
+def test_warc_fused_run_builds_no_document_plan(spark, tmp_path,
+                                                monkeypatch):
+    """The fused single-pass WARC run sizes its splits from the
+    binaryFile relation and never builds the two-stage document plan."""
+    from zpdfspark.fixtures import write_warc_fixture
+    from zpdfspark.spark import warc_source
+    from zpdfspark.spark.pipeline import run_extraction_job
+
+    glob, _ = write_warc_fixture(str(tmp_path / "warc"), 40, seed=17)
+
+    def no_plan(*args, **kwargs):
+        raise AssertionError("warc_documents called on the fused path")
+
+    monkeypatch.setattr(warc_source, "warc_documents", no_plan)
+    out = str(tmp_path / "out")
+    s = run_extraction_job(spark, glob, out, input_format="warc",
+                           n_buckets=2, partitions=4, single_pass=True)
+    assert s["docs"] == 40 and s["buckets_run"] == 2
+    assert spark.read.parquet(os.path.join(out, "data")).count() == 40
 
 
 def test_driver_contract_shape():

@@ -62,12 +62,22 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 # script (run as __main__ with zpdfspark shipped via --py-files)
 from zpdfspark.spark.udfs import EXTRACT_SCHEMA, extract_arrow_batches
 
+# (lineage field, extraction column it sums per bucket); n_docs counts rows
+_LINEAGE_SUMS = (
+    ("n_pages", "n_pages"), ("n_chars", "n_chars"),
+    ("n_errors", "error_count"), ("n_encrypted", "is_encrypted"),
+    ("objects_resolved", "objects_resolved"),
+    ("streams_decoded", "streams_decoded"),
+    ("structured_pages", "structured_pages"),
+    ("stream_pages", "stream_pages"),
+    ("geometric_pages", "geometric_pages"),
+    ("coverage_fallbacks", "coverage_fallbacks"),
+)
+
 LINEAGE_SCHEMA = (
-    "bucket int, n_docs long, n_pages long, n_chars long, n_errors long, "
-    "n_encrypted long, objects_resolved long, streams_decoded long, "
-    "structured_pages long, stream_pages long, "
-    "geometric_pages long, coverage_fallbacks long, "
-    "wall_secs double, status string, finished_at string"
+    "bucket int, n_docs long, "
+    + "".join(f"{field} long, " for field, _ in _LINEAGE_SUMS)
+    + "wall_secs double, status string, finished_at string"
 )
 
 
@@ -121,55 +131,50 @@ def salted(df: DataFrame, partitions: int, salt: int = 0,
     return small.unionByName(big)
 
 
-_METRIC_COLS = ("n_pages", "n_chars", "error_count", "is_encrypted",
-                "objects_resolved", "streams_decoded",
-                "structured_pages", "stream_pages", "geometric_pages",
-                "coverage_fallbacks")
-
-
 def _lineage_observation(buckets: List[int]):
     """Observation that rolls up the per-bucket lineage metrics DURING
     the write job — the metrics ride along with the one pass over the
     data, so lineage costs zero extra reads of input or output (at
     100 TB, re-scanning the output just to count it is a full extra
-    job). One conditional sum per (bucket, metric)."""
+    job). One SQL-text aggregate per (bucket, metric), each parsed by
+    one call of the JVM ``functions.expr``, looked up once (``F.expr``
+    re-resolves it per call: three gateway commands instead of one), so
+    building the Observation costs the driver O(n_buckets) py4j gateway
+    commands."""
+    from pyspark import SparkContext
+    from pyspark.sql import Column
+
+    parse = getattr(SparkContext._active_spark_context._jvm,
+                    "org.apache.spark.sql.functions").expr
     exprs = []
     for b in buckets:
-        cond = F.col("bucket") == b
-        exprs.append(F.sum(cond.cast("long")).alias(f"b{b}_n_docs"))
-        for m in _METRIC_COLS:
-            exprs.append(F.sum(F.when(cond, F.col(m).cast("long")))
-                         .alias(f"b{b}_{m}"))
+        exprs.append(Column(parse(
+            f"sum(cast(bucket = {b} as bigint)) as b{b}_n_docs")))
+        for _, col in _LINEAGE_SUMS:
+            exprs.append(Column(parse(
+                f"sum(if(bucket = {b}, cast({col} as bigint), null))"
+                f" as b{b}_{col}")))
     obs = Observation("lineage")
     return obs, exprs
 
 
 def _lineage_rows_from_observation(obs: Observation, buckets: List[int],
-                                   wall: float, finished: str) -> List[dict]:
+                                   wall: float, finished: str,
+                                   keep_empty: bool = False) -> List[dict]:
+    """One LINEAGE_SCHEMA row per bucket, in schema order (lineage_frame
+    maps the dict keys to columns by position). Buckets that saw no
+    document are dropped unless ``keep_empty``."""
     got = obs.get
     rows = []
     for b in buckets:
         n_docs = got.get(f"b{b}_n_docs") or 0
-        if n_docs == 0:
+        if n_docs == 0 and not keep_empty:
             continue
-        g = lambda m: int(got.get(f"b{b}_{m}") or 0)
-        rows.append({
-            "bucket": b,
-            "n_docs": n_docs,
-            "n_pages": g("n_pages"),
-            "n_chars": g("n_chars"),
-            "n_errors": g("error_count"),
-            "n_encrypted": g("is_encrypted"),
-            "objects_resolved": g("objects_resolved"),
-            "streams_decoded": g("streams_decoded"),
-            "structured_pages": g("structured_pages"),
-            "stream_pages": g("stream_pages"),
-            "geometric_pages": g("geometric_pages"),
-            "coverage_fallbacks": g("coverage_fallbacks"),
-            "wall_secs": wall,
-            "status": "ok",
-            "finished_at": finished,
-        })
+        row = {"bucket": b, "n_docs": n_docs}
+        for field, col in _LINEAGE_SUMS:
+            row[field] = int(got.get(f"b{b}_{col}") or 0)
+        row.update(wall_secs=wall, status="ok", finished_at=finished)
+        rows.append(row)
     return rows
 
 
@@ -308,6 +313,13 @@ def _validate_bucket_domain(spark: SparkSession, df, input_path: str,
 
 
 def completed_buckets(spark: SparkSession, lineage_path: str) -> List[int]:
+    """Buckets with an ``ok`` lineage row under the ``lineage_path``
+    directory. A missing directory (a fresh output) is checked with the
+    Hadoop FileSystem first: reading it would fail with PATH_NOT_FOUND
+    and log the JVM stack traces on every first run."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(lineage_path)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+        return []
     try:
         lineage = spark.read.json(lineage_path)
     except Exception:
@@ -366,67 +378,41 @@ def run_extraction_job(
     lineage_path = os.path.join(output_path, "_lineage")
     data_path = os.path.join(output_path, "data")
 
-    prebuilt_result = None
-    if input_format == "iceberg":
-        df = spark.read.format("iceberg").load(input_path)
-    elif input_format == "warc":
-        # Common-Crawl-style ingestion: extraction straight off the
-        # .warc.gz archives (file = unit of parallelism; records parsed
-        # in-task, warc_source.py)
-        from zpdfspark.spark.warc_source import (warc_documents,
-                                                 warc_extract_arrow_batches)
-        if single_pass and not since and not until:
-            # fused shape (the scale path): parse + extract in ONE
-            # Python task, blobs never round-trip through the JVM
-            # between stages (1.6x end-to-end on the 60k heavy soak);
-            # bucket re-derived from url post-extraction exactly like
-            # the parquet single-pass. Resume still works (pending
-            # buckets filter post-extraction) but re-parses completed
-            # archives — the two-stage form below is the resume-heavy
-            # alternative.
-            binary = spark.read.format("binaryFile").load(input_path)
-            prebuilt_result = binary.select("path", "content").mapInArrow(
-                warc_extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes,
-                                           http_ok_only=http_ok_only),
-                EXTRACT_SCHEMA,
-            ).withColumn("bucket", bucket_of(F.col("url"), n_buckets))
-        df = warc_documents(spark, input_path, http_ok_only=http_ok_only)
+    if input_format == "warc" and single_pass and not since and not until:
+        # fused shape (the scale path): parse + extract in ONE Python
+        # task, blobs never round-trip through the JVM between stages
+        # (1.6x end-to-end on the 60k heavy soak); bucket re-derived from
+        # url post-extraction exactly like the parquet single-pass.
+        # Resume still works (pending buckets filter post-extraction) but
+        # re-parses completed archives — the two-stage form
+        # (_document_frame) is the resume-heavy alternative.
+        from zpdfspark.spark.warc_source import warc_extract_arrow_batches
+        binary = spark.read.format("binaryFile").load(input_path)
+        prebuilt_result = binary.select("path", "content").mapInArrow(
+            warc_extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes,
+                                       http_ok_only=http_ok_only),
+            EXTRACT_SCHEMA,
+        ).withColumn("bucket", bucket_of(F.col("url"), n_buckets))
+        # split sizing reads only this binaryFile relation's file listing
+        # (the archives the two-stage reader would list too), so no
+        # per-record document plan is built on this path
+        df, scan = None, binary
     else:
-        df = spark.read.parquet(input_path)
-    # partition-prunable time predicate (Iceberg warc_ts buckets at scale)
-    if since:
-        df = df.where(F.col("warc_ts") >= F.lit(since))
-    if until:
-        df = df.where(F.col("warc_ts") < F.lit(until))
-    input_bucketed = "bucket" in df.columns
-    if input_bucketed:
-        # the input table is ALREADY laid out by the resume bucket (a
-        # `bucket=K` partition column, written by write_bucketed_input or
-        # an Iceberg bucket transform): trust it — the per-bucket loop's
-        # `bucket = K` filter then PRUNES the scan to one partition
-        # directory (zero read amplification; pipeline docstring). The
-        # column must have been produced by the same bucket_of()
-        # expression with the same n_buckets — VALIDATE the domain, or a
-        # mismatched --buckets (or an unrelated column that happens to be
-        # named 'bucket') would silently skip rows forever: todo only
-        # covers range(n_buckets), so bucket values outside it are never
-        # selected by any scan while the job still reports success.
-        df = df.select("url", "html", F.col("bucket").cast("int").alias("bucket"))
-        _validate_bucket_domain(spark, df, input_path, input_format,
-                                n_buckets)
-        if single_pass:
+        prebuilt_result = None
+        df, input_bucketed = _document_frame(spark, input_path, input_format,
+                                             n_buckets, since, until,
+                                             http_ok_only)
+        if input_bucketed and single_pass:
             # single-pass exists FOR unbucketed inputs (one scan instead
             # of n_buckets scans); with a bucketed layout each per-bucket
             # scan is already pruned, and the per-bucket path's
             # bucket-granular idempotent overwrite is strictly better
             single_pass = False
-    else:
-        df = df.select("url", "html").withColumn(
-            "bucket", bucket_of(F.col("url"), n_buckets))
+        scan = df
     prev_split_conf = None
     if not wants_blob_shuffle(repartition_blobs, salt, big_doc_bytes):
         # map-only path: scan splits are the work units — size them
-        prev_split_conf = _tune_scan_splits(spark, df, partitions)
+        prev_split_conf = _tune_scan_splits(spark, scan, partitions)
 
     try:
         return _run_buckets(spark, df, n_buckets, partitions, salt, resume,
@@ -438,6 +424,46 @@ def run_extraction_job(
         if prev_split_conf is not None:
             spark.conf.set("spark.sql.files.maxPartitionBytes",
                            prev_split_conf)
+
+
+def _document_frame(spark: SparkSession, input_path: str, input_format: str,
+                    n_buckets: int, since: Optional[str],
+                    until: Optional[str], http_ok_only: bool):
+    """The (url, html, bucket) frame the per-bucket and two-stage
+    single-pass paths extract from, and whether the input already carried
+    the bucket column."""
+    if input_format == "iceberg":
+        df = spark.read.format("iceberg").load(input_path)
+    elif input_format == "warc":
+        # Common-Crawl-style ingestion: extraction straight off the
+        # .warc.gz archives (file = unit of parallelism; records parsed
+        # in-task, warc_source.py)
+        from zpdfspark.spark.warc_source import warc_documents
+        df = warc_documents(spark, input_path, http_ok_only=http_ok_only)
+    else:
+        df = spark.read.parquet(input_path)
+    # partition-prunable time predicate (Iceberg warc_ts buckets at scale)
+    if since:
+        df = df.where(F.col("warc_ts") >= F.lit(since))
+    if until:
+        df = df.where(F.col("warc_ts") < F.lit(until))
+    if "bucket" not in df.columns:
+        return df.select("url", "html").withColumn(
+            "bucket", bucket_of(F.col("url"), n_buckets)), False
+    # the input table is ALREADY laid out by the resume bucket (a
+    # `bucket=K` partition column, written by write_bucketed_input or
+    # an Iceberg bucket transform): trust it — the per-bucket loop's
+    # `bucket = K` filter then PRUNES the scan to one partition
+    # directory (zero read amplification; pipeline docstring). The
+    # column must have been produced by the same bucket_of()
+    # expression with the same n_buckets — VALIDATE the domain, or a
+    # mismatched --buckets (or an unrelated column that happens to be
+    # named 'bucket') would silently skip rows forever: todo only
+    # covers range(n_buckets), so bucket values outside it are never
+    # selected by any scan while the job still reports success.
+    df = df.select("url", "html", F.col("bucket").cast("int").alias("bucket"))
+    _validate_bucket_domain(spark, df, input_path, input_format, n_buckets)
+    return df, True
 
 
 def _run_buckets(spark, df, n_buckets, partitions, salt, resume, mode,
@@ -486,18 +512,10 @@ def _run_buckets(spark, df, n_buckets, partitions, salt, resume, mode,
         obs, exprs = _lineage_observation([bucket])
         result.withColumn("bucket", F.lit(bucket)).observe(obs, *exprs) \
             .drop("bucket").write.mode("overwrite").parquet(out_dir)
-        rows = _lineage_rows_from_observation(
+        lineage_row = _lineage_rows_from_observation(
             obs, [bucket], time.time() - t0,
-            time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()))
-        lineage_row = rows[0] if rows else {
-            "bucket": bucket, "n_docs": 0, "n_pages": 0, "n_chars": 0,
-            "n_errors": 0, "n_encrypted": 0, "objects_resolved": 0,
-            "streams_decoded": 0, "structured_pages": 0,
-            "stream_pages": 0, "geometric_pages": 0,
-            "coverage_fallbacks": 0, "wall_secs": time.time() - t0,
-            "status": "ok",
-            "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
+            time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            keep_empty=True)[0]
         _append_lineage(spark, [lineage_row], lineage_path)
         summary["buckets_run"] += 1
         summary["docs"] += lineage_row["n_docs"]
@@ -556,15 +574,10 @@ def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, mode,
     # failed) re-extracts exactly the pending buckets and OVERWRITES
     # those bucket=K partitions, so the resume is idempotent like the
     # per-bucket path; an append would duplicate the partial rows.
-    prev_overwrite_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        result.observe(obs, *exprs) \
-            .write.mode("overwrite").partitionBy("bucket").parquet(data_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       prev_overwrite_mode)
+    # Set per write: library code never changes the session conf.
+    result.observe(obs, *exprs).write.mode("overwrite") \
+        .option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("bucket").parquet(data_path)
 
     wall = time.time() - t0
     finished = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
