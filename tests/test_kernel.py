@@ -561,12 +561,14 @@ def test_tiff_predictor():
 
 
 def test_oversized_doc_guard():
-    from zpdfspark.spark.udfs import extract_batches
-    import pandas as pd
+    import pyarrow as pa
+    from zpdfspark.spark.udfs import extract_arrow_batches
     pdf, _ = fixtures.minimal("Big")
-    fn = extract_batches("accuracy", max_doc_bytes=10)
-    batches = iter([pd.DataFrame({"url": ["u1"], "html": [pdf]})])
-    out = next(fn(batches))
+    fn = extract_arrow_batches("accuracy", max_doc_bytes=10)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["u1"], pa.string()), pa.array([pdf], pa.binary())],
+        names=["url", "html"])
+    out = next(fn(iter([batch]))).to_pydict()
     assert out["extracted_text"][0] == ""
     assert out["error_count"][0] == 1
     assert out["errors"][0][0]["kind"] == "oversized"
@@ -1431,6 +1433,46 @@ class TestWarc:
         from zpdfspark.kernel import warc as W
         with _pytest.raises(W.WarcError):
             list(W.iter_warc_records(b"HTTP/1.1 200 OK\r\n\r\nnope"))
+
+    def test_iter_responses_keeps_document_records_only(self):
+        """iter_responses is the one document-record rule: `response`
+        records without a parse error that carry a target URI, and with
+        http_ok_only only HTTP 200 (or envelope-less) ones. The rule holds
+        for gzip and plain archives; a non-WARC blob yields nothing."""
+        import gzip
+
+        from zpdfspark.kernel import warc as W
+        d = "2025-01-01T00:00:00Z"
+        recs = [
+            ("http://e.com/a", d, b"", "text/plain", "request"),
+            ("http://e.com/a", d, b"BODY-A", "text/html"),
+            ("http://e.com/a", d, b"k: v", "application/warc-fields",
+             "metadata"),
+            ("http://e.com/a", d, b"", "message/http", "revisit",
+             {"WARC-Refers-To-Target-URI": "http://e.com/a"}),
+            ("http://e.com/gone", d, b"BODY-404", "text/html", "response",
+             {"_http_status": "404 Not Found"}),
+            ("http://e.com/bad", d, b"BODY-BAD", "text/html"),
+            ("", d, b"BODY-NO-URI", "text/html"),
+            ("http://e.com/z", d, b"BODY-Z", "text/html"),
+        ]
+        plain = [W.build_warc([r], per_record_gzip=False) for r in recs]
+        # a bad WARC Content-Length on the "bad" response: an error record
+        plain[5] = plain[5].replace(b"msgtype=response\r\nContent-Length",
+                                    b"msgtype=response\r\nContent-Oopsss")
+        for gz in (True, False):
+            raw = b"".join(gzip.compress(p, mtime=0) if gz else p
+                           for p in plain)
+            assert sum(1 for r in W.iter_warc_records(raw) if r.error) == 1
+            got = [(r.target_uri, r.body) for r in W.iter_responses(raw)]
+            assert got == [("http://e.com/a", b"BODY-A"),
+                           ("http://e.com/gone", b"BODY-404"),
+                           ("http://e.com/z", b"BODY-Z")], gz
+            ok = [r.target_uri for r in W.iter_responses(raw, True)]
+            assert ok == ["http://e.com/a", "http://e.com/z"], gz
+        for blob in (b"not a warc", b"\x1f\x8bnot gzip", b""):
+            assert list(W.iter_responses(blob)) == []
+            assert list(W.iter_responses(blob, http_ok_only=True)) == []
 
     def test_mixed_record_types_and_revisit_pointers(self):
         """Real CC archives interleave request/metadata/revisit records

@@ -273,6 +273,41 @@ def test_streaming_warc_ingest(spark, tmp_path):
     assert checked > 20
 
 
+def test_streaming_warc_ingest_http_ok_only_matches_fused_batch(spark,
+                                                               tmp_path):
+    """http_ok_only on the streaming ingest drops the fixture's 301/404
+    captures exactly as the fused single-pass batch job does: the same
+    url set, every url once, and byte-identical extracted texts."""
+    from zpdfspark.fixtures import write_warc_fixture
+    from zpdfspark.spark.pipeline import run_extraction_job
+    from zpdfspark.spark.streaming import start_streaming_warc_ingest
+
+    drop = str(tmp_path / "drop")
+    glob, expected = write_warc_fixture(drop, 70, seed=33)
+    exp = spark.read.parquet(expected)
+    ok_urls = {r["url"] for r in
+               exp.where("http_status = 200").select("url").collect()}
+    assert 0 < len(ok_urls) < exp.count()
+
+    out = str(tmp_path / "out")
+    q = start_streaming_warc_ingest(spark, drop, out, str(tmp_path / "ckpt"),
+                                    http_ok_only=True)
+    q.awaitTermination(120)
+    rows = spark.read.parquet(out + "/data").select(
+        "url", "extracted_text").collect()
+    streamed = {r["url"]: r["extracted_text"] for r in rows}
+    assert len(rows) == len(streamed)
+
+    batch_out = str(tmp_path / "batch")
+    run_extraction_job(spark, glob, batch_out, input_format="warc",
+                       n_buckets=2, single_pass=True, http_ok_only=True)
+    batch = {r["url"]: r["extracted_text"] for r in
+             spark.read.parquet(batch_out + "/data")
+             .select("url", "extracted_text").collect()}
+    assert set(streamed) == set(batch) == ok_urls
+    assert streamed == batch
+
+
 def test_streaming_curation_split_matches_batch_predicate(spark, tmp_path):
     """The streaming curation twin must (a) partition extraction output
     into keep/reject exactly as the batch gopher predicate would, (b)

@@ -212,6 +212,30 @@ def iter_warc_records(raw: bytes) -> Iterator[WarcRecord]:
         yield rec
 
 
+def iter_responses(raw: bytes, http_ok_only: bool = False
+                   ) -> Iterator[WarcRecord]:
+    """The records every document consumer keeps: `response` records
+    without a parse error that carry a target URI. Real crawls
+    interleave request/metadata records per capture, all with
+    WARC-Target-URI; keeping them would emit ~3x rows with raw
+    request/metadata bytes as bodies. http_ok_only also drops
+    responses whose HTTP envelope carries a non-200 status (redirect
+    stubs, error pages); envelope-less payloads (no status) are kept.
+    A stream that is not WARC at all yields nothing: iter_warc_records
+    raises WarcError only before its first record, so the archive is
+    skipped whole."""
+    try:
+        for rec in iter_warc_records(raw):
+            if rec.error or not rec.target_uri \
+                    or rec.warc_type != "response":
+                continue
+            if http_ok_only and rec.http_status not in (None, 200):
+                continue
+            yield rec
+    except WarcError:
+        return
+
+
 def iter_warc_records_spans(raw: bytes) -> Iterator[Tuple[WarcRecord,
                                                           int, int]]:
     """Yield (record, offset, length) with offsets into the STORED

@@ -3,7 +3,6 @@ the scale pipeline (partitioning, skew salting, lineage, checkpoint/resume)."""
 
 from .udfs import (  # noqa: F401
     EXTRACT_SCHEMA,
-    extract_batches,
     extract_dataframe,
     register_sql_udfs,
 )

@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 
 # absolute import so this file also works as a spark-submit primary
 # script (run as __main__ with zpdfspark shipped via --py-files)
+from zpdfspark.spark.session import hadoop_path_exists
 from zpdfspark.spark.udfs import EXTRACT_SCHEMA, extract_arrow_batches
 
 # (lineage field, extraction column it sums per bucket); n_docs counts rows
@@ -317,8 +318,7 @@ def completed_buckets(spark: SparkSession, lineage_path: str) -> List[int]:
     directory. A missing directory (a fresh output) is checked with the
     Hadoop FileSystem first: reading it would fail with PATH_NOT_FOUND
     and log the JVM stack traces on every first run."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(lineage_path)
-    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+    if not hadoop_path_exists(spark, lineage_path):
         return []
     try:
         lineage = spark.read.json(lineage_path)

@@ -44,6 +44,14 @@ def _package_root() -> str | None:
     return root if os.path.isdir(root) else None
 
 
+def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence check through the Hadoop FileSystem API, so it works on
+    whatever filesystem the path lives on (local, HDFS, or an object
+    store behind an FS connector)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 def get_spark(
     cores: int | str = "*",
     app_name: str = "zpdfspark",

@@ -4,7 +4,7 @@ page table.
 The reference is purely batch (SURVEY.md §2.12: no streaming concepts
 exist in zpdf), so this layer is additive Spark-native capability: a
 file-source stream of (url, warc_ts, html, ...) parquet drops is run
-through the SAME mapInPandas extraction kernel inside foreachBatch and
+through the SAME mapInArrow extraction kernel inside foreachBatch and
 written to the output table. End-to-end exactly-once comes from two
 halves:
 
@@ -31,19 +31,43 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from zpdfspark.spark.session import hadoop_path_exists
 from zpdfspark.spark.udfs import EXTRACT_SCHEMA, extract_arrow_batches
+from zpdfspark.spark.warc_source import (CDX_SCHEMA, cdx_arrow_batches,
+                                         warc_extract_arrow_batches)
 
 INPUT_SCHEMA_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FS API so the idempotence
-    marker works on whatever filesystem the output lives on (local in
-    the sandbox, HDFS/object store behind an FS connector at scale)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
+def _warc_drop_stream(spark: SparkSession, input_dir: str,
+                      max_files_per_trigger: Optional[int]) -> DataFrame:
+    """readStream over a .warc.gz drop directory: one (path, content)
+    row per archive, the unit of streaming progress."""
+    return (
+        spark.readStream.format("binaryFile")
+        # streaming sources require an explicit schema; binaryFile's is
+        # fixed by the format
+        .schema("path string, modificationTime timestamp, "
+                "length long, content binary")
+        .option("pathGlobFilter", "*.warc.gz")
+        .option("recursiveFileLookup", "true")  # crawls drop nested dirs
+        .option("maxFilesPerTrigger", str(max_files_per_trigger or 8))
+        .load(input_dir)
+        .select("path", "content")
+    )
+
+
+def _start(stream: DataFrame, batch_fn, checkpoint_dir: str,
+           available_now: bool):
+    """Start ``stream`` through the foreachBatch body ``batch_fn`` with
+    its offsets checkpointed under ``checkpoint_dir``. With
+    available_now the query drains everything currently present and
+    stops (test/batch-catchup mode); otherwise it runs continuously."""
+    writer = stream.writeStream.foreachBatch(batch_fn).option(
+        "checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def _idempotent_batch_writer(spark: SparkSession, output_dir: str):
@@ -56,7 +80,7 @@ def _idempotent_batch_writer(spark: SparkSession, output_dir: str):
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         target = os.path.join(data_dir, f"batch_id={batch_id}")
-        if _hadoop_path_exists(spark, os.path.join(target, "_SUCCESS")):
+        if hadoop_path_exists(spark, os.path.join(target, "_SUCCESS")):
             return  # replayed batch after restart: already committed
         batch_df.write.mode("overwrite").parquet(target)
 
@@ -91,12 +115,7 @@ def start_streaming_extraction(
         )
         sink(extracted, batch_id)
 
-    writer = reader.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(reader, process_batch, checkpoint_dir, available_now)
 
 
 def gopher_keep_expr(text_col: str = "extracted_text"):
@@ -159,12 +178,7 @@ def start_streaming_curation(
         finally:
             extracted.unpersist()
 
-    writer = reader.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(reader, process_batch, checkpoint_dir, available_now)
 
 
 def start_streaming_warc_ingest(
@@ -185,58 +199,18 @@ def start_streaming_warc_ingest(
     offsets checkpointed so each archive is processed exactly once
     across restarts. The unit of streaming progress is the WARC FILE
     (the CC per-record-gzip layout is not block-splittable), matching
-    the batch ingestion's parallelism shape.
+    the batch ingestion's parallelism shape. Each micro-batch runs the
+    fused parse+extract kernel (warc_source.warc_extract_arrow_batches)
+    in one Python stage, the kernel the single-pass batch job runs.
     """
-    reader = (
-        spark.readStream.format("binaryFile")
-        # streaming sources require an explicit schema; binaryFile's is
-        # fixed by the format
-        .schema("path string, modificationTime timestamp, "
-                "length long, content binary")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")  # crawls drop nested dirs
-        .option("maxFilesPerTrigger", str(max_files_per_trigger or 8))
-        .load(input_dir)
-    )
     sink = _idempotent_batch_writer(spark, output_dir)
+    kernel = warc_extract_arrow_batches(mode, http_ok_only=http_ok_only)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import pandas as pd
+        sink(batch_df.mapInArrow(kernel, EXTRACT_SCHEMA), batch_id)
 
-        def rec_batches(it):
-            from zpdfspark.kernel.warc import WarcError, iter_warc_records
-
-            for b in it:
-                rows = {"url": [], "html": []}
-                for content in b["content"]:
-                    try:
-                        for rec in iter_warc_records(bytes(content)):
-                            # Response-only, matching warc_source.read_warc
-                            # (request/metadata records also carry
-                            # WARC-Target-URI on real crawls).
-                            if (not rec.error and rec.target_uri
-                                    and rec.warc_type == "response"):
-                                if http_ok_only and rec.http_status \
-                                        not in (None, 200):
-                                    continue  # redirect stub/error page
-                                rows["url"].append(rec.target_uri)
-                                rows["html"].append(rec.body)
-                    except WarcError:
-                        continue  # file-level garbage: skip the archive
-                yield pd.DataFrame(rows)
-
-        docs = batch_df.select("content").mapInPandas(
-            rec_batches, "url string, html binary")
-        extracted = docs.mapInArrow(
-            extract_arrow_batches(mode), EXTRACT_SCHEMA)
-        sink(extracted, batch_id)
-
-    writer = reader.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_warc_drop_stream(spark, input_dir, max_files_per_trigger),
+                  process_batch, checkpoint_dir, available_now)
 
 
 def start_streaming_warc_cdx(
@@ -256,31 +230,13 @@ def start_streaming_warc_cdx(
     exactly once across restarts. Stateless map per file, so restart
     semantics come entirely from the source offsets + idempotent sink
     (no state store)."""
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema("path string, modificationTime timestamp, "
-                "length long, content binary")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger or 8))
-        .load(input_dir)
-    )
     sink = _idempotent_batch_writer(spark, output_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from zpdfspark.spark.warc_source import (CDX_SCHEMA,
-                                                 cdx_arrow_batches)
+        sink(batch_df.mapInPandas(cdx_arrow_batches, CDX_SCHEMA), batch_id)
 
-        idx = batch_df.select("path", "content").mapInPandas(
-            cdx_arrow_batches, CDX_SCHEMA)
-        sink(idx, batch_id)
-
-    writer = reader.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(_warc_drop_stream(spark, input_dir, max_files_per_trigger),
+                  process_batch, checkpoint_dir, available_now)
 
 
 def start_crawl_rate_aggregation(
@@ -399,12 +355,27 @@ def start_streaming_dedup(
         )
     )
 
-    return (
-        stream.writeStream.foreachBatch(_idempotent_batch_writer(spark, output_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, _idempotent_batch_writer(spark, output_dir),
+                  checkpoint_dir, available_now=True)
+
+
+def _start_archive_manifest(spark: SparkSession, input_dir: str,
+                            output_dir: str, checkpoint_dir: str,
+                            archive_batches, available_now: bool,
+                            max_files_per_trigger: Optional[int]):
+    """The per-archive derivative twins (WET, JSONL, WAT):
+    ``archive_batches`` (spark/warc_sink.py) writes one file per dropped
+    archive, and its (file, n_records, n_bytes) summary rows go to the
+    idempotent parquet manifest under ``output_dir``."""
+    manifest_sink = _idempotent_batch_writer(spark, output_dir)
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        manifest_sink(batch_df.mapInPandas(
+            archive_batches, "file string, n_records long, n_bytes long"),
+            batch_id)
+
+    return _start(_warc_drop_stream(spark, input_dir, max_files_per_trigger),
+                  process_batch, checkpoint_dir, available_now)
 
 
 def start_streaming_warc_wet(
@@ -434,29 +405,10 @@ def start_streaming_warc_wet(
 
     wet_dir = os.path.join(output_dir, "wet")
     os.makedirs(wet_dir, exist_ok=True)
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema("path string, modificationTime timestamp, "
-                "length long, content binary")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger or 8))
-        .load(input_dir)
-    )
-    manifest_sink = _idempotent_batch_writer(spark, output_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        summary = batch_df.select("path", "content").mapInPandas(
-            archive_wet_batches(wet_dir, mode),
-            "file string, n_records long, n_bytes long")
-        manifest_sink(summary, batch_id)
-
-    writer = reader.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_archive_manifest(
+        spark, input_dir, output_dir, checkpoint_dir,
+        archive_wet_batches(wet_dir, mode), available_now,
+        max_files_per_trigger)
 
 
 def start_streaming_warc_jsonl(
@@ -479,29 +431,10 @@ def start_streaming_warc_jsonl(
 
     jl_dir = os.path.join(output_dir, "jsonl")
     os.makedirs(jl_dir, exist_ok=True)
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema("path string, modificationTime timestamp, "
-                "length long, content binary")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger or 8))
-        .load(input_dir)
-    )
-    manifest_sink = _idempotent_batch_writer(spark, output_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        summary = batch_df.select("path", "content").mapInPandas(
-            archive_jsonl_batches(jl_dir, mode),
-            "file string, n_records long, n_bytes long")
-        manifest_sink(summary, batch_id)
-
-    writer = reader.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_archive_manifest(
+        spark, input_dir, output_dir, checkpoint_dir,
+        archive_jsonl_batches(jl_dir, mode), available_now,
+        max_files_per_trigger)
 
 
 def start_streaming_warc_wat(
@@ -526,26 +459,7 @@ def start_streaming_warc_wat(
 
     wat_dir = os.path.join(output_dir, "wat")
     os.makedirs(wat_dir, exist_ok=True)
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema("path string, modificationTime timestamp, "
-                "length long, content binary")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger or 8))
-        .load(input_dir)
-    )
-    manifest_sink = _idempotent_batch_writer(spark, output_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        summary = batch_df.select("path", "content").mapInPandas(
-            archive_wat_batches(wat_dir, max_links),
-            "file string, n_records long, n_bytes long")
-        manifest_sink(summary, batch_id)
-
-    writer = reader.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_archive_manifest(
+        spark, input_dir, output_dir, checkpoint_dir,
+        archive_wat_batches(wat_dir, max_links), available_now,
+        max_files_per_trigger)

@@ -4,7 +4,8 @@ The engine's API surface (SURVEY.md §2.11): every capability of the
 reference C ABI / Python binding (/root/reference/src/capi.zig,
 /root/reference/python/zpdf/__init__.py) re-expressed as
 
-(a) ``mapInPandas`` batch kernels — whole-row output incl. metrics;
+(a) ``mapInArrow`` / ``mapInPandas`` batch kernels — whole-row output
+    incl. metrics;
 (b) registered ``pandas_udf``s — callable from Spark SQL
     (``SELECT zpdf_extract(html) FROM pages``);
 
@@ -69,67 +70,6 @@ EXTRACT_SCHEMA_DDL = (
 )
 
 
-def extract_batches(mode: str = "accuracy", html_col: str = "html", url_col: str = "url",
-                    max_doc_bytes: int = 0):
-    """Build a mapInPandas generator extracting text + metrics per doc.
-
-    max_doc_bytes > 0 skips oversized blobs with an error record instead
-    of parsing them — the per-document resource guard for hostile inputs
-    at scale (SURVEY.md §7.3 #4; complements the kernel's own 256 MiB
-    decode cap)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zpdfspark.kernel import Document
-        from zpdfspark.kernel.htmltext import extract_any
-
-        empty_doc = Document(b"%PDF-")
-        empty_doc.errors = []
-
-        for batch in batches:
-            rows = {k: [] for k in (
-                "url", "extracted_text", "n_pages", "n_chars", "is_encrypted",
-                "error_count", "errors", "objects_resolved", "streams_decoded",
-                "structured_pages", "stream_pages", "geometric_pages",
-                "coverage_fallbacks", "elapsed_ms",
-            )}
-            urls = batch[url_col]
-            blobs = batch[html_col]
-            for url, blob in zip(urls, blobs):
-                t0 = time.perf_counter()
-                raw = bytes(blob) if blob is not None else b""
-                if max_doc_bytes and len(raw) > max_doc_bytes:
-                    doc = Document(b"%PDF-")  # valid header, no body
-                    doc.errors = [
-                        ("oversized", 0, f"document {len(raw)} bytes exceeds cap")]
-                    text = ""
-                else:
-                    text, _kind, doc = extract_any(raw, mode)
-                    if doc is None:
-                        doc = empty_doc
-                elapsed = (time.perf_counter() - t0) * 1000.0
-                m = doc.metrics
-                rows["url"].append(url)
-                rows["extracted_text"].append(text)
-                rows["n_pages"].append(doc.page_count)
-                rows["n_chars"].append(len(text))
-                rows["is_encrypted"].append(doc.is_encrypted)
-                rows["error_count"].append(len(doc.errors))
-                rows["errors"].append([
-                    {"kind": k, "offset": o, "message": msg}
-                    for k, o, msg in doc.errors
-                ])
-                rows["objects_resolved"].append(doc.objects_resolved)
-                rows["streams_decoded"].append(m["streams_decoded"])
-                rows["structured_pages"].append(m["structured_pages"])
-                rows["stream_pages"].append(m["stream_pages"])
-                rows["geometric_pages"].append(m["geometric_pages"])
-                rows["coverage_fallbacks"].append(m["coverage_fallbacks"])
-                rows["elapsed_ms"].append(elapsed)
-            yield pd.DataFrame(rows)
-
-    return fn
-
-
 _ERRORS_PA_TYPE = None
 
 
@@ -145,9 +85,15 @@ def _errors_pa_type():
 
 def extract_arrow_batches(mode: str = "accuracy", max_doc_bytes: int = 0,
                           oracle_text_col: str = None):
-    """mapInArrow variant of the extraction kernel: skips the pandas
-    conversion on both sides of the Python boundary (~8% faster end to
-    end for whole-blob rows, measured at local[16]).
+    """The mapInArrow extraction kernel: text + metrics per document.
+    It skips the pandas conversion on both sides of the Python boundary
+    (~8% faster end to end than the mapInPandas form for whole-blob
+    rows, measured at local[16]).
+
+    max_doc_bytes > 0 skips oversized blobs with an error record instead
+    of parsing them — the per-document resource guard for hostile inputs
+    at scale (SURVEY.md §7.3 #4; complements the kernel's own 256 MiB
+    decode cap).
 
     oracle_text_col: name of an input column carrying the expected text;
     when set, the kernel emits a ``matches_oracle`` boolean computed

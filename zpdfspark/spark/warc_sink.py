@@ -35,6 +35,33 @@ from typing import Optional
 from pyspark.sql import DataFrame
 
 
+def _write_members(out_dir, name, attempt, members):
+    """Stream one derivative file's gzip members (the warcinfo member
+    first) to `out_dir/name` via temp + atomic os.replace; returns
+    (n_records, n_bytes). No record after the warcinfo member -> no
+    file, (0, 0)."""
+    tmp = os.path.join(out_dir, f".{name}.tmp-{attempt}")
+    n_records = n_bytes = 0
+    f = None
+    try:
+        for member in members:
+            if f is None:
+                f = open(tmp, "wb")
+            else:
+                n_records += 1
+            f.write(member)
+            n_bytes += len(member)
+    finally:
+        if f is not None:
+            f.close()
+    if n_records == 0:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        return 0, 0
+    os.replace(tmp, os.path.join(out_dir, name))
+    return n_records, n_bytes
+
+
 def _write_partition_file(it, out_dir, name_fmt, record_stream, docs):
     """Stream one derivative file for this task's partition: returns
     the (file, n_records, n_bytes) summary rows (empty partition ->
@@ -44,30 +71,23 @@ def _write_partition_file(it, out_dir, name_fmt, record_stream, docs):
 
     ctx = TaskContext.get()
     name = name_fmt.format(ctx.partitionId())
-    tmp = os.path.join(out_dir, f".{name}.tmp-{ctx.taskAttemptId()}")
-    n_records = n_bytes = 0
-    f = None
-    try:
-        for member in record_stream(name, docs(it)):
-            if f is None:
-                f = open(tmp, "wb")
-                f.write(member)       # the warcinfo member
-                n_bytes += len(member)
-                continue
-            f.write(member)
-            n_records += 1
-            n_bytes += len(member)
-    finally:
-        if f is not None:
-            f.close()
+    n_records, n_bytes = _write_members(
+        out_dir, name, ctx.taskAttemptId(), record_stream(name, docs(it)))
     if n_records == 0:
-        if os.path.exists(tmp):
-            os.remove(tmp)
         return pd.DataFrame({"file": [], "n_records": [],
                              "n_bytes": []})
-    os.replace(tmp, os.path.join(out_dir, name))
     return pd.DataFrame({"file": [name], "n_records": [n_records],
                          "n_bytes": [n_bytes]})
+
+
+def _archive_name(path, suffix: str) -> str:
+    """`<archive-stem><suffix>`: Common Crawl names each per-archive
+    derivative after its source .warc.gz / .warc file."""
+    stem = os.path.basename(str(path))
+    for ext in (".warc.gz", ".warc"):
+        if stem.endswith(ext):
+            return stem[: -len(ext)] + suffix
+    return stem + suffix
 
 
 def _wdate(ts) -> str:
@@ -222,46 +242,15 @@ def _archive_derivative_batches(out_dir: str, suffix: str,
         for b in it:
             out = {"file": [], "n_records": [], "n_bytes": []}
             for path, content in zip(b["path"], b["content"]):
-                raw = bytes(content)
-                stem = os.path.basename(str(path))
-                if stem.endswith(".warc.gz"):
-                    stem = stem[: -len(".warc.gz")]
-                elif stem.endswith(".warc"):
-                    stem = stem[: -len(".warc")]
-                name = stem + suffix
-
-                def docs():
-                    try:
-                        for rec in _warc.iter_warc_records(raw):
-                            if (rec.error or not rec.target_uri
-                                    or rec.warc_type != "response"):
-                                continue
-                            yield (rec.target_uri,
-                                   rec.warc_date
-                                   or "1970-01-01T00:00:00Z",
-                                   payload_fn(rec))
-                    except _warc.WarcError:
-                        return  # file-level garbage: skip the archive
-
-                tmp = os.path.join(out_dir, f".{name}.tmp-{attempt}")
-                n_records = n_bytes = 0
-                f = None
-                try:
-                    for member in record_stream(name, docs()):
-                        if f is None:
-                            f = open(tmp, "wb")
-                        else:
-                            n_records += 1
-                        f.write(member)
-                        n_bytes += len(member)
-                finally:
-                    if f is not None:
-                        f.close()
+                name = _archive_name(path, suffix)
+                docs = ((rec.target_uri,
+                         rec.warc_date or "1970-01-01T00:00:00Z",
+                         payload_fn(rec))
+                        for rec in _warc.iter_responses(bytes(content)))
+                n_records, n_bytes = _write_members(
+                    out_dir, name, attempt, record_stream(name, docs))
                 if n_records == 0:
-                    if os.path.exists(tmp):
-                        os.remove(tmp)
                     continue
-                os.replace(tmp, os.path.join(out_dir, name))
                 out["file"].append(name)
                 out["n_records"].append(n_records)
                 out["n_bytes"].append(n_bytes)
@@ -370,40 +359,26 @@ def archive_jsonl_batches(out_dir: str, mode: str = "accuracy"):
         for b in it:
             out = {"file": [], "n_records": [], "n_bytes": []}
             for path, content in zip(b["path"], b["content"]):
-                raw = bytes(content)
-                stem = os.path.basename(str(path))
-                if stem.endswith(".warc.gz"):
-                    stem = stem[: -len(".warc.gz")]
-                elif stem.endswith(".warc"):
-                    stem = stem[: -len(".warc")]
-                name = stem + ".jsonl.gz"
+                name = _archive_name(path, ".jsonl.gz")
                 tmp = os.path.join(out_dir, f".{name}.tmp-{attempt}")
                 n_records = 0
                 f = gz = None
                 try:
-                    try:
-                        for rec in _warc.iter_warc_records(raw):
-                            if (rec.error or not rec.target_uri
-                                    or rec.warc_type != "response"):
-                                continue
-                            text, kind, _ = extract_any(rec.body, mode)
-                            line = json.dumps(
-                                {"kind": kind, "lang": None,
-                                 "n_chars": len(text), "text": text,
-                                 "ts": rec.warc_date
-                                 or "1970-01-01T00:00:00Z",
-                                 "url": rec.target_uri},
-                                ensure_ascii=False, sort_keys=True,
-                                separators=(",", ":")) + "\n"
-                            if f is None:
-                                f = open(tmp, "wb")
-                                gz = gzip.GzipFile(
-                                    filename="", fileobj=f, mode="wb",
-                                    mtime=0)
-                            gz.write(line.encode("utf-8"))
-                            n_records += 1
-                    except _warc.WarcError:
-                        n_records = 0  # file-level garbage: skip
+                    for rec in _warc.iter_responses(bytes(content)):
+                        text, kind, _ = extract_any(rec.body, mode)
+                        line = json.dumps(
+                            {"kind": kind, "lang": None,
+                             "n_chars": len(text), "text": text,
+                             "ts": rec.warc_date or "1970-01-01T00:00:00Z",
+                             "url": rec.target_uri},
+                            ensure_ascii=False, sort_keys=True,
+                            separators=(",", ":")) + "\n"
+                        if f is None:
+                            f = open(tmp, "wb")
+                            gz = gzip.GzipFile(filename="", fileobj=f,
+                                               mode="wb", mtime=0)
+                        gz.write(line.encode("utf-8"))
+                        n_records += 1
                 finally:
                     if gz is not None:
                         gz.close()

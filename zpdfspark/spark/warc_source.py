@@ -222,11 +222,9 @@ def warc_extract_arrow_batches(mode: str = "accuracy",
     assembly to udfs.extract_arrow_batches so extraction output is
     byte-identical to the parquet path; records are re-batched in
     bounded chunks so a 1 GB archive never materializes all decompressed
-    bodies at once.
-
-    http_ok_only drops response records whose HTTP envelope carries a
-    non-200 status (redirect stubs / error pages — the standard crawl
-    ingestion filter); envelope-less payloads (no status) are kept."""
+    bodies at once. Records are selected by kernel/warc.py
+    iter_responses (http_ok_only: the standard crawl ingestion filter
+    on the HTTP status)."""
     from zpdfspark.spark.udfs import extract_arrow_batches
 
     extract = extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes)
@@ -235,42 +233,27 @@ def warc_extract_arrow_batches(mode: str = "accuracy",
     def fn(batches):
         import pyarrow as pa
 
-        from zpdfspark.kernel.warc import WarcError, iter_warc_records
+        from zpdfspark.kernel.warc import iter_responses
+
+        def chunk(urls, bodies):
+            return pa.RecordBatch.from_arrays(
+                [pa.array(urls, pa.string()), pa.array(bodies, pa.binary())],
+                names=["url", "html"])
 
         def parsed():
             urls, bodies = [], []
             for rb in batches:
                 contents = rb.column("content")
                 for j in range(len(contents)):
-                    raw = contents[j].as_py()
-                    try:
-                        for rec in iter_warc_records(raw):
-                            # Response-only, matching read_warc: real CC
-                            # archives interleave request/metadata records
-                            # per capture, all carrying WARC-Target-URI;
-                            # keeping them would emit ~3x rows with raw
-                            # HTTP-request/metadata bytes as bodies.
-                            if (rec.error or not rec.target_uri
-                                    or rec.warc_type != "response"):
-                                continue
-                            if http_ok_only and rec.http_status not in (
-                                    None, 200):
-                                continue
-                            urls.append(rec.target_uri)
-                            bodies.append(rec.body)
-                            if len(urls) >= chunk_records:
-                                yield pa.RecordBatch.from_arrays(
-                                    [pa.array(urls, pa.string()),
-                                     pa.array(bodies, pa.binary())],
-                                    names=["url", "html"])
-                                urls, bodies = [], []
-                    except WarcError:
-                        continue  # file-level garbage: skip the archive
+                    for rec in iter_responses(contents[j].as_py(),
+                                              http_ok_only):
+                        urls.append(rec.target_uri)
+                        bodies.append(rec.body)
+                        if len(urls) >= chunk_records:
+                            yield chunk(urls, bodies)
+                            urls, bodies = [], []
             if urls:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(urls, pa.string()),
-                     pa.array(bodies, pa.binary())],
-                    names=["url", "html"])
+                yield chunk(urls, bodies)
 
         yield from extract(parsed())
 
