@@ -70,6 +70,18 @@ def _drop_lineage_bucket(spark, out, bucket):
             f.write(json.dumps(r) + "\n")
 
 
+def _jobs_started(spark, fn, group="zpdfspark-test-jobs"):
+    """Number of Spark jobs ``fn()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        before = len(sc.statusTracker().getJobIdsForGroup(group))
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group)) - before
+    finally:
+        sc._jsc.clearJobGroup()
+
+
 def test_pipeline_resume(spark, corpus_path, tmp_path):
     from zpdfspark.spark.pipeline import completed_buckets, run_extraction_job
 
@@ -118,12 +130,11 @@ def test_lineage_metrics_populated(spark, corpus_path, tmp_path):
 
 
 def test_lineage_rows_written_without_python_scan(spark, tmp_path):
-    """Lineage rows enter Spark as an Arrow table (LocalTableScan), not as
-    a Python-RDD scan that starts a Python task; the JSON lines are the
-    ones the Python-list path wrote."""
-    import glob
-
-    from zpdfspark.spark.pipeline import _append_lineage, lineage_frame
+    """Lineage rows are written by the driver through the Hadoop
+    FileSystem: no Spark job (so no Python task) runs, no hidden temp
+    file is left behind, and the JSON lines are byte-for-byte the ones
+    Spark's JSON writer produced (Java ``Double.toString`` doubles)."""
+    from zpdfspark.spark.pipeline import _append_lineage, completed_buckets
 
     def row(bucket, n_docs, wall):
         return {"bucket": bucket, "n_docs": n_docs, "n_pages": 5,
@@ -134,16 +145,15 @@ def test_lineage_rows_written_without_python_scan(spark, tmp_path):
                 "wall_secs": wall, "status": "ok",
                 "finished_at": "2026-01-02T03:04:05Z"}
 
-    rows = [row(0, 3, 1.25), row(3, 6, 0.1 + 0.2)]
-    plan = lineage_frame(spark, rows)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "LocalTableScan" in plan
-    assert "ExistingRDD" not in plan
+    rows = [row(0, 3, 1.25), row(3, 6, 0.1 + 0.2), row(5, 1, 0.0005),
+            row(6, 2, 12345678.9)]
     out = str(tmp_path / "_lineage")
-    _append_lineage(spark, rows, out)
-    parts = glob.glob(os.path.join(out, "part-*.json"))
-    assert len(parts) == 1
-    with open(parts[0]) as f:
+    assert _jobs_started(spark, lambda: _append_lineage(spark, rows, out)) \
+        == 0
+    names = [n for n in os.listdir(out) if not n.endswith(".crc")]
+    assert len(names) == 1 and names[0].startswith("part-") \
+        and names[0].endswith(".json")
+    with open(os.path.join(out, names[0])) as f:
         got = f.read()
     tail = ('"n_pages":5,"n_chars":12345678901,"n_errors":1,'
             '"n_encrypted":0,"objects_resolved":40,"streams_decoded":7,'
@@ -151,7 +161,10 @@ def test_lineage_rows_written_without_python_scan(spark, tmp_path):
             '"coverage_fallbacks":0,"wall_secs":%s,"status":"ok",'
             '"finished_at":"2026-01-02T03:04:05Z"}\n')
     assert got == ('{"bucket":0,"n_docs":3,' + tail % "1.25"
-                   + '{"bucket":3,"n_docs":6,' + tail % "0.30000000000000004")
+                   + '{"bucket":3,"n_docs":6,' + tail % "0.30000000000000004"
+                   + '{"bucket":5,"n_docs":1,' + tail % "5.0E-4"
+                   + '{"bucket":6,"n_docs":2,' + tail % "1.23456789E7")
+    assert completed_buckets(spark, out) == [0, 3, 5, 6]
 
 
 def test_maybe_salted_map_only_default(spark, corpus_path):
@@ -358,6 +371,79 @@ def test_warc_fused_run_builds_no_document_plan(spark, tmp_path,
                            n_buckets=2, partitions=4, single_pass=True)
     assert s["docs"] == 40 and s["buckets_run"] == 2
     assert spark.read.parquet(os.path.join(out, "data")).count() == 40
+
+
+def _parquet_files(data):
+    return [n for _, _, names in os.walk(data) for n in names
+            if n.endswith(".parquet")]
+
+
+def test_single_pass_writer_sized_by_bytes(spark, tmp_path, monkeypatch):
+    """The single-pass writer exchange is a bucket-keyed REBALANCE that
+    AQE sizes by bytes: one parquet file per non-empty bucket at the
+    default advisory partition size, more files but the same rows once
+    the advisory size is smaller than a bucket, and the lineage
+    observe() (CollectMetrics) above the exchange, in the result stage."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from zpdfspark.fixtures import write_warc_fixture
+    from zpdfspark.spark.pipeline import run_extraction_job
+
+    glob, _ = write_warc_fixture(str(tmp_path / "warc"), 60, seed=41,
+                                 shards=4)
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+
+    def run(name):
+        out = str(tmp_path / name)
+        s = run_extraction_job(spark, glob, out, input_format="warc",
+                               n_buckets=4, partitions=4, single_pass=True)
+        assert s["docs"] == 60
+        data = os.path.join(out, "data")
+        buckets = [n for n in os.listdir(data) if n.startswith("bucket=")]
+        rows = sorted(spark.read.parquet(data)
+                      .select("url", "extracted_text").collect())
+        return len(_parquet_files(data)), len(buckets), rows
+
+    files, buckets, rows = run("default")
+    assert buckets == 4 and files == buckets
+    plan = written[-1]._jdf.queryExecution().executedPlan().toString()
+    assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan
+    assert -1 < plan.index("CollectMetrics") < plan.index("Exchange"), plan
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        small_files, small_buckets, small_rows = run("small")
+    finally:
+        spark.conf.set(key, prev)
+    assert small_buckets == buckets and small_files > buckets
+    assert small_rows == rows
+
+
+def test_warc_single_pass_job_count(spark, tmp_path):
+    """A fused single-pass WARC run into a fresh output starts exactly two
+    Spark jobs: the writer exchange's map stage and the write. Lineage is
+    written by the driver, so a lineage job would show up here."""
+    from zpdfspark.fixtures import write_warc_fixture
+    from zpdfspark.spark.pipeline import completed_buckets, run_extraction_job
+
+    glob, _ = write_warc_fixture(str(tmp_path / "warc"), 40, seed=17)
+    out = str(tmp_path / "out")
+    summary = {}
+    jobs = _jobs_started(spark, lambda: summary.update(run_extraction_job(
+        spark, glob, out, input_format="warc", n_buckets=2, partitions=4,
+        single_pass=True)))
+    assert summary["docs"] == 40 and summary["buckets_run"] == 2
+    assert jobs == 2
+    assert completed_buckets(spark, os.path.join(out, "_lineage")) == [0, 1]
 
 
 def test_driver_contract_shape():

@@ -22,9 +22,11 @@ Design for 10^12 documents (SURVEY.md §4):
 - **Lineage + resume**: work is divided into ``n_buckets`` deterministic
   url-hash buckets. Each bucket's output is written under
   ``out/bucket=K/`` and a lineage row (bucket, counts, error totals,
-  wall time, status) is appended to the sidecar. On restart, completed
-  buckets are skipped via an anti-join of the bucket domain against the
-  lineage sidecar — the driver-contract "resume from checkpoint".
+  wall time, status) is appended to the sidecar, a JSON file the driver
+  writes through the Hadoop FileSystem API (no Spark job). On restart,
+  completed buckets are skipped via an anti-join of the bucket domain
+  against the lineage sidecar — the driver-contract "resume from
+  checkpoint".
 - **Read amplification**: the per-bucket loop filters the source per
   bucket. On a raw parquet dump that re-scans the input n_buckets times;
   at scale the input table must be bucketed on the SAME
@@ -45,6 +47,15 @@ Design for 10^12 documents (SURVEY.md §4):
   exchange for skewed layouts. Measured on the 60k-doc heavy corpus at
   pinned local[16], skipping the blob exchange cuts the end-to-end
   single-pass job from ~22 s to ~17 s.
+- **Writer sizing**: extracted rows reach the parquet writer through one
+  ``REBALANCE`` exchange (on ``bucket`` in single-pass, keyless per
+  bucket) that AQE sizes by bytes: partitions coalesce up to, and skewed
+  ones split at, ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so
+  writer tasks and files follow data volume — one file per bucket until
+  a bucket outgrows that size. This needs AQE (on by default): with it
+  off, ``REBALANCE`` is a plain hash exchange on ``bucket``, one writer
+  task per bucket (per-bucket loop: round-robin into
+  ``spark.sql.shuffle.partitions`` tasks).
 """
 
 from __future__ import annotations
@@ -53,6 +64,7 @@ import argparse
 import json
 import os
 import time
+import uuid
 from typing import List, Optional
 
 import pyspark.sql.functions as F
@@ -73,12 +85,6 @@ _LINEAGE_SUMS = (
     ("stream_pages", "stream_pages"),
     ("geometric_pages", "geometric_pages"),
     ("coverage_fallbacks", "coverage_fallbacks"),
-)
-
-LINEAGE_SCHEMA = (
-    "bucket int, n_docs long, "
-    + "".join(f"{field} long, " for field, _ in _LINEAGE_SUMS)
-    + "wall_secs double, status string, finished_at string"
 )
 
 
@@ -162,8 +168,8 @@ def _lineage_observation(buckets: List[int]):
 def _lineage_rows_from_observation(obs: Observation, buckets: List[int],
                                    wall: float, finished: str,
                                    keep_empty: bool = False) -> List[dict]:
-    """One LINEAGE_SCHEMA row per bucket, in schema order (lineage_frame
-    maps the dict keys to columns by position). Buckets that saw no
+    """One lineage row per bucket, its keys in sidecar field order
+    (_append_lineage writes them as they come). Buckets that saw no
     document are dropped unless ``keep_empty``."""
     got = obs.get
     rows = []
@@ -179,23 +185,35 @@ def _lineage_rows_from_observation(obs: Observation, buckets: List[int],
     return rows
 
 
-def lineage_frame(spark: SparkSession, rows: List[dict]) -> DataFrame:
-    """Lineage rows as a DataFrame of LINEAGE_SCHEMA. The rows enter Spark
-    as an Arrow table, which plans a LocalTableScan; a Python list would
-    plan a Python-RDD scan and start a one-task Python stage just to write
-    at most n_buckets rows."""
-    import pyarrow as pa
-    from pyspark.sql.types import StructType
-
-    return spark.createDataFrame(pa.Table.from_pylist(rows),
-                                 schema=StructType.fromDDL(LINEAGE_SCHEMA))
-
-
 def _append_lineage(spark: SparkSession, rows: List[dict],
                     lineage_path: str) -> None:
-    """Append lineage rows to the sidecar as one JSON file."""
-    lineage_frame(spark, rows).coalesce(1).write.mode("append") \
-        .json(lineage_path)
+    """Append lineage rows to the sidecar as one JSON-lines file, written
+    by the driver through the Hadoop FileSystem API, so no Spark job
+    runs. The file is written under a hidden ``_`` name (readers skip
+    it) and renamed into place, so a reader never sees half a file. The
+    lines are the ones Spark's JSON writer printed: fields in row order,
+    nulls left out, doubles in Java ``Double.toString`` form
+    (``5.0E-4``, not ``0.0005``)."""
+    jvm = spark._jvm
+    java_double = jvm.java.lang.Double.toString
+    lines = []
+    for row in rows:
+        fields = (f'"{k}":' + (java_double(v) if isinstance(v, float)
+                               else json.dumps(v, ensure_ascii=False))
+                  for k, v in row.items() if v is not None)
+        lines.append("{" + ",".join(fields) + "}\n")
+    Path = jvm.org.apache.hadoop.fs.Path
+    name = f"part-{uuid.uuid4()}.json"
+    tmp, final = Path(lineage_path, "_" + name), Path(lineage_path, name)
+    fs = final.getFileSystem(spark._jsc.hadoopConfiguration())
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray("".join(lines).encode("utf-8")))
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        fs.delete(tmp, False)
+        raise IOError(f"could not rename lineage file into {final}")
 
 
 def _tune_scan_splits(spark: SparkSession, df: DataFrame,
@@ -346,7 +364,6 @@ def run_extraction_job(
     big_doc_bytes: int = 0,
     single_pass: bool = False,
     repartition_blobs: bool = False,
-    writer_tasks: Optional[int] = None,
     quality_gate: bool = False,
     http_ok_only: bool = False,
 ) -> dict:
@@ -373,8 +390,6 @@ def run_extraction_job(
         # the units are scan splits (map-only) or shuffle partitions
         # (salted) — the measured sweep optimum (BASELINE.md)
         partitions = 4 * spark.sparkContext.defaultParallelism
-    if writer_tasks is None:
-        writer_tasks = 2 * spark.sparkContext.defaultParallelism
     lineage_path = os.path.join(output_path, "_lineage")
     data_path = os.path.join(output_path, "data")
 
@@ -417,8 +432,8 @@ def run_extraction_job(
     try:
         return _run_buckets(spark, df, n_buckets, partitions, salt, resume,
                             mode, max_doc_bytes, big_doc_bytes, single_pass,
-                            repartition_blobs, writer_tasks, data_path,
-                            lineage_path, prebuilt_result=prebuilt_result,
+                            repartition_blobs, data_path, lineage_path,
+                            prebuilt_result=prebuilt_result,
                             quality_gate=quality_gate)
     finally:
         if prev_split_conf is not None:
@@ -468,8 +483,8 @@ def _document_frame(spark: SparkSession, input_path: str, input_format: str,
 
 def _run_buckets(spark, df, n_buckets, partitions, salt, resume, mode,
                  max_doc_bytes, big_doc_bytes, single_pass,
-                 repartition_blobs, writer_tasks, data_path,
-                 lineage_path, prebuilt_result=None,
+                 repartition_blobs, data_path, lineage_path,
+                 prebuilt_result=None,
                  quality_gate=False) -> dict:
     done = set(completed_buckets(spark, lineage_path)) if resume else set()
     todo = [b for b in range(n_buckets) if b not in done]
@@ -480,7 +495,7 @@ def _run_buckets(spark, df, n_buckets, partitions, salt, resume, mode,
         return _run_single_pass(spark, df, todo, n_buckets, partitions, salt,
                                 mode, max_doc_bytes, big_doc_bytes, data_path,
                                 lineage_path, summary, repartition_blobs,
-                                writer_tasks, prebuilt_result=prebuilt_result,
+                                prebuilt_result=prebuilt_result,
                                 quality_gate=quality_gate)
 
     for bucket in todo:
@@ -490,28 +505,23 @@ def _run_buckets(spark, df, n_buckets, partitions, salt, resume, mode,
                             repartition_blobs=repartition_blobs)
         result = part.mapInArrow(
             extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes), EXTRACT_SCHEMA
-        ).withColumn("bucket", F.lit(bucket))
+        )
         if quality_gate:
             from zpdfspark.spark.streaming import gopher_keep_expr
             result = result.withColumn("quality_keep", gopher_keep_expr())
         out_dir = os.path.join(data_path, f"bucket={bucket}")
-        result = result.drop("bucket")
-        if writer_tasks:
-            # coalesce the (small) extracted output to a bounded number
-            # of writer tasks — output file count stays O(writer_tasks)
-            # instead of O(map tasks), shrinking the serial commit
-            result = result.repartition(
-                writer_tasks, F.xxhash64("url", F.lit(1)))
         # per-bucket metrics rollup rides along with the write via
         # observe() — no re-read of the bucket's output. The observe is
-        # attached ABOVE the writer exchange so CollectMetrics runs in
+        # attached ABOVE the writer exchange (a keyless REBALANCE that
+        # AQE sizes by bytes, module docstring) so CollectMetrics runs in
         # the final (result) stage, where Spark applies accumulator
         # updates exactly once per partition; below the exchange it
         # would sit in a shuffle-map stage, where speculative or
         # retried attempts can double-count.
         obs, exprs = _lineage_observation([bucket])
-        result.withColumn("bucket", F.lit(bucket)).observe(obs, *exprs) \
-            .drop("bucket").write.mode("overwrite").parquet(out_dir)
+        result.hint("rebalance").withColumn("bucket", F.lit(bucket)) \
+            .observe(obs, *exprs).drop("bucket") \
+            .write.mode("overwrite").parquet(out_dir)
         lineage_row = _lineage_rows_from_observation(
             obs, [bucket], time.time() - t0,
             time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -526,7 +536,7 @@ def _run_buckets(spark, df, n_buckets, partitions, salt, resume, mode,
 def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, mode,
                      max_doc_bytes, big_doc_bytes, data_path, lineage_path,
                      summary, repartition_blobs: bool = False,
-                     writer_tasks: int = 0, prebuilt_result=None,
+                     prebuilt_result=None,
                      quality_gate=False) -> dict:
     """One job over all pending buckets: a single source scan, output
     partitioned by bucket, lineage appended per bucket afterwards.
@@ -550,19 +560,11 @@ def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, mode,
     if quality_gate:
         from zpdfspark.spark.streaming import gopher_keep_expr
         result = result.withColumn("quality_keep", gopher_keep_expr())
-    if writer_tasks:
-        # shuffle the EXTRACTED rows (text — ~10x smaller than the raw
-        # blobs, which stay map-only) into writer_tasks hash partitions
-        # keyed by (bucket, sub-split). Grouping by bucket keeps each
-        # writer task touching few buckets (few open files); 4x more
-        # sub-splits than partitions smooths the balls-in-bins skew of
-        # hash placement. Output files are O(writer_tasks) instead of
-        # O(map_tasks * n_buckets) and the serial commit shrinks with
-        # them. Measured at pinned local[16] on the 60k heavy corpus:
-        # 17.7 s -> 13.4 s end-to-end, 512 -> ~32 files.
-        sub = F.pmod(F.xxhash64("url", F.lit(1)),
-                     F.lit(max(writer_tasks // n_buckets, 1) * 4))
-        result = result.repartition(writer_tasks, F.col("bucket"), sub)
+    # shuffle the EXTRACTED rows (text — ~10x smaller than the raw
+    # blobs, which stay map-only) into one bucket-keyed exchange that AQE
+    # sizes by bytes (module docstring): each bucket is written as one
+    # file unless it outgrows the advisory partition size
+    result = result.hint("rebalance", "bucket")
     # observe ABOVE the writer exchange: CollectMetrics evaluates in the
     # final (result) stage where accumulator updates are exactly-once
     # per partition; below the exchange, speculative execution or a
@@ -790,11 +792,6 @@ def main(argv: Optional[List[str]] = None) -> None:
                     help="salted repartition of the raw blobs before "
                          "extraction (implied by --salt/--big-doc-bytes; "
                          "default is map-only on scan splits)")
-    ap.add_argument("--writer-tasks", type=int, default=None,
-                    help="coalesce extracted output into this many "
-                         "writer tasks before the partitioned write "
-                         "(default 2x parallelism; 0 = write straight "
-                         "from map tasks)")
     args = ap.parse_args(argv)
 
     spark = SparkSession.builder.appName("zpdfspark-extract").getOrCreate()
@@ -815,7 +812,6 @@ def main(argv: Optional[List[str]] = None) -> None:
         input_format=args.input_format, max_doc_bytes=args.max_doc_bytes,
         big_doc_bytes=args.big_doc_bytes, single_pass=args.single_pass,
         repartition_blobs=args.repartition_blobs,
-        writer_tasks=args.writer_tasks,
         quality_gate=args.quality_gate,
         http_ok_only=args.http_ok_only,
     )
