@@ -115,6 +115,16 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spread(spark, spark.read.parquet(p), p, min_rows=128)
 
 
+def _map_blobs(spark: SparkSession, sf_dir: str, per_row,
+               schema: str) -> DataFrame:
+    """``udfs.map_rows(per_row)`` over the corpus's pruned (url, html)
+    scan, ordered by url: the shape of every per-payload kernel query."""
+    from zpdfspark.spark.udfs import map_rows
+
+    return map_rows(_corpus(spark, sf_dir).select("url", "html"), per_row,
+                    schema).orderBy("url")
+
+
 def _warc_paths(sf_dir: str) -> tuple:
     """Materialize the deterministic WARC fixture for this sf (cached
     like _corpus_path); returns (warc_glob, expected_parquet)."""
@@ -294,7 +304,7 @@ def _q_doc_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-registered pandas_udf surface (SURVEY.md §2.11b)."""
+    """SQL-registered scalar arrow_udf surface (SURVEY.md §2.11b)."""
     from zpdfspark.spark.udfs import register_sql_udfs
 
     register_sql_udfs(spark)
@@ -351,65 +361,46 @@ def _q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio frames and video remain honestly stubbed (no codec libs in
     this container) while the Spark-side schema/batching is the same
     either way."""
-    import pandas as pd
+    from zpdfspark.kernel.bmp import BmpError
+    from zpdfspark.kernel.docx import DocxError
+    from zpdfspark.kernel.epub import EpubError
+    from zpdfspark.kernel.gif import GifError
+    from zpdfspark.kernel.ico import IcoError
+    from zpdfspark.kernel.odp import OdpError
+    from zpdfspark.kernel.ods import OdsError
+    from zpdfspark.kernel.odt import OdtError
+    from zpdfspark.kernel.pptx import PptxError
+    from zpdfspark.kernel.rtf import RtfError
+    from zpdfspark.kernel.svg import SvgError
+    from zpdfspark.kernel.tar import TarError
+    from zpdfspark.kernel.xlsx import XlsxError
+    from zpdfspark.kernel.htmltext import looks_like_html
+    from zpdfspark.kernel.jpeg import JpegError
+    from zpdfspark.kernel.png import PngError
+    from zpdfspark.kernel.tiff import TiffError
+    from zpdfspark.kernel.wav import WavError
+    from zpdfspark.spark.media import decode_media, sniff_kind
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        # the shared magic-byte sniffer, plus the corpus kinds it does
+        # not name (pdf handled there; html/unknown here)
+        kind = sniff_kind(raw)
+        if kind == "binary":
+            kind = "html" if looks_like_html(raw) else "unknown"
+        ok = True  # a PDF needs no decode: the PDF kernel is this engine
+        if kind != "pdf":
+            try:
+                decode_media(raw, kind)
+            except (NotImplementedError, PngError, JpegError, WavError,
+                    GifError, TiffError, BmpError, DocxError, EpubError,
+                    XlsxError, OdtError, OdsError, OdpError, PptxError,
+                    RtfError, SvgError, IcoError, TarError):
+                ok = False
+        yield url, len(raw), kind, ok
 
-    def media_batches(batches):
-        from zpdfspark.kernel.bmp import BmpError
-        from zpdfspark.kernel.docx import DocxError
-        from zpdfspark.kernel.epub import EpubError
-        from zpdfspark.kernel.gif import GifError
-        from zpdfspark.kernel.ico import IcoError
-        from zpdfspark.kernel.odp import OdpError
-        from zpdfspark.kernel.ods import OdsError
-        from zpdfspark.kernel.odt import OdtError
-        from zpdfspark.kernel.pptx import PptxError
-        from zpdfspark.kernel.rtf import RtfError
-        from zpdfspark.kernel.svg import SvgError
-        from zpdfspark.kernel.tar import TarError
-        from zpdfspark.kernel.xlsx import XlsxError
-        from zpdfspark.kernel.htmltext import looks_like_html
-        from zpdfspark.kernel.jpeg import JpegError
-        from zpdfspark.kernel.png import PngError
-        from zpdfspark.kernel.tiff import TiffError
-        from zpdfspark.kernel.wav import WavError
-        from zpdfspark.spark.media import decode_media, sniff_kind
-
-        def _kind_of(raw):
-            # the shared magic-byte sniffer, plus the corpus kinds it
-            # does not name (pdf handled there; html/unknown here)
-            kind = sniff_kind(raw)
-            if kind != "binary":
-                return kind
-            return "html" if looks_like_html(raw) else "unknown"
-
-        for batch in batches:
-            out = {"url": [], "n_bytes": [], "media_kind": [], "decode_ok": []}
-            for url, blob in zip(batch["url"], batch["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                kind = _kind_of(raw)
-                if kind == "pdf":
-                    ok = True  # the PDF kernel is this engine
-                else:
-                    try:
-                        decode_media(raw, kind)
-                        ok = True
-                    except (NotImplementedError, PngError, JpegError,
-                            WavError, GifError, TiffError, BmpError,
-                            DocxError, EpubError, XlsxError, OdtError,
-                            OdsError, OdpError, PptxError, RtfError,
-                            SvgError, IcoError, TarError):
-                        ok = False
-                out["url"].append(url)
-                out["n_bytes"].append(len(raw))
-                out["media_kind"].append(kind)
-                out["decode_ok"].append(ok)
-            yield pd.DataFrame(out)
-
-    return corpus.select("url", "html").mapInPandas(
-        media_batches, "url string, n_bytes long, media_kind string, decode_ok boolean"
-    ).orderBy("url")
+    return _map_blobs(
+        spark, sf_dir, per_row,
+        "url string, n_bytes long, media_kind string, decode_ok boolean")
 
 
 def _q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,37 +412,25 @@ def _q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a decoder dimension/upsample/channel bug breaks the hash. Map-only:
     the kernel filters by magic bytes before decoding; blobs never
     shuffle."""
-    import pandas as pd
+    from zpdfspark.kernel.bmp import BmpError
+    from zpdfspark.kernel.gif import GifError
+    from zpdfspark.kernel.jpeg import JpegError
+    from zpdfspark.kernel.png import PngError
+    from zpdfspark.spark.media import decode_media, sniff_kind
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        kind = sniff_kind(raw)
+        if kind not in ("png", "jpeg", "gif", "bmp"):
+            return
+        try:
+            w, h, c, _px = decode_media(raw, kind)
+        except (PngError, JpegError, GifError, BmpError):
+            return
+        yield (url, w, h, c)
 
-    def batches(it):
-        from zpdfspark.kernel.bmp import BmpError
-        from zpdfspark.kernel.gif import GifError
-        from zpdfspark.kernel.jpeg import JpegError
-        from zpdfspark.kernel.png import PngError
-        from zpdfspark.spark.media import decode_media, sniff_kind
-
-        for b in it:
-            rows = {"url": [], "width": [], "height": [], "n_channels": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                kind = sniff_kind(raw)
-                if kind not in ("png", "jpeg", "gif", "bmp"):
-                    continue
-                try:
-                    w, h, c, _px = decode_media(raw, kind)
-                except (PngError, JpegError, GifError, BmpError):
-                    continue
-                rows["url"].append(url)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_channels"].append(c)
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches, "url string, width int, height int, n_channels int"
-    ).orderBy("url")
+    return _map_blobs(
+        spark, sf_dir, per_row,
+        "url string, width int, height int, n_channels int")
 
 
 # =========================================================================
@@ -1750,39 +1729,27 @@ def _q_charset_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kernel/htmltext.py sniff_charset / charset_report; real crawls
     are full of cp1252-declared-as-latin1 and gb2312-declared-GBK
     pages, and a pipeline must report what it decoded with for
-    lineage). Runs the real kernel via mapInPandas over the pruned
+    lineage). Runs the real kernel via map_rows over the pruned
     (url, html) scan — map-only, Arrow-batched, no shuffle before the
     presentation orderBy. Oracle = generator truth: the fixture's
     html_charset rotation (cp1252 / gbk / utf-8+BOM by doc index) and
     the plain-html default rebuilt from URL arithmetic without
     touching the bytes."""
-    import pandas as pd
+    from zpdfspark.kernel.htmltext import charset_report
+    from zpdfspark.spark.udfs import map_rows
 
-    corpus = _corpus(spark, sf_dir)
-    scoped = corpus.where(
+    scoped = _corpus(spark, sf_dir).where(
         F.col("url").like("%/html/%")
         | F.col("url").like("%/html_charset/%")
     ).select("url", "html")
 
-    def report(batches):
-        from zpdfspark.kernel.htmltext import charset_report
+    def per_row(url, raw):
+        yield (url, *charset_report(raw))
 
-        for batch in batches:
-            out = {"url": [], "had_bom": [], "declared": [], "codec": []}
-            for url, raw in zip(batch["url"], batch["html"]):
-                bom, declared, codec = charset_report(bytes(raw or b""))
-                out["url"].append(url)
-                out["had_bom"].append(bom)
-                out["declared"].append(declared)
-                out["codec"].append(codec)
-            yield pd.DataFrame(out)
-
-    return (
-        scoped.mapInPandas(
-            report,
-            "url string, had_bom boolean, declared string, codec string")
-        .orderBy("url")
-    )
+    return map_rows(
+        scoped, per_row,
+        "url string, had_bom boolean, declared string, codec string"
+    ).orderBy("url")
 
 
 def _q_mojibake_fix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2306,7 +2273,7 @@ def _q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduplication: 'e' + COMBINING ACUTE and precomposed 'é' are the
     same text but different bytes, so unnormalized corpora under-dedup
     and split token statistics. Runs Python's unicodedata (the UCD
-    tables) via mapInPandas over the pruned (doc_id, text) scan —
+    tables) via map_rows over the pruned (doc_id, text) scan —
     map-only, Arrow-batched, no shuffle before the presentation
     orderBy. ORACLE INDEPENDENCE: DuckDB replays with its NATIVE
     nfc_normalize (utf8proc) — two independent implementations of the
@@ -2314,7 +2281,9 @@ def _q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASCII-clean, so every 4th doc gets a deterministic decomposed
     suffix (combining acute + diaeresis) seeded identically by both
     engines."""
-    import pandas as pd
+    import unicodedata
+
+    from zpdfspark.spark.udfs import map_rows
 
     d = _docs(spark, sf_dir).select("doc_id", "text")
     # DECOMPOSED sequences: e+U+0301 (combining acute), i+U+0308
@@ -2326,23 +2295,14 @@ def _q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.col("text"))
     src = d.select("doc_id", seeded.alias("t"))
 
-    def norm(batches):
-        import unicodedata
+    def per_row(doc_id, t):
+        t = str(t)  # a null text reads as the string "None"
+        fixed = unicodedata.normalize("NFC", t)
+        yield doc_id, t != fixed, fixed
 
-        for b in batches:
-            t = b["t"].astype(str)
-            fixed = t.map(lambda x: unicodedata.normalize("NFC", x))
-            yield pd.DataFrame({
-                "doc_id": b["doc_id"],
-                "changed": t.ne(fixed),
-                "text_nfc": fixed,
-            })
-
-    return (
-        src.mapInPandas(norm,
-                        "doc_id long, changed boolean, text_nfc string")
-        .orderBy("doc_id")
-    )
+    return map_rows(src, per_row,
+                    "doc_id long, changed boolean, text_nfc string"
+                    ).orderBy("doc_id")
 
 
 def _q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3090,7 +3050,7 @@ def _q_html_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule's 'DOM heuristics' at full published-algorithm depth, beyond
     the single line-level link-density rule of extract_main_text).
 
-    Scale shape: map-only mapInPandas on scan splits (the classifier
+    Scale shape: map-only map_rows on scan splits (the classifier
     runs inside the same task that reads the blob; block rows — tiny —
     are all that cross the Arrow boundary); the only exchange is the
     determinism orderBy. Oracle: the corpus-carried `blocks` expected
@@ -3112,32 +3072,19 @@ def _q_html_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-carried per-block feature column (sum of good n_chars plus
     the join newlines) — so the kernel's extraction and the carried
     features must agree through two independent code paths. Map-only
-    mapInPandas; one range exchange."""
-    import pandas as pd
+    map_rows; one range exchange."""
+    from zpdfspark.kernel.htmlblocks import classify_blocks
+    from zpdfspark.kernel.htmltext import looks_like_html
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not looks_like_html(raw):
+            return
+        good = [x for x in classify_blocks(raw) if x["label"] == "good"]
+        yield url, len(good), len("\n".join(x["text"] for x in good))
 
-    def fn(batches):
-        from zpdfspark.kernel.htmlblocks import classify_blocks
-        from zpdfspark.kernel.htmltext import looks_like_html
-
-        for b in batches:
-            out = {"url": [], "n_good_blocks": [], "n_dense_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not looks_like_html(raw):
-                    continue
-                good = [x for x in classify_blocks(raw)
-                        if x["label"] == "good"]
-                dense = "\n".join(x["text"] for x in good)
-                out["url"].append(url)
-                out["n_good_blocks"].append(len(good))
-                out["n_dense_chars"].append(len(dense))
-            yield pd.DataFrame(out)
-
-    return corpus.select("url", "html").mapInPandas(
-        fn, "url string, n_good_blocks int, n_dense_chars long"
-    ).orderBy("url")
+    return _map_blobs(
+        spark, sf_dir, per_row,
+        "url string, n_good_blocks int, n_dense_chars long")
 
 
 def _q_html_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3223,50 +3170,43 @@ def _image_phash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixtures-side independent zlib re-read implements a second
     time). The interlace gate is the IHDR byte itself, read
     identically by both engines (substring(hex, 57, 2)) — never a
-    carried column. Arrow-batched mapInPandas on the pruned
+    carried column. Arrow-batched map_rows on the pruned
     (url, html) scan: map-only, the 100 TB shape."""
-    import pandas as pd
+    import numpy as np
+
+    from zpdfspark.kernel.png import PngError, decode_png
+    from zpdfspark.spark.udfs import map_rows
 
     corpus = _corpus(spark, sf_dir)
     sel = corpus.where(
         (F.col("media_kind") == "png")
         & (F.substring(F.hex("html"), 57, 2) == "00"))
 
-    def batches(it):
-        import numpy as np
+    def pack(bits) -> int:
+        v = 0
+        for bit in bits:
+            v = (v << 1) | int(bit)
+        return v - (1 << 64) if v >= (1 << 63) else v
 
-        from zpdfspark.kernel.png import PngError, decode_png
+    def per_row(url, raw):
+        try:
+            w, h, c, px = decode_png(raw)
+        except PngError:
+            return
+        if px.ndim != 3 or px.shape[2] < 3:
+            return
+        px = px[:, :, :3].astype(np.int64)
+        luma = (299 * px[:, :, 0] + 587 * px[:, :, 1]
+                + 114 * px[:, :, 2]) // 1000
+        rsel = [r * h // 8 for r in range(8)]
+        g8 = luma[rsel, :][:, [cc * w // 8 for cc in range(8)]]
+        mean = int(g8.sum()) // 64
+        g9 = luma[rsel, :][:, [cc * w // 9 for cc in range(9)]]
+        yield (url, pack((g8 > mean).reshape(-1)),
+               pack((g9[:, :8] > g9[:, 1:]).reshape(-1)))
 
-        def pack(bits) -> int:
-            v = 0
-            for bit in bits:
-                v = (v << 1) | int(bit)
-            return v - (1 << 64) if v >= (1 << 63) else v
-
-        for b in it:
-            rows = {"url": [], "ahash": [], "dhash": []}
-            for url, blob in zip(b["url"], b["html"]):
-                try:
-                    w, h, c, px = decode_png(bytes(blob))
-                except PngError:
-                    continue
-                if px.ndim != 3 or px.shape[2] < 3:
-                    continue
-                px = px[:, :, :3].astype(np.int64)
-                luma = (299 * px[:, :, 0] + 587 * px[:, :, 1]
-                        + 114 * px[:, :, 2]) // 1000
-                rsel = [r * h // 8 for r in range(8)]
-                g8 = luma[rsel, :][:, [cc * w // 8 for cc in range(8)]]
-                mean = int(g8.sum()) // 64
-                g9 = luma[rsel, :][:, [cc * w // 9 for cc in range(9)]]
-                rows["url"].append(url)
-                rows["ahash"].append(pack((g8 > mean).reshape(-1)))
-                rows["dhash"].append(
-                    pack((g9[:, :8] > g9[:, 1:]).reshape(-1)))
-            yield pd.DataFrame(rows)
-
-    return sel.select("url", "html").mapInPandas(
-        batches, "url string, ahash long, dhash long")
+    return map_rows(sel.select("url", "html"), per_row,
+                    "url string, ahash long, dhash long")
 
 
 def _q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4497,35 +4437,21 @@ def _q_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only: the kernel filters by the ftyp magic before parsing;
     blobs never shuffle. Oracle: the corpus-carried columns from an
     INDEPENDENT fixtures-side box re-read (fixtures._mp4_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.mp4 import Mp4Error, parse_mp4
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if len(raw) < 12 or raw[4:8] != b"ftyp":
+            return
+        try:
+            meta = parse_mp4(raw)
+        except Mp4Error:
+            return
+        yield (url, meta["duration_ms"], meta["n_tracks"], meta["width"],
+               meta["height"])
 
-    def batches(it):
-        from zpdfspark.kernel.mp4 import Mp4Error, parse_mp4
-
-        for b in it:
-            rows = {"url": [], "duration_ms": [], "n_tracks": [],
-                    "width": [], "height": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if len(raw) < 12 or raw[4:8] != b"ftyp":
-                    continue
-                try:
-                    meta = parse_mp4(raw)
-                except Mp4Error:
-                    continue
-                rows["url"].append(url)
-                rows["duration_ms"].append(meta["duration_ms"])
-                rows["n_tracks"].append(meta["n_tracks"])
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
-        "url string, duration_ms long, n_tracks int, width int, height int"
-    ).orderBy("url")
+    return _map_blobs(
+        spark, sf_dir, per_row,
+        "url string, duration_ms long, n_tracks int, width int, height int")
 
 
 def _q_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4535,35 +4461,21 @@ def _q_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     magic-filtered in-kernel; rows emitted only for JPEGs that carry
     an APP1/Exif segment. Oracle: the corpus-carried columns from an
     INDEPENDENT fixtures-side IFD re-read (fixtures._exif_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.exif import parse_exif
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:2] != b"\xff\xd8":
+            return
+        m = parse_exif(raw)
+        if m["orientation"] is None and m["make"] is None \
+                and m["exif_width"] is None:
+            return
+        yield (url, m["orientation"], m["make"], m["exif_width"],
+               m["exif_height"])
 
-    def batches(it):
-        from zpdfspark.kernel.exif import parse_exif
-
-        for b in it:
-            rows = {"url": [], "orientation": [], "make": [],
-                    "exif_w": [], "exif_h": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:2] != b"\xff\xd8":
-                    continue
-                m = parse_exif(raw)
-                if m["orientation"] is None and m["make"] is None \
-                        and m["exif_width"] is None:
-                    continue
-                rows["url"].append(url)
-                rows["orientation"].append(m["orientation"])
-                rows["make"].append(m["make"])
-                rows["exif_w"].append(m["exif_width"])
-                rows["exif_h"].append(m["exif_height"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
-        "url string, orientation int, make string, exif_w int, exif_h int"
-    ).orderBy("url")
+    return _map_blobs(
+        spark, sf_dir, per_row,
+        "url string, orientation int, make string, exif_w int, exif_h int")
 
 
 def _q_warc_http_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4629,40 +4541,25 @@ def _q_djvu_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     even-padding, DIRM component count for multipage, INFO geometry
     with the format's little-endian dpi quirk). Page-image decode is
     IW44/JB2 — honestly out of scope (the PostScript rule): census
-    only. Map-only mapInPandas on the pruned (url, html) scan.
+    only. Map-only map_rows on the pruned (url, html) scan.
     Oracle: corpus-carried columns from the INDEPENDENT fixtures-side
     flat offset re-read (fixtures._djvu_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.djvu import DjvuError, is_djvu, parse_djvu
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not is_djvu(raw):
+            return
+        try:
+            m = parse_djvu(raw)
+        except DjvuError:
+            return
+        yield (url, m["is_multi"], m["n_pages"], m["width"], m["height"],
+               m["dpi"])
 
-    def batches(it):
-        from zpdfspark.kernel.djvu import DjvuError, is_djvu, parse_djvu
-
-        for b in it:
-            rows = {"url": [], "is_multi": [], "n_pages": [],
-                    "width": [], "height": [], "dpi": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not is_djvu(raw):
-                    continue
-                try:
-                    m = parse_djvu(raw)
-                except DjvuError:
-                    continue
-                rows["url"].append(url)
-                rows["is_multi"].append(m["is_multi"])
-                rows["n_pages"].append(m["n_pages"])
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["dpi"].append(m["dpi"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, is_multi boolean, n_pages int, width int, "
-        "height int, dpi int"
-    ).orderBy("url")
+        "height int, dpi int")
 
 
 def _q_mp3_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4672,43 +4569,26 @@ def _q_mp3_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     honestly stubbed). Map-only, magic-filtered in-kernel; oracle: the
     corpus-carried columns from an INDEPENDENT fixtures-side header
     walk (fixtures._mp3_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.mp3 import Mp3Error, parse_mp3
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        is_mp3 = raw[:3] == b"ID3" or (
+            len(raw) >= 2 and raw[0] == 0xFF
+            and (raw[1] & 0xE0) == 0xE0)
+        if not is_mp3:
+            return
+        try:
+            meta = parse_mp3(raw)
+        except Mp3Error:
+            return
+        yield (url, meta["n_frames"], meta["sample_rate"], meta["channels"],
+               meta["duration_ms"], meta["mean_bitrate_kbps"], meta["title"],
+               meta["artist"])
 
-    def batches(it):
-        from zpdfspark.kernel.mp3 import Mp3Error, parse_mp3
-
-        for b in it:
-            rows = {"url": [], "n_frames": [], "sample_rate": [],
-                    "n_channels": [], "duration_ms": [], "kbps": [],
-                    "title": [], "artist": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                is_mp3 = raw[:3] == b"ID3" or (
-                    len(raw) >= 2 and raw[0] == 0xFF
-                    and (raw[1] & 0xE0) == 0xE0)
-                if not is_mp3:
-                    continue
-                try:
-                    meta = parse_mp3(raw)
-                except Mp3Error:
-                    continue
-                rows["url"].append(url)
-                rows["n_frames"].append(meta["n_frames"])
-                rows["sample_rate"].append(meta["sample_rate"])
-                rows["n_channels"].append(meta["channels"])
-                rows["duration_ms"].append(meta["duration_ms"])
-                rows["kbps"].append(meta["mean_bitrate_kbps"])
-                rows["title"].append(meta["title"])
-                rows["artist"].append(meta["artist"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_frames int, sample_rate int, n_channels int, "
-        "duration_ms long, kbps int, title string, artist string"
-    ).orderBy("url")
+        "duration_ms long, kbps int, title string, artist string")
 
 
 def _q_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4718,40 +4598,22 @@ def _q_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the codec layer stays honestly stubbed). Map-only, magic-filtered
     in-kernel; oracle: corpus-carried columns from the INDEPENDENT
     fixtures-side block re-read (fixtures._flac_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.flac import FlacError, parse_flac
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] != b"fLaC":
+            return
+        try:
+            m = parse_flac(raw)
+        except FlacError:
+            return
+        yield (url, m["sample_rate"], m["channels"], m["bits_per_sample"],
+               m["total_samples"], m["duration_ms"], m["title"], m["artist"])
 
-    def batches(it):
-        from zpdfspark.kernel.flac import FlacError, parse_flac
-
-        for b in it:
-            rows = {"url": [], "sample_rate": [], "n_channels": [],
-                    "bits": [], "total_samples": [], "duration_ms": [],
-                    "title": [], "artist": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] != b"fLaC":
-                    continue
-                try:
-                    m = parse_flac(raw)
-                except FlacError:
-                    continue
-                rows["url"].append(url)
-                rows["sample_rate"].append(m["sample_rate"])
-                rows["n_channels"].append(m["channels"])
-                rows["bits"].append(m["bits_per_sample"])
-                rows["total_samples"].append(m["total_samples"])
-                rows["duration_ms"].append(m["duration_ms"])
-                rows["title"].append(m["title"])
-                rows["artist"].append(m["artist"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, sample_rate int, n_channels int, bits int, "
-        "total_samples long, duration_ms long, title string, artist string"
-    ).orderBy("url")
+        "total_samples long, duration_ms long, title string, artist string")
 
 
 def _q_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4762,40 +4624,22 @@ def _q_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays honestly stubbed. Map-only, magic-filtered in-kernel;
     oracle: corpus-carried columns from the INDEPENDENT fixtures-side
     page re-read (fixtures._ogg_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.ogg import OggError, parse_ogg
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] != b"OggS":
+            return
+        try:
+            m = parse_ogg(raw)
+        except OggError:
+            return
+        yield (url, m["codec"], m["channels"], m["sample_rate"], m["n_pages"],
+               m["duration_ms"], m["title"], m["artist"])
 
-    def batches(it):
-        from zpdfspark.kernel.ogg import OggError, parse_ogg
-
-        for b in it:
-            rows = {"url": [], "codec": [], "n_channels": [],
-                    "sample_rate": [], "n_pages": [], "duration_ms": [],
-                    "title": [], "artist": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] != b"OggS":
-                    continue
-                try:
-                    m = parse_ogg(raw)
-                except OggError:
-                    continue
-                rows["url"].append(url)
-                rows["codec"].append(m["codec"])
-                rows["n_channels"].append(m["channels"])
-                rows["sample_rate"].append(m["sample_rate"])
-                rows["n_pages"].append(m["n_pages"])
-                rows["duration_ms"].append(m["duration_ms"])
-                rows["title"].append(m["title"])
-                rows["artist"].append(m["artist"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, codec string, n_channels int, sample_rate int, "
-        "n_pages int, duration_ms long, title string, artist string"
-    ).orderBy("url")
+        "n_pages int, duration_ms long, title string, artist string")
 
 
 def _q_tiff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4806,38 +4650,22 @@ def _q_tiff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode stays honestly stubbed. Map-only, magic-filtered in-kernel;
     oracle: corpus-carried columns from the INDEPENDENT fixtures-side
     flat IFD re-read (fixtures._tiff_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.tiff import TiffError, parse_tiff
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] not in (b"II*\x00", b"MM\x00*"):
+            return
+        try:
+            m = parse_tiff(raw)
+        except TiffError:
+            return
+        yield (url, m["width"], m["height"], m["bits_per_sample"],
+               m["compression"], m["n_pages"], m["description"])
 
-    def batches(it):
-        from zpdfspark.kernel.tiff import TiffError, parse_tiff
-
-        for b in it:
-            rows = {"url": [], "width": [], "height": [], "bits": [],
-                    "compression": [], "n_pages": [], "description": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] not in (b"II*\x00", b"MM\x00*"):
-                    continue
-                try:
-                    m = parse_tiff(raw)
-                except TiffError:
-                    continue
-                rows["url"].append(url)
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["bits"].append(m["bits_per_sample"])
-                rows["compression"].append(m["compression"])
-                rows["n_pages"].append(m["n_pages"])
-                rows["description"].append(m["description"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, width int, height int, bits int, "
-        "compression string, n_pages int, description string"
-    ).orderBy("url")
+        "compression string, n_pages int, description string")
 
 
 def _q_docx_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4847,43 +4675,28 @@ def _q_docx_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself rides the flagship extraction family — extract_any
     dispatches PK packages to parse_docx, so extract_accuracy/fast/
     parity already value-pin docx text against generator truth; this
-    query pins the package-level facts. Map-only mapInPandas on the
+    query pins the package-level facts. Map-only map_rows on the
     pruned (url, html) scan, magic-filtered in-kernel — the 100 TB
     plan is a scan + project, no exchange before the sink. Oracle:
     corpus-carried columns from the INDEPENDENT fixtures-side re-read
     (fixtures._docx_expected — stdlib zipfile container + narrow
     regexes; the Spark path never touches stdlib zipfile)."""
-    import pandas as pd
+    from zpdfspark.kernel.docx import DocxError, is_docx, parse_docx
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] != b"PK\x03\x04" or not is_docx(raw):
+            return
+        try:
+            m = parse_docx(raw)
+        except DocxError:
+            return
+        yield (url, m["n_paragraphs"], m["n_entries"], m["title"],
+               m["creator"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.docx import DocxError, is_docx, parse_docx
-
-        for b in it:
-            rows = {"url": [], "n_paragraphs": [], "n_entries": [],
-                    "title": [], "creator": [], "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] != b"PK\x03\x04" or not is_docx(raw):
-                    continue
-                try:
-                    m = parse_docx(raw)
-                except DocxError:
-                    continue
-                rows["url"].append(url)
-                rows["n_paragraphs"].append(m["n_paragraphs"])
-                rows["n_entries"].append(m["n_entries"])
-                rows["title"].append(m["title"])
-                rows["creator"].append(m["creator"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_paragraphs int, n_entries int, title string, "
-        "creator string, n_text_chars int"
-    ).orderBy("url")
+        "creator string, n_text_chars int")
 
 
 def _q_epub_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4892,40 +4705,25 @@ def _q_epub_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry count, OPF dc:title/dc:creator, text length. The spine-
     ordered TEXT itself (chapters joined \\x0c — the PDF page-join
     rule) rides the flagship extraction family via extract_any.
-    Map-only mapInPandas on the pruned (url, html) scan. Oracle:
+    Map-only map_rows on the pruned (url, html) scan. Oracle:
     corpus-carried columns from the INDEPENDENT fixtures-side stdlib
     re-read (fixtures._epub_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.epub import EpubError, is_epub, parse_epub
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] != b"PK\x03\x04" or not is_epub(raw):
+            return
+        try:
+            m = parse_epub(raw)
+        except EpubError:
+            return
+        yield (url, m["n_chapters"], m["n_entries"], m["title"], m["creator"],
+               len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.epub import EpubError, is_epub, parse_epub
-
-        for b in it:
-            rows = {"url": [], "n_chapters": [], "n_entries": [],
-                    "title": [], "creator": [], "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] != b"PK\x03\x04" or not is_epub(raw):
-                    continue
-                try:
-                    m = parse_epub(raw)
-                except EpubError:
-                    continue
-                rows["url"].append(url)
-                rows["n_chapters"].append(m["n_chapters"])
-                rows["n_entries"].append(m["n_entries"])
-                rows["title"].append(m["title"])
-                rows["creator"].append(m["creator"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_chapters int, n_entries int, title string, "
-        "creator string, n_text_chars int"
-    ).orderBy("url")
+        "creator string, n_text_chars int")
 
 
 def _q_xlsx_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4934,47 +4732,25 @@ def _q_xlsx_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered sheet names (resolved through workbook.xml.rels), core
     title, text length. Sheet TEXT (cells TAB-joined, rows newline-
     joined, sheets \\x0c-joined) rides the flagship extraction family
-    via extract_any. Map-only mapInPandas on the pruned (url, html)
+    via extract_any. Map-only map_rows on the pruned (url, html)
     scan. Oracle: corpus-carried columns from the INDEPENDENT
     fixtures-side stdlib re-read (fixtures._xlsx_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.xlsx import XlsxError, is_xlsx, parse_xlsx
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] != b"PK\x03\x04" or not is_xlsx(raw):
+            return
+        try:
+            m = parse_xlsx(raw)
+        except XlsxError:
+            return
+        yield (url, m["n_sheets"], m["n_cells"], m["n_entries"], m["title"],
+               m["sheet_names"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.xlsx import XlsxError, is_xlsx, parse_xlsx
-
-        for b in it:
-            rows = {"url": [], "n_sheets": [], "n_cells": [],
-                    "n_entries": [], "title": [], "sheet_names": [],
-                    "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] != b"PK\x03\x04" or not is_xlsx(raw):
-                    continue
-                try:
-                    m = parse_xlsx(raw)
-                except XlsxError:
-                    continue
-                rows["url"].append(url)
-                rows["n_sheets"].append(m["n_sheets"])
-                rows["n_cells"].append(m["n_cells"])
-                rows["n_entries"].append(m["n_entries"])
-                rows["title"].append(m["title"])
-                rows["sheet_names"].append(m["sheet_names"])
-                rows["n_text_chars"].append(len(m["text"]))
-            df = pd.DataFrame(rows)
-            # a zero-row list column defaults to float64, which Arrow
-            # cannot cast to array<string> — pin object dtype
-            df["sheet_names"] = pd.Series(rows["sheet_names"],
-                                          dtype=object)
-            yield df
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_sheets int, n_cells int, n_entries int, "
-        "title string, sheet_names array<string>, n_text_chars int"
-    ).orderBy("url")
+        "title string, sheet_names array<string>, n_text_chars int")
 
 
 def _q_pptx_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4983,40 +4759,25 @@ def _q_pptx_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docx/xlsx): slide/shape/entry counts, core title, text length.
     Slide TEXT (shape paragraphs newline-joined, slides \\x0c-joined)
     rides the flagship extraction family via extract_any. Map-only
-    mapInPandas on the pruned (url, html) scan. Oracle: corpus-carried
+    map_rows on the pruned (url, html) scan. Oracle: corpus-carried
     columns from the INDEPENDENT fixtures-side stdlib re-read
     (fixtures._pptx_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.pptx import PptxError, is_pptx, parse_pptx
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] != b"PK\x03\x04" or not is_pptx(raw):
+            return
+        try:
+            m = parse_pptx(raw)
+        except PptxError:
+            return
+        yield (url, m["n_slides"], m["n_shapes"], m["n_entries"], m["title"],
+               len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.pptx import PptxError, is_pptx, parse_pptx
-
-        for b in it:
-            rows = {"url": [], "n_slides": [], "n_shapes": [],
-                    "n_entries": [], "title": [], "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] != b"PK\x03\x04" or not is_pptx(raw):
-                    continue
-                try:
-                    m = parse_pptx(raw)
-                except PptxError:
-                    continue
-                rows["url"].append(url)
-                rows["n_slides"].append(m["n_slides"])
-                rows["n_shapes"].append(m["n_shapes"])
-                rows["n_entries"].append(m["n_entries"])
-                rows["title"].append(m["title"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_slides int, n_shapes int, n_entries int, "
-        "title string, n_text_chars int"
-    ).orderBy("url")
+        "title string, n_text_chars int")
 
 
 def _q_rtf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5024,78 +4785,49 @@ def _q_rtf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     format crawls still carry): paragraph count (\\par tokens), info
     title, text length. Visible TEXT (codepage \\'hh + \\uN/\\uc
     decode, destination skipping, \\page -> \\x0c) rides the flagship
-    extraction family via extract_any. Map-only mapInPandas on the
+    extraction family via extract_any. Map-only map_rows on the
     pruned (url, html) scan. Oracle: corpus-carried columns from the
     INDEPENDENT fixtures-side narrow regex re-read
     (fixtures._rtf_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.rtf import RtfError, is_rtf, parse_rtf
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not is_rtf(raw):
+            return
+        try:
+            m = parse_rtf(raw)
+        except RtfError:
+            return
+        yield (url, m["n_paragraphs"], m["title"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.rtf import RtfError, is_rtf, parse_rtf
-
-        for b in it:
-            rows = {"url": [], "n_paragraphs": [], "title": [],
-                    "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not is_rtf(raw):
-                    continue
-                try:
-                    m = parse_rtf(raw)
-                except RtfError:
-                    continue
-                rows["url"].append(url)
-                rows["n_paragraphs"].append(m["n_paragraphs"])
-                rows["title"].append(m["title"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
-        "url string, n_paragraphs int, title string, n_text_chars int"
-    ).orderBy("url")
+    return _map_blobs(
+        spark, sf_dir, per_row,
+        "url string, n_paragraphs int, title string, n_text_chars int")
 
 
 def _q_odt_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OpenDocument text extraction facts (kernel/odt.py, r5):
     paragraph/entry counts, meta.xml dc:title/dc:creator, text
     length; paragraph TEXT rides the flagship extraction family via
-    extract_any. Map-only mapInPandas on the pruned (url, html) scan.
+    extract_any. Map-only map_rows on the pruned (url, html) scan.
     Oracle: corpus-carried columns from the INDEPENDENT fixtures-side
     stdlib re-read (fixtures._odt_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.odt import OdtError, is_odt, parse_odt
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] != b"PK\x03\x04" or not is_odt(raw):
+            return
+        try:
+            m = parse_odt(raw)
+        except OdtError:
+            return
+        yield (url, m["n_paragraphs"], m["n_entries"], m["title"],
+               m["creator"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.odt import OdtError, is_odt, parse_odt
-
-        for b in it:
-            rows = {"url": [], "n_paragraphs": [], "n_entries": [],
-                    "title": [], "creator": [], "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] != b"PK\x03\x04" or not is_odt(raw):
-                    continue
-                try:
-                    m = parse_odt(raw)
-                except OdtError:
-                    continue
-                rows["url"].append(url)
-                rows["n_paragraphs"].append(m["n_paragraphs"])
-                rows["n_entries"].append(m["n_entries"])
-                rows["title"].append(m["title"])
-                rows["creator"].append(m["creator"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_paragraphs int, n_entries int, title string, "
-        "creator string, n_text_chars int"
-    ).orderBy("url")
+        "creator string, n_text_chars int")
 
 
 def _q_ods_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5104,42 +4836,25 @@ def _q_ods_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta.xml dc:title/dc:creator, text length; grid TEXT (cells TAB,
     rows newline, sheets \\x0c — the kernel/xlsx.py reduction rule)
     rides the flagship extraction family via extract_any. Map-only
-    mapInPandas on the pruned (url, html) scan. Oracle: corpus-carried
+    map_rows on the pruned (url, html) scan. Oracle: corpus-carried
     columns from the INDEPENDENT fixtures-side stdlib re-read
     (fixtures._ods_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.ods import OdsError, is_ods, parse_ods
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] != b"PK\x03\x04" or not is_ods(raw):
+            return
+        try:
+            m = parse_ods(raw)
+        except OdsError:
+            return
+        yield (url, m["n_sheets"], m["n_cells"], m["n_entries"], m["title"],
+               m["creator"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.ods import OdsError, is_ods, parse_ods
-
-        for b in it:
-            rows = {"url": [], "n_sheets": [], "n_cells": [],
-                    "n_entries": [], "title": [], "creator": [],
-                    "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] != b"PK\x03\x04" or not is_ods(raw):
-                    continue
-                try:
-                    m = parse_ods(raw)
-                except OdsError:
-                    continue
-                rows["url"].append(url)
-                rows["n_sheets"].append(m["n_sheets"])
-                rows["n_cells"].append(m["n_cells"])
-                rows["n_entries"].append(m["n_entries"])
-                rows["title"].append(m["title"])
-                rows["creator"].append(m["creator"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_sheets int, n_cells int, n_entries int, "
-        "title string, creator string, n_text_chars int"
-    ).orderBy("url")
+        "title string, creator string, n_text_chars int")
 
 
 def _q_odp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5148,42 +4863,25 @@ def _q_odp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     dc:title/dc:creator, text length; slide TEXT (paragraphs/frames
     newline, slides \\x0c — the kernel/pptx.py reduction rule) rides
     the flagship extraction family via extract_any. Map-only
-    mapInPandas on the pruned (url, html) scan. Oracle: corpus-carried
+    map_rows on the pruned (url, html) scan. Oracle: corpus-carried
     columns from the INDEPENDENT fixtures-side stdlib re-read
     (fixtures._odp_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.odp import OdpError, is_odp, parse_odp
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] != b"PK\x03\x04" or not is_odp(raw):
+            return
+        try:
+            m = parse_odp(raw)
+        except OdpError:
+            return
+        yield (url, m["n_slides"], m["n_frames"], m["n_entries"], m["title"],
+               m["creator"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.odp import OdpError, is_odp, parse_odp
-
-        for b in it:
-            rows = {"url": [], "n_slides": [], "n_frames": [],
-                    "n_entries": [], "title": [], "creator": [],
-                    "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] != b"PK\x03\x04" or not is_odp(raw):
-                    continue
-                try:
-                    m = parse_odp(raw)
-                except OdpError:
-                    continue
-                rows["url"].append(url)
-                rows["n_slides"].append(m["n_slides"])
-                rows["n_frames"].append(m["n_frames"])
-                rows["n_entries"].append(m["n_entries"])
-                rows["title"].append(m["title"])
-                rows["creator"].append(m["creator"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_slides int, n_frames int, n_entries int, "
-        "title string, creator string, n_text_chars int"
-    ).orderBy("url")
+        "title string, creator string, n_text_chars int")
 
 
 def _q_eml_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5193,40 +4891,25 @@ def _q_eml_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (the stdlib email.walk() convention), text length. Body TEXT
     (qp/base64 transfer decode, multipart walk, plain-over-html
     selection) rides the flagship extraction family via extract_any.
-    Map-only mapInPandas on the pruned (url, html) scan. Oracle:
+    Map-only map_rows on the pruned (url, html) scan. Oracle:
     corpus-carried columns from the INDEPENDENT stdlib email-package
     re-read (fixtures._eml_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.eml import EmlError, is_eml, parse_eml
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not is_eml(raw):
+            return
+        try:
+            m = parse_eml(raw)
+        except EmlError:
+            return
+        yield (url, m["subject"], m["from_addr"], m["date_ts"], m["n_parts"],
+               len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.eml import EmlError, is_eml, parse_eml
-
-        for b in it:
-            rows = {"url": [], "subject": [], "from_addr": [],
-                    "date_ts": [], "n_parts": [], "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not is_eml(raw):
-                    continue
-                try:
-                    m = parse_eml(raw)
-                except EmlError:
-                    continue
-                rows["url"].append(url)
-                rows["subject"].append(m["subject"])
-                rows["from_addr"].append(m["from_addr"])
-                rows["date_ts"].append(m["date_ts"])
-                rows["n_parts"].append(m["n_parts"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, subject string, from_addr string, date_ts long, "
-        "n_parts int, n_text_chars int"
-    ).orderBy("url")
+        "n_parts int, n_text_chars int")
 
 
 def _q_mbox_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5234,41 +4917,25 @@ def _q_mbox_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, first subject/sender, span of parseable RFC 5322 dates. An
     archive of messages is not one document (the tar rule) — census
     only, mboxrd >From-quoting reversed per message. Map-only
-    mapInPandas on the pruned (url, html) scan. Oracle: corpus-carried
+    map_rows on the pruned (url, html) scan. Oracle: corpus-carried
     columns from the INDEPENDENT stdlib mailbox.mbox re-read
     (fixtures._mbox_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.eml import EmlError, is_mbox, parse_mbox
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not is_mbox(raw):
+            return
+        try:
+            m = parse_mbox(raw)
+        except EmlError:
+            return
+        yield (url, m["n_messages"], m["first_subject"], m["first_from"],
+               m["min_date_ts"], m["max_date_ts"])
 
-    def batches(it):
-        from zpdfspark.kernel.eml import EmlError, is_mbox, parse_mbox
-
-        for b in it:
-            rows = {"url": [], "n_messages": [], "first_subject": [],
-                    "first_from": [], "min_date_ts": [],
-                    "max_date_ts": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not is_mbox(raw):
-                    continue
-                try:
-                    m = parse_mbox(raw)
-                except EmlError:
-                    continue
-                rows["url"].append(url)
-                rows["n_messages"].append(m["n_messages"])
-                rows["first_subject"].append(m["first_subject"])
-                rows["first_from"].append(m["first_from"])
-                rows["min_date_ts"].append(m["min_date_ts"])
-                rows["max_date_ts"].append(m["max_date_ts"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_messages int, first_subject string, "
-        "first_from string, min_date_ts long, max_date_ts long"
-    ).orderBy("url")
+        "first_from string, min_date_ts long, max_date_ts long")
 
 
 
@@ -5278,42 +4945,27 @@ def _q_subtitle_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     kind (srt/vtt), cue count, last-cue end as duration. Transcript
     TEXT (tag/override strip, NOTE/STYLE skip, karaoke timestamps)
     rides the flagship extraction family via extract_any. Map-only
-    mapInPandas on the pruned (url, html) scan. Oracle: corpus-carried
+    map_rows on the pruned (url, html) scan. Oracle: corpus-carried
     columns from the INDEPENDENT fixtures-side flat regex re-read
     (fixtures._subtitle_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.subtitles import (SubtitleError,
+                                            looks_like_srt,
+                                            looks_like_vtt,
+                                            parse_subtitles)
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not (looks_like_vtt(raw) or looks_like_srt(raw)):
+            return
+        try:
+            m = parse_subtitles(raw)
+        except SubtitleError:
+            return
+        yield (url, m["kind"], m["n_cues"], m["duration_ms"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.subtitles import (SubtitleError,
-                                                looks_like_srt,
-                                                looks_like_vtt,
-                                                parse_subtitles)
-
-        for b in it:
-            rows = {"url": [], "kind": [], "n_cues": [],
-                    "duration_ms": [], "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not (looks_like_vtt(raw) or looks_like_srt(raw)):
-                    continue
-                try:
-                    m = parse_subtitles(raw)
-                except SubtitleError:
-                    continue
-                rows["url"].append(url)
-                rows["kind"].append(m["kind"])
-                rows["n_cues"].append(m["n_cues"])
-                rows["duration_ms"].append(m["duration_ms"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, kind string, n_cues int, duration_ms long, "
-        "n_text_chars int"
-    ).orderBy("url")
+        "n_text_chars int")
 
 
 
@@ -5322,45 +4974,28 @@ def _q_ipynb_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     data source): cell census, kernel language (kernelspec precedence,
     language_info fallback), nbformat version. Cell-source TEXT
     (markdown+code, raw/outputs excluded) rides the flagship
-    extraction family via extract_any. Map-only mapInPandas on the
+    extraction family via extract_any. Map-only map_rows on the
     pruned (url, html) scan. Oracle: GENUINELY TWO-ENGINE — DuckDB
     re-mines the same bytes with its own JSON engine
     (decode(html)::JSON + json_array_length/json_extract), no carried
     truth for any JSON-derived field."""
-    import pandas as pd
+    from zpdfspark.kernel.ipynb import (IpynbError, looks_like_ipynb,
+                                        parse_ipynb)
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not looks_like_ipynb(raw):
+            return
+        try:
+            m = parse_ipynb(raw)
+        except IpynbError:
+            return
+        yield (url, m["n_cells"], m["n_code"], m["n_markdown"], m["language"],
+               m["nbformat"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.ipynb import (IpynbError, looks_like_ipynb,
-                                            parse_ipynb)
-
-        for b in it:
-            rows = {"url": [], "n_cells": [], "n_code": [],
-                    "n_markdown": [], "language": [], "nbformat": [],
-                    "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not looks_like_ipynb(raw):
-                    continue
-                try:
-                    m = parse_ipynb(raw)
-                except IpynbError:
-                    continue
-                rows["url"].append(url)
-                rows["n_cells"].append(m["n_cells"])
-                rows["n_code"].append(m["n_code"])
-                rows["n_markdown"].append(m["n_markdown"])
-                rows["language"].append(m["language"])
-                rows["nbformat"].append(m["nbformat"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_cells int, n_code int, n_markdown int, "
-        "language string, nbformat int, n_text_chars int"
-    ).orderBy("url")
+        "language string, nbformat int, n_text_chars int")
 
 
 
@@ -5368,47 +5003,31 @@ def _q_csv_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delimited-table mining (kernel/csvdoc.py, r5): dialect,
     record/column census, header heuristic. Grid TEXT (tab/newline
     reduction, the xlsx rule) rides the flagship extraction family
-    via extract_any. Map-only mapInPandas on the pruned (url, html)
+    via extract_any. Map-only map_rows on the pruned (url, html)
     scan. Oracle: corpus-carried columns from the INDEPENDENT stdlib
     csv-module re-read (fixtures._csv_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.csvdoc import (CsvError, looks_like_csv,
+                                         parse_csv)
+    from zpdfspark.kernel.htmltext import looks_like_html
+    from zpdfspark.spark.media import sniff_kind
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        # the csv sniff is last in dispatch: only payloads no other
+        # kernel claims reach it (sniff_kind encodes the full precedence)
+        if sniff_kind(raw) != "csv" or looks_like_html(raw) \
+                or not looks_like_csv(raw):
+            return
+        try:
+            m = parse_csv(raw)
+        except CsvError:
+            return
+        yield (url, m["delimiter"], m["n_records"], m["n_cols"],
+               m["has_header"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.csvdoc import (CsvError, looks_like_csv,
-                                             parse_csv)
-        from zpdfspark.kernel.htmltext import looks_like_html
-        from zpdfspark.spark.media import sniff_kind
-
-        for b in it:
-            rows = {"url": [], "delimiter": [], "n_records": [],
-                    "n_cols": [], "has_header": [], "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                # the csv sniff is last in dispatch: only payloads no
-                # other kernel claims reach it (sniff_kind encodes the
-                # full precedence)
-                if sniff_kind(raw) != "csv" or looks_like_html(raw) \
-                        or not looks_like_csv(raw):
-                    continue
-                try:
-                    m = parse_csv(raw)
-                except CsvError:
-                    continue
-                rows["url"].append(url)
-                rows["delimiter"].append(m["delimiter"])
-                rows["n_records"].append(m["n_records"])
-                rows["n_cols"].append(m["n_cols"])
-                rows["has_header"].append(m["has_header"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, delimiter string, n_records int, n_cols int, "
-        "has_header boolean, n_text_chars int"
-    ).orderBy("url")
+        "has_header boolean, n_text_chars int")
 
 
 
@@ -5418,43 +5037,26 @@ def _q_tex_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     section/citation/equation counts. Detexed TEXT (scoped reduction:
     math dropped, skip-environments, kept-arg prose commands) rides
     the flagship extraction family via extract_any. Map-only
-    mapInPandas on the pruned (url, html) scan. Oracle: TWO-ENGINE —
+    map_rows on the pruned (url, html) scan. Oracle: TWO-ENGINE —
     DuckDB re-mines the same bytes with the IDENTICAL regex set (the
     svg_meta pattern); text length is generator truth."""
-    import pandas as pd
+    from zpdfspark.kernel.latex import (LatexError, looks_like_tex,
+                                        parse_latex)
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not looks_like_tex(raw):
+            return
+        try:
+            m = parse_latex(raw)
+        except LatexError:
+            return
+        yield (url, m["documentclass"], m["title"], m["n_sections"],
+               m["n_cites"], m["n_equations"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.latex import (LatexError, looks_like_tex,
-                                            parse_latex)
-
-        for b in it:
-            rows = {"url": [], "documentclass": [], "title": [],
-                    "n_sections": [], "n_cites": [], "n_equations": [],
-                    "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not looks_like_tex(raw):
-                    continue
-                try:
-                    m = parse_latex(raw)
-                except LatexError:
-                    continue
-                rows["url"].append(url)
-                rows["documentclass"].append(m["documentclass"])
-                rows["title"].append(m["title"])
-                rows["n_sections"].append(m["n_sections"])
-                rows["n_cites"].append(m["n_cites"])
-                rows["n_equations"].append(m["n_equations"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, documentclass string, title string, "
-        "n_sections int, n_cites int, n_equations int, n_text_chars int"
-    ).orderBy("url")
+        "n_sections int, n_cites int, n_equations int, n_text_chars int")
 
 
 
@@ -5465,42 +5067,27 @@ def _q_wiki_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     escaped-ref count. Reduced wikitext (WikiExtractor-lineage scoped
     reduction: templates/tables/refs/File/Category dropped, links to
     labels, redirect pages skipped) rides the flagship extraction
-    family via extract_any. Map-only mapInPandas on the pruned
+    family via extract_any. Map-only map_rows on the pruned
     (url, html) scan. Oracle: TWO-ENGINE — DuckDB re-mines the same
     bytes with the IDENTICAL regex set (the tex_meta pattern); text
     length is generator truth."""
-    import pandas as pd
+    from zpdfspark.kernel.wikitext import (WikiError, looks_like_wiki,
+                                           parse_wiki)
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not looks_like_wiki(raw):
+            return
+        try:
+            m = parse_wiki(raw)
+        except WikiError:
+            return
+        yield (url, m["n_pages"], m["n_redirects"], m["first_title"],
+               m["n_refs"], len(m["text"]))
 
-    def batches(it):
-        from zpdfspark.kernel.wikitext import (WikiError, looks_like_wiki,
-                                               parse_wiki)
-
-        for b in it:
-            rows = {"url": [], "n_pages": [], "n_redirects": [],
-                    "first_title": [], "n_refs": [], "n_text_chars": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not looks_like_wiki(raw):
-                    continue
-                try:
-                    m = parse_wiki(raw)
-                except WikiError:
-                    continue
-                rows["url"].append(url)
-                rows["n_pages"].append(m["n_pages"])
-                rows["n_redirects"].append(m["n_redirects"])
-                rows["first_title"].append(m["first_title"])
-                rows["n_refs"].append(m["n_refs"])
-                rows["n_text_chars"].append(len(m["text"]))
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_pages int, n_redirects int, first_title string, "
-        "n_refs int, n_text_chars int"
-    ).orderBy("url")
+        "n_refs int, n_text_chars int")
 
 
 def _q_ps_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5535,41 +5122,26 @@ def _q_sqlite_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator uses stdlib sqlite3, the format's reference producer —
     a true real-producer differential). valid_size cross-checks
     page_size × n_pages against the payload length (torn downloads).
-    Map-only mapInPandas on the pruned (url, html) scan. Oracle:
+    Map-only map_rows on the pruned (url, html) scan. Oracle:
     corpus-carried columns from the INDEPENDENT fixtures-side flat
     struct re-read (fixtures._sqlite_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.sqlitedb import (SqliteError, is_sqlite,
+                                           parse_sqlite)
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not is_sqlite(raw):
+            return
+        try:
+            m = parse_sqlite(raw)
+        except SqliteError:
+            return
+        yield (url, m["page_size"], m["n_pages"], m["encoding"],
+               m["user_version"], m["valid_size"])
 
-    def batches(it):
-        from zpdfspark.kernel.sqlitedb import (SqliteError, is_sqlite,
-                                               parse_sqlite)
-
-        for b in it:
-            rows = {"url": [], "page_size": [], "n_pages": [],
-                    "encoding": [], "user_version": [], "valid_size": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not is_sqlite(raw):
-                    continue
-                try:
-                    m = parse_sqlite(raw)
-                except SqliteError:
-                    continue
-                rows["url"].append(url)
-                rows["page_size"].append(m["page_size"])
-                rows["n_pages"].append(m["n_pages"])
-                rows["encoding"].append(m["encoding"])
-                rows["user_version"].append(m["user_version"])
-                rows["valid_size"].append(m["valid_size"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, page_size int, n_pages int, encoding string, "
-        "user_version int, valid_size boolean"
-    ).orderBy("url")
+        "user_version int, valid_size boolean")
 
 
 def _q_md_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5645,28 +5217,17 @@ def _q_compressibility(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation time by the same pinned zlib level (eager differential
     — both sides run CPython's bundled zlib; the distributed claim is
     the plumbing + the arithmetic, documented in fixtures.py)."""
-    import pandas as pd
+    import zlib
 
-    corpus = _corpus(spark, sf_dir)
+    from zpdfspark.spark.udfs import map_rows
 
-    def batches(it):
-        import zlib
+    def per_row(url, text):
+        enc = (text or "").encode("utf-8")
+        if enc:
+            yield url, len(enc), len(zlib.compress(enc, 6))
 
-        for b in it:
-            rows = {"url": [], "raw_len": [], "zlib_len": []}
-            for url, text in zip(b["url"], b["text"]):
-                if text is None:
-                    continue
-                enc = text.encode("utf-8")
-                if not enc:
-                    continue
-                rows["url"].append(url)
-                rows["raw_len"].append(len(enc))
-                rows["zlib_len"].append(len(zlib.compress(enc, 6)))
-            yield pd.DataFrame(rows)
-
-    out = corpus.select("url", "text").mapInPandas(
-        batches, "url string, raw_len int, zlib_len int")
+    out = map_rows(_corpus(spark, sf_dir).select("url", "text"), per_row,
+                   "url string, raw_len int, zlib_len int")
     permille = F.expr("CAST((zlib_len * 1000) DIV raw_len AS INT)")
     return (
         out.select(
@@ -5732,40 +5293,25 @@ def _q_font_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     name them misfiles a visible slice of crawl bytes. Container kind,
     wrapped flavor, table count, declared sfnt size; glyph data never
     read (WOFF2's Brotli stage honestly out of scope, the zstd
-    posture). Map-only mapInPandas on the pruned (url, html) scan.
+    posture). Map-only map_rows on the pruned (url, html) scan.
     Oracle: corpus-carried columns from the INDEPENDENT fixtures-side
     flat struct re-read (fixtures._font_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.font import (FontError, looks_like_font,
+                                       parse_font)
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not looks_like_font(raw):
+            return
+        try:
+            m = parse_font(raw)
+        except FontError:
+            return
+        yield (url, m["kind"], m["flavor"], m["n_tables"], m["sfnt_size"])
 
-    def batches(it):
-        from zpdfspark.kernel.font import (FontError, looks_like_font,
-                                           parse_font)
-
-        for b in it:
-            rows = {"url": [], "kind": [], "flavor": [],
-                    "n_tables": [], "sfnt_size": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not looks_like_font(raw):
-                    continue
-                try:
-                    m = parse_font(raw)
-                except FontError:
-                    continue
-                rows["url"].append(url)
-                rows["kind"].append(m["kind"])
-                rows["flavor"].append(m["flavor"])
-                rows["n_tables"].append(m["n_tables"])
-                rows["sfnt_size"].append(m["sfnt_size"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, kind string, flavor string, n_tables int, "
-        "sfnt_size long"
-    ).orderBy("url")
+        "sfnt_size long")
 
 
 
@@ -5774,40 +5320,25 @@ def _q_tar_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     releases and dataset drops; the pipeline keeps the member census
     (count/dirs/bytes/first regular name) without unpacking. Standalone
     .tar reaches here by sniff; .tar.gz reaches the same walk through
-    extract_any's bounded gzip re-dispatch. Map-only mapInPandas on
+    extract_any's bounded gzip re-dispatch. Map-only map_rows on
     the pruned (url, html) scan. Oracle: corpus-carried columns from
     the INDEPENDENT fixtures-side stdlib tarfile re-read
     (fixtures._tar_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.tar import TarError, is_tar, parse_tar
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[257:262] != b"ustar" or not is_tar(raw):
+            return
+        try:
+            m = parse_tar(raw)
+        except TarError:
+            return
+        yield (url, m["n_members"], m["n_dirs"], m["n_bytes"], m["first_name"])
 
-    def batches(it):
-        from zpdfspark.kernel.tar import TarError, is_tar, parse_tar
-
-        for b in it:
-            rows = {"url": [], "n_members": [], "n_dirs": [],
-                    "n_bytes": [], "first_name": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[257:262] != b"ustar" or not is_tar(raw):
-                    continue
-                try:
-                    m = parse_tar(raw)
-                except TarError:
-                    continue
-                rows["url"].append(url)
-                rows["n_members"].append(m["n_members"])
-                rows["n_dirs"].append(m["n_dirs"])
-                rows["n_bytes"].append(m["n_bytes"])
-                rows["first_name"].append(m["first_name"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, n_members int, n_dirs int, n_bytes long, "
-        "first_name string"
-    ).orderBy("url")
+        "first_name string")
 
 
 def _q_webm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5815,44 +5346,26 @@ def _q_webm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     free video container, the EBML sibling of video_stats/mp4:
     DocType, duration from TimestampScale×Duration, track census,
     video dims + codec ids. Frame decode honestly stubbed (no
-    VP8/VP9/AV1 codecs here), like mp4. Map-only mapInPandas on the
+    VP8/VP9/AV1 codecs here), like mp4. Map-only map_rows on the
     pruned (url, html) scan. Oracle: corpus-carried columns from the
     INDEPENDENT fixtures-side explicit-stack EBML scan
     (fixtures._webm_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.webm import WebmError, is_webm, parse_webm
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not is_webm(raw):
+            return
+        try:
+            m = parse_webm(raw)
+        except WebmError:
+            return
+        yield (url, m["doc_type"], m["duration_ms"], m["n_tracks"], m["width"],
+               m["height"], m["video_codec"], m["audio_codec"])
 
-    def batches(it):
-        from zpdfspark.kernel.webm import WebmError, is_webm, parse_webm
-
-        for b in it:
-            rows = {"url": [], "doc_type": [], "duration_ms": [],
-                    "n_tracks": [], "width": [], "height": [],
-                    "video_codec": [], "audio_codec": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not is_webm(raw):
-                    continue
-                try:
-                    m = parse_webm(raw)
-                except WebmError:
-                    continue
-                rows["url"].append(url)
-                rows["doc_type"].append(m["doc_type"])
-                rows["duration_ms"].append(m["duration_ms"])
-                rows["n_tracks"].append(m["n_tracks"])
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["video_codec"].append(m["video_codec"])
-                rows["audio_codec"].append(m["audio_codec"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
+    return _map_blobs(
+        spark, sf_dir, per_row,
         "url string, doc_type string, duration_ms long, n_tracks int, "
-        "width int, height int, video_codec string, audio_codec string"
-    ).orderBy("url")
+        "width int, height int, video_codec string, audio_codec string")
 
 
 def _q_ico_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5860,38 +5373,23 @@ def _q_ico_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     /favicon.ico per host: entry count, largest rendition's dims (the
     directory's u8 dims where 0 means 256), whether any entry is a
     modern embedded-PNG stream (kernel-decodable via entry_png).
-    Map-only mapInPandas on the pruned (url, html) scan. Oracle:
+    Map-only map_rows on the pruned (url, html) scan. Oracle:
     corpus-carried columns from the INDEPENDENT fixtures-side
     directory re-read (fixtures._ico_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.ico import IcoError, is_ico, parse_ico
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if not is_ico(raw):
+            return
+        try:
+            m = parse_ico(raw)
+        except IcoError:
+            return
+        yield (url, m["n_images"], m["width"], m["height"], m["any_png"])
 
-    def batches(it):
-        from zpdfspark.kernel.ico import IcoError, is_ico, parse_ico
-
-        for b in it:
-            rows = {"url": [], "n_images": [], "width": [], "height": [],
-                    "any_png": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if not is_ico(raw):
-                    continue
-                try:
-                    m = parse_ico(raw)
-                except IcoError:
-                    continue
-                rows["url"].append(url)
-                rows["n_images"].append(m["n_images"])
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["any_png"].append(m["any_png"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches,
-        "url string, n_images int, width int, height int, any_png boolean"
-    ).orderBy("url")
+    return _map_blobs(
+        spark, sf_dir, per_row,
+        "url string, n_images int, width int, height int, any_png boolean")
 
 
 _BM25_TERMS = ("spark", "scan", "window")
@@ -6142,30 +5640,20 @@ def _q_webp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     honestly stubbed (no VP8 codec in this container). Map-only,
     magic-filtered in-kernel; oracle: the corpus-carried dims from the
     independent fixtures-side header re-read (_image_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.webp import WebpError, webp_dims
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if raw[:4] != b"RIFF" or raw[8:12] != b"WEBP":
+            return
+        try:
+            w, h, _flavor = webp_dims(raw)
+        except WebpError:
+            return
+        yield (url, w, h)
 
-    def batches(it):
-        from zpdfspark.kernel.webp import WebpError, webp_dims
-
-        for b in it:
-            rows = {"url": [], "width": [], "height": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if raw[:4] != b"RIFF" or raw[8:12] != b"WEBP":
-                    continue
-                try:
-                    w, h, _flavor = webp_dims(raw)
-                except WebpError:
-                    continue
-                rows["url"].append(url)
-                rows["width"].append(w)
-                rows["height"].append(h)
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches, "url string, width int, height int").orderBy("url")
+    return _map_blobs(
+        spark, sf_dir, per_row,
+        "url string, width int, height int")
 
 
 def _q_avif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6175,34 +5663,21 @@ def _q_avif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     format; AV1 sample decode is honestly stubbed. Map-only,
     magic-filtered in-kernel; oracle: the corpus-carried dims/channels
     from the independent fixtures-side box walk (_image_expected)."""
-    import pandas as pd
+    from zpdfspark.kernel.mp4 import Mp4Error, parse_avif
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if (len(raw) < 12 or raw[4:8] != b"ftyp"
+                or raw[8:12] not in (b"avif", b"avis")):
+            return
+        try:
+            m = parse_avif(raw)
+        except Mp4Error:
+            return
+        yield (url, m["width"], m["height"], m["channels"])
 
-    def batches(it):
-        from zpdfspark.kernel.mp4 import Mp4Error, parse_avif
-
-        for b in it:
-            rows = {"url": [], "width": [], "height": [],
-                    "n_channels": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if (len(raw) < 12 or raw[4:8] != b"ftyp"
-                        or raw[8:12] not in (b"avif", b"avis")):
-                    continue
-                try:
-                    m = parse_avif(raw)
-                except Mp4Error:
-                    continue
-                rows["url"].append(url)
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["n_channels"].append(m["channels"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches, "url string, width int, height int, n_channels int"
-    ).orderBy("url")
+    return _map_blobs(
+        spark, sf_dir, per_row,
+        "url string, width int, height int, n_channels int")
 
 
 def _q_heic_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6210,34 +5685,21 @@ def _q_heic_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     avif_meta (same kernel/mp4.py parse_avif pitm/ipma/ipco walk;
     hvcC instead of av1C identifies the codec; HEVC sample decode is
     honestly stubbed). Map-only, brand-gated in-kernel."""
-    import pandas as pd
+    from zpdfspark.kernel.mp4 import Mp4Error, parse_avif
 
-    corpus = _corpus(spark, sf_dir)
+    def per_row(url, raw):
+        if (len(raw) < 12 or raw[4:8] != b"ftyp"
+                or raw[8:12] not in (b"heic", b"heix")):
+            return
+        try:
+            m = parse_avif(raw)
+        except Mp4Error:
+            return
+        yield (url, m["width"], m["height"], m["channels"])
 
-    def batches(it):
-        from zpdfspark.kernel.mp4 import Mp4Error, parse_avif
-
-        for b in it:
-            rows = {"url": [], "width": [], "height": [],
-                    "n_channels": []}
-            for url, blob in zip(b["url"], b["html"]):
-                raw = bytes(blob) if blob is not None else b""
-                if (len(raw) < 12 or raw[4:8] != b"ftyp"
-                        or raw[8:12] not in (b"heic", b"heix")):
-                    continue
-                try:
-                    m = parse_avif(raw)
-                except Mp4Error:
-                    continue
-                rows["url"].append(url)
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["n_channels"].append(m["channels"])
-            yield pd.DataFrame(rows)
-
-    return corpus.select("url", "html").mapInPandas(
-        batches, "url string, width int, height int, n_channels int"
-    ).orderBy("url")
+    return _map_blobs(
+        spark, sf_dir, per_row,
+        "url string, width int, height int, n_channels int")
 
 
 def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -105,7 +105,8 @@ def test_image_neardup_joins_on_band(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
-    assert "MapInPandas" not in plan, plan   # decode ran once, pre-barrier
+    # decode ran once, pre-barrier
+    assert "MapInPandas" not in plan and "MapInArrow" not in plan, plan
 
 
 def test_structured_data_map_only(spark, sf_dir):
@@ -181,13 +182,13 @@ def test_repetition_signals_map_only(spark, sf_dir):
 
 def test_html_blocks_map_only(spark, sf_dir):
     """The jusText block classifier must run inside the scan task
-    (mapInPandas) with the determinism orderBy as the ONLY exchange:
+    (mapInArrow) with the determinism orderBy as the ONLY exchange:
     no shuffle of blobs, no join, no aggregate — block rows are the
     only thing that crosses the Arrow boundary."""
     import __spark_entry__ as E
 
     plan = _formatted(E.queries()["html_blocks"](spark, sf_dir), spark)
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "hashpartitioning" not in plan, plan
     assert "HashAggregate" not in plan, plan
     assert "Join" not in plan, plan
@@ -350,7 +351,7 @@ def test_html_dense_map_only(spark, sf_dir):
     import __spark_entry__ as E
 
     plan = _formatted(E.queries()["html_dense"](spark, sf_dir), spark)
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "hashpartitioning" not in plan, plan
     assert "Join" not in plan, plan
 
@@ -860,7 +861,7 @@ def test_compressibility_map_only(spark, sf_dir):
 
     plan = _formatted(E.queries()["compressibility"](spark, sf_dir),
                       spark)
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "Join" not in plan, plan
     assert "HashAggregate" not in plan, plan
     assert "hashpartitioning" not in plan, plan
@@ -1005,14 +1006,14 @@ def test_bm25_takeordered_no_global_sort(spark, sf_dir):
 
 def test_office_meta_map_only(spark, sf_dir):
     """The four office/book package walks must run inside the scan
-    task (mapInPandas on the pruned url+html scan) with the
+    task (mapInArrow on the pruned url+html scan) with the
     determinism orderBy as the ONLY exchange."""
     import __spark_entry__ as E
 
     for q in ("docx_meta", "epub_meta", "xlsx_meta", "odt_meta",
               "ods_meta", "odp_meta"):
         plan = _formatted(E.queries()[q](spark, sf_dir), spark)
-        assert "MapInPandas" in plan, (q, plan)
+        assert "MapInArrow" in plan, (q, plan)
         assert "hashpartitioning" not in plan, (q, plan)
         assert "HashAggregate" not in plan, (q, plan)
         assert "ReadSchema: struct<url:string,html:binary>" in plan, (q, plan)
@@ -1021,7 +1022,7 @@ def test_office_meta_map_only(spark, sf_dir):
 def test_new_format_metas_are_map_only(spark, sf_dir):
     """The r5 per-format meta queries (eml/mbox/subtitle/ipynb/csv/
     tex) share the map-only shape: pruned (url, html) scan -> one
-    MapInPandas kernel -> the single determinism range exchange. No
+    MapInArrow kernel -> the single determinism range exchange. No
     joins, no aggregates, no per-row Python."""
     import __spark_entry__ as E
 
@@ -1031,7 +1032,7 @@ def test_new_format_metas_are_map_only(spark, sf_dir):
         assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, (name,
                                                                  plan)
         assert "rangepartitioning" in plan, name
-        assert "MapInPandas" in plan, name
+        assert "MapInArrow" in plan, name
         assert "BatchEvalPython" not in plan, name
         assert "Join" not in plan, name
         assert "ReadSchema" in plan and "html" in plan, name

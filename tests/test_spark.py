@@ -57,6 +57,71 @@ def test_sql_udfs(spark, corpus_path):
     assert row["pages"] > 0
 
 
+
+# -- udfs.map_rows --------------------------------------------------------
+
+
+def test_map_rows_zero_output_rows_keep_list_type(spark):
+    """A batch whose rows all yield nothing still carries array<string>
+    (a zero-row pandas list column used to default to float64)."""
+    from zpdfspark.spark.udfs import map_rows
+
+    df = spark.createDataFrame([("a", b"x"), ("b", b"y")],
+                               "url string, html binary").coalesce(1)
+    out = map_rows(df, lambda url, raw: iter(()),
+                   "url string, names array<string>")
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<url:string,names:array<string>>"
+    kept = map_rows(df, lambda url, raw: iter([(url, ["s1"])] if url == "b"
+                                              else []),
+                    "url string, names array<string>")
+    assert [tuple(r) for r in kept.collect()] == [("b", ["s1"])]
+
+
+def test_map_rows_nulls_in_int_long_boolean(spark):
+    from zpdfspark.spark.udfs import map_rows
+
+    df = spark.createDataFrame([("a", b"x")], "url string, html binary")
+    out = map_rows(df, lambda url, raw: iter([(url, None, None, None),
+                                              (url, 1, 2 ** 40, True)]),
+                   "url string, i int, n long, ok boolean")
+    assert [tuple(r) for r in out.collect()] == [
+        ("a", None, None, None), ("a", 1, 2 ** 40, True)]
+
+
+def test_map_rows_several_rows_per_input_and_null_blob(spark):
+    """Many output rows per input row (the spans/pages shape), and a null
+    binary value arrives as b"" while a null string stays None."""
+    from zpdfspark.spark.udfs import map_rows
+
+    df = spark.createDataFrame(
+        [("a", b"abc", "t"), ("b", None, None)],
+        "url string, html binary, text string")
+
+    def per_row(url, raw, text):
+        for i, ch in enumerate(raw or b"-"):
+            yield url, i, type(raw).__name__, len(raw), text is None
+
+    out = map_rows(df, per_row,
+                   "url string, i int, kind string, n int, null_text boolean")
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("a", 0, "bytes", 3, False), ("a", 1, "bytes", 3, False),
+        ("a", 2, "bytes", 3, False), ("b", 0, "bytes", 0, True)]
+
+
+def test_udfs_and_pipeline_import_without_pandas():
+    import subprocess
+    import sys
+
+    code = ("import sys, zpdfspark.spark.udfs, zpdfspark.spark.pipeline; "
+            "print('pandas' in sys.modules)")
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, check=True,
+                         cwd=os.path.dirname(os.path.dirname(
+                             os.path.abspath(__file__))))
+    assert out.stdout.strip() == "False", out.stderr
+
+
 def _drop_lineage_bucket(spark, out, bucket):
     """Rewrite out/_lineage without ``bucket``'s row, as if the run had
     died before recording it."""

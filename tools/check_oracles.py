@@ -3,6 +3,14 @@ queries()[name] on Spark and oracle_sql()[name] on DuckDB at the given
 sf, compare row count + schema-insensitive sorted values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+The oracles are only meaningful at sf0.01: ``oracle_sql()`` always
+reads the sf0.01 corpus (it builds that file if missing), while the
+Spark side reads the corpus under ``sf_dir``. At any other scale every
+corpus-backed query reports a false row-count FAIL (at sf0.001,
+``extract_metadata`` reports 200 vs 800), so the tool warns first.
+
+``compare`` is the per-query check; tests/test_oracles.py calls it too.
 """
 
 from __future__ import annotations
@@ -36,19 +44,94 @@ def normalize(rows, cols):
     return out
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    # ZPDF_ORACLE_CPUS: cross-width determinism replays — running the
-    # same gate at a different core/shuffle-partition count shakes out
-    # partition-order nondeterminism the fixed-width run can't see
-    cpus = int(os.environ.get("ZPDF_ORACLE_CPUS", "8"))
-    spark = get_spark(cpus, "oracle-check")
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per driver table under sf_dir."""
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def _arrow_type(t):
+    # structural type string: list item field NAMES differ between
+    # engines (duckdb "l" vs spark "element") with no value meaning —
+    # drop them; keep struct field names
+    import pyarrow as pa
+
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return f"list<{_arrow_type(t.value_type)}>"
+    if pa.types.is_struct(t):
+        return ("struct<" + ",".join(
+            f"{f.name}:{_arrow_type(f.type)}" for f in t) + ">")
+    return str(t)
+
+
+def compare(con, name: str, df, sql: str) -> tuple[bool, list[str]]:
+    """Check one Spark query result against its DuckDB oracle SQL.
+
+    Returns (ok, report lines). The check is: same column names, no
+    integer-vs-decimal Arrow type drift, same row count, and equal
+    sorted normalized values."""
+    cols = df.columns
+    rows = [tuple(r) for r in df.collect()]
+    try:
+        o = con.execute(sql)
+        ocols = [d[0] for d in o.description]
+        orows = o.fetchall()
+    except Exception as e:
+        return False, [f"[FAIL] {name}: duckdb error: {e}"]
+    if sorted(cols) != sorted(ocols):
+        return False, [f"[FAIL] {name}: column mismatch "
+                       f"{sorted(cols)} vs {sorted(ocols)}"]
+    # Arrow-level type audit: the driver's value hash is type-sensitive,
+    # and DuckDB's Python fetchall() hides drift (HUGEINT comes back as
+    # plain int). Compare arrow types and fail hard on the known
+    # driver-red shape: decimal (HUGEINT) vs integer; warn on anything
+    # else.
+    report = []
+    try:
+        dmap = {f.name: _arrow_type(f.type)
+                for f in con.execute(sql).arrow().schema}
+        smap = {f.name: _arrow_type(f.type)
+                for f in df.limit(0).toArrow().schema}
+        for c in cols:
+            st, dt = smap.get(c), dmap.get(c)
+            if st == dt:
+                continue
+            if "decimal" in (dt or "") and "int" in (st or ""):
+                return False, report + [
+                    f"[FAIL] {name}: col {c} duckdb {dt} vs spark {st} "
+                    "(uncast aggregate?)"]
+            report.append(f"[warn] {name}: col {c} type drift "
+                          f"duckdb={dt} spark={st}")
+    except Exception as e:  # pragma: no cover - audit best-effort
+        report.append(f"[warn] {name}: type audit skipped: {e}")
+    a = normalize(rows, cols)
+    b = normalize(orows, ocols)
+    if len(a) != len(b):
+        return False, report + [
+            f"[FAIL] {name}: row count {len(a)} vs {len(b)}"]
+    if a != b:
+        diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+        return False, report + [
+            f"[FAIL] {name}: value mismatch, first diffs: {diff}"]
+    return True, report + [f"[OK]   {name}: {len(a)} rows match"]
+
+
+def main():
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+    if os.path.basename(os.path.normpath(sf_dir)) != "sf0.01":
+        print(f"WARNING: oracle_sql() reads the sf0.01 corpus; at {sf_dir} "
+              "corpus-backed queries report false row-count FAILs")
+    # ZPDF_ORACLE_CPUS: cross-width determinism replays — running the
+    # same gate at a different core/shuffle-partition count shakes out
+    # partition-order nondeterminism the fixed-width run can't see
+    cpus = int(os.environ.get("ZPDF_ORACLE_CPUS", "8"))
+    spark = get_spark(cpus, "oracle-check")
+    con = duckdb_views(sf_dir)
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -59,80 +142,21 @@ def main():
         sql = oracles.get(name)
         try:
             df = fn(spark, sf_dir)
-            cols = df.columns
-            rows = [tuple(r) for r in df.collect()]
+            if sql is None:
+                rows = df.collect()
+                print(f"[rows-only] {name}: {len(rows)} rows, "
+                      f"cols={df.columns}")
+                if not rows:
+                    print(f"  WARNING: {name} returned 0 rows")
+                continue
+            ok, report = compare(con, name, df, sql)
         except Exception as e:
             failures.append(name)
             print(f"[FAIL] {name}: spark error: {e}")
             continue
-        if sql is None:
-            print(f"[rows-only] {name}: {len(rows)} rows, cols={cols}")
-            if not rows:
-                print(f"  WARNING: {name} returned 0 rows")
-            continue
-        try:
-            o = con.execute(sql)
-            ocols = [d[0] for d in o.description]
-            orows = o.fetchall()
-        except Exception as e:
+        print("\n".join(report))
+        if not ok:
             failures.append(name)
-            print(f"[FAIL] {name}: duckdb error: {e}")
-            continue
-        if sorted(cols) != sorted(ocols):
-            failures.append(name)
-            print(f"[FAIL] {name}: column mismatch {sorted(cols)} vs {sorted(ocols)}")
-            continue
-        # Arrow-level type audit: the driver's value hash is
-        # type-sensitive, and DuckDB's Python fetchall() hides drift
-        # (HUGEINT comes back as plain int).  Compare arrow types and
-        # fail hard on the known driver-red shape: decimal (HUGEINT)
-        # vs integer; warn on anything else.
-        try:
-            import pyarrow as pa
-
-            def _ty(t):
-                # structural type string: list item field NAMES differ
-                # between engines (duckdb "l" vs spark "element") with
-                # no value meaning — drop them; keep struct field names
-                if pa.types.is_list(t) or pa.types.is_large_list(t):
-                    return f"list<{_ty(t.value_type)}>"
-                if pa.types.is_struct(t):
-                    return ("struct<" + ",".join(
-                        f"{f.name}:{_ty(f.type)}" for f in t) + ">")
-                return str(t)
-
-            duck_schema = con.execute(sql).arrow().schema
-            spark_schema = df.limit(0).toArrow().schema
-            dmap = {f.name: _ty(f.type) for f in duck_schema}
-            smap = {f.name: _ty(f.type) for f in spark_schema}
-            for c in cols:
-                st, dt = smap.get(c), dmap.get(c)
-                if st == dt:
-                    continue
-                if "decimal" in (dt or "") and "int" in (st or ""):
-                    failures.append(name)
-                    print(f"[FAIL] {name}: col {c} duckdb {dt} vs "
-                          f"spark {st} (uncast aggregate?)")
-                    break
-                print(f"[warn] {name}: col {c} type drift "
-                      f"duckdb={dt} spark={st}")
-            else:
-                pass
-            if failures and failures[-1] == name:
-                continue
-        except Exception as e:  # pragma: no cover - audit best-effort
-            print(f"[warn] {name}: type audit skipped: {e}")
-        a = normalize(rows, cols)
-        b = normalize(orows, ocols)
-        if len(a) != len(b):
-            failures.append(name)
-            print(f"[FAIL] {name}: row count {len(a)} vs {len(b)}")
-        elif a != b:
-            failures.append(name)
-            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-            print(f"[FAIL] {name}: value mismatch, first diffs: {diff}")
-        else:
-            print(f"[OK]   {name}: {len(a)} rows match")
     spark.stop()
     if failures:
         print("FAILURES:", failures)

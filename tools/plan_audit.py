@@ -26,7 +26,7 @@ NOTES = {
     "extract_search": "pushed filter text IS NOT NULL at the scan; map-only match explode in-kernel.",
     "extract_pages": "per-page 1-to-N inside the kernel; map-only + orderBy.",
     "extract_doc_json": "map-only JSON rendering per document.",
-    "extract_sql_udf": "ArrowEvalPython (pandas_udf) — vectorized SQL surface; scan pruned to url+html.",
+    "extract_sql_udf": "ArrowEvalPython (scalar arrow_udf) — vectorized SQL surface; scan pruned to url+html.",
     "extract_features": "map-only kernel; the label/count projection is JVM-side on the kernel output.",
     "extract_markdown": "map-only kernel.",
     "extract_markdown_structured": "map-only kernel (struct-map mode).",
@@ -154,7 +154,7 @@ def main() -> None:
                 (r"\(\d+\) CartesianProduct", "CARTESIAN (bad)"),
                 (r"\(\d+\) (?:PythonMapInArrow|MapInArrow)", "mapInArrow kernel"),
                 (r"\(\d+\) (?:FlatMapGroupsInPandas|MapInPandas)", "mapInPandas kernel"),
-                (r"\(\d+\) ArrowEvalPython", "arrow pandas_udf"),
+                (r"\(\d+\) ArrowEvalPython", "scalar arrow_udf"),
                 (r"\(\d+\) BatchEvalPython", "ROW-WISE PYTHON (bad)"),
                 (r"\(\d+\) HashAggregate", "hash aggregate"),
                 (r"\(\d+\) ObjectHashAggregate", "object hash aggregate"),

@@ -3,7 +3,7 @@
 A from-scratch reimplementation of the capabilities of the reference
 Zig library (Lulzx/zpdf, /root/reference) as a Spark-first pipeline:
 the per-document parsing/extraction kernel is pure Python operating on
-Arrow binary batches via mapInPandas; all parallelism comes from Spark
+Arrow binary batches via mapInArrow; all parallelism comes from Spark
 partitions (the reference is single-threaded per document,
 /root/reference/src/capi.zig:85-88).
 """

@@ -4,10 +4,12 @@ The engine's API surface (SURVEY.md §2.11): every capability of the
 reference C ABI / Python binding (/root/reference/src/capi.zig,
 /root/reference/python/zpdf/__init__.py) re-expressed as
 
-(a) ``mapInArrow`` / ``mapInPandas`` batch kernels — whole-row output
-    incl. metrics;
-(b) registered ``pandas_udf``s — callable from Spark SQL
+(a) ``mapInArrow`` batch kernels — whole-row output incl. metrics; the
+    per-document ones all run through ``map_rows``;
+(b) registered scalar ``arrow_udf``s — callable from Spark SQL
     (``SELECT zpdf_extract(html) FROM pages``);
+
+pandas is never imported here: both shapes take and return Arrow data.
 
 No per-row Python UDFs anywhere (input_hint): documents are iterated
 inside the Arrow batch, exactly as the reference iterates pages inside
@@ -20,10 +22,8 @@ from __future__ import annotations
 
 import json
 import time
-from typing import Iterator
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -35,6 +35,10 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from zpdfspark.kernel import Document
+from zpdfspark.kernel.document import document_json
+from zpdfspark.kernel.htmltext import extract_any
 
 # Output schema of the main extraction kernel. `errors` mirrors
 # ParseErrorRecord (root.zig:83-97); metric columns mirror the
@@ -204,6 +208,44 @@ def extract_dataframe(df: DataFrame, mode: str = "accuracy",
     )
 
 
+# -- the per-document row map ---------------------------------------------
+
+
+def _pylist(arr) -> list:
+    """``arr`` as Python values, with a null binary value as ``b""``."""
+    values = arr.to_pylist()
+    if pa.types.is_binary(arr.type) or pa.types.is_large_binary(arr.type):
+        return [b"" if v is None else v for v in values]
+    return values
+
+
+def map_rows(df: DataFrame, per_row, schema) -> DataFrame:
+    """Run ``per_row`` once per row of ``df`` inside a ``mapInArrow`` task.
+
+    ``per_row(*values)`` gets the row's values in ``df``'s column order,
+    with a null binary value passed as ``b""``, and yields zero or more
+    output tuples in ``schema`` order (a StructType or DDL string). Each
+    input Arrow batch becomes one ``RecordBatch`` built against the Arrow
+    form of ``schema``, so a batch with no output rows still carries the
+    declared column types."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    out_schema = to_arrow_schema(schema)
+
+    def fn(batches):
+        for rb in batches:
+            cols = [_pylist(c) for c in rb.columns]
+            rows = [out for values in zip(*cols) for out in per_row(*values)]
+            out_cols = list(zip(*rows)) if rows else [()] * len(out_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(out_cols, out_schema)],
+                schema=out_schema)
+
+    return df.mapInArrow(fn, schema)
+
+
 # -- span extraction (bounds mode, EP3) -----------------------------------
 
 SPANS_SCHEMA = StructType([
@@ -218,33 +260,17 @@ SPANS_SCHEMA = StructType([
 ])
 
 
-def spans_batches(html_col: str = "html", url_col: str = "url"):
-    """mapInPandas kernel -> exploded span rows (root.zig:542-577)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zpdfspark.kernel import Document
-
-        for batch in batches:
-            out = {k: [] for k in ("url", "page", "x0", "y0", "x1", "y1", "text", "font_size")}
-            for url, blob in zip(batch[url_col], batch[html_col]):
-                doc = Document(bytes(blob) if blob is not None else b"")
-                for page_idx in range(doc.page_count):
-                    for s in doc.extract_bounds(page_idx):
-                        out["url"].append(url)
-                        out["page"].append(page_idx)
-                        out["x0"].append(s.x0)
-                        out["y0"].append(s.y0)
-                        out["x1"].append(s.x1)
-                        out["y1"].append(s.y1)
-                        out["text"].append(s.text.decode("utf-8", "replace"))
-                        out["font_size"].append(s.font_size)
-            yield pd.DataFrame(out)
-
-    return fn
-
-
 def spans_dataframe(df: DataFrame) -> DataFrame:
-    return df.select("url", "html").mapInPandas(spans_batches(), SPANS_SCHEMA)
+    """Exploded span rows, one per text span (root.zig:542-577)."""
+
+    def per_row(url, blob):
+        doc = Document(blob)
+        for page_idx in range(doc.page_count):
+            for s in doc.extract_bounds(page_idx):
+                yield (url, page_idx, s.x0, s.y0, s.x1, s.y1,
+                       s.text.decode("utf-8", "replace"), s.font_size)
+
+    return map_rows(df.select("url", "html"), per_row, SPANS_SCHEMA)
 
 
 HTML_BLOCKS_SCHEMA = StructType([
@@ -259,45 +285,26 @@ HTML_BLOCKS_SCHEMA = StructType([
 ])
 
 
-def html_blocks_batches(html_col: str = "html", url_col: str = "url"):
-    """mapInPandas kernel -> jusText block-classification rows
-    (kernel/htmlblocks.py): one row per DOM block of each HTML payload
-    with its features and context-free/final labels. Non-HTML rows
-    (PDF/media) emit nothing — the gate is the same magic sniff the
-    extraction dispatch uses. Map-only at any scale: the per-document
-    block list never leaves the scan task unexploded."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zpdfspark.kernel.htmlblocks import classify_blocks
-        from zpdfspark.kernel.htmltext import looks_like_html
-
-        for batch in batches:
-            out = {k: [] for k in ("url", "block_idx", "n_chars", "n_words",
-                                   "ld_x1000", "sd_x1000", "label_cf",
-                                   "label")}
-            for url, blob in zip(batch[url_col], batch[html_col]):
-                raw = bytes(blob) if blob is not None else b""
-                if not looks_like_html(raw):
-                    continue
-                for b in classify_blocks(raw):
-                    out["url"].append(url)
-                    out["block_idx"].append(b["idx"])
-                    out["n_chars"].append(b["n_chars"])
-                    out["n_words"].append(b["n_words"])
-                    out["ld_x1000"].append(
-                        int(round(b["link_density"] * 1000)))
-                    out["sd_x1000"].append(
-                        int(round(b["stopword_density"] * 1000)))
-                    out["label_cf"].append(b["label_cf"])
-                    out["label"].append(b["label"])
-            yield pd.DataFrame(out)
-
-    return fn
-
-
 def html_blocks_dataframe(df: DataFrame) -> DataFrame:
-    return df.select("url", "html").mapInPandas(
-        html_blocks_batches(), HTML_BLOCKS_SCHEMA)
+    """jusText block-classification rows (kernel/htmlblocks.py): one row
+    per DOM block of each HTML payload with its features and
+    context-free/final labels. Non-HTML rows (PDF/media) emit nothing —
+    the gate is the same magic sniff the extraction dispatch uses.
+    Map-only at any scale: the per-document block list never leaves the
+    scan task unexploded."""
+    from zpdfspark.kernel.htmlblocks import classify_blocks
+    from zpdfspark.kernel.htmltext import looks_like_html
+
+    def per_row(url, raw):
+        if not looks_like_html(raw):
+            return
+        for b in classify_blocks(raw):
+            yield (url, b["idx"], b["n_chars"], b["n_words"],
+                   int(round(b["link_density"] * 1000)),
+                   int(round(b["stopword_density"] * 1000)),
+                   b["label_cf"], b["label"])
+
+    return map_rows(df.select("url", "html"), per_row, HTML_BLOCKS_SCHEMA)
 
 
 # -- metadata / document features -----------------------------------------
@@ -316,29 +323,18 @@ METADATA_SCHEMA = StructType([
     StructField("is_encrypted", BooleanType()),
 ])
 
-
-def metadata_batches(html_col: str = "html", url_col: str = "url"):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zpdfspark.kernel import Document
-
-        for batch in batches:
-            out = {f.name: [] for f in METADATA_SCHEMA.fields}
-            for url, blob in zip(batch[url_col], batch[html_col]):
-                doc = Document(bytes(blob) if blob is not None else b"")
-                md = doc.metadata()
-                out["url"].append(url)
-                for k in ("title", "author", "subject", "keywords", "creator",
-                          "producer", "creation_date", "mod_date"):
-                    out[k].append(md[k])
-                out["n_pages"].append(doc.page_count)
-                out["is_encrypted"].append(doc.is_encrypted)
-            yield pd.DataFrame(out)
-
-    return fn
+_METADATA_KEYS = ("title", "author", "subject", "keywords", "creator",
+                  "producer", "creation_date", "mod_date")
 
 
 def metadata_dataframe(df: DataFrame) -> DataFrame:
-    return df.select("url", "html").mapInPandas(metadata_batches(), METADATA_SCHEMA)
+    def per_row(url, blob):
+        doc = Document(blob)
+        md = doc.metadata()
+        yield (url, *(md[k] for k in _METADATA_KEYS), doc.page_count,
+               doc.is_encrypted)
+
+    return map_rows(df.select("url", "html"), per_row, METADATA_SCHEMA)
 
 
 # -- document features (X2-X10) -------------------------------------------
@@ -376,69 +372,29 @@ FEATURES_SCHEMA = StructType([
 ])
 
 
-def features_batches(html_col: str = "html", url_col: str = "url"):
-    """mapInPandas kernel for the auxiliary extractors (outline, links,
-    form fields, images, page labels)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zpdfspark.kernel import Document
-
-        for batch in batches:
-            out = {f.name: [] for f in FEATURES_SCHEMA.fields}
-            for url, blob in zip(batch[url_col], batch[html_col]):
-                doc = Document(bytes(blob) if blob is not None else b"")
-                out["url"].append(url)
-                out["outline"].append([
-                    {"title": o["title"], "page": o["page"], "level": o["level"]}
-                    for o in doc.outline()
-                ])
-                links = []
-                images = []
-                for p in range(doc.page_count):
-                    for l in doc.get_links(p):
-                        r = l["rect"]
-                        links.append({"x0": r[0], "y0": r[1], "x1": r[2],
-                                      "y1": r[3], "uri": l["uri"],
-                                      "dest_page": l["dest_page"]})
-                    for im in doc.get_images(p):
-                        r = im["rect"]
-                        images.append({"page": p, "x0": r[0], "y0": r[1],
-                                       "x1": r[2], "y1": r[3],
-                                       "width": im["width"], "height": im["height"]})
-                out["links"].append(links)
-                out["images"].append(images)
-                out["form_fields"].append([
-                    {"name": f["name"], "value": f["value"],
-                     "field_type": f["field_type"]}
-                    for f in doc.form_fields()
-                ])
-                out["page_labels"].append([
-                    doc.get_page_label(p) for p in range(doc.page_count)
-                ])
-            yield pd.DataFrame(out)
-
-    return fn
-
-
 def features_dataframe(df: DataFrame) -> DataFrame:
-    return df.select("url", "html").mapInPandas(features_batches(), FEATURES_SCHEMA)
+    """The auxiliary extractors (outline, links, form fields, images,
+    page labels), one row per document."""
 
+    def per_row(url, blob):
+        doc = Document(blob)
+        pages = range(doc.page_count)
+        outline = [{"title": o["title"], "page": o["page"],
+                    "level": o["level"]} for o in doc.outline()]
+        links = [{"x0": l["rect"][0], "y0": l["rect"][1],
+                  "x1": l["rect"][2], "y1": l["rect"][3],
+                  "uri": l["uri"], "dest_page": l["dest_page"]}
+                 for p in pages for l in doc.get_links(p)]
+        forms = [{"name": f["name"], "value": f["value"],
+                  "field_type": f["field_type"]} for f in doc.form_fields()]
+        images = [{"page": p, "x0": im["rect"][0], "y0": im["rect"][1],
+                   "x1": im["rect"][2], "y1": im["rect"][3],
+                   "width": im["width"], "height": im["height"]}
+                  for p in pages for im in doc.get_images(p)]
+        yield (url, outline, links, forms, images,
+               [doc.get_page_label(p) for p in pages])
 
-def markdown_batches(html_col: str = "html", url_col: str = "url",
-                     structured: bool = False, page_range=None):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zpdfspark.kernel import Document
-
-        for batch in batches:
-            out = {"url": [], "markdown": []}
-            for url, blob in zip(batch[url_col], batch[html_col]):
-                doc = Document(bytes(blob) if blob is not None else b"")
-                out["url"].append(url)
-                out["markdown"].append(doc.extract_all_markdown(
-                    structured=structured, page_range=page_range))
-            yield pd.DataFrame(out)
-
-    return fn
+    return map_rows(df.select("url", "html"), per_row, FEATURES_SCHEMA)
 
 
 def markdown_dataframe(df: DataFrame, structured: bool = False,
@@ -447,9 +403,13 @@ def markdown_dataframe(df: DataFrame, structured: bool = False,
     (markdown.zig:564-606; see kernel/markdown.py for why it is NOT the
     default — the reference's production path never uses it).
     page_range is the CLI's inclusive 1-based -p."""
-    return df.select("url", "html").mapInPandas(
-        markdown_batches(structured=structured, page_range=page_range),
-        "url string, markdown string")
+
+    def per_row(url, blob):
+        yield url, Document(blob).extract_all_markdown(
+            structured=structured, page_range=page_range)
+
+    return map_rows(df.select("url", "html"), per_row,
+                    "url string, markdown string")
 
 
 # -- per-page output: the CLI JSON sink's row form (S12) -------------------
@@ -457,8 +417,7 @@ def markdown_dataframe(df: DataFrame, structured: bool = False,
 PAGES_SCHEMA_DDL = "url string, page int, label string, page_text string"
 
 
-def pages_batches(html_col: str = "html", url_col: str = "url",
-                  page_range=None):
+def pages_dataframe(df: DataFrame, page_range=None) -> DataFrame:
     """Exploded per-page rows {page, label, text} — the relational form
     of the CLI `-f json` page array (main.zig:252-339). `page` is
     0-based here (the JSON sink emits 1-based like the reference CLI).
@@ -468,58 +427,24 @@ def pages_batches(html_col: str = "html", url_col: str = "url",
     (main.zig:173-177) — applied in-kernel so unwanted pages are never
     extracted."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zpdfspark.kernel import Document
+    def per_row(url, blob):
+        doc = Document(blob)
+        lo, hi = (page_range or (1, doc.page_count or 0))
+        for page_idx in range(doc.page_count):
+            if lo <= page_idx + 1 <= hi:
+                yield (url, page_idx, doc.get_page_label(page_idx),
+                       doc.extract_text_structured_bytes(page_idx)
+                       .decode("utf-8", "replace"))
 
-        for batch in batches:
-            out = {"url": [], "page": [], "label": [], "page_text": []}
-            for url, blob in zip(batch[url_col], batch[html_col]):
-                doc = Document(bytes(blob) if blob is not None else b"")
-                lo, hi = (page_range or (1, doc.page_count or 0))
-                for page_idx in range(doc.page_count):
-                    if not (lo <= page_idx + 1 <= hi):
-                        continue
-                    out["url"].append(url)
-                    out["page"].append(page_idx)
-                    out["label"].append(doc.get_page_label(page_idx))
-                    out["page_text"].append(
-                        doc.extract_text_structured_bytes(page_idx)
-                        .decode("utf-8", "replace"))
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def pages_dataframe(df: DataFrame, page_range=None) -> DataFrame:
-    return df.select("url", "html").mapInPandas(
-        pages_batches(page_range=page_range), PAGES_SCHEMA_DDL)
-
-
-# re-exported from the kernel layer (moved there so pyspark-free
-# consumers — fixtures' expected-column generation — can import it)
-from zpdfspark.kernel.document import document_json  # noqa: E402,F401
-
-
-def document_json_batches(html_col: str = "html", url_col: str = "url",
-                          page_range=None):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zpdfspark.kernel import Document
-
-        for batch in batches:
-            out = {"url": [], "doc_json": []}
-            for url, blob in zip(batch[url_col], batch[html_col]):
-                doc = Document(bytes(blob) if blob is not None else b"")
-                out["url"].append(url)
-                out["doc_json"].append(document_json(doc, page_range=page_range))
-            yield pd.DataFrame(out)
-
-    return fn
+    return map_rows(df.select("url", "html"), per_row, PAGES_SCHEMA_DDL)
 
 
 def document_json_dataframe(df: DataFrame, page_range=None) -> DataFrame:
-    return df.select("url", "html").mapInPandas(
-        document_json_batches(page_range=page_range),
-        "url string, doc_json string")
+    def per_row(url, blob):
+        yield url, document_json(Document(blob), page_range=page_range)
+
+    return map_rows(df.select("url", "html"), per_row,
+                    "url string, doc_json string")
 
 
 # -- search (X4) -----------------------------------------------------------
@@ -527,32 +452,16 @@ def document_json_dataframe(df: DataFrame, page_range=None) -> DataFrame:
 SEARCH_SCHEMA_DDL = "url string, page int, offset long, context string"
 
 
-def search_matches_batches(query: str, html_col: str = "html",
-                           url_col: str = "url"):
-    """Full-fidelity search kernel: ALL matches as exploded rows
-    (url, page, byte offset, ±50-byte context) — the relational form of
+def search_matches_dataframe(df: DataFrame, query: str) -> DataFrame:
+    """Full-fidelity search: ALL matches as exploded rows (url, page,
+    byte offset, ±50-byte context) — the relational form of
     SearchResult (root.zig:1213-1275), via Document.search."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from zpdfspark.kernel import Document
+    def per_row(url, blob):
+        for m in Document(blob).search(query):
+            yield url, m["page"], m["offset"], m["context"]
 
-        for batch in batches:
-            out = {"url": [], "page": [], "offset": [], "context": []}
-            for url, blob in zip(batch[url_col], batch[html_col]):
-                doc = Document(bytes(blob) if blob is not None else b"")
-                for m in doc.search(query):
-                    out["url"].append(url)
-                    out["page"].append(m["page"])
-                    out["offset"].append(m["offset"])
-                    out["context"].append(m["context"])
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def search_matches_dataframe(df: DataFrame, query: str) -> DataFrame:
-    return df.select("url", "html").mapInPandas(
-        search_matches_batches(query), SEARCH_SCHEMA_DDL)
+    return map_rows(df.select("url", "html"), per_row, SEARCH_SCHEMA_DDL)
 
 
 def search_dataframe(extracted: DataFrame, query: str, text_col: str = "extracted_text") -> DataFrame:
@@ -573,7 +482,55 @@ def search_dataframe(extracted: DataFrame, query: str, text_col: str = "extracte
     )
 
 
-# -- SQL registration (pandas_udf; Arrow-vectorized) ----------------------
+# -- SQL registration (scalar arrow_udf) ----------------------------------
+
+
+def _extract_secondary(blob):
+    # debug/diagnostic surface for the secondary interpreter port
+    # (kernel/interpreter2.py, interpreter.zig:27-394): the reference's
+    # richer text-state semantics (Tc/Tw/Tz/TL/Ts, q/Q, leading-based
+    # '/"), NOT the byte-parity production path — use it to diff the
+    # two tokenizer interpretations on a doc
+    from zpdfspark.kernel.interpreter2 import extract_page_interpreter
+
+    doc = Document(blob)
+    return "\x0c".join(extract_page_interpreter(doc, p)
+                       for p in range(doc.page_count))
+
+
+# SQL name -> (per-row function of the html blob [and further args],
+# return type). zpdf_extract uses the same dispatch as the mapInArrow
+# kernel: PDF bytes -> kernel, HTML -> boilerplate strip.
+_SQL_UDFS = {
+    "zpdf_extract": (lambda b: extract_any(b, "accuracy")[0], StringType()),
+    "zpdf_extract_fast": (lambda b: extract_any(b, "fast")[0], StringType()),
+    "zpdf_page_count": (lambda b: Document(b).page_count, IntegerType()),
+    "zpdf_is_encrypted": (lambda b: Document(b).is_encrypted, BooleanType()),
+    "zpdf_metadata_json": (lambda b: json.dumps(
+        Document(b).metadata(), ensure_ascii=False), StringType()),
+    "zpdf_markdown": (lambda b: Document(b).extract_all_markdown(),
+                      StringType()),
+    "zpdf_doc_json": (lambda b: document_json(Document(b)), StringType()),
+    # SELECT zpdf_extract_secondary(html) FROM pages  (diagnostic)
+    "zpdf_extract_secondary": (_extract_secondary, StringType()),
+    # SELECT zpdf_search_json(html, 'Hello') FROM pages
+    "zpdf_search_json": (lambda b, q: json.dumps(
+        Document(b).search(q or ""), ensure_ascii=False), StringType()),
+}
+
+
+def _scalar_arrow_fn(fn, return_type):
+    """Wrap a per-row ``fn(blob, *args)`` as a scalar Arrow function; a
+    null blob arrives as ``b""`` as in map_rows."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    out_type = to_arrow_type(return_type)
+
+    def run(*arrays: pa.Array) -> pa.Array:
+        cols = [_pylist(a) for a in arrays]
+        return pa.array([fn(*vals) for vals in zip(*cols)], out_type)
+
+    return run
 
 
 def register_sql_udfs(spark) -> None:
@@ -583,83 +540,9 @@ def register_sql_udfs(spark) -> None:
         SELECT zpdf_page_count(html), zpdf_is_encrypted(html) ...
         SELECT zpdf_metadata_json(html) ...
     """
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf(StringType())
-    def zpdf_extract(html: pd.Series) -> pd.Series:
-        # same dispatch as the mapInArrow kernel: PDF bytes -> kernel,
-        # HTML -> boilerplate strip (north_rule main-content extraction)
-        from zpdfspark.kernel.htmltext import extract_any
-        return html.map(lambda b: extract_any(
-            bytes(b) if b is not None else b"", "accuracy")[0])
-
-    @pandas_udf(StringType())
-    def zpdf_extract_fast(html: pd.Series) -> pd.Series:
-        from zpdfspark.kernel.htmltext import extract_any
-        return html.map(lambda b: extract_any(
-            bytes(b) if b is not None else b"", "fast")[0])
-
-    @pandas_udf(IntegerType())
-    def zpdf_page_count(html: pd.Series) -> pd.Series:
-        from zpdfspark.kernel import Document
-        return html.map(lambda b: Document(bytes(b) if b is not None else b"").page_count)
-
-    @pandas_udf(BooleanType())
-    def zpdf_is_encrypted(html: pd.Series) -> pd.Series:
-        from zpdfspark.kernel import Document
-        return html.map(lambda b: Document(bytes(b) if b is not None else b"").is_encrypted)
-
-    @pandas_udf(StringType())
-    def zpdf_metadata_json(html: pd.Series) -> pd.Series:
-        from zpdfspark.kernel import Document
-        return html.map(lambda b: json.dumps(
-            Document(bytes(b) if b is not None else b"").metadata(), ensure_ascii=False))
-
-    @pandas_udf(StringType())
-    def zpdf_markdown(html: pd.Series) -> pd.Series:
-        from zpdfspark.kernel import Document
-        return html.map(lambda b: Document(
-            bytes(b) if b is not None else b"").extract_all_markdown())
-
-    @pandas_udf(StringType())
-    def zpdf_doc_json(html: pd.Series) -> pd.Series:
-        from zpdfspark.kernel import Document
-        return html.map(lambda b: document_json(
-            Document(bytes(b) if b is not None else b"")))
-
-    @pandas_udf(StringType())
-    def zpdf_extract_secondary(html: pd.Series) -> pd.Series:
-        # debug/diagnostic surface for the secondary interpreter port
-        # (kernel/interpreter2.py, interpreter.zig:27-394): the
-        # reference's richer text-state semantics (Tc/Tw/Tz/TL/Ts, q/Q,
-        # leading-based '/"), NOT the byte-parity production path —
-        # use it to diff the two tokenizer interpretations on a doc
-        from zpdfspark.kernel import Document
-        from zpdfspark.kernel.interpreter2 import extract_page_interpreter
-
-        def run(b):
-            doc = Document(bytes(b) if b is not None else b"")
-            return "\x0c".join(extract_page_interpreter(doc, p)
-                               for p in range(doc.page_count))
-        return html.map(run)
-
-    @pandas_udf(StringType())
-    def zpdf_search_json(html: pd.Series, query: pd.Series) -> pd.Series:
-        from zpdfspark.kernel import Document
-        return pd.Series([
-            json.dumps(Document(bytes(b) if b is not None else b"")
-                       .search(q or ""), ensure_ascii=False)
-            for b, q in zip(html, query)
-        ])
-
-    spark.udf.register("zpdf_extract", zpdf_extract)
-    spark.udf.register("zpdf_extract_fast", zpdf_extract_fast)
-    spark.udf.register("zpdf_page_count", zpdf_page_count)
-    spark.udf.register("zpdf_is_encrypted", zpdf_is_encrypted)
-    spark.udf.register("zpdf_metadata_json", zpdf_metadata_json)
-    spark.udf.register("zpdf_markdown", zpdf_markdown)
-    spark.udf.register("zpdf_doc_json", zpdf_doc_json)
-    # SELECT zpdf_extract_secondary(html) FROM pages  (diagnostic)
-    spark.udf.register("zpdf_extract_secondary", zpdf_extract_secondary)
-    # SELECT zpdf_search_json(html, 'Hello') FROM pages
-    spark.udf.register("zpdf_search_json", zpdf_search_json)
+    # the pa.Array type hints make each one a scalar Arrow UDF
+    for name, (fn, return_type) in _SQL_UDFS.items():
+        spark.udf.register(name, arrow_udf(
+            _scalar_arrow_fn(fn, return_type), return_type))
