@@ -12,7 +12,8 @@ pytest.importorskip("duckdb")
 
 SF_DIR = "/root/testdata/sf0.01"
 
-FAMILY_QUERIES = (
+QUERIES = (
+    # the 32 per-format family queries
     "html_dense", "image_stats", "video_stats", "exif_meta", "djvu_meta",
     "mp3_stats", "flac_meta", "ogg_meta", "tiff_meta", "docx_meta",
     "epub_meta", "xlsx_meta", "pptx_meta", "rtf_meta", "odt_meta",
@@ -20,8 +21,6 @@ FAMILY_QUERIES = (
     "ipynb_meta", "csv_meta", "tex_meta", "wiki_meta", "sqlite_meta",
     "font_meta", "tar_meta", "webm_meta", "ico_meta", "webp_meta",
     "avif_meta", "heic_meta",
-)
-QUERIES = FAMILY_QUERIES + (
     "media_stats", "charset_report", "unicode_normalize", "compressibility",
     "image_phash", "image_neardup", "html_blocks",
     "extract_metadata", "extract_spans", "extract_search",

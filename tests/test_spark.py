@@ -62,8 +62,10 @@ def test_sql_udfs(spark, corpus_path):
 
 
 def test_map_rows_zero_output_rows_keep_list_type(spark):
-    """A batch whose rows all yield nothing still carries array<string>
-    (a zero-row pandas list column used to default to float64)."""
+    """A batch whose rows all yield nothing (the xlsx_meta case: most
+    batches hold no xlsx payload) gives an empty result with the
+    declared array<string> column, and list values survive when some
+    rows do yield."""
     from zpdfspark.spark.udfs import map_rows
 
     df = spark.createDataFrame([("a", b"x"), ("b", b"y")],

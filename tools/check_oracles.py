@@ -45,7 +45,7 @@ def normalize(rows, cols):
 
 
 def duckdb_views(sf_dir: str):
-    """A DuckDB connection with one view per driver table under sf_dir."""
+    """A DuckDB connection with one view per parquet table under sf_dir."""
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -85,11 +85,10 @@ def compare(con, name: str, df, sql: str) -> tuple[bool, list[str]]:
     if sorted(cols) != sorted(ocols):
         return False, [f"[FAIL] {name}: column mismatch "
                        f"{sorted(cols)} vs {sorted(ocols)}"]
-    # Arrow-level type audit: the driver's value hash is type-sensitive,
+    # Arrow-level type audit: the gate's value hash is type-sensitive,
     # and DuckDB's Python fetchall() hides drift (HUGEINT comes back as
-    # plain int). Compare arrow types and fail hard on the known
-    # driver-red shape: decimal (HUGEINT) vs integer; warn on anything
-    # else.
+    # plain int). Compare arrow types and fail hard on the known failing
+    # shape: decimal (HUGEINT) vs integer; warn on anything else.
     report = []
     try:
         dmap = {f.name: _arrow_type(f.type)

@@ -91,7 +91,7 @@ def extract_arrow_batches(mode: str = "accuracy", max_doc_bytes: int = 0,
                           oracle_text_col: str = None):
     """The mapInArrow extraction kernel: text + metrics per document.
     It skips the pandas conversion on both sides of the Python boundary
-    (~8% faster end to end than the mapInPandas form for whole-blob
+    (~8% faster end to end than the pandas-batch form for whole-blob
     rows, measured at local[16]).
 
     max_doc_bytes > 0 skips oversized blobs with an error record instead
