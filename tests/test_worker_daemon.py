@@ -158,3 +158,24 @@ def test_udf_runs_with_cwd_outside_repo(tmp_path):
                          timeout=300)
     assert out.returncode == 0, out.stderr[-3000:]
     assert "zpdfspark.spark.worker_daemon [1, 2, 3]" in out.stdout
+
+
+def test_daemon_imports_pandas_before_forking():
+    """Without Spark: main() imports pandas and pyarrow's pandas layer
+    before it hands over to pyspark.daemon.manager(), so every forked
+    worker inherits them instead of importing pandas at its first
+    Python-to-Arrow conversion."""
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {REPO!r})\n"
+        "import pyspark.daemon\n"
+        "from zpdfspark.spark import worker_daemon\n"
+        "before = 'pandas' in sys.modules\n"
+        "pyspark.daemon.manager = lambda: print(before, all(\n"
+        "    m in sys.modules for m in ('pandas', 'pyarrow.pandas_compat')))\n"
+        "worker_daemon.main()\n"
+    )
+    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
+                         text=True, timeout=120)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split() == ["False", "True"]

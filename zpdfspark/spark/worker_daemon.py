@@ -13,8 +13,8 @@ task spends before its UDF starts. Before this module hands over to
    mtime_ns). An unchanged archive is then parsed once, in the daemon,
    and a rewritten one is still re-read. A Python without
    ``zipimport._read_directory`` skips this step.
-2. It imports the extraction kernel and calls ``gc.freeze()``. Forked
-   workers inherit a warm heap, and the ``gc.collect()`` that the daemon
+2. It imports the extraction kernel and pandas, then calls
+   ``gc.freeze()``. Forked workers inherit a warm heap, and the ``gc.collect()`` that the daemon
    runs after every reused task only walks objects made since the fork.
 
 Start it by naming it in ``spark.python.daemon.module``; ``session.get_spark``
@@ -63,6 +63,12 @@ def main() -> None:
     import pyspark.daemon
 
     import zpdfspark.kernel.htmltext  # noqa: F401
+
+    # pyarrow imports pandas the first time a worker converts Python
+    # values, and the pandas-batch kernels need it as well: import it once
+    # here, where it costs ~0.4 s, rather than in every new worker
+    import pandas  # noqa: F401
+    import pyarrow.pandas_compat  # noqa: F401
 
     gc.collect()
     gc.freeze()
