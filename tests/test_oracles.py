@@ -26,6 +26,9 @@ QUERIES = (
     "extract_metadata", "extract_spans", "extract_search",
     "extract_doc_json", "extract_sql_udf", "extract_features",
     "extract_markdown", "extract_markdown_structured", "extract_pages",
+    # the media and WARC reader kernels (spark/media.py, warc_source.py)
+    "audio_stats", "media_frames", "media_embed", "warc_ingest",
+    "warc_revisit", "warc_http_meta", "mime_audit", "warc_cdx",
 )
 
 pytestmark = pytest.mark.skipif(
