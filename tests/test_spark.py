@@ -596,6 +596,23 @@ def test_media_plumbing(spark, corpus_path):
     assert e1 == e2 and all(0 <= v < 1 for vs in e1.values() for v in vs)
 
 
+def test_decode_every_corpus_kind(spark, corpus_path):
+    """Real decode over every row of the corpus: a document, subtitle or
+    font decode (a dict, even one with four keys) is ok with no pixel
+    dims; only image decodes carry them."""
+    from zpdfspark.spark import media
+
+    rows = media.decode_dataframe(spark.read.parquet(corpus_path)).collect()
+    assert len(rows) == 150
+    kinds = {r.media_kind for r in rows}
+    assert {"vtt", "srt", "woff", "docx", "png"} <= kinds
+    for r in rows:
+        if r.media_kind in ("vtt", "srt", "woff", "otf", "docx", "csv"):
+            assert r.decode_ok and (r.width, r.height) == (0, 0), r
+        elif r.media_kind in ("png", "jpeg", "gif"):
+            assert r.decode_ok and r.width >= 1 and r.height >= 1, r
+
+
 def test_format_job_json_and_pages(spark, tmp_path, corpus_path):
     """CLI -f json / -p a-b (main.zig:173-177, 252-339): json docs carry
     {metadata, page_count, outline, pages}; an explicit page range
@@ -1053,6 +1070,61 @@ def test_wet_export_roundtrip_and_determinism(spark, corpus_path, tmp_path):
             == hashes[os.path.basename(p)]
 
 
+def test_derivative_dates_are_utc_in_any_session_zone(spark, tmp_path):
+    """WET WARC-Date and JSONL `ts` render the capture instant in UTC
+    whatever spark.sql.session.timeZone says, and a null warc_ts
+    renders as the epoch."""
+    import glob
+    import gzip
+
+    from zpdfspark.kernel.warc import iter_warc_records
+    from zpdfspark.spark.warc_sink import write_jsonl, write_wet
+
+    html = b"<html><body><p>time zone probe</p></body></html>"
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        # 1704164645 s = 2024-01-02T03:04:05Z
+        df = spark.createDataFrame(
+            [("http://a.example/", 1704164645, html, "en"),
+             ("http://b.example/", None, html, "en")],
+            "url string, secs long, html binary, lang string",
+        ).select("url", F.timestamp_seconds("secs").alias("warc_ts"),
+                 "html", "lang")
+        write_wet(df, str(tmp_path / "wet"), partitions=1).collect()
+        write_jsonl(df, str(tmp_path / "jsonl"), partitions=1).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+    want = {"http://a.example/": "2024-01-02T03:04:05Z",
+            "http://b.example/": "1970-01-01T00:00:00Z"}
+    (wet,) = glob.glob(str(tmp_path / "wet" / "*.warc.wet.gz"))
+    recs = list(iter_warc_records(open(wet, "rb").read()))
+    assert {r.target_uri: r.warc_date for r in recs[1:]} == want
+    (jsonl,) = glob.glob(str(tmp_path / "jsonl" / "*.jsonl.gz"))
+    with gzip.open(jsonl, "rt", encoding="utf-8") as f:
+        assert {o["url"]: o["ts"] for o in map(json.loads, f)} == want
+
+
+def test_wat_links_truncated_at_cap():
+    """WAT keeps the first 1,000 outlinks of a page and records how
+    many it dropped as Links-Truncated; at the cap nothing is dropped."""
+    from zpdfspark.spark.warc_sink import wat_doc_json
+
+    def html_md(n_links):
+        page = ("<html><head><title>links</title></head><body>"
+                + "".join(f'<a href="/p{i}">x</a>' for i in range(n_links))
+                + "</body></html>").encode()
+        meta = json.loads(wat_doc_json("http://links.example/", page))
+        return meta["Envelope"]["Payload-Metadata"]["HTML-Metadata"]
+
+    hm = html_md(1005)
+    assert [x["url"] for x in hm["Links"]] == [f"/p{i}" for i in range(1000)]
+    assert hm["Links-Truncated"] == 5
+    hm = html_md(1000)
+    assert len(hm["Links"]) == 1000 and "Links-Truncated" not in hm
+
+
 def test_format_job_wet(spark, corpus_path, tmp_path):
     """CLI surface: --format wet through run_format_job reports the
     record/file totals and writes under <out>/data."""
@@ -1381,6 +1453,29 @@ def test_zipnum_roundtrip_and_determinism(spark, tmp_path):
     after = {p: open(os.path.join(out, p), "rb").read()
              for p in os.listdir(out)}
     assert before == after
+
+
+def test_zipnum_status_is_a_cdxj_string(spark, tmp_path):
+    """CDXJ payload values are strings: an HTTP status renders as "200"
+    and a capture without an HTTP envelope (null status, null mime) as
+    "", also when both share one block."""
+    import gzip
+
+    from zpdfspark.spark.warc_sink import write_zipnum
+    from zpdfspark.spark.warc_source import CDX_SCHEMA
+
+    cdx = spark.createDataFrame([
+        ("com,example)/a", "20240102030405", "http://example.com/a",
+         "text/html", 200, "sha1:A", 0, 10, "x.warc.gz"),
+        ("com,example)/b", "20240102030405", "http://example.com/b",
+         None, None, "sha1:B", 10, 10, "x.warc.gz"),
+    ], CDX_SCHEMA)
+    out = str(tmp_path / "zipnum")
+    (block,) = write_zipnum(cdx, out, partitions=1).collect()
+    with gzip.open(os.path.join(out, block["file"]), "rt") as f:
+        payloads = [json.loads(line.split(" ", 2)[2]) for line in f]
+    assert [(p["status"], p["mime"]) for p in payloads] == [
+        ("200", "text/html"), ("", "")]
 
 
 def test_format_job_zipnum(spark, tmp_path):

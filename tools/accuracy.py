@@ -4,8 +4,8 @@ The analog of the reference's differential oracle
 (/root/reference/benchmark/accuracy.py: char-level difflib similarity +
 word-error-rate vs a reference extractor after whitespace
 normalization). Here the reference text is the corpus's self-carried
-oracle, and the comparison runs distributed (a mapInPandas scoring
-kernel over the extraction output), so the same harness scales to real
+oracle, and the comparison runs distributed (a per-row scoring kernel
+on udfs.map_rows), so the same harness scales to real
 corpora scored against any reference column.
 
 Usage: python tools/accuracy.py [n_docs] [seed]
@@ -27,35 +27,27 @@ def _normalize(text: str) -> str:
     return " ".join(text.split())
 
 
-def score_batches(mode: str):
+def score_rows(mode: str):
+    """per_row(url, html, text) for udfs.map_rows: extract the blob and
+    score it against its reference text; rows without one emit
+    nothing."""
     import difflib
-
-    import pandas as pd
 
     from zpdfspark.kernel.htmltext import extract_any
 
-    def fn(batches):
-        for batch in batches:
-            out = {"url": [], "similarity": [], "wer": []}
-            for url, blob, ref in zip(batch["url"], batch["html"], batch["text"]):
-                if ref is None:
-                    continue
-                got, _kind, _doc = extract_any(
-                    bytes(blob) if blob is not None else b"", mode)
-                a = _normalize(got)
-                b = _normalize(ref)
-                sim = difflib.SequenceMatcher(None, a, b).ratio() if (a or b) else 1.0
-                aw, bw = a.split(), b.split()
-                ops = difflib.SequenceMatcher(None, aw, bw).get_opcodes()
-                errs = sum(max(i2 - i1, j2 - j1)
-                           for tag, i1, i2, j1, j2 in ops if tag != "equal")
-                wer = errs / max(len(bw), 1)
-                out["url"].append(url)
-                out["similarity"].append(sim)
-                out["wer"].append(wer)
-            yield pd.DataFrame(out)
+    def per_row(url, blob, ref):
+        if ref is None:
+            return
+        a = _normalize(extract_any(blob, mode)[0])
+        b = _normalize(ref)
+        sim = difflib.SequenceMatcher(None, a, b).ratio() if (a or b) else 1.0
+        aw, bw = a.split(), b.split()
+        ops = difflib.SequenceMatcher(None, aw, bw).get_opcodes()
+        errs = sum(max(i2 - i1, j2 - j1)
+                   for tag, i1, i2, j1, j2 in ops if tag != "equal")
+        yield url, sim, errs / max(len(bw), 1)
 
-    return fn
+    return per_row
 
 
 def main() -> None:
@@ -64,6 +56,7 @@ def main() -> None:
 
     from zpdfspark.fixtures import CORPUS_VERSION, write_corpus_parquet
     from zpdfspark.spark.session import get_spark
+    from zpdfspark.spark.udfs import map_rows
 
     import pyspark.sql.functions as F
 
@@ -76,8 +69,8 @@ def main() -> None:
     df = spark.read.parquet(path)
     result = {}
     for mode in ("accuracy", "fast"):
-        scored = df.select("url", "html", "text").mapInPandas(
-            score_batches(mode), "url string, similarity double, wer double")
+        scored = map_rows(df.select("url", "html", "text"), score_rows(mode),
+                          "url string, similarity double, wer double")
         agg = scored.agg(
             F.count("*").alias("n"),
             F.round(F.avg("similarity"), 4).alias("mean_sim"),

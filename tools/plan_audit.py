@@ -68,11 +68,11 @@ NOTES = {
     "sitemap_urls": "sitemaps.org ingestion: JVM regexp_extract_all + per-entry field extraction; the only explode is the per-sitemap entry list (protocol-capped at 50k entries/row); no joins.",
     "robots_eval": "RFC 9309: robots parse is a JVM higher-order fold over lines (map-only on the ~10^7-row host table); URL-side evaluation is array filter/max after ONE host join — no per-rule explode.",
     "lexical_stats": "TTR + word entropy via in-row run-length fold over the sorted word array (H = ln n - sum(c ln c)/n) — map-only, never explode+groupBy per token.",
-    "html_dense": "jusText-good dense extraction summarized in the scan task (mapInPandas, map-only); oracle re-derives the counts from the carried per-block features — two independent paths must agree.",
+    "html_dense": "jusText-good dense extraction summarized in the scan task (map_rows on mapInArrow, map-only); oracle re-derives the counts from the carried per-block features — two independent paths must agree.",
     "stratified_sample": "language balancing via per-group integer hash thresholds: tiny lang-count agg, 1-row quota broadcast, threshold table broadcast back, map-only filter — the corpus never shuffles.",
     "host_stats": "domain-level spam filtering: ONE host exchange, map-side-combining aggregate (count-distinct partials under the same grouping); no window/self-join — a skewed host stays splittable.",
     "ppl_buckets": "CCNet head/middle/tail tertiles: the cumulative window runs over the rounded-score HISTOGRAM (<=35k rows at any corpus size), never over docs; 1-row total + 1-row thresholds broadcast back; corpus-side join map-only.",
-    "html_blocks": "jusText DOM block classification inside the scan task (mapInPandas); only tiny block rows cross the Arrow boundary; single range exchange for the determinism orderBy.",
+    "html_blocks": "jusText DOM block classification inside the scan task (map_rows on mapInArrow); only tiny block rows cross the Arrow boundary; single range exchange for the determinism orderBy.",
     "flac_meta": "map-only FLAC block walk inside the scan task (kernel/flac.py); rows only for fLaC-magic payloads; no audio-frame decode.",
     "ogg_meta": "map-only CRC-verified Ogg page walk inside the scan task (kernel/ogg.py); rows only for OggS-magic payloads; no packet decode.",
     "tiff_meta": "map-only standalone-TIFF IFD walk inside the scan task (kernel/tiff.py); rows only for II*/MM*-magic payloads; no strip decode.",
@@ -97,15 +97,15 @@ NOTES = {
     "anchor_text": "per-target anchor-text rollup: anchors mined JVM-side in the scan task (bounded explode), then TWO map-side-combining groupBys — (dst,text) counts, per-dst totals with the top pick via max(struct) — no window, no collect_list; a 10^9-in-link page is a hot-but-splittable scan-fed key.",
     "content_drift": "capture-pair change detection: gram fingerprinting map-only per row; ONE doc_id window (per-doc cardinality = capture count) pairs captures via lag; the exchange carries 16-hex gram hashes, never text.",
     "badwords_filter": "C4 blocklist gate: in-plan literal list + in-row higher-order membership filter — entirely inside the scan project / whole-stage codegen; zero exchanges at any corpus size (plan-guarded).",
-    "charset_report": "kernel charset lineage via mapInPandas on the pruned (url, html) scan — map-only Arrow boundary, single range exchange for the determinism orderBy.",
+    "charset_report": "kernel charset lineage via map_rows (mapInArrow) on the pruned (url, html) scan — map-only Arrow boundary, single range exchange for the determinism orderBy.",
     "mojibake_fix": "generic latin1->utf8 re-decode gated on two JVM regex predicates — whole repair inside the scan project, no Python, no exchange (plan-guarded).",
     "postings": "search-index dictionary build: explode -> groupBy(term,doc) combine -> groupBy(term) with the top posting via max(struct) — an agg, never a per-term row_number window; df>=2 floor keeps the Zipf hapax tail off the final exchange.",
-    "unicode_normalize": "NFC canonical composition via mapInPandas (Python unicodedata) on the pruned scan — map-only Arrow boundary, single range exchange for the determinism orderBy; oracle is DuckDB's native utf8proc nfc_normalize (independent engines).",
+    "unicode_normalize": "NFC canonical composition via map_rows (mapInArrow, Python unicodedata) on the pruned scan — map-only Arrow boundary, single range exchange for the determinism orderBy; oracle is DuckDB's native utf8proc nfc_normalize (independent engines).",
     "fetch_schedule": "frontier politeness: ONE host exchange + a row_number window partitioned by host (frontier queues are politeness-depth-bounded, exactly why this window is safe); md5-derived priorities/delays so DuckDB replays them; worker = hash(host) keeps a host on one fetcher.",
     "sentence_stats": "sentence-level quality signals as pure in-row higher-order expressions (regex split + transform/aggregate) — map-only, zero exchanges at any corpus size (plan-guarded).",
     "sequence_pack": "training-sequence packing manifest: the shard_assign two-level prefix sum (bucket-partitioned running sums + a B-row exclusive prefix + broadcast-back) gives every doc its global token offset without a global sort; the L=128 span math is per-row codegen. Plan-guarded to exactly two windows with the unpartitioned one fed by the B-row aggregate.",
     "snapshot_delta": "crawl-over-crawl URL diff: each snapshot projects to (key, md5) inside its own scan, so the full-outer hash join shuffles 16-byte digests — document bodies never leave the scan (plan-guarded: no text in any exchange key set); per-key cardinality is the snapshot count, so no skewed key exists by construction.",
-    "eml_meta": "map-only mapInPandas MIME parse on the pruned (url, html) scan; one range exchange for the determinism orderBy — the per-format meta shape.",
+    "eml_meta": "map-only MIME parse on map_rows (mapInArrow) on the pruned (url, html) scan; one range exchange for the determinism orderBy — the per-format meta shape.",
     "mbox_meta": "map-only archive census (the tar shape): blobs never shuffle, one range exchange for orderBy.",
     "subtitle_meta": "map-only cue parse on the pruned scan; one range exchange for orderBy.",
     "ipynb_meta": "map-only JSON cell census; one range exchange for orderBy. The oracle side re-mines with DuckDB's JSON engine — no carried truth.",
@@ -120,6 +120,20 @@ NOTES = {
     "encryption_stats": "map-only kernel (decrypting the empty-password Standard-handler class in-batch) + one partial-agg exchange of <=4 boolean groups — nothing scales with doc count past the scan.",
     "length_quantiles": "mergeable equi-width length histogram (map-side combine caps the shuffle at hosts*256 counters); the percentile walk is a window over the BOUNDED histogram, never over docs (plan-guarded); all-integer arithmetic, no float quantile semantics.",
 }
+
+
+def stable_ids(plan: str) -> str:
+    """Renumber the expression ids (``#N``) and exchange ``plan_id=N``
+    of one plan in order of first appearance. Spark hands both out
+    session-wide, so raw ids shift with everything planned before and
+    would make every regeneration rewrite PLANS.md."""
+    for prefix in ("#", "plan_id="):
+        ids: dict = {}
+        plan = re.sub(re.escape(prefix) + r"(\d+)",
+                      lambda m: prefix + str(ids.setdefault(m.group(1),
+                                                            len(ids))),
+                      plan)
+    return plan
 
 
 def main() -> None:
@@ -140,9 +154,9 @@ def main() -> None:
     try:
         for name, fn in E.queries().items():
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(
+            plan = stable_ids(df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                .fromString("formatted"))
+                .fromString("formatted")))
             ops = []
             for pat, label in (
                 (r"Arguments: hashpartitioning", "hash exchange"),

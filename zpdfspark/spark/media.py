@@ -1,5 +1,6 @@
 """Multimodal column plumbing: decode / feature-extract / resize /
-frame-sample over opaque binary media, as Arrow-batched pandas kernels.
+frame-sample over opaque binary media, as per-row kernels on
+udfs.map_rows (one mapInArrow task per scan split).
 
 Decode is REAL for PNG (round 2: zlib + the engine's own PNG row
 unfiltering, kernel/png.py), for WAV/PCM (kernel/wav.py), for baseline
@@ -14,7 +15,7 @@ behind a clearly-marked NotImplementedError with a deterministic fake
 used by tests — though MP4 container METADATA (duration, tracks, dims,
 codec fourcc) is real via kernel/mp4.py's box walk (the video_stats
 query). The Spark-side plumbing (schemas,
-mapInPandas signatures, 1-to-N row expansion, batch shapes,
+per-row functions, 1-to-N row expansion, batch shapes,
 partitioning) is identical either way, and the two operations whose
 semantics are pure arithmetic over the payload (frame sampling,
 fingerprint embeddings) are EXACTLY replayable in SQL, so they carry
@@ -30,6 +31,8 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import DataFrame
+
+from zpdfspark.spark.udfs import map_rows
 
 DECODE_SCHEMA = ("url string, media_kind string, n_bytes long, "
                  "width int, height int, decode_ok boolean")
@@ -291,184 +294,122 @@ def _fake_decode(raw: bytes):
     return (h[0] % 64 + 1, h[1] % 64 + 1)
 
 
-def decode_dataframe(df: DataFrame, url_col: str = "url",
-                     blob_col: str = "html", fake: bool = False) -> DataFrame:
-    """Decode kernel plumbing: per-row (width, height, ok) with the
-    stub (ok=False everywhere) or the deterministic fake (tests)."""
-    def batches(it):
-        import pandas as pd
+def decode_dataframe(df: DataFrame, fake: bool = False) -> DataFrame:
+    """Decode kernel plumbing over df(url, html): per-row (width,
+    height, ok) with the stub (ok=False everywhere) or the
+    deterministic fake (tests)."""
+    from zpdfspark.kernel.bmp import BmpError
+    from zpdfspark.kernel.gif import GifError
+    from zpdfspark.kernel.jpeg import JpegError
+    from zpdfspark.kernel.png import PngError
+    from zpdfspark.kernel.tiff import TiffError
+    from zpdfspark.kernel.wav import WavError
 
-        from zpdfspark.kernel.bmp import BmpError
-        from zpdfspark.kernel.gif import GifError
-        from zpdfspark.kernel.jpeg import JpegError
-        from zpdfspark.kernel.png import PngError
-        from zpdfspark.kernel.tiff import TiffError
-        from zpdfspark.kernel.wav import WavError
+    def per_row(url, raw):
+        kind = sniff_kind(raw)
+        try:
+            if fake:
+                w, h = _fake_decode(raw)
+            else:
+                res = decode_media(raw, kind)
+                # an image decodes to (w, h, c, pixels); audio and
+                # document decodes have no pixel dims (0, 0)
+                is_image = isinstance(res, tuple) and len(res) == 4
+                w, h = res[:2] if is_image else (0, 0)
+            ok = True
+        except (NotImplementedError, PngError, JpegError,
+                WavError, GifError, TiffError, BmpError):
+            w = h = 0
+            ok = False
+        yield url, kind, len(raw), w, h, ok
 
-        for b in it:
-            rows = {"url": [], "media_kind": [], "n_bytes": [],
-                    "width": [], "height": [], "decode_ok": []}
-            for url, blob in zip(b[url_col], b[blob_col]):
-                raw = bytes(blob)
-                kind = sniff_kind(raw)
-                w = h = 0
-                ok = False
-                try:
-                    if fake:
-                        w, h = _fake_decode(raw)
-                        ok = True
-                    else:
-                        res = decode_media(raw, kind)
-                        if len(res) == 4:  # image: (w, h, c, pixels)
-                            w, h = res[0], res[1]
-                        # audio decodes have no pixel dims (0, 0)
-                        ok = True
-                except (NotImplementedError, PngError, JpegError,
-                        WavError, GifError, TiffError, BmpError):
-                    ok = False
-                    w = h = 0
-                rows["url"].append(url)
-                rows["media_kind"].append(kind)
-                rows["n_bytes"].append(len(raw))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["decode_ok"].append(ok)
-            yield pd.DataFrame(rows)
-
-    return df.select(url_col, blob_col).mapInPandas(batches, DECODE_SCHEMA)
+    return map_rows(df.select("url", "html"), per_row, DECODE_SCHEMA)
 
 
 AUDIO_SCHEMA = ("url string, sample_rate int, n_channels int, "
                 "n_samples long, duration_ms long, rms_x1000 long")
 
 
-def audio_stats_dataframe(df: DataFrame, url_col: str = "url",
-                          blob_col: str = "html") -> DataFrame:
+def audio_stats_dataframe(df: DataFrame) -> DataFrame:
     """REAL audio feature extraction for WAV payloads (kernel/wav.py):
     one row per decodable WAV with rate/channels/length and the integer
     RMS over the ACTUAL decoded samples. Non-WAV rows emit nothing —
     the kernel filters by magic bytes before decoding, map-only."""
-    def batches(it):
-        import pandas as pd
+    from zpdfspark.kernel.wav import WavError, audio_rms_x1000, decode_wav
 
-        from zpdfspark.kernel.wav import WavError, audio_rms_x1000, decode_wav
+    def per_row(url, raw):
+        if sniff_kind(raw) != "wav":
+            return
+        try:
+            sr, ch, samples = decode_wav(raw)
+        except WavError:
+            return
+        n = samples.shape[0]
+        yield url, sr, ch, n, n * 1000 // sr, audio_rms_x1000(samples)
 
-        for b in it:
-            rows = {"url": [], "sample_rate": [], "n_channels": [],
-                    "n_samples": [], "duration_ms": [], "rms_x1000": []}
-            for url, blob in zip(b[url_col], b[blob_col]):
-                raw = bytes(blob)
-                if sniff_kind(raw) != "wav":
-                    continue
-                try:
-                    sr, ch, samples = decode_wav(raw)
-                except WavError:
-                    continue
-                n = samples.shape[0]
-                rows["url"].append(url)
-                rows["sample_rate"].append(sr)
-                rows["n_channels"].append(ch)
-                rows["n_samples"].append(n)
-                rows["duration_ms"].append(n * 1000 // sr)
-                rows["rms_x1000"].append(audio_rms_x1000(samples))
-            yield pd.DataFrame(rows)
-
-    return df.select(url_col, blob_col).mapInPandas(batches, AUDIO_SCHEMA)
+    return map_rows(df.select("url", "html"), per_row, AUDIO_SCHEMA)
 
 
-def frame_sample_dataframe(df: DataFrame, id_col: str = "doc_id",
-                           payload_col: str = "text",
-                           frame_chars: int = 64) -> DataFrame:
+# frame size in characters; the media_frames DuckDB oracle hard-codes it
+FRAME_CHARS = 64
+
+
+def frame_sample_dataframe(df: DataFrame) -> DataFrame:
     """Frame sampling as 1-to-N row expansion inside the scan task:
-    the payload is split into fixed-size frames (characters, so the
-    DuckDB oracle's substr() sees the same boundaries for non-ASCII),
-    each fingerprinted with md5. The video analog — every Nth frame
-    hashed/kept — has exactly this plan shape: map-only explode, no
-    blob shuffle."""
-    def batches(it):
-        import pandas as pd
+    each df(doc_id, text) payload is split into fixed-size frames
+    (characters, so the DuckDB oracle's substr() sees the same
+    boundaries for non-ASCII), each fingerprinted with md5. The video
+    analog — every Nth frame hashed/kept — has exactly this plan shape:
+    map-only explode, no blob shuffle."""
+    def per_row(doc_id, text):
+        s = text or ""
+        for k in range(0, len(s), FRAME_CHARS):
+            yield (doc_id, k // FRAME_CHARS,
+                   hashlib.md5(s[k:k + FRAME_CHARS].encode()).hexdigest())
 
-        for b in it:
-            ids, idxs, hashes = [], [], []
-            for did, payload in zip(b[id_col], b[payload_col]):
-                s = payload or ""
-                for k in range(0, len(s), frame_chars):
-                    ids.append(did)
-                    idxs.append(k // frame_chars)
-                    hashes.append(hashlib.md5(
-                        s[k:k + frame_chars].encode()).hexdigest())
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_md5": hashes})
-
-    return df.select(id_col, payload_col).mapInPandas(batches, FRAME_SCHEMA)
+    return map_rows(df.select("doc_id", "text"), per_row, FRAME_SCHEMA)
 
 
-def embed_dataframe(df: DataFrame, id_col: str = "doc_id",
-                    payload_col: str = "text") -> DataFrame:
-    """Feature extraction plumbing: a deterministic 4-dim fingerprint
-    embedding (md5_number_upper-compatible hash per dimension, scaled
-    to [0,1)) — the stand-in for a real encoder, chosen so DuckDB can
-    replay every value exactly."""
-    def batches(it):
-        import pandas as pd
+def embed_dataframe(df: DataFrame) -> DataFrame:
+    """Feature extraction plumbing over df(doc_id, text): a
+    deterministic 4-dim fingerprint embedding
+    (md5_number_upper-compatible hash per dimension, scaled to [0,1))
+    — the stand-in for a real encoder, chosen so DuckDB can replay
+    every value exactly."""
+    def per_row(doc_id, text):
+        s = text or ""
+        yield (doc_id, *(
+            int.from_bytes(hashlib.md5(f"{s}|{k}".encode()).digest()[:8],
+                           "little") % 1000 / 1000.0 for k in range(4)))
 
-        for b in it:
-            rows = {"doc_id": [], "e0": [], "e1": [], "e2": [], "e3": []}
-            for did, payload in zip(b[id_col], b[payload_col]):
-                s = payload or ""
-                rows["doc_id"].append(did)
-                for k in range(4):
-                    h = int.from_bytes(
-                        hashlib.md5(f"{s}|{k}".encode()).digest()[:8],
-                        "little")
-                    rows[f"e{k}"].append((h % 1000) / 1000.0)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(batches, EMBED_SCHEMA)
+    return map_rows(df.select("doc_id", "text"), per_row, EMBED_SCHEMA)
 
 
 def resize_dataframe(df: DataFrame, width: int, height: int,
-                     url_col: str = "url", blob_col: str = "html",
                      fake: bool = False) -> DataFrame:
-    """Resize kernel: REAL decode + nearest-neighbor resample for PNG
-    and JPEG payloads (out_bytes = actual resized array size); the
-    decode stub leaves other kinds resize_ok=False/0; the fake path
+    """Resize kernel over df(url, html): REAL decode + nearest-neighbor
+    resample for PNG, JPEG and GIF payloads (out_bytes = actual resized
+    array size); every other kind is resize_ok=False/0; the fake path
     sizes the output deterministically (w*h*3 RGB bytes) for tests."""
-    def batches(it):
-        import pandas as pd
+    from zpdfspark.kernel.gif import GifError
+    from zpdfspark.kernel.jpeg import JpegError
+    from zpdfspark.kernel.png import PngError, resize_nearest
 
-        from zpdfspark.kernel.gif import GifError
-        from zpdfspark.kernel.jpeg import JpegError
-        from zpdfspark.kernel.png import PngError, resize_nearest
-
-        for b in it:
-            rows = {"url": [], "out_width": [], "out_height": [],
-                    "out_bytes": [], "resize_ok": []}
-            for url, blob in zip(b[url_col], b[blob_col]):
-                raw = bytes(blob)
+    def per_row(url, raw):
+        out_bytes = 0
+        ok = True
+        if fake:
+            out_bytes = width * height * 3
+        else:
+            try:
+                kind = sniff_kind(raw)
+                if kind not in ("png", "jpeg", "gif"):  # image-only op
+                    raise NotImplementedError(
+                        f"resize for {kind!r} not available")
+                px = decode_media(raw, kind)[3]
+                out_bytes = int(resize_nearest(px, width, height).nbytes)
+            except (NotImplementedError, PngError, JpegError, GifError):
                 ok = False
-                out_bytes = 0
-                try:
-                    if fake:
-                        _fake_decode(raw)
-                        out_bytes = width * height * 3
-                        ok = True
-                    else:
-                        kind = sniff_kind(raw)
-                        if kind not in ("png", "jpeg", "gif"):  # image-only op
-                            raise NotImplementedError(
-                                f"resize for {kind!r} not available")
-                        _w, _h, _c, px = decode_media(raw, kind)
-                        out_bytes = int(resize_nearest(px, width, height).nbytes)
-                        ok = True
-                except (NotImplementedError, PngError, JpegError,
-                        GifError):
-                    ok = False
-                rows["url"].append(url)
-                rows["out_width"].append(width)
-                rows["out_height"].append(height)
-                rows["out_bytes"].append(out_bytes)
-                rows["resize_ok"].append(ok)
-            yield pd.DataFrame(rows)
+        yield url, width, height, out_bytes, ok
 
-    return df.select(url_col, blob_col).mapInPandas(batches, RESIZE_SCHEMA)
+    return map_rows(df.select("url", "html"), per_row, RESIZE_SCHEMA)

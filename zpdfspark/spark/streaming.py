@@ -32,8 +32,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from zpdfspark.spark.session import hadoop_path_exists
-from zpdfspark.spark.udfs import EXTRACT_SCHEMA, extract_arrow_batches
-from zpdfspark.spark.warc_source import (CDX_SCHEMA, cdx_arrow_batches,
+from zpdfspark.spark.udfs import (EXTRACT_SCHEMA, extract_arrow_batches,
+                                  map_rows)
+from zpdfspark.spark.warc_sink import (SUMMARY_SCHEMA, archive_jsonl_rows,
+                                       archive_wat_rows, archive_wet_rows)
+from zpdfspark.spark.warc_source import (CDX_SCHEMA, cdx_rows,
                                          warc_extract_arrow_batches)
 
 INPUT_SCHEMA_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -233,7 +236,7 @@ def start_streaming_warc_cdx(
     sink = _idempotent_batch_writer(spark, output_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sink(batch_df.mapInPandas(cdx_arrow_batches, CDX_SCHEMA), batch_id)
+        sink(map_rows(batch_df, cdx_rows, CDX_SCHEMA), batch_id)
 
     return _start(_warc_drop_stream(spark, input_dir, max_files_per_trigger),
                   process_batch, checkpoint_dir, available_now)
@@ -309,7 +312,6 @@ def start_streaming_dedup(
     ``spark.sql.shuffle.partitions`` at query START (it is frozen into
     the checkpoint as the state shard count — tests drive 64).
     """
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     timeout = (GroupStateTimeout.ProcessingTimeTimeout if state_ttl
@@ -361,18 +363,17 @@ def start_streaming_dedup(
 
 def _start_archive_manifest(spark: SparkSession, input_dir: str,
                             output_dir: str, checkpoint_dir: str,
-                            archive_batches, available_now: bool,
+                            archive_rows, available_now: bool,
                             max_files_per_trigger: Optional[int]):
-    """The per-archive derivative twins (WET, JSONL, WAT):
-    ``archive_batches`` (spark/warc_sink.py) writes one file per dropped
-    archive, and its (file, n_records, n_bytes) summary rows go to the
-    idempotent parquet manifest under ``output_dir``."""
+    """The per-archive derivative twins (WET, JSONL, WAT): the per-row
+    function ``archive_rows`` (spark/warc_sink.py) writes one file per
+    dropped archive, and its (file, n_records, n_bytes) summary rows go
+    to the idempotent parquet manifest under ``output_dir``."""
     manifest_sink = _idempotent_batch_writer(spark, output_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        manifest_sink(batch_df.mapInPandas(
-            archive_batches, "file string, n_records long, n_bytes long"),
-            batch_id)
+        manifest_sink(map_rows(batch_df, archive_rows, SUMMARY_SCHEMA),
+                      batch_id)
 
     return _start(_warc_drop_stream(spark, input_dir, max_files_per_trigger),
                   process_batch, checkpoint_dir, available_now)
@@ -398,16 +399,14 @@ def start_streaming_warc_wet(
     Exactly-once here is belt-and-braces: file-source offsets
     checkpoint as usual, AND the WET writer itself is idempotent
     without them — output name and bytes are pure functions of the
-    archive (spark/warc_sink.py archive_wet_batches: pinned gzip
+    archive (spark/warc_sink.py archive_wet_rows: pinned gzip
     mtimes, md5 record ids, capture order, temp+rename), so a
     replayed batch overwrites byte-identically."""
-    from zpdfspark.spark.warc_sink import archive_wet_batches
-
     wet_dir = os.path.join(output_dir, "wet")
     os.makedirs(wet_dir, exist_ok=True)
     return _start_archive_manifest(
         spark, input_dir, output_dir, checkpoint_dir,
-        archive_wet_batches(wet_dir, mode), available_now,
+        archive_wet_rows(wet_dir, mode), available_now,
         max_files_per_trigger)
 
 
@@ -427,13 +426,11 @@ def start_streaming_warc_jsonl(
     mirror stays current. Same belt-and-braces exactly-once as the
     WET/WAT twins: offsets checkpoint, and the writer is idempotent
     without them (output bytes are pure functions of the archive)."""
-    from zpdfspark.spark.warc_sink import archive_jsonl_batches
-
     jl_dir = os.path.join(output_dir, "jsonl")
     os.makedirs(jl_dir, exist_ok=True)
     return _start_archive_manifest(
         spark, input_dir, output_dir, checkpoint_dir,
-        archive_jsonl_batches(jl_dir, mode), available_now,
+        archive_jsonl_rows(jl_dir, mode), available_now,
         max_files_per_trigger)
 
 
@@ -442,7 +439,6 @@ def start_streaming_warc_wat(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    max_links: int = 1000,
     available_now: bool = True,
     max_files_per_trigger: Optional[int] = None,
 ):
@@ -455,11 +451,9 @@ def start_streaming_warc_wat(
     and streaming WAT are byte-identical per capture; the writer is
     idempotent without checkpoint help (pure-function names/bytes,
     temp+rename), belt-and-braces with the file-source offsets."""
-    from zpdfspark.spark.warc_sink import archive_wat_batches
-
     wat_dir = os.path.join(output_dir, "wat")
     os.makedirs(wat_dir, exist_ok=True)
     return _start_archive_manifest(
         spark, input_dir, output_dir, checkpoint_dir,
-        archive_wat_batches(wat_dir, max_links), available_now,
+        archive_wat_rows(wat_dir), available_now,
         max_files_per_trigger)

@@ -219,6 +219,30 @@ def _pylist(arr) -> list:
     return values
 
 
+def arrow_schema(schema) -> pa.Schema:
+    """The Arrow form of a StructType or DDL string."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return to_arrow_schema(schema)
+
+
+def iter_rows(rb: pa.RecordBatch):
+    """``rb``'s rows as tuples of Python values in column order, with a
+    null binary value as ``b""``."""
+    yield from zip(*(_pylist(c) for c in rb.columns))
+
+
+def to_batch(rows: list, schema: pa.Schema) -> pa.RecordBatch:
+    """``rows`` (tuples in ``schema`` order) as one RecordBatch built
+    against ``schema``, so no rows still carry the declared column
+    types."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema)
+
+
 def map_rows(df: DataFrame, per_row, schema) -> DataFrame:
     """Run ``per_row`` once per row of ``df`` inside a ``mapInArrow`` task.
 
@@ -228,20 +252,12 @@ def map_rows(df: DataFrame, per_row, schema) -> DataFrame:
     input Arrow batch becomes one ``RecordBatch`` built against the Arrow
     form of ``schema``, so a batch with no output rows still carries the
     declared column types."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-    out_schema = to_arrow_schema(schema)
+    out_schema = arrow_schema(schema)
 
     def fn(batches):
         for rb in batches:
-            cols = [_pylist(c) for c in rb.columns]
-            rows = [out for values in zip(*cols) for out in per_row(*values)]
-            out_cols = list(zip(*rows)) if rows else [()] * len(out_schema)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(out_cols, out_schema)],
-                schema=out_schema)
+            yield to_batch([out for values in iter_rows(rb)
+                            for out in per_row(*values)], out_schema)
 
     return df.mapInArrow(fn, schema)
 

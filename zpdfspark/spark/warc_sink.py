@@ -10,7 +10,7 @@ CDX, is spark/warc_source.py warc_cdx):
   graphs and crawl analytics consume.
 
 Scale design: extraction / metadata mining, serialization and the
-file write are FUSED into one mapInPandas pass — document blobs never
+file write are FUSED into one mapInArrow pass — document blobs never
 cross a stage boundary (the round-3 measured finding: the two-stage
 WARC form spent ~76% extra wall on exactly that Arrow round-trip).
 One file per partition; `partitions` sizes the files (Common Crawl
@@ -30,9 +30,12 @@ the open/replace pair for a committer, the record stream is unchanged.
 from __future__ import annotations
 
 import os
+from datetime import timezone
 from typing import Optional
 
 from pyspark.sql import DataFrame
+
+from zpdfspark.spark.udfs import arrow_schema, iter_rows, to_batch
 
 
 def _write_members(out_dir, name, attempt, members):
@@ -62,22 +65,33 @@ def _write_members(out_dir, name, attempt, members):
     return n_records, n_bytes
 
 
-def _write_partition_file(it, out_dir, name_fmt, record_stream, docs):
-    """Stream one derivative file for this task's partition: returns
-    the (file, n_records, n_bytes) summary rows (empty partition ->
-    no file, no row)."""
-    import pandas as pd
-    from pyspark import TaskContext
+def _write_jsonl(out_dir, name, attempt, docs):
+    """Write `docs` (JSON objects) as the gzipped JSONL file
+    `out_dir/name`, one sorted-key compact object per line, via temp +
+    atomic os.replace; returns (n_records, n_bytes). No doc -> no file,
+    (0, 0)."""
+    import gzip
+    import itertools
+    import json
 
-    ctx = TaskContext.get()
-    name = name_fmt.format(ctx.partitionId())
-    n_records, n_bytes = _write_members(
-        out_dir, name, ctx.taskAttemptId(), record_stream(name, docs(it)))
-    if n_records == 0:
-        return pd.DataFrame({"file": [], "n_records": [],
-                             "n_bytes": []})
-    return pd.DataFrame({"file": [name], "n_records": [n_records],
-                         "n_bytes": [n_bytes]})
+    docs = iter(docs)
+    first = next(docs, None)
+    if first is None:
+        return 0, 0
+    tmp = os.path.join(out_dir, f".{name}.tmp-{attempt}")
+    n_records = 0
+    # filename="" keeps the attempt-suffixed tmp name OUT of the gzip
+    # header and mtime=0 pins its timestamp (determinism)
+    with open(tmp, "wb") as f, gzip.GzipFile(
+            filename="", fileobj=f, mode="wb", mtime=0) as gz:
+        for doc in itertools.chain((first,), docs):
+            gz.write((json.dumps(doc, ensure_ascii=False, sort_keys=True,
+                                 separators=(",", ":")) + "\n")
+                     .encode("utf-8"))
+            n_records += 1
+    n_bytes = os.path.getsize(tmp)
+    os.replace(tmp, os.path.join(out_dir, name))
+    return n_records, n_bytes
 
 
 def _archive_name(path, suffix: str) -> str:
@@ -90,14 +104,139 @@ def _archive_name(path, suffix: str) -> str:
     return stem + suffix
 
 
+_EPOCH = "1970-01-01T00:00:00Z"
+
+
 def _wdate(ts) -> str:
-    import pandas as pd
+    """A capture timestamp as a WARC-Date: the instant in UTC, whatever
+    the session time zone; no timestamp is the epoch."""
+    if ts is None:
+        return _EPOCH
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(timezone.utc)
+    return ts.strftime("%Y-%m-%dT%H:%M:%SZ")
 
-    return ("1970-01-01T00:00:00Z" if pd.isna(ts)
-            else ts.strftime("%Y-%m-%dT%H:%M:%SZ"))
+
+SUMMARY_SCHEMA = "file string, n_records long, n_bytes long"
 
 
-_SUMMARY_SCHEMA = "file string, n_records long, n_bytes long"
+def _summary(name, n_records, n_bytes):
+    """The SUMMARY_SCHEMA row of one written file; none when no file
+    was written."""
+    return [(name, n_records, n_bytes)] if n_records else []
+
+
+def _wet_writer(out_dir, mode):
+    """write(name, attempt, docs): one WET file of `conversion` records
+    carrying the extraction kernel's text, per (url, warc_date, raw)
+    doc."""
+    def write(name, attempt, docs):
+        from zpdfspark.kernel.htmltext import extract_any
+        from zpdfspark.kernel.warc import wet_records
+
+        texts = ((url, date, extract_any(raw, mode)[0])
+                 for url, date, raw in docs)
+        return _write_members(out_dir, name, attempt,
+                              wet_records(name, texts))
+
+    return write
+
+
+def _wat_writer(out_dir):
+    """write(name, attempt, docs): one WAT file of `metadata` records
+    carrying wat_doc_json, per (url, warc_date, raw) doc."""
+    def write(name, attempt, docs):
+        from zpdfspark.kernel.warc import wat_records
+
+        bodies = ((url, date, wat_doc_json(url, raw))
+                  for url, date, raw in docs)
+        return _write_members(out_dir, name, attempt,
+                              wat_records(name, bodies))
+
+    return write
+
+
+def _jsonl_writer(out_dir, mode):
+    """write(name, attempt, docs): one gzipped JSONL shard with one
+    {url, ts, lang, kind, n_chars, text} object per
+    (url, warc_date, raw, lang) doc."""
+    def write(name, attempt, docs):
+        from zpdfspark.kernel.htmltext import extract_any
+
+        def objects():
+            for url, date, raw, lang in docs:
+                text, kind, _ = extract_any(raw, mode)
+                yield {"kind": kind, "lang": lang, "n_chars": len(text),
+                       "text": text, "ts": date, "url": url}
+
+        return _write_jsonl(out_dir, name, attempt, objects())
+
+    return write
+
+
+def _per_partition(src: DataFrame, schema: str, write) -> DataFrame:
+    """mapInArrow over `src` where each task calls
+    write(partition_id, attempt, rows) once, with every row of its
+    partition as a tuple in `src`'s column order, and yields the output
+    rows it returns as one batch of `schema`."""
+    out_schema = arrow_schema(schema)
+
+    def fn(batches):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        rows = (row for rb in batches for row in iter_rows(rb))
+        yield to_batch(write(ctx.partitionId(), ctx.taskAttemptId(), rows),
+                       out_schema)
+
+    return src.mapInArrow(fn, schema)
+
+
+def _write_partitions(src: DataFrame, out_dir: str,
+                      partitions: Optional[int], name_fmt: str,
+                      write) -> DataFrame:
+    """One derivative file per hash(url) partition of
+    src(url, warc_ts, html[, lang]), rows in url order: `write` gets
+    the file name `name_fmt.format(partition id)`, the task attempt and
+    the (url, warc_date, html[, lang]) docs. Returns the lazy summary
+    DataFrame (file, n_records, n_bytes), one row per non-empty
+    partition."""
+    n = partitions or src.sparkSession.sparkContext.defaultParallelism
+    os.makedirs(out_dir, exist_ok=True)
+
+    def write_partition(pid, attempt, rows):
+        name = name_fmt.format(pid)
+        docs = ((url, _wdate(ts), *rest) for url, ts, *rest in rows)
+        return _summary(name, *write(name, attempt, docs))
+
+    return _per_partition(
+        src.repartition(n, "url").sortWithinPartitions("url"),
+        SUMMARY_SCHEMA, write_partition)
+
+
+def _archive_rows(suffix: str, write):
+    """The per-row function of the per-ARCHIVE derivative layout
+    (Common Crawl names each WET/WAT file after its source archive):
+    every (path, content) archive writes `<archive-stem><suffix>`
+    through write(name, attempt, docs), one (url, warc_date, body) doc
+    per response record in capture order, streamed with temp+rename,
+    and yields its SUMMARY_SCHEMA row. Output name and bytes are pure
+    functions of the archive, so re-delivery (streaming batch replay,
+    speculative twins) overwrites byte-identically — sink idempotence
+    without batch bookkeeping. File-level garbage skips the archive
+    (error posture of the fused ingest path)."""
+    def per_row(path, content):
+        from pyspark import TaskContext
+
+        from zpdfspark.kernel.warc import iter_responses
+
+        name = _archive_name(path, suffix)
+        docs = ((rec.target_uri, rec.warc_date or _EPOCH, rec.body)
+                for rec in iter_responses(content))
+        yield from _summary(
+            name, *write(name, TaskContext.get().taskAttemptId(), docs))
+
+    return per_row
 
 
 def write_wet(df: DataFrame, out_dir: str, mode: str = "accuracy",
@@ -106,38 +245,20 @@ def write_wet(df: DataFrame, out_dir: str, mode: str = "accuracy",
     small summary DataFrame (file, n_records, n_bytes), one row per
     non-empty partition. The returned plan is lazy — the files are
     written when the summary is consumed."""
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
-    os.makedirs(out_dir, exist_ok=True)
-    src = (df.select("url", "warc_ts", "html")
-           .repartition(n, "url")
-           .sortWithinPartitions("url"))
-
-    def batches(it):
-        from zpdfspark.kernel.htmltext import extract_any
-        from zpdfspark.kernel.warc import wet_records
-
-        def docs(batches_it):
-            for b in batches_it:
-                for url, ts, blob in zip(b["url"], b["warc_ts"],
-                                         b["html"]):
-                    raw = bytes(blob) if blob is not None else b""
-                    yield url, _wdate(ts), extract_any(raw, mode)[0]
-
-        yield _write_partition_file(
-            it, out_dir, "wet-{:05d}.warc.wet.gz", wet_records, docs)
-
-    return src.mapInPandas(batches, _SUMMARY_SCHEMA)
-
+    return _write_partitions(
+        df.select("url", "warc_ts", "html"), out_dir, partitions,
+        "wet-{:05d}.warc.wet.gz", _wet_writer(out_dir, mode))
 
 
 _WAT_RE_TITLE = r"<title>([^<]*)</title>"
 _WAT_RE_DESC = r'<meta name="description" content="([^"]*)"'
 _WAT_RE_CANON = r'<link rel="canonical" href="([^"]*)"'
 _WAT_RE_HREF = r'<a[^>]*\shref="([^"]*)"'
+# outlinks kept per WAT record; the rest are counted as Links-Truncated
+_WAT_MAX_LINKS = 1000
 
 
-def wat_doc_json(url: str, raw: bytes, max_links: int = 1000) -> str:
+def wat_doc_json(url: str, raw: bytes) -> str:
     """One capture's WAT metadata record body (deterministic compact
     JSON in the Common Crawl WAT envelope shape) — shared by the batch
     sink (write_wat) and the per-archive streaming twin so both render
@@ -163,10 +284,10 @@ def wat_doc_json(url: str, raw: bytes, max_links: int = 1000) -> str:
         links = re.findall(_WAT_RE_HREF, text)
         html_md = {
             "Head": {},
-            "Links": [{"url": u} for u in links[:max_links]],
+            "Links": [{"url": u} for u in links[:_WAT_MAX_LINKS]],
         }
-        if len(links) > max_links:
-            html_md["Links-Truncated"] = len(links) - max_links
+        if len(links) > _WAT_MAX_LINKS:
+            html_md["Links-Truncated"] = len(links) - _WAT_MAX_LINKS
         m = re.search(_WAT_RE_TITLE, text)
         if m:
             html_md["Head"]["Title"] = m.group(1)
@@ -181,82 +302,18 @@ def wat_doc_json(url: str, raw: bytes, max_links: int = 1000) -> str:
 
 
 def write_wat(df: DataFrame, out_dir: str,
-              partitions: Optional[int] = None,
-              max_links: int = 1000) -> DataFrame:
+              partitions: Optional[int] = None) -> DataFrame:
     """df(url, warc_ts, html) -> WAT files under out_dir (same
     summary-DataFrame contract as write_wet). Each `metadata` record
     body is deterministic compact JSON in the Common Crawl WAT
     envelope shape: Actual-Content-Length always; HTML-Metadata
     (head title/meta-description/canonical + outlink list, capped at
-    `max_links` — the cap is recorded as Links-Truncated when it
-    bites) for HTML payloads only. The miner is the same regex set
-    the html_meta query uses, applied kernel-side in this fused
-    pass."""
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
-    os.makedirs(out_dir, exist_ok=True)
-    src = (df.select("url", "warc_ts", "html")
-           .repartition(n, "url")
-           .sortWithinPartitions("url"))
-
-    def batches(it):
-        from zpdfspark.kernel.warc import wat_records
-
-        def docs(batches_it):
-            for b in batches_it:
-                for url, ts, blob in zip(b["url"], b["warc_ts"],
-                                         b["html"]):
-                    raw = bytes(blob) if blob is not None else b""
-                    yield url, _wdate(ts), wat_doc_json(url, raw,
-                                                        max_links)
-
-        yield _write_partition_file(
-            it, out_dir, "wat-{:05d}.warc.wat.gz", wat_records, docs)
-
-    return src.mapInPandas(batches, _SUMMARY_SCHEMA)
-
-
-def _archive_derivative_batches(out_dir: str, suffix: str,
-                                record_stream_name: str, payload_fn):
-    """Shared mapInPandas kernel for the per-ARCHIVE derivative layout
-    (Common Crawl names each WET/WAT file after its source archive):
-    every input row (path, content) parses and writes
-    `<archive-stem><suffix>` in capture order, streamed
-    member-by-member with temp+rename. Output name and bytes are pure
-    functions of the archive, so re-delivery (streaming batch replay,
-    speculative twins) overwrites byte-identically — sink idempotence
-    without batch bookkeeping. File-level garbage skips the archive
-    (error posture of the fused ingest path). `payload_fn(rec)`
-    renders one response record's derivative body; the record stream
-    is resolved by name executor-side (kernel/warc.py wet_records /
-    wat_records)."""
-
-    def fn(it):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        from zpdfspark.kernel import warc as _warc
-
-        record_stream = getattr(_warc, record_stream_name)
-        attempt = TaskContext.get().taskAttemptId()
-        for b in it:
-            out = {"file": [], "n_records": [], "n_bytes": []}
-            for path, content in zip(b["path"], b["content"]):
-                name = _archive_name(path, suffix)
-                docs = ((rec.target_uri,
-                         rec.warc_date or "1970-01-01T00:00:00Z",
-                         payload_fn(rec))
-                        for rec in _warc.iter_responses(bytes(content)))
-                n_records, n_bytes = _write_members(
-                    out_dir, name, attempt, record_stream(name, docs))
-                if n_records == 0:
-                    continue
-                out["file"].append(name)
-                out["n_records"].append(n_records)
-                out["n_bytes"].append(n_bytes)
-            yield pd.DataFrame(out)
-
-    return fn
+    1,000 — the cap is recorded as Links-Truncated when it bites) for
+    HTML payloads only. The miner is the same regex set the html_meta
+    query uses, applied kernel-side in this fused pass."""
+    return _write_partitions(
+        df.select("url", "warc_ts", "html"), out_dir, partitions,
+        "wat-{:05d}.warc.wat.gz", _wat_writer(out_dir))
 
 
 def write_jsonl(df: DataFrame, out_dir: str, mode: str = "accuracy",
@@ -268,162 +325,43 @@ def write_jsonl(df: DataFrame, out_dir: str, mode: str = "accuracy",
     partition; objects carry {url, ts, lang, kind, n_chars, text}.
 
     Same scale/determinism contract as write_wet: extraction,
-    serialization and the file write FUSE into one mapInPandas pass
+    serialization and the file write FUSE into one mapInArrow pass
     (blobs never cross a stage boundary), membership is
     hash(url) % partitions, rows sort by url within the shard, gzip
     mtime is pinned and JSON uses sorted compact keys — byte-identical
     re-runs, written temp + atomic os.replace. Returns the lazy
     (file, n_records, n_bytes) summary."""
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
-    os.makedirs(out_dir, exist_ok=True)
-    src = (df.select("url", "warc_ts", "html", "lang")
-           .repartition(n, "url")
-           .sortWithinPartitions("url"))
-
-    def batches(it):
-        import gzip
-        import json
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        from zpdfspark.kernel.htmltext import extract_any
-
-        ctx = TaskContext.get()
-        name = f"jsonl-{ctx.partitionId():05d}.jsonl.gz"
-        tmp = os.path.join(out_dir, f".{name}.tmp-{ctx.taskAttemptId()}")
-        n_records = n_bytes = 0
-        f = gz = None
-        try:
-            for b in it:
-                for url, ts, blob, lang in zip(b["url"], b["warc_ts"],
-                                               b["html"], b["lang"]):
-                    raw = bytes(blob) if blob is not None else b""
-                    text, kind, _ = extract_any(raw, mode)
-                    line = json.dumps(
-                        {"kind": kind, "lang": lang,
-                         "n_chars": len(text), "text": text,
-                         "ts": _wdate(ts), "url": url},
-                        ensure_ascii=False, sort_keys=True,
-                        separators=(",", ":")) + "\n"
-                    if f is None:
-                        f = open(tmp, "wb")
-                        # filename="" keeps the attempt-suffixed tmp
-                        # name OUT of the gzip header (determinism)
-                        gz = gzip.GzipFile(filename="", fileobj=f,
-                                           mode="wb", mtime=0)
-                    gz.write(line.encode("utf-8"))
-                    n_records += 1
-        finally:
-            if gz is not None:
-                gz.close()
-            if f is not None:
-                f.close()
-        if n_records == 0:
-            if os.path.exists(tmp):
-                os.remove(tmp)
-            yield pd.DataFrame({"file": [], "n_records": [],
-                                "n_bytes": []})
-            return
-        n_bytes = os.path.getsize(tmp)
-        os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n_records": [n_records],
-                            "n_bytes": [n_bytes]})
-
-    return src.mapInPandas(batches, _SUMMARY_SCHEMA)
+    return _write_partitions(
+        df.select("url", "warc_ts", "html", "lang"), out_dir, partitions,
+        "jsonl-{:05d}.jsonl.gz", _jsonl_writer(out_dir, mode))
 
 
-
-def archive_jsonl_batches(out_dir: str, mode: str = "accuracy"):
+def archive_jsonl_rows(out_dir: str, mode: str = "accuracy"):
     """Per-archive JSONL writer (the dataset-release twin of
-    archive_wet_batches): every (path, content) row writes
+    archive_wet_rows): every (path, content) row writes
     `<archive-stem>.jsonl.gz` — one JSON object per response record
     in capture order, the same sorted-compact shape write_jsonl emits
     (lang is null: archives carry no language column). Output name
     and bytes are pure functions of the archive (pinned gzip mtime +
     empty header filename), so streaming batch replay overwrites
     byte-identically."""
-
-    def fn(it):
-        import gzip
-        import json
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        from zpdfspark.kernel import warc as _warc
-        from zpdfspark.kernel.htmltext import extract_any
-
-        attempt = TaskContext.get().taskAttemptId()
-        for b in it:
-            out = {"file": [], "n_records": [], "n_bytes": []}
-            for path, content in zip(b["path"], b["content"]):
-                name = _archive_name(path, ".jsonl.gz")
-                tmp = os.path.join(out_dir, f".{name}.tmp-{attempt}")
-                n_records = 0
-                f = gz = None
-                try:
-                    for rec in _warc.iter_responses(bytes(content)):
-                        text, kind, _ = extract_any(rec.body, mode)
-                        line = json.dumps(
-                            {"kind": kind, "lang": None,
-                             "n_chars": len(text), "text": text,
-                             "ts": rec.warc_date or "1970-01-01T00:00:00Z",
-                             "url": rec.target_uri},
-                            ensure_ascii=False, sort_keys=True,
-                            separators=(",", ":")) + "\n"
-                        if f is None:
-                            f = open(tmp, "wb")
-                            gz = gzip.GzipFile(filename="", fileobj=f,
-                                               mode="wb", mtime=0)
-                        gz.write(line.encode("utf-8"))
-                        n_records += 1
-                finally:
-                    if gz is not None:
-                        gz.close()
-                    if f is not None:
-                        f.close()
-                if n_records == 0:
-                    if os.path.exists(tmp):
-                        os.remove(tmp)
-                    continue
-                n_bytes = os.path.getsize(tmp)
-                os.replace(tmp, os.path.join(out_dir, name))
-                out["file"].append(name)
-                out["n_records"].append(n_records)
-                out["n_bytes"].append(n_bytes)
-            yield pd.DataFrame(out)
-
-    return fn
+    write = _jsonl_writer(out_dir, mode)
+    return _archive_rows(".jsonl.gz", lambda name, attempt, docs: write(
+        name, attempt, ((*doc, None) for doc in docs)))
 
 
-
-def archive_wet_batches(out_dir: str, mode: str = "accuracy"):
-    """Per-archive WET writer (see _archive_derivative_batches):
-    payload = the extraction kernel's text for each response body."""
-
-    def payload(rec):
-        from zpdfspark.kernel.htmltext import extract_any
-
-        return extract_any(rec.body, mode)[0]
-
-    return _archive_derivative_batches(
-        out_dir, ".warc.wet.gz", "wet_records", payload)
+def archive_wet_rows(out_dir: str, mode: str = "accuracy"):
+    """Per-archive WET writer (see _archive_rows): payload = the
+    extraction kernel's text for each response body."""
+    return _archive_rows(".warc.wet.gz", _wet_writer(out_dir, mode))
 
 
-def archive_wat_batches(out_dir: str, max_links: int = 1000):
-    """Per-archive WAT writer (see _archive_derivative_batches):
-    payload = the same deterministic metadata JSON write_wat renders
-    (wat_doc_json), so the streaming twin's records are byte-identical
-    to the batch sink's for the same capture."""
-
-    def payload(rec):
-        return wat_doc_json(rec.target_uri, rec.body, max_links)
-
-    return _archive_derivative_batches(
-        out_dir, ".warc.wat.gz", "wat_records", payload)
-
+def archive_wat_rows(out_dir: str):
+    """Per-archive WAT writer (see _archive_rows): payload = the same
+    deterministic metadata JSON write_wat renders (wat_doc_json), so
+    the streaming twin's records are byte-identical to the batch
+    sink's for the same capture."""
+    return _archive_rows(".warc.wat.gz", _wat_writer(out_dir))
 
 
 _ZIPNUM_IDX_SCHEMA = ("urlkey string, cdx_ts string, file string, "
@@ -456,77 +394,57 @@ def write_zipnum(cdx: DataFrame, out_dir: str,
     (urlkey, cdx_ts, digest, warc_file, rec_offset), gzip mtimes are 0
     and names derive from the range-partition id, so re-runs rewrite
     byte-identical part files via temp + atomic rename."""
-    spark = cdx.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
+    n = partitions or cdx.sparkSession.sparkContext.defaultParallelism
     os.makedirs(out_dir, exist_ok=True)
     src = (cdx.repartitionByRange(n, "urlkey", "cdx_ts")
            .sortWithinPartitions("urlkey", "cdx_ts", "digest",
                                  "warc_file", "rec_offset"))
 
-    def batches(it):
+    def write_blocks(pid, attempt, rows):
         import gzip
         import io
+        import itertools
         import json
 
-        import pandas as pd
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        name = f"cdx-{ctx.partitionId():05d}.gz"
-        tmp = os.path.join(out_dir, f".{name}.tmp-{ctx.taskAttemptId()}")
-        idx = {k: [] for k in ("urlkey", "cdx_ts", "file", "offset",
-                               "length", "seq", "n_lines")}
-        state = {"f": None, "offset": 0, "seq": 0}
-        buf: list = []
-        first: list = []
-
-        def flush():
-            if not buf:
-                return
-            bio = io.BytesIO()
-            with gzip.GzipFile(fileobj=bio, mode="wb", mtime=0) as g:
-                g.write("".join(buf).encode("utf-8"))
-            member = bio.getvalue()
-            if state["f"] is None:
-                state["f"] = open(tmp, "wb")
-            state["f"].write(member)
-            idx["urlkey"].append(first[0])
-            idx["cdx_ts"].append(first[1])
-            idx["file"].append(name)
-            idx["offset"].append(state["offset"])
-            idx["length"].append(len(member))
-            idx["seq"].append(state["seq"])
-            idx["n_lines"].append(len(buf))
-            state["offset"] += len(member)
-            state["seq"] += 1
-            buf.clear()
-            first.clear()
-
-        for b in it:
-            for (uk, ts, url, mime, status, digest, off, ln, wf) in zip(
-                    b["urlkey"], b["cdx_ts"], b["url"], b["mime"],
-                    b["http_status"], b["digest"], b["rec_offset"],
-                    b["rec_length"], b["warc_file"]):
-                # CC CDXJ convention: the JSON payload carries string
-                # values, fixed field order
-                payload = json.dumps({
-                    "url": url, "mime": mime or "",
-                    "status": str(status) if status is not None else "",
-                    "digest": digest, "length": str(ln),
-                    "offset": str(off), "filename": wf,
-                }, separators=(", ", ": "))
-                if not first:
-                    first.extend((uk, ts))
-                buf.append(f"{uk} {ts} {payload}\n")
-                if len(buf) >= lines_per_block:
-                    flush()
-        flush()
-        if state["f"] is not None:
-            state["f"].close()
+        name = f"cdx-{pid:05d}.gz"
+        tmp = os.path.join(out_dir, f".{name}.tmp-{attempt}")
+        index = []
+        offset = 0
+        f = None
+        try:
+            while True:
+                block = list(itertools.islice(rows, lines_per_block))
+                if not block:
+                    break
+                lines = []
+                for uk, ts, url, mime, status, digest, off, ln, wf in block:
+                    # CC CDXJ convention: the JSON payload carries
+                    # string values, fixed field order
+                    payload = json.dumps({
+                        "url": url, "mime": mime or "",
+                        "status": "" if status is None else str(status),
+                        "digest": digest, "length": str(ln),
+                        "offset": str(off), "filename": wf,
+                    }, separators=(", ", ": "))
+                    lines.append(f"{uk} {ts} {payload}\n")
+                bio = io.BytesIO()
+                with gzip.GzipFile(fileobj=bio, mode="wb", mtime=0) as g:
+                    g.write("".join(lines).encode("utf-8"))
+                member = bio.getvalue()
+                if f is None:
+                    f = open(tmp, "wb")
+                f.write(member)
+                index.append((block[0][0], block[0][1], name, offset,
+                              len(member), len(index), len(block)))
+                offset += len(member)
+        finally:
+            if f is not None:
+                f.close()
+        if index:
             os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame(idx)
+        return index
 
-    return src.mapInPandas(batches, _ZIPNUM_IDX_SCHEMA)
+    return _per_partition(src, _ZIPNUM_IDX_SCHEMA, write_blocks)
 
 
 def write_cluster_idx(index_df: DataFrame, out_dir: str) -> str:

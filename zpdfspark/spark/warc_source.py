@@ -9,8 +9,8 @@ monthly crawl), not parquet. This source reads them Spark-natively:
   per-record gzip layout is not block-splittable, and CC sizes files
   so one file ≈ one task);
 - records are parsed INSIDE the scan task (kernel/warc.py) as a 1->N
-  mapInPandas expansion — blobs never shuffle, mirroring the
-  extraction kernel's map-only shape;
+  per-archive expansion on udfs.map_rows — blobs never shuffle,
+  mirroring the extraction kernel's map-only shape;
 - per-record errors surface as rows with `parse_error` set (a corrupt
   record must not kill a 1 GB archive task), keeping the engine's
   permissive-parsing contract end to end.
@@ -22,8 +22,16 @@ runs extraction straight off crawl archives.
 
 from __future__ import annotations
 
+import base64
+import hashlib
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from zpdfspark.kernel.warc import (WarcError, cdx_timestamp, iter_warc_records,
+                                   iter_warc_records_spans, surt)
+from zpdfspark.spark.udfs import map_rows
 
 WARC_SCHEMA = ("url string, warc_date string, content_type string, "
                "html binary, n_bytes long, body_md5 string, "
@@ -37,49 +45,23 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     plus error rows with `parse_error` set."""
     binary = spark.read.format("binaryFile").load(path)
 
-    def batches(it):
-        import hashlib
+    def error_row(fpath, err):
+        return None, None, None, None, 0, None, fpath, err, None, None
 
-        import pandas as pd
+    def per_row(fpath, content):
+        try:
+            for rec in iter_warc_records(content):
+                if rec.error:
+                    yield error_row(fpath, rec.error)
+                elif rec.warc_type == "response":
+                    yield (rec.target_uri, rec.warc_date, rec.content_type,
+                           rec.body, len(rec.body),
+                           hashlib.md5(rec.body).hexdigest(), fpath, None,
+                           rec.http_status, rec.http_content_type)
+        except WarcError as e:
+            yield error_row(fpath, f"file-level: {e}")
 
-        from zpdfspark.kernel.warc import WarcError, iter_warc_records
-
-        cols = ("url", "warc_date", "content_type", "html", "n_bytes",
-                "body_md5", "warc_file", "parse_error", "http_status",
-                "http_content_type")
-        for b in it:
-            rows = {k: [] for k in cols}
-
-            def add(url=None, date=None, ctype=None, body=None,
-                    fname="", err=None, status=None, http_ct=None):
-                rows["url"].append(url)
-                rows["warc_date"].append(date)
-                rows["content_type"].append(ctype)
-                rows["html"].append(body)
-                rows["n_bytes"].append(len(body) if body is not None else 0)
-                rows["body_md5"].append(
-                    hashlib.md5(body).hexdigest() if body is not None
-                    else None)
-                rows["warc_file"].append(fname)
-                rows["parse_error"].append(err)
-                rows["http_status"].append(status)
-                rows["http_content_type"].append(http_ct)
-
-            for fpath, content in zip(b["path"], b["content"]):
-                try:
-                    for rec in iter_warc_records(bytes(content)):
-                        if rec.error:
-                            add(fname=fpath, err=rec.error)
-                        elif rec.warc_type == "response":
-                            add(url=rec.target_uri, date=rec.warc_date,
-                                ctype=rec.content_type, body=rec.body,
-                                fname=fpath, status=rec.http_status,
-                                http_ct=rec.http_content_type)
-                except WarcError as e:
-                    add(fname=fpath, err=f"file-level: {e}")
-            yield pd.DataFrame(rows)
-
-    return binary.select("path", "content").mapInPandas(batches, WARC_SCHEMA)
+    return map_rows(binary.select("path", "content"), per_row, WARC_SCHEMA)
 
 
 def warc_documents(spark: SparkSession, path: str,
@@ -120,30 +102,18 @@ def warc_revisits(spark: SparkSession, path: str) -> DataFrame:
     are never carried (revisits are body-less pointers)."""
     binary = spark.read.format("binaryFile").load(path)
 
-    def batches(it):
-        import pandas as pd
+    def per_row(content):
+        try:
+            for rec in iter_warc_records(content):
+                if not rec.error and rec.warc_type == "revisit":
+                    yield (rec.target_uri, rec.warc_date, rec.refers_to_uri,
+                           rec.refers_to_date)
+        except WarcError:
+            return
 
-        from zpdfspark.kernel.warc import WarcError, iter_warc_records
-
-        for b in it:
-            rows = {"url": [], "warc_date": [], "refers_to_uri": [],
-                    "refers_to_date": []}
-            for content in b["content"]:
-                try:
-                    for rec in iter_warc_records(bytes(content)):
-                        if rec.error or rec.warc_type != "revisit":
-                            continue
-                        rows["url"].append(rec.target_uri)
-                        rows["warc_date"].append(rec.warc_date)
-                        rows["refers_to_uri"].append(rec.refers_to_uri)
-                        rows["refers_to_date"].append(rec.refers_to_date)
-                except WarcError:
-                    continue
-            yield pd.DataFrame(rows)
-
-    return binary.select("content").mapInPandas(
-        batches, "url string, warc_date string, refers_to_uri string, "
-                 "refers_to_date string")
+    return map_rows(binary.select("content"), per_row,
+                    "url string, warc_date string, refers_to_uri string, "
+                    "refers_to_date string")
 
 
 CDX_SCHEMA = ("urlkey string, cdx_ts string, url string, mime string, "
@@ -151,46 +121,22 @@ CDX_SCHEMA = ("urlkey string, cdx_ts string, url string, mime string, "
               "rec_length long, warc_file string")
 
 
-def cdx_arrow_batches(it):
-    """mapInPandas body shared by the batch warc_cdx query and the
-    streaming twin: (path, content) batches -> CDX_SCHEMA index rows."""
-    import base64
-    import hashlib
-    import os as _os
-
-    import pandas as pd
-
-    from zpdfspark.kernel.warc import (WarcError, cdx_timestamp,
-                                       iter_warc_records_spans, surt)
-
-    cols = ("urlkey", "cdx_ts", "url", "mime", "http_status",
-            "digest", "rec_offset", "rec_length", "warc_file")
-    for b in it:
-        rows = {k: [] for k in cols}
-        for fpath, content in zip(b["path"], b["content"]):
-            fname = _os.path.basename(fpath)
-            try:
-                for rec, off, ln in iter_warc_records_spans(
-                        bytes(content)):
-                    if rec.error or rec.warc_type != "response" \
-                            or rec.target_uri is None:
-                        continue
-                    sha1 = base64.b32encode(
-                        hashlib.sha1(rec.body).digest()).decode()
-                    rows["urlkey"].append(surt(rec.target_uri))
-                    rows["cdx_ts"].append(
-                        cdx_timestamp(rec.warc_date or ""))
-                    rows["url"].append(rec.target_uri)
-                    rows["mime"].append(rec.http_content_type
-                                        or rec.content_type)
-                    rows["http_status"].append(rec.http_status)
-                    rows["digest"].append("sha1:" + sha1)
-                    rows["rec_offset"].append(off)
-                    rows["rec_length"].append(ln)
-                    rows["warc_file"].append(fname)
-            except WarcError:
+def cdx_rows(fpath, content):
+    """The CDX_SCHEMA index rows of one (path, content) archive: the
+    per-row function of the batch warc_cdx query and its streaming
+    twin."""
+    fname = os.path.basename(fpath)
+    try:
+        for rec, off, ln in iter_warc_records_spans(content):
+            if rec.error or rec.warc_type != "response" \
+                    or rec.target_uri is None:
                 continue
-        yield pd.DataFrame(rows)
+            sha1 = base64.b32encode(hashlib.sha1(rec.body).digest()).decode()
+            yield (surt(rec.target_uri), cdx_timestamp(rec.warc_date or ""),
+                   rec.target_uri, rec.http_content_type or rec.content_type,
+                   rec.http_status, "sha1:" + sha1, off, ln, fname)
+    except WarcError:
+        return
 
 
 def warc_cdx(spark: SparkSession, path: str) -> DataFrame:
@@ -206,8 +152,7 @@ def warc_cdx(spark: SparkSession, path: str) -> DataFrame:
     payload (post envelope-strip/de-chunk/gunzip), matching the
     "payload digest" the CDX spec records."""
     binary = spark.read.format("binaryFile").load(path)
-    return binary.select("path", "content").mapInPandas(
-        cdx_arrow_batches, CDX_SCHEMA)
+    return map_rows(binary.select("path", "content"), cdx_rows, CDX_SCHEMA)
 
 
 def warc_extract_arrow_batches(mode: str = "accuracy",
