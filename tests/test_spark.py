@@ -334,12 +334,11 @@ def test_single_pass_partial_resume_keeps_session_conf(spark, corpus_path,
 
 
 def test_lineage_rollup_matches_groupby(spark):
-    """The observed per-bucket rollup equals a groupBy reference, with
+    """The Arrow per-bucket rollup equals a groupBy reference, with
     null metric values, a boolean is_encrypted and a bucket that has no
     rows (dropped, or all zeros with keep_empty)."""
-    from zpdfspark.spark.pipeline import (_LINEAGE_SUMS,
-                                          _lineage_observation,
-                                          _lineage_rows_from_observation)
+    from zpdfspark.spark.pipeline import (_LINEAGE_SUMS, _lineage_rollup,
+                                          _lineage_rows)
 
     cols = [c for _, c in _LINEAGE_SUMS]
     schema = "bucket int, " + ", ".join(
@@ -354,9 +353,9 @@ def test_lineage_rollup_matches_groupby(spark):
     data = [rec(0, i) for i in range(5)] + [rec(2, i) for i in range(7)] \
         + [rec(3, 0)]
     df = spark.createDataFrame(data, schema)
-    obs, exprs = _lineage_observation([0, 1, 2, 3])
-    df.observe(obs, *exprs).collect()
-    got = _lineage_rows_from_observation(obs, [0, 1, 2, 3], 1.5, "t")
+    out, sums = _lineage_rollup(df)
+    assert out.collect() == df.collect()
+    got = _lineage_rows(sums.value, [0, 1, 2, 3], 1.5, "t")
 
     ref = df.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -370,33 +369,156 @@ def test_lineage_rollup_matches_groupby(spark):
     assert [r["bucket"] for r in want] == [0, 2, 3]
     assert got == want
 
-    obs1, exprs1 = _lineage_observation([1])
-    df.observe(obs1, *exprs1).collect()
-    empty = _lineage_rows_from_observation(obs1, [1], 0.5, "t",
-                                           keep_empty=True)
+    empty = _lineage_rows(sums.value, [1], 0.5, "t", keep_empty=True)
     assert empty == [{"bucket": 1, "n_docs": 0,
                       **{f: 0 for f, _ in _LINEAGE_SUMS},
                       "wall_secs": 0.5, "status": "ok", "finished_at": "t"}]
 
 
-def test_lineage_observation_gateway_commands(spark, monkeypatch):
-    """Building the rollup costs O(n_buckets) gateway round trips: at
-    most 2 py4j commands per expression, counted at 64 buckets."""
-    from zpdfspark.spark.pipeline import _LINEAGE_SUMS, _lineage_observation
+def _gateway_commands(spark, monkeypatch, fn):
+    """Number of py4j commands the driver sends while ``fn()`` runs, not
+    counting the deletes of garbage-collected JVM references: py4j sends
+    those whenever Python frees an older object, so their number depends
+    on everything the process did before."""
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 
     client = spark.sparkContext._gateway._gateway_client
+    delete = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
     sent = []
     send = client.send_command
 
-    def counting(*args, **kwargs):
-        sent.append(1)
-        return send(*args, **kwargs)
+    def counting(command, *args, **kwargs):
+        if not command.startswith(delete):
+            sent.append(1)
+        return send(command, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting)
-    _, exprs = _lineage_observation(list(range(64)))
-    monkeypatch.undo()
-    assert len(exprs) == 64 * (1 + len(_LINEAGE_SUMS))
-    assert len(sent) <= 2 * len(exprs), len(sent)
+    try:
+        fn()
+    finally:
+        monkeypatch.undo()
+    return len(sent)
+
+
+def test_lineage_rollup_gateway_commands(spark, monkeypatch):
+    """Building the rollup sends as many py4j commands for a frame of 64
+    buckets as for a frame of 1: its driver cost does not grow with the
+    bucket count."""
+    from zpdfspark.spark.pipeline import _lineage_rollup
+
+    def frame(n_buckets):
+        return spark.createDataFrame(
+            [(b, 1) for b in range(n_buckets)], "bucket int, n_pages long")
+
+    one, many = frame(1), frame(64)
+    for df in (one, many):  # a frame caches its schema on first use
+        _lineage_rollup(df)
+    counts = [_gateway_commands(spark, monkeypatch,
+                                lambda: _lineage_rollup(df))
+              for df in (one, many)]
+    assert counts[0] == counts[1] > 0, counts
+
+
+def test_lineage_rollup_exactly_once_under_retry(tmp_path):
+    """Lineage of a fused single-pass WARC run still equals a groupBy over
+    its output when every writer task fails on its first attempt, after
+    the rollup has seen all its batches. The failing pass-through also
+    deletes the shuffle files, so the retry hits a fetch failure and
+    re-runs the map stage: a rollup placed below the writer exchange
+    would then add those map tasks' sums twice. local[2,2] allows the
+    one retry per task."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    local = tmp_path / "local"
+    local.mkdir()
+    script = f"""
+import glob, json, os, sys
+sys.path.insert(0, {repo!r})
+import pyspark.sql.functions as F
+from pyspark import TaskContext
+from zpdfspark.fixtures import write_warc_fixture
+from zpdfspark.spark.pipeline import _LINEAGE_SUMS, run_extraction_job
+from zpdfspark.spark.session import get_spark
+
+spark = get_spark("2,2", "rollup-retry-test", shuffle_partitions=2)
+
+def fail_first(batches):
+    yield from batches
+    ctx = TaskContext.get()
+    # a resubmitted stage starts its attempts at 0 again: fail each
+    # partition once
+    failed = os.path.join({str(tmp_path)!r}, f"failed-{{ctx.partitionId()}}")
+    if ctx.attemptNumber() == 0 and not os.path.exists(failed):
+        open(failed, "w").close()
+        for f in glob.glob(os.path.join({str(local)!r}, "**", "shuffle_*"),
+                           recursive=True):
+            os.remove(f)
+        raise RuntimeError("injected writer failure")
+
+try:
+    DF = type(spark.range(1))
+    write = DF.write
+    DF.write = property(
+        lambda df: write.fget(df.mapInArrow(fail_first, df.schema)))
+    warc, _ = write_warc_fixture({str(tmp_path / "warc")!r}, 40, seed=17,
+                                 shards=4)
+    out = {str(tmp_path / "out")!r}
+    s = run_extraction_job(spark, warc, out, input_format="warc",
+                           n_buckets=4, partitions=4, single_pass=True)
+    DF.write = write
+    lineage = sorted(
+        (r["bucket"], r["n_docs"], *[r[f] for f, _ in _LINEAGE_SUMS])
+        for r in spark.read.json(os.path.join(out, "_lineage")).collect())
+    ref = spark.read.parquet(os.path.join(out, "data")).groupBy("bucket").agg(
+        F.count(F.lit(1)),
+        *[F.sum(F.col(c).cast("long")) for _, c in _LINEAGE_SUMS])
+    want = sorted(tuple(v or 0 for v in r) for r in ref.collect())
+    print(json.dumps({{"docs": s["docs"], "lineage": lineage, "want": want}}))
+finally:
+    spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_LOCAL_DIRS=str(local), SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert "injected writer failure" in out.stderr
+    assert got["docs"] == 40 and len(got["want"]) == 4
+    assert got["lineage"] == got["want"]
+
+
+def test_scan_split_sizing_gateway_commands(spark, tmp_path, monkeypatch):
+    """Scan-split sizing reads the file-source relation's size: the same
+    number of py4j commands at 4 and at 512 input files, and the same
+    maxPartitionBytes as summing every file's length. A plan with two
+    leaves falls back to stat'ing inputFiles()."""
+    from zpdfspark.spark.pipeline import _input_bytes, _tune_scan_splits
+
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    sizes, frames = {}, {}
+    for n in (4, 512):
+        d = tmp_path / f"files{n}"
+        d.mkdir()
+        for i in range(n):
+            (d / f"f{i:04d}.bin").write_bytes(os.urandom(4096 + i))
+        sizes[n] = sum(4096 + i for i in range(n))
+        frames[n] = spark.read.format("binaryFile").load(str(d)) \
+            .select("path", "content")
+    counts = []
+    for n in (4, 512, 4):  # the first call also pays one-time lookups
+        counts.append(_gateway_commands(
+            spark, monkeypatch, lambda: _tune_scan_splits(spark, frames[n], 1)))
+        assert int(spark.conf.get(key)) == max(sizes[n] + 1, 1 << 20)
+        spark.conf.set(key, before)
+    counts = counts[1:]
+    assert counts[0] == counts[1], counts
+    assert _input_bytes(spark, frames[4].union(frames[512])) \
+        == sizes[4] + sizes[512]
 
 
 def test_completed_buckets_missing_path_skips_read(spark, tmp_path,
@@ -449,8 +571,9 @@ def test_single_pass_writer_sized_by_bytes(spark, tmp_path, monkeypatch):
     """The single-pass writer exchange is a bucket-keyed REBALANCE that
     AQE sizes by bytes: one parquet file per non-empty bucket at the
     default advisory partition size, more files but the same rows once
-    the advisory size is smaller than a bucket, and the lineage
-    observe() (CollectMetrics) above the exchange, in the result stage."""
+    the advisory size is smaller than a bucket, and the lineage rollup's
+    MapInArrow above the exchange, in the result stage, with no
+    CollectMetrics anywhere."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from zpdfspark.fixtures import write_warc_fixture
@@ -482,7 +605,8 @@ def test_single_pass_writer_sized_by_bytes(spark, tmp_path, monkeypatch):
     assert buckets == 4 and files == buckets
     plan = written[-1]._jdf.queryExecution().executedPlan().toString()
     assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan
-    assert -1 < plan.index("CollectMetrics") < plan.index("Exchange"), plan
+    assert -1 < plan.index("MapInArrow") < plan.index("Exchange"), plan
+    assert "CollectMetrics" not in plan, plan
 
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     prev = spark.conf.get(key)

@@ -23,10 +23,17 @@ Design for 10^12 documents (SURVEY.md §4):
   url-hash buckets. Each bucket's output is written under
   ``out/bucket=K/`` and a lineage row (bucket, counts, error totals,
   wall time, status) is appended to the sidecar, a JSON file the driver
-  writes through the Hadoop FileSystem API (no Spark job). On restart,
-  completed buckets are skipped via an anti-join of the bucket domain
-  against the lineage sidecar — the driver-contract "resume from
-  checkpoint".
+  writes through the Hadoop FileSystem API (no Spark job). The counts
+  are summed during the write by one pass-through ``mapInArrow`` above
+  the writer exchange (``_lineage_rollup``): each Arrow batch adds its
+  per-bucket sums to a driver accumulator. That stage is the result
+  stage, where Spark applies a task's accumulator update exactly once
+  (failed attempts' updates are dropped, a re-run map stage cannot
+  repeat them), and the driver cost is the same at any bucket count.
+  Accumulators need classic PySpark: Spark Connect has none. On
+  restart, completed buckets are skipped via an anti-join of the bucket
+  domain against the lineage sidecar — the driver-contract "resume
+  from checkpoint".
 - **Read amplification**: the per-bucket loop filters the source per
   bucket. On a raw parquet dump that re-scans the input n_buckets times;
   at scale the input table must be bucketed on the SAME
@@ -44,9 +51,10 @@ Design for 10^12 documents (SURVEY.md §4):
 - All shuffles are explicit; by default the extraction stage is
   map-only directly on scan splits (split sizing via
   ``spark.sql.files.maxPartitionBytes``), with a single opt-in salting
-  exchange for skewed layouts. Measured on the 60k-doc heavy corpus at
-  pinned local[16], skipping the blob exchange cuts the end-to-end
-  single-pass job from ~22 s to ~17 s.
+  exchange for skewed layouts. The split size comes from the file
+  source's listed size, not one stat per file. Measured on the 60k-doc
+  heavy corpus at pinned local[16], skipping the blob exchange cuts the
+  end-to-end single-pass job from ~22 s to ~17 s.
 - **Writer sizing**: extracted rows reach the parquet writer through one
   ``REBALANCE`` exchange (on ``bucket`` in single-pass, keyless per
   bucket) that AQE sizes by bytes: partitions coalesce up to, and skewed
@@ -68,6 +76,7 @@ import uuid
 from typing import List, Optional
 
 import pyspark.sql.functions as F
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Observation, SparkSession
 
 # absolute import so this file also works as a spark-submit primary
@@ -138,48 +147,79 @@ def salted(df: DataFrame, partitions: int, salt: int = 0,
     return small.unionByName(big)
 
 
-def _lineage_observation(buckets: List[int]):
-    """Observation that rolls up the per-bucket lineage metrics DURING
-    the write job — the metrics ride along with the one pass over the
-    data, so lineage costs zero extra reads of input or output (at
-    100 TB, re-scanning the output just to count it is a full extra
-    job). One SQL-text aggregate per (bucket, metric), each parsed by
-    one call of the JVM ``functions.expr``, looked up once (``F.expr``
-    re-resolves it per call: three gateway commands instead of one), so
-    building the Observation costs the driver O(n_buckets) py4j gateway
-    commands."""
-    from pyspark import SparkContext
-    from pyspark.sql import Column
+class _BucketSums(AccumulatorParam):
+    """Accumulator value ``{bucket: [n_docs, *_LINEAGE_SUMS sums]}``."""
 
-    parse = getattr(SparkContext._active_spark_context._jvm,
-                    "org.apache.spark.sql.functions").expr
-    exprs = []
-    for b in buckets:
-        exprs.append(Column(parse(
-            f"sum(cast(bucket = {b} as bigint)) as b{b}_n_docs")))
-        for _, col in _LINEAGE_SUMS:
-            exprs.append(Column(parse(
-                f"sum(if(bucket = {b}, cast({col} as bigint), null))"
-                f" as b{b}_{col}")))
-    obs = Observation("lineage")
-    return obs, exprs
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, sums, more):
+        for bucket, add in more.items():
+            have = sums.get(bucket)
+            sums[bucket] = list(add) if have is None else [
+                a + b for a, b in zip(have, add)]
+        return sums
 
 
-def _lineage_rows_from_observation(obs: Observation, buckets: List[int],
-                                   wall: float, finished: str,
-                                   keep_empty: bool = False) -> List[dict]:
-    """One lineage row per bucket, its keys in sidecar field order
-    (_append_lineage writes them as they come). Buckets that saw no
-    document are dropped unless ``keep_empty``."""
-    got = obs.get
+def _lineage_rollup(df: DataFrame):
+    """``df`` passed through one ``mapInArrow`` that adds each Arrow
+    batch's per-bucket lineage sums (row count plus the ``_LINEAGE_SUMS``
+    columns, nulls as 0) to a driver accumulator, and the accumulator.
+
+    The rollup rides along with the write, so lineage costs no extra
+    read of input or output (at 100 TB, re-scanning the output just to
+    count it is a full extra job), and building it costs the driver a
+    fixed number of py4j commands whatever the bucket count. Callers
+    place it ABOVE the writer exchange, in the result stage: Spark
+    applies a result task's accumulator update once per partition and
+    drops failed attempts', while a shuffle-map stage re-applies the
+    update of every map task that is re-run (a fetch failure, an
+    executor loss, speculation). Accumulators need classic PySpark:
+    Spark Connect has none."""
+    acc = df.sparkSession.sparkContext.accumulator({}, _BucketSums())
+    cols = [c for _, c in _LINEAGE_SUMS]
+
+    def rollup(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def values(batch, col):
+            arr = batch.column(col)
+            if arr.null_count:
+                arr = pc.fill_null(arr.cast(pa.int64()), 0)
+            return arr.to_numpy(zero_copy_only=False)
+
+        for batch in batches:
+            if batch.num_rows:
+                rows = np.column_stack(
+                    [np.ones(batch.num_rows, np.int64)]
+                    + [values(batch, c) for c in cols])
+                keys, at = np.unique(batch.column("bucket").to_numpy(),
+                                     return_inverse=True)
+                sums = np.zeros((len(keys), rows.shape[1]), np.int64)
+                np.add.at(sums, at, rows)
+                acc.add(dict(zip(keys.tolist(), sums.tolist())))
+            yield batch
+
+    return df.mapInArrow(rollup, df.schema), acc
+
+
+def _lineage_rows(sums: dict, buckets: List[int], wall: float,
+                  finished: str, keep_empty: bool = False) -> List[dict]:
+    """One lineage row per bucket from the rollup's accumulated ``sums``,
+    its keys in sidecar field order (_append_lineage writes them as they
+    come). Buckets that saw no document are dropped unless
+    ``keep_empty``."""
     rows = []
     for b in buckets:
-        n_docs = got.get(f"b{b}_n_docs") or 0
-        if n_docs == 0 and not keep_empty:
-            continue
-        row = {"bucket": b, "n_docs": n_docs}
-        for field, col in _LINEAGE_SUMS:
-            row[field] = int(got.get(f"b{b}_{col}") or 0)
+        got = sums.get(b)
+        if got is None:
+            if not keep_empty:
+                continue
+            got = [0] * (1 + len(_LINEAGE_SUMS))
+        row = {"bucket": b, "n_docs": got[0]}
+        row.update(zip((f for f, _ in _LINEAGE_SUMS), got[1:]))
         row.update(wall_secs=wall, status="ok", finished_at=finished)
         rows.append(row)
     return rows
@@ -231,15 +271,7 @@ def _tune_scan_splits(spark: SparkSession, df: DataFrame,
     the job — the blob-sized splits must not leak into other scans on
     the same session."""
     try:
-        files = df.inputFiles()
-        if not files or not partitions:
-            return None
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        jvm = spark.sparkContext._jvm
-        total = 0
-        for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            total += p.getFileSystem(conf).getFileStatus(p).getLen()
+        total = partitions and _input_bytes(spark, df)
         if total:
             prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
             target = max(total // partitions + 1, 1 << 20)
@@ -248,6 +280,30 @@ def _tune_scan_splits(spark: SparkSession, df: DataFrame,
     except Exception:
         pass  # stats unavailable (e.g. some catalogs) — keep defaults
     return None
+
+
+def _input_bytes(spark: SparkSession, df: DataFrame) -> int:
+    """Summed length of the files ``df`` reads. When the optimized plan's
+    one leaf is a file-source relation, its file index already holds the
+    lengths from the listing it made: a fixed handful of py4j commands
+    whatever the file count (a Common Crawl segment is ~90k archives).
+    Otherwise each of ``inputFiles()`` is stat'ed through the Hadoop
+    FileSystem, about a dozen commands per file."""
+    from py4j.protocol import Py4JError
+
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    if leaves.size() == 1:
+        try:
+            return leaves.apply(0).relation().location().sizeInBytes()
+        except Py4JError:
+            pass  # not a HadoopFsRelation
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    total = 0
+    for f in df.inputFiles():
+        p = Path(f)
+        total += p.getFileSystem(conf).getFileStatus(p).getLen()
+    return total
 
 
 def bucket_of(url_col, n_buckets: int):
@@ -510,20 +566,14 @@ def _run_buckets(spark, df, n_buckets, partitions, salt, resume, mode,
             from zpdfspark.spark.streaming import gopher_keep_expr
             result = result.withColumn("quality_keep", gopher_keep_expr())
         out_dir = os.path.join(data_path, f"bucket={bucket}")
-        # per-bucket metrics rollup rides along with the write via
-        # observe() — no re-read of the bucket's output. The observe is
-        # attached ABOVE the writer exchange (a keyless REBALANCE that
-        # AQE sizes by bytes, module docstring) so CollectMetrics runs in
-        # the final (result) stage, where Spark applies accumulator
-        # updates exactly once per partition; below the exchange it
-        # would sit in a shuffle-map stage, where speculative or
-        # retried attempts can double-count.
-        obs, exprs = _lineage_observation([bucket])
-        result.hint("rebalance").withColumn("bucket", F.lit(bucket)) \
-            .observe(obs, *exprs).drop("bucket") \
-            .write.mode("overwrite").parquet(out_dir)
-        lineage_row = _lineage_rows_from_observation(
-            obs, [bucket], time.time() - t0,
+        # per-bucket lineage rolls up during the write, in the result
+        # stage above the writer exchange (a keyless REBALANCE that AQE
+        # sizes by bytes, module docstring) — see _lineage_rollup
+        out, sums = _lineage_rollup(
+            result.hint("rebalance").withColumn("bucket", F.lit(bucket)))
+        out.drop("bucket").write.mode("overwrite").parquet(out_dir)
+        lineage_row = _lineage_rows(
+            sums.value, [bucket], time.time() - t0,
             time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             keep_empty=True)[0]
         _append_lineage(spark, [lineage_row], lineage_path)
@@ -563,13 +613,10 @@ def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, mode,
     # shuffle the EXTRACTED rows (text — ~10x smaller than the raw
     # blobs, which stay map-only) into one bucket-keyed exchange that AQE
     # sizes by bytes (module docstring): each bucket is written as one
-    # file unless it outgrows the advisory partition size
-    result = result.hint("rebalance", "bucket")
-    # observe ABOVE the writer exchange: CollectMetrics evaluates in the
-    # final (result) stage where accumulator updates are exactly-once
-    # per partition; below the exchange, speculative execution or a
-    # shuffle-map stage retry could double-count the lineage metrics.
-    obs, exprs = _lineage_observation(todo)
+    # file unless it outgrows the advisory partition size. The lineage
+    # rollup sits ABOVE that exchange, in the result stage, where its
+    # accumulator updates are exactly-once (_lineage_rollup).
+    out, sums = _lineage_rollup(result.hint("rebalance", "bucket"))
     # Dynamic partition overwrite instead of a blind append: a retried
     # run (job died after some task commits were visible — v2 committer,
     # object-store direct committers, or a prior run whose lineage write
@@ -577,13 +624,13 @@ def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, mode,
     # those bucket=K partitions, so the resume is idempotent like the
     # per-bucket path; an append would duplicate the partial rows.
     # Set per write: library code never changes the session conf.
-    result.observe(obs, *exprs).write.mode("overwrite") \
+    out.write.mode("overwrite") \
         .option("partitionOverwriteMode", "dynamic") \
         .partitionBy("bucket").parquet(data_path)
 
     wall = time.time() - t0
     finished = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-    lineage_rows = _lineage_rows_from_observation(obs, todo, wall, finished)
+    lineage_rows = _lineage_rows(sums.value, todo, wall, finished)
     for row in lineage_rows:
         summary["buckets_run"] += 1
         summary["docs"] += row["n_docs"]
@@ -637,7 +684,8 @@ def run_format_job(spark: SparkSession, input_path: str, output_path: str,
         data_path = os.path.join(output_path, "data")
         out = warc_cdx(spark, input_path).orderBy("urlkey", "cdx_ts")
         obs = Observation("cdx")
-        out.observe(obs, F.count(F.lit(1)).alias("rows"))             .write.mode("overwrite").parquet(data_path)
+        out.observe(obs, F.count(F.lit(1)).alias("rows")) \
+            .write.mode("overwrite").parquet(data_path)
         return {"format": output_format, "rows": int(obs.get["rows"]),
                 "output": data_path}
     if output_format == "zipnum":
