@@ -1434,6 +1434,48 @@ class TestWarc:
         with _pytest.raises(W.WarcError):
             list(W.iter_warc_records(b"HTTP/1.1 200 OK\r\n\r\nnope"))
 
+    def test_gunzip_linear_in_member_count(self):
+        """Gunzip time grows linearly with the member count: 16k members
+        take at most 2.5x the time of 8k (minimum of 3 interleaved runs
+        each). Slicing the remaining archive per member made it
+        quadratic: >4x per doubling."""
+        import random
+        import time
+
+        from zpdfspark.kernel import warc as W
+        payload = random.Random(3).randbytes(1000)  # ~1.2 KB per member
+        member = W.build_warc([("http://e.com/x", "2025-01-01T00:00:00Z",
+                                payload, "text/html")])
+        archives = {n: member * n for n in (8000, 16000)}
+        best = dict.fromkeys(archives, float("inf"))
+        for _ in range(3):
+            for n, raw in archives.items():
+                t0 = time.perf_counter()
+                out = W._gunzip_members(raw)
+                best[n] = min(best[n], time.perf_counter() - t0)
+                assert out.count(b"WARC/1.0\r\n") == n
+        assert best[16000] <= 2.5 * best[8000], best
+
+    def test_member_cap_and_truncation(self, monkeypatch):
+        """A gzip member whose output passes MAX_RECORD_BYTES raises
+        "exceeds cap" (one that reaches it exactly is read), and a member
+        cut short raises "truncated" at its own offset."""
+        import gzip
+        import random
+
+        import pytest as _pytest
+        from zpdfspark.kernel import warc as W
+        members = [W.build_warc([r]) for r in self._recs(2)]
+        monkeypatch.setattr(W, "MAX_RECORD_BYTES", 1000)
+        assert len(W._gunzip_members(gzip.compress(b"x" * 1000))) == 1000
+        # incompressible, so zlib holds no pending output past the cap
+        big = gzip.compress(random.Random(7).randbytes(1001))
+        with _pytest.raises(W.WarcError, match="at byte 0 exceeds cap"):
+            W._gunzip_members(big)
+        with _pytest.raises(W.WarcError, match="truncated gzip member at "
+                                               f"byte {len(members[0])}"):
+            W._gunzip_members(members[0] + members[1][:-4])
+
     def test_iter_responses_keeps_document_records_only(self):
         """iter_responses is the one document-record rule: `response`
         records without a parse error that carry a target URI, and with

@@ -149,6 +149,20 @@ def _jobs_started(spark, fn, group="zpdfspark-test-jobs"):
         sc._jsc.clearJobGroup()
 
 
+def _assert_zstd(data):
+    """Every column chunk of every parquet file under ``data`` reports
+    ZSTD in its footer (session.PARQUET_COMPRESSION)."""
+    import pyarrow.parquet as pq
+
+    codecs = [md.row_group(g).column(c).compression
+              for root, _, names in os.walk(data) for n in names
+              if n.endswith(".parquet")
+              for md in [pq.ParquetFile(os.path.join(root, n)).metadata]
+              for g in range(md.num_row_groups)
+              for c in range(md.num_columns)]
+    assert codecs and set(codecs) == {"ZSTD"}, (data, set(codecs))
+
+
 def test_pipeline_resume(spark, corpus_path, tmp_path):
     from zpdfspark.spark.pipeline import completed_buckets, run_extraction_job
 
@@ -171,6 +185,7 @@ def test_pipeline_resume(spark, corpus_path, tmp_path):
     result = spark.read.parquet(os.path.join(out, "data"))
     assert result.select("url").distinct().count() == 150
     assert result.count() == 150
+    _assert_zstd(os.path.join(out, "data"))
 
 
 def test_lineage_metrics_populated(spark, corpus_path, tmp_path):
@@ -301,6 +316,7 @@ def test_pipeline_single_pass(spark, corpus_path, tmp_path):
     result = spark.read.parquet(os.path.join(out, "data"))
     assert result.count() == 150
     assert result.select("url").distinct().count() == 150
+    _assert_zstd(os.path.join(out, "data"))
     # a rerun (either mode) skips everything
     s2 = run_extraction_job(spark, corpus_path, out, n_buckets=4, partitions=4)
     assert s2["buckets_skipped"] == 4 and s2["buckets_run"] == 0
@@ -562,6 +578,42 @@ def test_warc_fused_run_builds_no_document_plan(spark, tmp_path,
     assert spark.read.parquet(os.path.join(out, "data")).count() == 40
 
 
+def test_warc_glob_loads_as_directory_filter(spark, tmp_path, monkeypatch):
+    """binary_files loads ``<dir>/*.warc.gz`` as ``<dir>`` with that
+    pathGlobFilter: the same inputFiles() as the glob form, and split
+    sizing still reads the relation's size without stat'ing inputFiles().
+    A directory with a subdirectory keeps the glob, so an archive in the
+    subdirectory stays out."""
+    from pyspark.sql import DataFrame
+
+    from zpdfspark.fixtures import write_warc_fixture
+    from zpdfspark.spark.pipeline import _input_bytes
+    from zpdfspark.spark.warc_source import binary_files
+
+    d = tmp_path / "warc"
+    glob, _ = write_warc_fixture(str(d), 40, seed=17, shards=4)
+
+    def root_paths(df):
+        leaf = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        return leaf.apply(0).relation().location().rootPaths().size()
+
+    as_given = spark.read.format("binaryFile").load(glob)
+    loaded = binary_files(spark, glob)
+    assert root_paths(loaded) == 1 and root_paths(as_given) == 4
+    assert sorted(loaded.inputFiles()) == sorted(as_given.inputFiles())
+    assert loaded.columns == as_given.columns
+    size = sum(p.stat().st_size for p in d.glob("*.warc.gz"))
+    monkeypatch.setattr(DataFrame, "inputFiles", None)
+    assert _input_bytes(spark, loaded.select("path", "content")) == size
+    monkeypatch.undo()
+
+    (d / "nested").mkdir()
+    shutil.copy(d / "shard-000.warc.gz", d / "nested" / "x.warc.gz")
+    kept = binary_files(spark, glob)
+    assert root_paths(kept) == 4
+    assert sorted(kept.inputFiles()) == sorted(as_given.inputFiles())
+
+
 def _parquet_files(data):
     return [n for _, _, names in os.walk(data) for n in names
             if n.endswith(".parquet")]
@@ -628,12 +680,17 @@ def test_warc_single_pass_job_count(spark, tmp_path):
 
     glob, _ = write_warc_fixture(str(tmp_path / "warc"), 40, seed=17)
     out = str(tmp_path / "out")
+    key = "spark.sql.parquet.compression.codec"
+    codec = spark.conf.get(key)
     summary = {}
     jobs = _jobs_started(spark, lambda: summary.update(run_extraction_job(
         spark, glob, out, input_format="warc", n_buckets=2, partitions=4,
         single_pass=True)))
     assert summary["docs"] == 40 and summary["buckets_run"] == 2
     assert jobs == 2
+    # the codec is a write option: the session's conf is left alone
+    assert spark.conf.get(key) == codec
+    _assert_zstd(os.path.join(out, "data"))
     assert completed_buckets(spark, os.path.join(out, "_lineage")) == [0, 1]
 
 
@@ -759,6 +816,7 @@ def test_format_job_json_and_pages(spark, tmp_path, corpus_path):
     assert [p["page"] for p in doc["pages"]] == list(
         range(1, doc["page_count"] + 1))
     assert all("text" in p for p in doc["pages"])
+    _assert_zstd(os.path.join(out, "data"))
 
     # --pages 1-1: every multipage doc's json carries exactly page 1
     out2 = str(tmp_path / "json_p1")
@@ -797,6 +855,7 @@ def test_bucketed_input_prunes_per_bucket_scans(spark, corpus_path, tmp_path):
     write_bucketed_input(spark, corpus_path, bsrc, n_buckets=4)
     df = spark.read.parquet(bsrc)
     assert "bucket" in df.columns
+    _assert_zstd(bsrc)
 
     # the physical proof: the bucket filter becomes a PARTITION filter at
     # the scan (directory pruning), not a post-scan data filter
@@ -1766,6 +1825,7 @@ def test_format_job_cdx(spark, tmp_path):
     assert sorted(rows) == sorted(
         tuple(sorted(r.asDict().items())) for r in want.collect())
     assert keys == sorted(keys)
+    _assert_zstd(os.path.join(out, "data"))
     with _pytest.raises(ValueError):
         run_format_job(spark, glob, out, "cdx", input_format="parquet")
 

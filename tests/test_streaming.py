@@ -56,6 +56,17 @@ def test_streaming_extraction_and_resume(spark, tmp_path):
     m = joined.where(F.col("extracted_text") == F.col("text")).count()
     assert m == n > 0
 
+    # the sink writes zstd column chunks (session.PARQUET_COMPRESSION)
+    import pyarrow.parquet as pq
+
+    codecs = {md.row_group(g).column(c).compression
+              for root, _, names in os.walk(os.path.join(output_dir, "data"))
+              for name in names if name.endswith(".parquet")
+              for md in [pq.ParquetFile(os.path.join(root, name)).metadata]
+              for g in range(md.num_row_groups)
+              for c in range(md.num_columns)}
+    assert codecs == {"ZSTD"}, codecs
+
 
 def test_crawl_rate_watermark_aggregation(spark, tmp_path):
     from zpdfspark.spark.streaming import start_crawl_rate_aggregation

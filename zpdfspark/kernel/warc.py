@@ -57,28 +57,52 @@ class WarcRecord:
         self.http_content_type = http_content_type
 
 
-def _gunzip_members(raw: bytes) -> bytes:
-    """Decompress concatenated gzip members (the CC per-record layout)
-    into one plain byte stream; caps each member's output."""
-    out = bytearray()
+_FIRST_WINDOW = 4096
+
+
+def _gzip_members(raw: bytes) -> Iterator[Tuple[int, int, bytes]]:
+    """Yield (offset, length, decompressed bytes) for each concatenated
+    gzip member (the CC per-record layout), offsets into ``raw``; caps
+    each member's output at MAX_RECORD_BYTES.
+
+    Linear in the archive: each member is fed zero-copy ``memoryview``
+    windows that double from 4 KiB, so the input zlib hands back past
+    the member's end (``unused_data``, a copy) is bounded by the
+    member's own size, never by the rest of the archive. Feeding
+    ``raw[pos:]`` would copy the rest of the archive twice per member,
+    quadratic in the member count."""
+    view = memoryview(raw)
+    n = len(view)
     pos = 0
-    n = len(raw)
     while pos < n:
         d = zlib.decompressobj(wbits=31)  # gzip wrapper
-        try:
-            chunk = d.decompress(raw[pos:], MAX_RECORD_BYTES)
-        except zlib.error as e:
-            raise WarcError(f"gzip member at byte {pos}: {e}")
-        if not d.eof:
-            if d.decompress(b"", 1):
+        parts, size = [], 0
+        fed, window = pos, _FIRST_WINDOW
+        while not d.eof:
+            if fed >= n:
+                raise WarcError(f"truncated gzip member at byte {pos}")
+            end = min(fed + window, n)
+            try:
+                # one byte past the cap tells "exceeds" from "reaches"
+                chunk = d.decompress(view[fed:end],
+                                     MAX_RECORD_BYTES + 1 - size)
+            except zlib.error as e:
+                raise WarcError(f"gzip member at byte {pos}: {e}")
+            size += len(chunk)
+            if size > MAX_RECORD_BYTES:
                 raise WarcError(f"gzip member at byte {pos} exceeds cap")
-            raise WarcError(f"truncated gzip member at byte {pos}")
-        out += chunk
-        consumed = n - pos - len(d.unused_data)
+            parts.append(chunk)
+            fed, window = end, window * 2
+        consumed = fed - pos - len(d.unused_data)
         if consumed <= 0:  # zero-length member cannot advance
             raise WarcError("empty gzip member")
+        yield pos, consumed, parts[0] if len(parts) == 1 else b"".join(parts)
         pos += consumed
-    return bytes(out)
+
+
+def _gunzip_members(raw: bytes) -> bytes:
+    """Decompress concatenated gzip members into one plain byte stream."""
+    return b"".join(data for _, _, data in _gzip_members(raw))
 
 
 def _dechunk(payload: bytes) -> bytes:
@@ -251,28 +275,13 @@ def iter_warc_records_spans(raw: bytes) -> Iterator[Tuple[WarcRecord,
         for rec, start, end in _iter_plain_spans(raw):
             yield rec, start, end - start
         return
-    pos = 0
-    n = len(raw)
     first = True
-    while pos < n:
-        d = zlib.decompressobj(wbits=31)
-        try:
-            chunk = d.decompress(raw[pos:], MAX_RECORD_BYTES)
-        except zlib.error as e:
-            raise WarcError(f"gzip member at byte {pos}: {e}")
-        if not d.eof:
-            if d.decompress(b"", 1):
-                raise WarcError(f"gzip member at byte {pos} exceeds cap")
-            raise WarcError(f"truncated gzip member at byte {pos}")
-        consumed = n - pos - len(d.unused_data)
-        if consumed <= 0:
-            raise WarcError("empty gzip member")
+    for pos, consumed, chunk in _gzip_members(raw):
         if first and not chunk.startswith(b"WARC/"):
             raise WarcError("not a WARC stream")
         first = False
         for rec, _start, _end in _iter_plain_spans(chunk):
             yield rec, pos, consumed
-        pos += consumed
 
 
 def _iter_plain_spans(raw: bytes) -> Iterator[Tuple[WarcRecord, int, int]]:

@@ -31,7 +31,7 @@ from typing import Optional
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from zpdfspark.spark.session import hadoop_path_exists
+from zpdfspark.spark.session import PARQUET_COMPRESSION, hadoop_path_exists
 from zpdfspark.spark.udfs import (EXTRACT_SCHEMA, extract_arrow_batches,
                                   map_rows)
 from zpdfspark.spark.warc_sink import (SUMMARY_SCHEMA, archive_jsonl_rows,
@@ -85,7 +85,8 @@ def _idempotent_batch_writer(spark: SparkSession, output_dir: str):
         target = os.path.join(data_dir, f"batch_id={batch_id}")
         if hadoop_path_exists(spark, os.path.join(target, "_SUCCESS")):
             return  # replayed batch after restart: already committed
-        batch_df.write.mode("overwrite").parquet(target)
+        batch_df.write.mode("overwrite") \
+            .option("compression", PARQUET_COMPRESSION).parquet(target)
 
     return write_batch
 

@@ -39,11 +39,41 @@ WARC_SCHEMA = ("url string, warc_date string, content_type string, "
                "http_status int, http_content_type string")
 
 
+_GLOB_CHARS = frozenset("*?[{")
+
+
+def binary_files(spark: SparkSession, path: str) -> DataFrame:
+    """``binaryFile`` rows (path, modificationTime, length, content) of
+    the archives ``path`` names. A glob in the last path component alone
+    (``<dir>/*.warc.gz``) over a directory with no subdirectories is
+    loaded as ``<dir>`` with that ``pathGlobFilter``: the same files and
+    columns, and the relation still reports their size for split
+    sizing, but Spark no longer probes ``<glob>/_spark_metadata`` and
+    logs a FileNotFoundException stack trace (the streaming drop reader
+    uses the same form). Any other path is loaded as given: a directory
+    form would also list the files of subdirectories."""
+    reader = spark.read.format("binaryFile")
+    parent, _, name = path.rpartition("/")
+    if parent and _GLOB_CHARS & set(name) and not _GLOB_CHARS & set(parent):
+        from py4j.protocol import Py4JError
+
+        try:
+            p = spark._jvm.org.apache.hadoop.fs.Path(parent)
+            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+            # the count includes ``parent`` itself
+            flat = fs.getContentSummary(p).getDirectoryCount() == 1
+        except Py4JError:
+            flat = False  # a missing or unreadable parent: Spark reports it
+        if flat:
+            return reader.option("pathGlobFilter", name).load(parent)
+    return reader.load(path)
+
+
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """All records of the .warc / .warc.gz files under `path`, one row
     per record (responses carry the HTTP-stripped payload in `html`),
     plus error rows with `parse_error` set."""
-    binary = spark.read.format("binaryFile").load(path)
+    binary = binary_files(spark, path)
 
     def error_row(fpath, err):
         return None, None, None, None, 0, None, fpath, err, None, None
@@ -100,7 +130,7 @@ def warc_revisits(spark: SparkSession, path: str) -> DataFrame:
     pages — the crawl's own dedup signal, far cheaper than content
     hashing. Same file-per-task map-only shape as read_warc; bodies
     are never carried (revisits are body-less pointers)."""
-    binary = spark.read.format("binaryFile").load(path)
+    binary = binary_files(spark, path)
 
     def per_row(content):
         try:
@@ -151,7 +181,7 @@ def warc_cdx(spark: SparkSession, path: str) -> DataFrame:
     (one range exchange), never here. Digest covers the DECODED
     payload (post envelope-strip/de-chunk/gunzip), matching the
     "payload digest" the CDX spec records."""
-    binary = spark.read.format("binaryFile").load(path)
+    binary = binary_files(spark, path)
     return map_rows(binary.select("path", "content"), cdx_rows, CDX_SCHEMA)
 
 
