@@ -149,21 +149,7 @@ def _jobs_started(spark, fn, group="zpdfspark-test-jobs"):
         sc._jsc.clearJobGroup()
 
 
-def _assert_zstd(data):
-    """Every column chunk of every parquet file under ``data`` reports
-    ZSTD in its footer (session.PARQUET_COMPRESSION)."""
-    import pyarrow.parquet as pq
-
-    codecs = [md.row_group(g).column(c).compression
-              for root, _, names in os.walk(data) for n in names
-              if n.endswith(".parquet")
-              for md in [pq.ParquetFile(os.path.join(root, n)).metadata]
-              for g in range(md.num_row_groups)
-              for c in range(md.num_columns)]
-    assert codecs and set(codecs) == {"ZSTD"}, (data, set(codecs))
-
-
-def test_pipeline_resume(spark, corpus_path, tmp_path):
+def test_pipeline_resume(spark, corpus_path, tmp_path, assert_zstd):
     from zpdfspark.spark.pipeline import completed_buckets, run_extraction_job
 
     out = str(tmp_path / "out")
@@ -185,7 +171,7 @@ def test_pipeline_resume(spark, corpus_path, tmp_path):
     result = spark.read.parquet(os.path.join(out, "data"))
     assert result.select("url").distinct().count() == 150
     assert result.count() == 150
-    _assert_zstd(os.path.join(out, "data"))
+    assert_zstd(os.path.join(out, "data"))
 
 
 def test_lineage_metrics_populated(spark, corpus_path, tmp_path):
@@ -302,7 +288,7 @@ def test_salted_big_doc_isolation(spark, corpus_path):
             assert r["big"] == r["total"], "big-doc partition contains small docs"
 
 
-def test_pipeline_single_pass(spark, corpus_path, tmp_path):
+def test_pipeline_single_pass(spark, corpus_path, tmp_path, assert_zstd):
     """--single-pass: one scan over all pending buckets, identical
     output + lineage semantics, still resumable afterwards."""
     from zpdfspark.spark.pipeline import completed_buckets, run_extraction_job
@@ -316,7 +302,7 @@ def test_pipeline_single_pass(spark, corpus_path, tmp_path):
     result = spark.read.parquet(os.path.join(out, "data"))
     assert result.count() == 150
     assert result.select("url").distinct().count() == 150
-    _assert_zstd(os.path.join(out, "data"))
+    assert_zstd(os.path.join(out, "data"))
     # a rerun (either mode) skips everything
     s2 = run_extraction_job(spark, corpus_path, out, n_buckets=4, partitions=4)
     assert s2["buckets_skipped"] == 4 and s2["buckets_run"] == 0
@@ -582,12 +568,15 @@ def test_warc_glob_loads_as_directory_filter(spark, tmp_path, monkeypatch):
     """binary_files loads ``<dir>/*.warc.gz`` as ``<dir>`` with that
     pathGlobFilter: the same inputFiles() as the glob form, and split
     sizing still reads the relation's size without stat'ing inputFiles().
-    A directory with a subdirectory keeps the glob, so an archive in the
-    subdirectory stays out."""
+    A glob that matches nothing still raises "Path does not exist", so a
+    per-bucket WARC run marks no bucket complete. A directory whose
+    subdirectories hold files keeps the glob, so an archive in a
+    subdirectory stays out and a ``k=v`` subdirectory adds no column."""
+    from pyspark.errors import AnalysisException
     from pyspark.sql import DataFrame
 
     from zpdfspark.fixtures import write_warc_fixture
-    from zpdfspark.spark.pipeline import _input_bytes
+    from zpdfspark.spark.pipeline import _input_bytes, run_extraction_job
     from zpdfspark.spark.warc_source import binary_files
 
     d = tmp_path / "warc"
@@ -607,11 +596,22 @@ def test_warc_glob_loads_as_directory_filter(spark, tmp_path, monkeypatch):
     assert _input_bytes(spark, loaded.select("path", "content")) == size
     monkeypatch.undo()
 
-    (d / "nested").mkdir()
-    shutil.copy(d / "shard-000.warc.gz", d / "nested" / "x.warc.gz")
-    kept = binary_files(spark, glob)
-    assert root_paths(kept) == 4
-    assert sorted(kept.inputFiles()) == sorted(as_given.inputFiles())
+    nothing = str(d / "*.warc")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        binary_files(spark, nothing)
+    out = str(tmp_path / "out")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        run_extraction_job(spark, nothing, out, input_format="warc",
+                           n_buckets=2, partitions=4)
+    assert not os.path.exists(os.path.join(out, "_lineage"))
+
+    for sub in ("nested", "k=1"):
+        (d / sub).mkdir()
+        shutil.copy(d / "shard-000.warc.gz", d / sub / "x.warc.gz")
+        kept = binary_files(spark, glob)
+        assert root_paths(kept) == 4 and kept.columns == as_given.columns
+        assert sorted(kept.inputFiles()) == sorted(as_given.inputFiles())
+        shutil.rmtree(d / sub)
 
 
 def _parquet_files(data):
@@ -671,7 +671,7 @@ def test_single_pass_writer_sized_by_bytes(spark, tmp_path, monkeypatch):
     assert small_rows == rows
 
 
-def test_warc_single_pass_job_count(spark, tmp_path):
+def test_warc_single_pass_job_count(spark, tmp_path, assert_zstd):
     """A fused single-pass WARC run into a fresh output starts exactly two
     Spark jobs: the writer exchange's map stage and the write. Lineage is
     written by the driver, so a lineage job would show up here."""
@@ -690,7 +690,7 @@ def test_warc_single_pass_job_count(spark, tmp_path):
     assert jobs == 2
     # the codec is a write option: the session's conf is left alone
     assert spark.conf.get(key) == codec
-    _assert_zstd(os.path.join(out, "data"))
+    assert_zstd(os.path.join(out, "data"))
     assert completed_buckets(spark, os.path.join(out, "_lineage")) == [0, 1]
 
 
@@ -794,7 +794,8 @@ def test_decode_every_corpus_kind(spark, corpus_path):
             assert r.decode_ok and r.width >= 1 and r.height >= 1, r
 
 
-def test_format_job_json_and_pages(spark, tmp_path, corpus_path):
+def test_format_job_json_and_pages(spark, tmp_path, corpus_path,
+                                   assert_zstd):
     """CLI -f json / -p a-b (main.zig:173-177, 252-339): json docs carry
     {metadata, page_count, outline, pages}; an explicit page range
     restricts the page array / page rows kernel-side. Uses the shared
@@ -816,7 +817,7 @@ def test_format_job_json_and_pages(spark, tmp_path, corpus_path):
     assert [p["page"] for p in doc["pages"]] == list(
         range(1, doc["page_count"] + 1))
     assert all("text" in p for p in doc["pages"])
-    _assert_zstd(os.path.join(out, "data"))
+    assert_zstd(os.path.join(out, "data"))
 
     # --pages 1-1: every multipage doc's json carries exactly page 1
     out2 = str(tmp_path / "json_p1")
@@ -844,7 +845,8 @@ def test_format_job_json_and_pages(spark, tmp_path, corpus_path):
         parse_page_range("3-1")
 
 
-def test_bucketed_input_prunes_per_bucket_scans(spark, corpus_path, tmp_path):
+def test_bucketed_input_prunes_per_bucket_scans(spark, corpus_path, tmp_path,
+                                                assert_zstd):
     """With the input laid out as bucket=K partition dirs (the
     write_bucketed_input preparation job / Iceberg bucket transform),
     each per-bucket resume scan partition-prunes to its own directory —
@@ -855,7 +857,7 @@ def test_bucketed_input_prunes_per_bucket_scans(spark, corpus_path, tmp_path):
     write_bucketed_input(spark, corpus_path, bsrc, n_buckets=4)
     df = spark.read.parquet(bsrc)
     assert "bucket" in df.columns
-    _assert_zstd(bsrc)
+    assert_zstd(bsrc)
 
     # the physical proof: the bucket filter becomes a PARTITION filter at
     # the scan (directory pruning), not a post-scan data filter
@@ -1800,7 +1802,7 @@ def test_fetch_schedule_politeness(spark, tmp_path):
         assert pris == sorted(pris, reverse=True)
 
 
-def test_format_job_cdx(spark, tmp_path):
+def test_format_job_cdx(spark, tmp_path, assert_zstd):
     """CLI drive: --input-format warc --format cdx writes the sorted
     CDX rows as parquet; rows agree with the warc_cdx query and the
     sort key holds; non-WARC input refused."""
@@ -1825,7 +1827,7 @@ def test_format_job_cdx(spark, tmp_path):
     assert sorted(rows) == sorted(
         tuple(sorted(r.asDict().items())) for r in want.collect())
     assert keys == sorted(keys)
-    _assert_zstd(os.path.join(out, "data"))
+    assert_zstd(os.path.join(out, "data"))
     with _pytest.raises(ValueError):
         run_format_job(spark, glob, out, "cdx", input_format="parquet")
 

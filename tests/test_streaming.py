@@ -27,7 +27,7 @@ def _write_drop(path: str, n: int, seed: int) -> None:
     write_corpus_parquet(os.path.join(path, f"drop_{seed}.parquet"), n, seed=seed)
 
 
-def test_streaming_extraction_and_resume(spark, tmp_path):
+def test_streaming_extraction_and_resume(spark, tmp_path, assert_zstd):
     from zpdfspark.spark.streaming import start_streaming_extraction
 
     input_dir = str(tmp_path / "in")
@@ -57,15 +57,7 @@ def test_streaming_extraction_and_resume(spark, tmp_path):
     assert m == n > 0
 
     # the sink writes zstd column chunks (session.PARQUET_COMPRESSION)
-    import pyarrow.parquet as pq
-
-    codecs = {md.row_group(g).column(c).compression
-              for root, _, names in os.walk(os.path.join(output_dir, "data"))
-              for name in names if name.endswith(".parquet")
-              for md in [pq.ParquetFile(os.path.join(root, name)).metadata]
-              for g in range(md.num_row_groups)
-              for c in range(md.num_columns)}
-    assert codecs == {"ZSTD"}, codecs
+    assert_zstd(os.path.join(output_dir, "data"))
 
 
 def test_crawl_rate_watermark_aggregation(spark, tmp_path):

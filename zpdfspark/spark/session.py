@@ -44,11 +44,13 @@ DAEMON_MODULE = "zpdfspark.spark.worker_daemon"
 #   mixed corpus text, 4,000 docs, 0.55 MB raw: snappy 0.186 MB,
 #     zstd 0.135 MB (-27%), gzip 0.125 MB.
 # The fused WARC ingest's output (8 bucket files of ~125 rows, ~3.7 KB
-# of footer each) fell 13.5% (0.1087 -> 0.0940 MB, median of 12 seeds,
-# every seed 11.6-16.0% smaller). zstd writes ~40% slower than snappy
-# (7 ms instead of 5 ms for 1.69 MB of text), noise beside a kernel of
-# >= 300 us per document; loading zstd-jni's native library costs up
-# to ~0.3 s once per JVM.
+# of footer each) was 11.6-16.0% smaller in each of 12 seed-matched
+# pairs (medians 0.1087 -> 0.0940 MB). Corpus size differs more between
+# seeds than that (parent IQR 0.0166 MB, median gap 0.0147 MB), so over
+# fresh seeds the gain is smaller than the seed-to-seed spread. zstd
+# writes ~40% slower than snappy (7 ms instead of 5 ms for 1.69 MB of
+# text), noise beside a kernel of >= 300 us per document; loading
+# zstd-jni's native library costs up to ~0.3 s once per JVM.
 PARQUET_COMPRESSION = "zstd"
 
 

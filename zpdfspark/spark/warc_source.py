@@ -27,6 +27,7 @@ import hashlib
 import os
 
 import pyspark.sql.functions as F
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 from zpdfspark.kernel.warc import (WarcError, cdx_timestamp, iter_warc_records,
@@ -45,28 +46,35 @@ _GLOB_CHARS = frozenset("*?[{")
 def binary_files(spark: SparkSession, path: str) -> DataFrame:
     """``binaryFile`` rows (path, modificationTime, length, content) of
     the archives ``path`` names. A glob in the last path component alone
-    (``<dir>/*.warc.gz``) over a directory with no subdirectories is
-    loaded as ``<dir>`` with that ``pathGlobFilter``: the same files and
-    columns, and the relation still reports their size for split
-    sizing, but Spark no longer probes ``<glob>/_spark_metadata`` and
-    logs a FileNotFoundException stack trace (the streaming drop reader
-    uses the same form). Any other path is loaded as given: a directory
-    form would also list the files of subdirectories."""
-    reader = spark.read.format("binaryFile")
+    (``<dir>/*.warc.gz``) is loaded as ``<dir>`` with that
+    ``pathGlobFilter``: the same files and columns, and the relation
+    still reports their size for split sizing, but Spark no longer
+    probes ``<glob>/_spark_metadata`` and logs a FileNotFoundException
+    stack trace (the streaming drop reader uses the same form).
+
+    The directory form is kept only when its own listing shows it reads
+    what the glob would: no partition columns, every listed file directly
+    in ``<dir>``, and at least one match. The listing is Spark's, made
+    once at load and reused by the returned frame, so a flat directory
+    is listed once. Otherwise ``path`` is loaded as given, so a glob
+    that matches nothing still raises "Path does not exist", and the
+    files of subdirectories stay out; a ``<dir>`` with subdirectories
+    holding files is then listed twice (its whole tree, then the glob)."""
     parent, _, name = path.rpartition("/")
     if parent and _GLOB_CHARS & set(name) and not _GLOB_CHARS & set(parent):
-        from py4j.protocol import Py4JError
-
         try:
-            p = spark._jvm.org.apache.hadoop.fs.Path(parent)
-            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-            # the count includes ``parent`` itself
-            flat = fs.getContentSummary(p).getDirectoryCount() == 1
-        except Py4JError:
-            flat = False  # a missing or unreadable parent: Spark reports it
-        if flat:
-            return reader.option("pathGlobFilter", name).load(parent)
-    return reader.load(path)
+            df = (spark.read.format("binaryFile")
+                  .option("pathGlobFilter", name).load(parent))
+        except PySparkException:
+            df = None  # a missing parent or conflicting partition dirs
+        if df is not None:
+            index = (df._jdf.queryExecution().optimizedPlan()
+                     .collectLeaves().apply(0).relation().location())
+            if (index.partitionSchema().isEmpty()
+                    and index.leafDirToChildrenFiles().size() == 1
+                    and not index.allFiles().isEmpty()):
+                return df
+    return spark.read.format("binaryFile").load(path)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
