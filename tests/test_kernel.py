@@ -1413,9 +1413,25 @@ class TestWarc:
         assert sum(1 for r in got if not r.error) == 11
 
     def test_hostile_streams_raise_warcerror_only(self):
+        """Mutated archives raise WarcError or nothing, through both the
+        record iterator and the span walk, and both yield the same
+        records before either raises."""
         import random
         from zpdfspark.kernel import warc as W
         base = W.build_warc(self._recs(5))
+
+        def drain(it):
+            out = []
+            try:
+                for x in it:
+                    out.append(x)
+            except W.WarcError as e:  # the only acceptable failure mode
+                return out, str(e)
+            return out, None
+
+        def key(r):
+            return (r.warc_type, r.target_uri, r.body, r.error)
+
         rnd = random.Random(11)
         for _ in range(400):
             b = bytearray(base)
@@ -1423,10 +1439,10 @@ class TestWarc:
                 b[rnd.randrange(len(b))] = rnd.randrange(256)
             raw = bytes(b[:rnd.randrange(2, len(b))]
                         if rnd.random() < 0.3 else b)
-            try:
-                list(W.iter_warc_records(raw))
-            except W.WarcError:
-                pass  # the only acceptable failure mode
+            recs, err = drain(W.iter_warc_records(raw))
+            spans, span_err = drain(W.iter_warc_records_spans(raw))
+            assert [key(r) for r in recs] == [key(r) for r, _, _ in spans]
+            assert err == span_err
 
     def test_non_warc_rejected(self):
         import pytest as _pytest
@@ -1435,11 +1451,11 @@ class TestWarc:
             list(W.iter_warc_records(b"HTTP/1.1 200 OK\r\n\r\nnope"))
 
     def test_gunzip_linear_in_member_count(self):
-        """Gunzip time grows linearly with the member count: 16k members
-        take at most 2.5x the time of 8k (minimum of 5 interleaved runs
-        each, so one run slowed by a loaded host does not decide it).
-        Slicing the remaining archive per member made it quadratic: >4x
-        per doubling."""
+        """The record walk's time grows linearly with the member count:
+        16k members take at most 2.5x the time of 8k (minimum of 5
+        interleaved runs each, so one run slowed by a loaded host does
+        not decide it). Slicing the remaining archive per member made
+        gunzip quadratic: >4x per doubling."""
         import random
         import time
 
@@ -1452,30 +1468,112 @@ class TestWarc:
         for _ in range(5):
             for n, raw in archives.items():
                 t0 = time.perf_counter()
-                out = W._gunzip_members(raw)
+                got = sum(1 for _ in W.iter_warc_records(raw))
                 best[n] = min(best[n], time.perf_counter() - t0)
-                assert out.count(b"WARC/1.0\r\n") == n
+                assert got == n
         assert best[16000] <= 2.5 * best[8000], best
 
     def test_member_cap_and_truncation(self, monkeypatch):
         """A gzip member whose output passes MAX_RECORD_BYTES raises
         "exceeds cap" (one that reaches it exactly is read), and a member
-        cut short raises "truncated" at its own offset."""
+        cut short raises "truncated" at its own offset, after the records
+        of the members before it."""
         import gzip
         import random
 
         import pytest as _pytest
         from zpdfspark.kernel import warc as W
         members = [W.build_warc([r]) for r in self._recs(2)]
-        monkeypatch.setattr(W, "MAX_RECORD_BYTES", 1000)
-        assert len(W._gunzip_members(gzip.compress(b"x" * 1000))) == 1000
+        plain = W.build_warc(self._recs(1), per_record_gzip=False)
+        monkeypatch.setattr(W, "MAX_RECORD_BYTES", len(plain))
+        got = list(W.iter_warc_records(gzip.compress(plain)))
+        assert len(got) == 1 and got[0].error is None
         # incompressible, so zlib holds no pending output past the cap
-        big = gzip.compress(random.Random(7).randbytes(1001))
+        big = gzip.compress(random.Random(7).randbytes(len(plain) + 1))
         with _pytest.raises(W.WarcError, match="at byte 0 exceeds cap"):
-            W._gunzip_members(big)
+            list(W.iter_warc_records(big))
+        got = []
         with _pytest.raises(W.WarcError, match="truncated gzip member at "
                                                f"byte {len(members[0])}"):
-            W._gunzip_members(members[0] + members[1][:-4])
+            for rec in W.iter_warc_records(members[0] + members[1][:-4]):
+                got.append(rec.target_uri)
+        assert got == ["https://ex.com/p0"]
+
+    def test_corrupt_member_keeps_records_before_it(self):
+        """A corrupt middle member: both walks yield the records of the
+        members before it, then raise the member's WarcError;
+        iter_responses keeps those responses."""
+        import pytest as _pytest
+        from zpdfspark.kernel import warc as W
+        members = [W.build_warc([r]) for r in self._recs(6)]
+        bad = bytearray(members[3])
+        bad[len(bad) // 2] ^= 0xFF
+        members[3] = bytes(bad)
+        raw = b"".join(members)
+        at = f"gzip member at byte {sum(map(len, members[:3]))}"
+        for walk in (W.iter_warc_records, W.iter_warc_records_spans):
+            got = []
+            with _pytest.raises(W.WarcError, match=at):
+                for x in walk(raw):
+                    got.append(x)
+            assert len(got) == 3
+        assert [r.target_uri for r in W.iter_responses(raw)] == [
+            f"https://ex.com/p{i}" for i in range(3)]
+
+    def test_record_split_across_members(self, monkeypatch):
+        """A plain stream gzipped as members cut mid-record (here inside
+        the headers, inside a body and inside a 'WARC/' magic) reads as
+        the joined stream does, through both walks; each span runs from
+        the member where its record begins to the one where it ends, so
+        it decompresses to bytes holding the whole record. A split
+        record over the size cap is an error record, never carried."""
+        import gzip
+
+        from zpdfspark.kernel import warc as W
+        recs = self._recs(3)
+        plain = W.build_warc(recs, per_record_gzip=False)
+        second = plain.index(b"WARC/", 1)
+        want = [(u, body) for u, _d, body, _c in recs]
+        # each record's own bytes: its magic up to the \r\n\r\n that
+        # ends it
+        starts = [i for i in range(len(plain))
+                  if plain.startswith(b"WARC/1.0\r\n", i)]
+        ends = [i - 4 for i in starts[1:] + [len(plain)]]
+        for cuts in ([100], [second + 2], [30, 31, second - 9, second + 3],
+                     list(range(7, len(plain), 7))):
+            edges = [0] + cuts + [len(plain)]
+            raw = b"".join(gzip.compress(plain[a:b], mtime=0)
+                           for a, b in zip(edges, edges[1:]))
+            assert [(r.target_uri, r.body)
+                    for r in W.iter_warc_records(raw)] == want
+            spans = list(W.iter_warc_records_spans(raw))
+            assert [(r.target_uri, r.body) for r, _, _ in spans] == want
+            for (_rec, off, ln), a, b in zip(spans, starts, ends):
+                assert plain[a:b] in gzip.decompress(raw[off:off + ln])
+        monkeypatch.setattr(W, "MAX_RECORD_BYTES", 64)
+        assert [r.error for r in W.iter_warc_records(raw)] == [
+            "Content-Length out of bounds"] * 3
+
+    def test_memory_follows_the_member(self):
+        """Draining iter_responses over a many-member archive peaks
+        below 8x the largest decompressed member; gunzipping the whole
+        archive first peaked at about twice the decompressed archive."""
+        import tracemalloc
+
+        from zpdfspark.kernel import warc as W
+        body = b"<p>compressible crawl text</p>" * 8000  # ~240 KB
+        recs = [(f"http://e.com/{i}", "2025-01-01T00:00:00Z", body,
+                 "text/html") for i in range(48)]
+        raw = W.build_warc(recs)
+        largest = len(W.build_warc(recs[:1], per_record_gzip=False))
+        tracemalloc.start()
+        try:
+            n = sum(1 for _ in W.iter_responses(raw))
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert n == 48
+        assert peak < 8 * largest, (peak, largest)
 
     def test_iter_responses_keeps_document_records_only(self):
         """iter_responses is the one document-record rule: `response`
@@ -1951,17 +2049,24 @@ class TestWarcCdx:
             assert rec.body in raw[off:off + ln]
 
     def test_spans_agree_with_plain_iterator(self):
-        """The refactor invariant: iter_warc_records and the span walk
-        yield identical record sequences."""
+        """Both walks yield the records build_warc wrote, for per-record
+        gzip members, a plain stream and a plain stream gzipped as
+        members cut mid-record."""
+        import gzip
+
         from zpdfspark.kernel.warc import (build_warc, iter_warc_records,
                                            iter_warc_records_spans)
         recs = [("https://h.test/%d" % i, "2025-01-01T00:00:00Z",
                  b"b" * i, "text/plain") for i in range(8)]
-        raw = build_warc(recs, per_record_gzip=True)
-        a = [(r.target_uri, r.body) for r in iter_warc_records(raw)]
-        b = [(r.target_uri, r.body)
-             for r, _, _ in iter_warc_records_spans(raw)]
-        assert a == b and len(a) == 8
+        plain = build_warc(recs, per_record_gzip=False)
+        split = b"".join(gzip.compress(plain[i:i + 50], mtime=0)
+                         for i in range(0, len(plain), 50))
+        want = [(u, body) for u, _d, body, _c in recs]
+        for raw in (build_warc(recs), plain, split):
+            a = [(r.target_uri, r.body) for r in iter_warc_records(raw)]
+            b = [(r.target_uri, r.body)
+                 for r, _, _ in iter_warc_records_spans(raw)]
+            assert a == want and b == want
 
 
 class TestTiffDecode:

@@ -694,6 +694,54 @@ def test_warc_single_pass_job_count(spark, tmp_path, assert_zstd):
     assert completed_buckets(spark, os.path.join(out, "_lineage")) == [0, 1]
 
 
+def test_warc_corrupt_member_same_records_everywhere(spark, tmp_path):
+    """An archive whose 4th of 6 gzip members is corrupt: every WARC
+    reader keeps the three responses before it. read_warc adds one
+    file-level error row; warc_documents, a fused single-pass run,
+    warc_cdx and write_wet see the same urls, so the CDX index points
+    only at captures the pipeline extracted."""
+    import glob as globmod
+
+    from zpdfspark.kernel.warc import build_warc, iter_warc_records
+    from zpdfspark.spark.pipeline import run_extraction_job
+    from zpdfspark.spark.warc_sink import write_wet
+    from zpdfspark.spark.warc_source import (read_warc, warc_cdx,
+                                             warc_documents)
+
+    members = [build_warc([(f"https://c.test/{i}", "2025-01-01T00:00:00Z",
+                            b"<html><p>corrupt member doc %d</p></html>" % i,
+                            "text/html")]) for i in range(6)]
+    bad = bytearray(members[3])
+    bad[len(bad) // 2] ^= 0xFF
+    members[3] = bytes(bad)
+    d = tmp_path / "warc"
+    d.mkdir()
+    (d / "a.warc.gz").write_bytes(b"".join(members))
+    glob = str(d / "*.warc.gz")
+    want = [f"https://c.test/{i}" for i in range(3)]
+
+    rows = read_warc(spark, glob).collect()
+    assert sorted(r.url for r in rows if r.parse_error is None) == want
+    errors = [r.parse_error for r in rows if r.parse_error is not None]
+    assert len(errors) == 1 and errors[0].startswith("file-level: ")
+    assert f"at byte {sum(map(len, members[:3]))}" in errors[0]
+    assert sorted(r.url for r in warc_documents(spark, glob)
+                  .select("url").collect()) == want
+    assert sorted(r.url for r in warc_cdx(spark, glob)
+                  .select("url").collect()) == want
+    out = str(tmp_path / "out")
+    run_extraction_job(spark, glob, out, input_format="warc", n_buckets=1,
+                       partitions=2, single_pass=True)
+    assert sorted(r.url for r in spark.read.parquet(
+        os.path.join(out, "data")).select("url").collect()) == want
+    wet = str(tmp_path / "wet")
+    write_wet(warc_documents(spark, glob), wet, partitions=1).collect()
+    assert sorted(r.target_uri
+                  for path in globmod.glob(os.path.join(wet, "*.warc.wet.gz"))
+                  for r in list(iter_warc_records(
+                      open(path, "rb").read()))[1:]) == want
+
+
 def test_driver_contract_shape():
     """Every oracle key has a query; entry is callable; queries are
     uniquely named (the driver treats these as the correctness gate)."""

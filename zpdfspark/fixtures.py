@@ -3357,6 +3357,8 @@ def write_warc_fixture(dir_path: str, n_docs: int, seed: int = 42,
     expected-records parquet whose n_bytes/body_md5 come from the
     PRE-WRAP payload bytes (generator ground truth, independent of the
     reader). Returns (warc_glob, expected_parquet_path)."""
+    import gzip
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -3426,20 +3428,20 @@ def write_warc_fixture(dir_path: str, n_docs: int, seed: int = 42,
             exp["mime"].append(mime)
             meta[(url, date)] = (int(status.split(" ", 1)[0]), mime, pdf)
         shard_name = f"shard-{shard:03d}.warc.gz"
-        data = build_warc(recs)
+        # build_warc gzips each record as its own member, so the shard
+        # is its members joined
+        members = [build_warc([r]) for r in recs]
         with open(os.path.join(dir_path, shard_name), "wb") as f:
-            f.write(data)
-        # w5: expected CDX rows from an INDEPENDENT gzip-member walk
-        # over the bytes just written (offsets/lengths are storage
-        # truth) + the generator-authored per-capture metadata —
-        # deliberately NOT kernel/warc.py's span iterator
+            f.write(b"".join(members))
+        # w5: expected CDX rows from an INDEPENDENT walk of the members
+        # just written (offsets/lengths are storage truth) + the
+        # generator-authored per-capture metadata — deliberately NOT
+        # kernel/warc.py's span iterator
         pos = 0
-        while pos < len(data):
-            d = zlib.decompressobj(wbits=31)
-            chunk = d.decompress(data[pos:])
-            consumed = len(data) - pos - len(d.unused_data)
+        for member in members:
             hdr = {}
-            for line in chunk.split(b"\r\n\r\n", 1)[0].split(b"\r\n")[1:]:
+            head = gzip.decompress(member).split(b"\r\n\r\n", 1)[0]
+            for line in head.split(b"\r\n")[1:]:
                 k, _, v = line.partition(b":")
                 hdr[k.strip().lower().decode()] = v.strip().decode()
             if hdr.get("warc-type") == "response":
@@ -3454,9 +3456,9 @@ def write_warc_fixture(dir_path: str, n_docs: int, seed: int = 42,
                 cdx["digest"].append("sha1:" + base64.b32encode(
                     hashlib.sha1(payload).digest()).decode())
                 cdx["rec_offset"].append(pos)
-                cdx["rec_length"].append(consumed)
+                cdx["rec_length"].append(len(member))
                 cdx["warc_file"].append(shard_name)
-            pos += consumed
+            pos += len(member)
     expected = os.path.join(dir_path, "expected_records.parquet")
     pq.write_table(pa.table({
         "url": pa.array(exp["url"], pa.string()),

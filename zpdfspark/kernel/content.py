@@ -47,7 +47,6 @@ from .encodings_data import WIN_ANSI_ENCODING
 
 _WS_SET = frozenset(b"\x00\t\n\x0c\r ")
 _DELIM_SET = frozenset(b"()<>[]{}/%")
-_WS_OR_DELIM = _WS_SET | _DELIM_SET
 
 # token kinds
 T_NUM = 0
@@ -57,11 +56,7 @@ T_NAME = 3
 T_OP = 4
 T_ARR = 5
 
-_SKIP_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
-_NUM_RE = re.compile(rb"[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)")
 _NUMCHARS_RE = re.compile(rb"[0-9.+\-]+")
-_NAME_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
-_OP_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
 _EI_RE = re.compile(rb"EI(?=[\x00\t\n\x0c\r ()<>\[\]{}/%]|\Z)")
 # master token scan (hot path): ws/comment skip + number | name |
 # operator | any-single-byte in ONE C regex call per token; the

@@ -275,14 +275,6 @@ def apply_differences(enc: FontEncoding, diffs: list) -> None:
     enc._simple_cache = None
 
 
-_PREDEFINED_2BYTE = {
-    b"UniGB-UCS2-H", b"UniCNS-UCS2-H", b"UniJIS-UCS2-H", b"UniKS-UCS2-H",
-    b"UniGB-UCS2-V", b"UniCNS-UCS2-V", b"UniJIS-UCS2-V", b"UniKS-UCS2-V",
-    b"UniGB-UTF16-H", b"UniCNS-UTF16-H", b"UniJIS-UTF16-H", b"UniKS-UTF16-H",
-    b"UniGB-UTF16-V", b"UniCNS-UTF16-V", b"UniJIS-UTF16-V", b"UniKS-UTF16-V",
-}
-
-
 def apply_predefined_cmap(enc: FontEncoding, name: bytes) -> None:
     """(encoding.zig:776-828): every branch sets 2-byte codes; -V => wmode."""
     if name.endswith(b"-V"):

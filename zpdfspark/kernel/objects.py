@@ -146,7 +146,6 @@ _NUMREF_RE = re.compile(
 _OBJ_HEADER_RE = re.compile(
     rb"[\x00\t\n\x0c\r ]*([0-9]+)[\x00\t\n\x0c\r ]+([0-9]+)"
     rb"[\x00\t\n\x0c\r ]+obj(?=[\x00\t\n\x0c\r ()<>\[\]{}/%]|$)")
-_NUM_CHARS_RE = re.compile(rb"[0-9.+-]+")
 # bounded intern caches for names / dict keys: PDF name vocabulary is
 # tiny and extremely repetitive (/Type /Page /Font ...); the cap keeps
 # hostile inputs with millions of distinct names from growing the cache

@@ -8,15 +8,24 @@ This reader handles both that layout and plain uncompressed WARC, and
 strips the HTTP envelope from `response` records so the payload is
 the raw document bytes the extraction kernel consumes.
 
+Every reader goes through one record walk, `iter_warc_records_spans`,
+which decompresses one gzip member at a time, so memory follows the
+largest member, not the archive. A record split across members is
+carried into the next one and read whole (at most MAX_HEADER_BYTES +
+MAX_RECORD_BYTES are carried). A corrupt or truncated member yields
+the records of the members before it, then raises WarcError.
+
 Contract mirrors the rest of the kernel: a malformed RECORD yields an
 error entry and the reader continues (a single corrupt record must
 not kill a 1 GB archive task); a stream that is not WARC at all
-raises WarcError.
+raises WarcError before its first record.
 """
 
 from __future__ import annotations
 
 import zlib
+from bisect import bisect_right
+from itertools import accumulate
 from typing import Iterator, Optional, Tuple
 
 MAX_HEADER_BYTES = 64 * 1024
@@ -98,11 +107,6 @@ def _gzip_members(raw: bytes) -> Iterator[Tuple[int, int, bytes]]:
             raise WarcError("empty gzip member")
         yield pos, consumed, parts[0] if len(parts) == 1 else b"".join(parts)
         pos += consumed
-
-
-def _gunzip_members(raw: bytes) -> bytes:
-    """Decompress concatenated gzip members into one plain byte stream."""
-    return b"".join(data for _, _, data in _gzip_members(raw))
 
 
 def _dechunk(payload: bytes) -> bytes:
@@ -226,13 +230,12 @@ def _strip_http(body: bytes):
 
 def iter_warc_records(raw: bytes) -> Iterator[WarcRecord]:
     """Yield WarcRecord for every record in the (possibly per-record
-    gzipped) WARC byte stream. Malformed records yield an entry with
-    `error` set and scanning resynchronizes at the next 'WARC/' magic."""
-    if raw[:2] == b"\x1f\x8b":
-        raw = _gunzip_members(raw)
-    if not raw.startswith(b"WARC/"):
-        raise WarcError("not a WARC stream")
-    for rec, _start, _end in _iter_plain_spans(raw):
+    gzipped) WARC byte stream: iter_warc_records_spans without spans.
+    Malformed records yield an entry with `error` set and scanning
+    resynchronizes at the next 'WARC/' magic. A record split across
+    gzip members is read whole; a corrupt or truncated member raises
+    WarcError after the records of the members before it."""
+    for rec, _off, _len in iter_warc_records_spans(raw):
         yield rec
 
 
@@ -245,9 +248,8 @@ def iter_responses(raw: bytes, http_ok_only: bool = False
     request/metadata bytes as bodies. http_ok_only also drops
     responses whose HTTP envelope carries a non-200 status (redirect
     stubs, error pages); envelope-less payloads (no status) are kept.
-    A stream that is not WARC at all yields nothing: iter_warc_records
-    raises WarcError only before its first record, so the archive is
-    skipped whole."""
+    WarcError ends the archive quietly: a corrupt gzip member keeps
+    the responses before it; a non-WARC stream yields nothing."""
     try:
         for rec in iter_warc_records(raw):
             if rec.error or not rec.target_uri \
@@ -262,45 +264,70 @@ def iter_responses(raw: bytes, http_ok_only: bool = False
 
 def iter_warc_records_spans(raw: bytes) -> Iterator[Tuple[WarcRecord,
                                                           int, int]]:
-    """Yield (record, offset, length) with offsets into the STORED
-    byte stream — the triple a CDX(J) index line carries so a wayback
-    range request can fetch one capture without scanning the archive.
-    For per-record-gzip archives (the Common Crawl layout) the span is
-    the record's own compressed member; every record a member yields
-    shares that member's span. For plain streams the span is the
-    record's uncompressed bytes."""
-    if raw[:2] != b"\x1f\x8b":
-        if not raw.startswith(b"WARC/"):
-            raise WarcError("not a WARC stream")
-        for rec, start, end in _iter_plain_spans(raw):
-            yield rec, start, end - start
-        return
-    first = True
-    for pos, consumed, chunk in _gzip_members(raw):
-        if first and not chunk.startswith(b"WARC/"):
+    """The one record walk: yield (record, offset, length) with offsets
+    into the STORED byte stream — the triple a CDX(J) index line
+    carries so a wayback range request can fetch one capture without
+    scanning the archive. For gzip archives the span runs from the
+    start of the member where the record begins to the end of the
+    member where it ends (one member per record in the Common Crawl
+    layout). For plain streams it is the record's uncompressed bytes.
+    Members are parsed as they are decompressed; bytes they leave
+    unfinished wait for the next member, so a split record reads as in
+    the joined stream. A header block with no end within
+    MAX_HEADER_BYTES is an error record; the walk resumes at the next
+    member."""
+    gz = raw[:2] == b"\x1f\x8b"
+    members = _gzip_members(raw) if gz else ((0, len(raw), raw),)
+    # unparsed (plain bytes, stored offset, stored end) of members; the
+    # first parse waits for the 5 bytes of the magic check
+    held, need, first = [], 5, True
+    for pos, length, data in members:
+        held.append((data, pos, pos + length))
+        need -= len(data)
+        last = pos + length == len(raw)
+        if need > 0 and not last:
+            continue
+        buf = data if len(held) == 1 else b"".join(h[0] for h in held)
+        if first and not buf.startswith(b"WARC/"):
             raise WarcError("not a WARC stream")
         first = False
-        for rec, _start, _end in _iter_plain_spans(chunk):
-            yield rec, pos, consumed
+        edges = list(accumulate(len(h[0]) for h in held))  # ends in buf
+        parts, held = held, []
+        for rec, s, e in _iter_plain_spans(buf, final=last):
+            off = parts[bisect_right(edges, s)][1] if gz else s
+            if rec is None:  # unfinished: wait until buf[s:e] is here
+                held, need = [(buf[s:], off, parts[-1][2])], e - len(buf)
+                break
+            end = parts[bisect_right(edges, e - 1)][2] if gz else e
+            yield rec, off, end - off
 
 
-def _iter_plain_spans(raw: bytes) -> Iterator[Tuple[WarcRecord, int, int]]:
+def _iter_plain_spans(raw: bytes, final: bool = True
+                      ) -> Iterator[Tuple[Optional[WarcRecord], int, int]]:
     """Record parser over an uncompressed WARC stream: yields
-    (record, start, end) byte spans; shared by iter_warc_records and
-    the CDX span walk."""
+    (record, start, end) byte spans. Unless ``final``, bytes whose
+    outcome depends on more input (cut-short headers, body or magic)
+    end it with (None, start, needed end); headers wait for twice their
+    bytes, so a record cut into tiny members is re-parsed log times."""
     pos = 0
     n = len(raw)
     while pos < n:
         if raw[pos : pos + 5] != b"WARC/":
             nxt = raw.find(b"WARC/", pos)
             if nxt == -1:
+                w = raw.rfind(b"W", max(pos, n - 4))  # a cut-short magic?
+                if not final and w != -1 and b"WARC/".startswith(raw[w:]):
+                    yield None, w, 2 * n - w
                 break  # trailing padding
             pos = nxt
         rec_start = pos
         hdr_end = raw.find(b"\r\n\r\n", pos, pos + MAX_HEADER_BYTES)
         if hdr_end == -1:
-            yield WarcRecord(error="unterminated record headers"), \
-                rec_start, n
+            if not final and n < pos + MAX_HEADER_BYTES:
+                yield None, rec_start, 2 * n - rec_start
+            else:
+                yield WarcRecord(error="unterminated record headers"), \
+                    rec_start, n
             break
         headers = {}
         lines = raw[pos:hdr_end].split(b"\r\n")
@@ -322,7 +349,11 @@ def _iter_plain_spans(raw: bytes) -> Iterator[Tuple[WarcRecord, int, int]]:
             pos = body_start
             continue
         if body_start + length > n:
-            yield WarcRecord(error="record body truncated"), rec_start, n
+            if not final:
+                yield None, rec_start, body_start + length
+            else:
+                yield WarcRecord(error="record body truncated"), \
+                    rec_start, n
             break
         body = raw[body_start : body_start + length]
         wtype = headers.get("warc-type", "")

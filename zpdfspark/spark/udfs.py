@@ -64,16 +64,6 @@ EXTRACT_SCHEMA = StructType([
     StructField("elapsed_ms", DoubleType()),
 ])
 
-EXTRACT_SCHEMA_DDL = (
-    "url string, extracted_text string, n_pages int, n_chars long, "
-    "is_encrypted boolean, error_count int, "
-    "errors array<struct<kind:string,offset:long,message:string>>, "
-    "objects_resolved int, streams_decoded int, structured_pages int, "
-    "stream_pages int, geometric_pages int, coverage_fallbacks int, "
-    "elapsed_ms double"
-)
-
-
 _ERRORS_PA_TYPE = None
 
 
@@ -478,24 +468,6 @@ def search_matches_dataframe(df: DataFrame, query: str) -> DataFrame:
             yield url, m["page"], m["offset"], m["context"]
 
     return map_rows(df.select("url", "html"), per_row, SEARCH_SCHEMA_DDL)
-
-
-def search_dataframe(extracted: DataFrame, query: str, text_col: str = "extracted_text") -> DataFrame:
-    """Cheap full-text search over ALREADY-extracted text: a relational
-    filter, not re-extraction per query (SURVEY.md X4). First match per
-    url only — use search_matches_dataframe for the full-fidelity
-    (all matches, page, context) form."""
-    import pyspark.sql.functions as F
-
-    q = query.lower()
-    return (
-        extracted
-        .where(F.instr(F.lower(F.col(text_col)), q) > 0)
-        .select(
-            "url",
-            (F.instr(F.lower(F.col(text_col)), q) - 1).alias("offset"),
-        )
-    )
 
 
 # -- SQL registration (scalar arrow_udf) ----------------------------------

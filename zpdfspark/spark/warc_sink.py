@@ -223,8 +223,8 @@ def _archive_rows(suffix: str, write):
     and yields its SUMMARY_SCHEMA row. Output name and bytes are pure
     functions of the archive, so re-delivery (streaming batch replay,
     speculative twins) overwrites byte-identically — sink idempotence
-    without batch bookkeeping. File-level garbage skips the archive
-    (error posture of the fused ingest path)."""
+    without batch bookkeeping. Docs follow iter_responses, the fused
+    ingest path's rule: a corrupt gzip member ends them."""
     def per_row(path, content):
         from pyspark import TaskContext
 

@@ -13,7 +13,8 @@ monthly crawl), not parquet. This source reads them Spark-natively:
   mirroring the extraction kernel's map-only shape;
 - per-record errors surface as rows with `parse_error` set (a corrupt
   record must not kill a 1 GB archive task), keeping the engine's
-  permissive-parsing contract end to end.
+  permissive-parsing contract end to end; a corrupt gzip member gives
+  every reader the records of the members before it (kernel/warc.py).
 
 `warc_documents` yields the (url, warc_ts, html) shape the extraction
 pipeline consumes, so `run_extraction_job(..., input_format="warc")`
@@ -80,7 +81,8 @@ def binary_files(spark: SparkSession, path: str) -> DataFrame:
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """All records of the .warc / .warc.gz files under `path`, one row
     per record (responses carry the HTTP-stripped payload in `html`),
-    plus error rows with `parse_error` set."""
+    plus error rows with `parse_error` set, and one `file-level: ...`
+    row after the records of an archive the walk cannot finish."""
     binary = binary_files(spark, path)
 
     def error_row(fpath, err):
@@ -162,7 +164,7 @@ CDX_SCHEMA = ("urlkey string, cdx_ts string, url string, mime string, "
 def cdx_rows(fpath, content):
     """The CDX_SCHEMA index rows of one (path, content) archive: the
     per-row function of the batch warc_cdx query and its streaming
-    twin."""
+    twin, over the same captures the document readers keep."""
     fname = os.path.basename(fpath)
     try:
         for rec, off, ln in iter_warc_records_spans(content):
@@ -181,7 +183,7 @@ def warc_cdx(spark: SparkSession, path: str) -> DataFrame:
     """CDX(J) index generation (round 5) — the standard web-archive
     access index (pywb/OpenWayback): one line per response capture
     with the SURT urlkey, 14-digit timestamp, payload digest, and the
-    (offset, length) span of the record's own gzip member, so a
+    (offset, length) span of the record's gzip member(s), so a
     wayback range request replays one capture without scanning the
     archive. Same file-per-task map-only shape as read_warc — index
     generation is a single pass over each archive inside its scan
@@ -203,11 +205,11 @@ def warc_extract_arrow_batches(mode: str = "accuracy",
     heavy-doc soak the two-stage form spent ~76% extra wall on exactly
     that round-trip (BASELINE.md round-3 WARC soak). Delegates row
     assembly to udfs.extract_arrow_batches so extraction output is
-    byte-identical to the parquet path; records are re-batched in
-    bounded chunks so a 1 GB archive never materializes all decompressed
-    bodies at once. Records are selected by kernel/warc.py
-    iter_responses (http_ok_only: the standard crawl ingestion filter
-    on the HTTP status)."""
+    byte-identical to the parquet path; records are parsed a gzip
+    member at a time and re-batched in bounded chunks, so a 1 GB
+    archive never materializes all decompressed bodies at once.
+    Records are selected by kernel/warc.py iter_responses (http_ok_only:
+    the standard crawl ingestion filter on the HTTP status)."""
     from zpdfspark.spark.udfs import extract_arrow_batches
 
     extract = extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes)
