@@ -148,33 +148,82 @@ def test_empty_edges(spark):
 def test_shuffle_partitions_auto(spark, monkeypatch):
     """Some platforms accept spark.sql.shuffle.partitions='auto'. This
     Spark rejects it on set, and a launch conf of 'auto' leaves the
-    session unusable, so the session's conf layer is made to hold it:
-    connected_components must size its loop without int('auto') and put
-    'auto' back afterwards."""
-    from pyspark.sql.conf import RuntimeConfig
+    session unusable, so each session's conf layer is made to hold it:
+    the caller's and the clone's that connected_components runs its loop
+    in, which starts from the caller's 'auto'. connected_components must
+    size its loop without int('auto') and leave the caller's 'auto' as
+    it was."""
+    from zpdfspark.spark import cc
 
     key = "spark.sql.shuffle.partitions"
-    real_get, real_set = RuntimeConfig.get, RuntimeConfig.set
-    jvm_value = real_get(spark.conf, key)
-    held = {"value": "auto"}
+    jvm_value = spark.conf.get(key)
 
-    def get(self, k, *args, **kwargs):
-        if k == key and held["value"] == "auto":
-            return "auto"
-        return real_get(self, k, *args, **kwargs)
+    def hold_auto(conf):
+        real_get, real_set = conf.get, conf.set
+        held = {"value": "auto"}
 
-    def set_(self, k, v):
-        if k == key:
-            held["value"] = str(v)
-            if held["value"] == "auto":
-                v = jvm_value  # what this Spark can hold instead
-        real_set(self, k, v)
+        def get(k, *args, **kwargs):
+            if k == key and held["value"] == "auto":
+                return "auto"
+            return real_get(k, *args, **kwargs)
 
-    monkeypatch.setattr(RuntimeConfig, "get", get)
-    monkeypatch.setattr(RuntimeConfig, "set", set_)
+        def set_(k, v):
+            if k == key:
+                held["value"] = str(v)
+                if held["value"] == "auto":
+                    v = jvm_value  # what this Spark can hold instead
+            real_set(k, v)
+
+        monkeypatch.setattr(conf, "get", get)
+        monkeypatch.setattr(conf, "set", set_)
+        return held, real_get
+
+    held, real_get = hold_auto(spark.conf)
+    clones = []
+    job_session = cc.job_session
+
+    def auto_job_session(caller):
+        job = job_session(caller)
+        clones.append(hold_auto(job.conf)[0])
+        return job
+
+    monkeypatch.setattr(cc, "job_session", auto_job_session)
     _check(spark, [(1, 2), (2, 3), (7, 8)], cross_check=False)
     assert held["value"] == "auto"
-    assert real_get(spark.conf, key) == jvm_value
+    assert real_get(key) == jvm_value
+    # the loop read 'auto' in its clone and sized itself from the edges
+    assert [c["value"] for c in clones] == ["1"]
+
+
+def test_caller_plans_with_its_conf_during_loop(spark, monkeypatch):
+    """A query the caller plans while the connected_components loop runs
+    sees the caller's AQE, shuffle-partition and constraint-propagation
+    values: the loop's tuned conf lives in its own session."""
+    import re
+
+    from zpdfspark.spark import cc
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+            "spark.sql.constraintPropagation.enabled")
+    before = [spark.conf.get(k) for k in keys]
+    seen = []
+    small_star = cc._small_star
+
+    def probe(e):
+        plan = (spark.range(64).groupBy((F.col("id") % 7).alias("k"))
+                .count()._jdf.queryExecution().executedPlan().toString())
+        seen.append(([spark.conf.get(k) for k in keys],
+                     plan.startswith("AdaptiveSparkPlan"),
+                     re.findall(r"hashpartitioning\([^\n]*, (\d+)\)", plan)))
+        return small_star(e)
+
+    monkeypatch.setattr(cc, "_small_star", probe)
+    _check(spark, [(1, 2), (2, 3), (7, 8), (8, 9)], cross_check=False)
+    assert seen, "the cc loop never ran"
+    for conf, adaptive, partitions in seen:
+        assert conf == before
+        assert adaptive
+        assert partitions == [before[1]]
 
 
 def test_nonconvergence_fails_loud(spark):

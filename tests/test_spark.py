@@ -124,6 +124,72 @@ def test_udfs_and_pipeline_import_without_pandas():
     assert out.stdout.strip() == "False", out.stderr
 
 
+def test_lineage_accumulator_unpickles_without_pipeline(spark, tmp_path):
+    """A Python worker that unpickles the lineage accumulator, after the
+    imports the worker daemon makes, imports neither pipeline.py nor the
+    argparse it needs."""
+    import subprocess
+    import sys
+
+    from pyspark.serializers import CloudPickleSerializer
+
+    from zpdfspark.spark.pipeline import _lineage_rollup
+
+    _, acc = _lineage_rollup(spark.range(1))
+    pickled = tmp_path / "acc.pkl"
+    pickled.write_bytes(CloudPickleSerializer().dumps(acc))
+    code = ("import pickle, sys, pyspark.daemon, pyspark.worker, "
+            "zpdfspark.spark, zpdfspark.kernel.htmltext; "
+            f"pickle.loads(open({str(pickled)!r}, 'rb').read()); "
+            "print([m for m in ('zpdfspark.spark.pipeline', 'argparse') "
+            "if m in sys.modules])")
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, check=True,
+                         cwd=os.path.dirname(os.path.dirname(
+                             os.path.abspath(__file__))))
+    assert out.stdout.strip() == "[]", out.stderr
+
+
+def test_jobs_set_no_conf_on_caller_session(spark, corpus_path, tmp_path,
+                                            monkeypatch):
+    """A fused single-pass WARC run, a per-bucket parquet run and a
+    connected_components run set their tuned conf in their own clone of
+    the caller's session: no conf is set or unset on the caller's."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from zpdfspark.fixtures import write_warc_fixture
+    from zpdfspark.spark.cc import connected_components
+    from zpdfspark.spark.pipeline import run_extraction_job
+
+    glob, _ = write_warc_fixture(str(tmp_path / "warc"), 40, seed=17)
+    caller, clones = [], []
+    for name in ("set", "unset"):
+        real = getattr(RuntimeConfig, name)
+
+        def spy(self, *args, _real=real, _name=name):
+            (caller if self is spark.conf else clones).append((_name,) + args)
+            return _real(self, *args)
+
+        monkeypatch.setattr(RuntimeConfig, name, spy)
+
+    fused = run_extraction_job(spark, glob, str(tmp_path / "fused"),
+                               input_format="warc", n_buckets=2,
+                               partitions=4, single_pass=True)
+    per_bucket = run_extraction_job(spark, corpus_path,
+                                    str(tmp_path / "buckets"), n_buckets=2,
+                                    partitions=4)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
+                                  "src long, dst long")
+    labels = sorted(tuple(r) for r in connected_components(edges).collect())
+    assert fused["docs"] == 40 and per_bucket["docs"] == 150
+    assert labels == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+    assert caller == []
+    # the spy sees the jobs' own sets: split sizing twice, cc's three keys
+    assert [c[1] for c in clones].count(
+        "spark.sql.files.maxPartitionBytes") == 2
+    assert len(clones) == 5, clones
+
+
 def _drop_lineage_bucket(spark, out, bucket):
     """Rewrite out/_lineage without ``bucket``'s row, as if the run had
     died before recording it."""

@@ -27,9 +27,12 @@ algorithm, not a reference file.
 
 from __future__ import annotations
 
+import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
+
+from zpdfspark.spark.session import job_session
 
 __all__ = ["connected_components", "min_label_components"]
 
@@ -127,108 +130,109 @@ def connected_components(edges: DataFrame, src: str = "src",
     Each round is two aggregate+join stages; the only driver-side action
     is the per-round convergence probe (one count of changed edges,
     early-exit limit(1)). ``_round_counter``, when given a list, receives
-    the number of rounds used (tests pin the logarithmic bound)."""
+    the number of rounds used (tests pin the logarithmic bound).
+
+    The loop's conf lives in a clone of the caller's session
+    (``session.job_session``), never in the caller's. The returned frame
+    belongs to the clone; joined into a caller's frame, it plans under
+    the caller's conf.
+
+    Fails loud on executor loss: each round's lazy ``localCheckpoint``
+    keeps its blocks only on the executors that computed them, with no
+    lineage to recompute them, so losing one fails the whole job."""
     spark = edges.sparkSession
     if max_rounds is None:
         max_rounds = 64
+    # the edges reach the clone through a uniquely named temp view: the
+    # clone copies the caller's temp views when it first resolves a name
+    view = f"cc_edges_{uuid.uuid4().hex}"
+    edges.createTempView(view)
+    job = job_session(spark)
+    try:
+        edges = job.table(view)
+    finally:
+        spark.catalog.dropTempView(view)
     # Catalyst's constraint propagation is O(plan^2) and has a known
     # failure mode on iterative self-union plans (Union constraint
     # rewriting dies with "key not found: <attr>" when round N's plan
     # references attributes from round N-1 — hit by range-generated
-    # edge lists). Disabling it during the loop is the established
+    # edge lists). Disabling it for the loop is the established
     # practice for iterative graph algorithms on Spark (GraphFrames
-    # ships the same advice); restored afterwards.
-    _CP = "spark.sql.constraintPropagation.enabled"
-    _AQE = "spark.sql.adaptive.enabled"
+    # ships the same advice).
     _SP = "spark.sql.shuffle.partitions"
-    old_cp = spark.conf.get(_CP, None)
-    old_aqe = spark.conf.get(_AQE, None)
-    old_sp = spark.conf.get(_SP, None)
-    spark.conf.set(_CP, "false")
+    job.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
+    n_e = e.count()
+    if n_e == 0:
+        return job.createDataFrame([], "node long, rep long")
+    # Iterative-loop execution config (r6, guide §1.2 step 3 after the
+    # algorithm shape is right): AQE re-plans and re-schedules every
+    # query stage, which is pure overhead for the dozens of small
+    # bounded queries this loop runs (measured at 10^5 edges: most of
+    # each round's wall was driver-side planning / stage bring-up, not
+    # compute); the loop sizes its shuffles DIRECTLY from the measured
+    # edge count instead: at least ~16k edges per reduce task so task
+    # scheduling is amortized, capped by the session's configured
+    # shuffle parallelism — so the setting is input-derived plus the
+    # same session knob every other query obeys, not a constant tuned to
+    # this host (the bench's 10^5-edge graph gets 7 partitions; a
+    # 10^12-edge graph saturates whatever parallelism the session
+    # configured). Edge counts never grow across rounds (neither star
+    # operator adds edges), so the round-1 size holds for the whole loop.
+    job.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        e = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
-        n_e = e.count()
-        if n_e == 0:
-            return spark.createDataFrame(
-                [], "node long, rep long")
-        # Iterative-loop execution config (r6, guide §1.2 step 3 after
-        # the algorithm shape is right): AQE re-plans and re-schedules
-        # every query stage, which is pure overhead for the dozens of
-        # small bounded queries this loop runs (measured at 10^5
-        # edges: most of each round's wall was driver-side planning /
-        # stage bring-up, not compute); the loop sizes its shuffles
-        # DIRECTLY from the measured edge count instead: at least
-        # ~16k edges per reduce task so task scheduling is amortized,
-        # capped by the session's configured shuffle parallelism — so
-        # the setting is input-derived plus the same session knob every
-        # other query obeys, not a constant tuned to this host (the
-        # bench's 10^5-edge graph gets 7 partitions; a 10^12-edge graph
-        # saturates whatever parallelism the session configured).
-        # Edge counts never grow across rounds (neither star operator
-        # adds edges), so the round-1 size holds for the whole loop.
-        # Restored afterwards.
-        spark.conf.set(_AQE, "false")
-        try:
-            sess_par = int(old_sp)
-        except (TypeError, ValueError):  # unset, or non-numeric ('auto')
-            sess_par = 200
-        spark.conf.set(_SP, str(max(1, min(n_e // 16_384 + 1, sess_par))))
-        converged = False
-        rounds = 0
-        for rounds in range(1, max_rounds + 1):
-            # the large-star output is checkpointed before small-star
-            # consumes it: small-star references its input in two
-            # branches (the join side and the min aggregation), and
-            # without materialization Spark evaluates the entire
-            # large-star subtree once per reference (r6 plan audit:
-            # the LS aggregation exchange appeared 3x in one round's
-            # physical plan). The checkpoint is lazy: small-star's
-            # first aggregation stage materializes it; an eager
-            # checkpoint would spend a whole extra pass per round just
-            # to cache. (If the planner ever picks a sort-merge join
-            # inside small-star, its two exchanges may both compute a
-            # partition of `ls` before it is cached — duplicated work,
-            # never wrong results.)
-            ls = _large_star(e).localCheckpoint(eager=False)
-            nxt = _small_star(ls).localCheckpoint(eager=False)
-            # Convergence = the edge set is a union of stars, checked
-            # DIRECTLY on nxt (r6): with u < v canonical edges, e is a
-            # star union iff no node appears as both a parent and a
-            # child and no child has two parents — and every star
-            # union is a fixpoint of both operators (LS: children have
-            # no larger neighbors besides none, the root keeps its
-            # edges; SS: every child's min-neighbor IS its root), so
-            # stopping here returns the same labels the edge-set-
-            # stability probe did, one round earlier (the old probe
-            # needed an extra confirming round to see "no change") and
-            # in ONE map-side-combined aggregation job instead of the
-            # two exceptAll shuffles of both full sides this ran
-            # before r6. Connectivity is invariant under both
-            # operators (Kiveris et al.), so the star union reached is
-            # exactly the component structure of the input.
-            changed = (
-                nxt.select(F.explode(F.array(
-                    F.struct(F.col("u").alias("n"), F.lit(0).alias("c")),
-                    F.struct(F.col("v").alias("n"), F.lit(1).alias("c")),
-                )).alias("x"))
-                .groupBy("x.n")
-                .agg(F.sum("x.c").alias("as_child"),
-                     F.count(F.lit(1)).alias("tot"))
-                .where((F.col("as_child") > 1)
-                       | ((F.col("as_child") > 0)
-                          & (F.col("tot") > F.col("as_child"))))
-                .limit(1).count()
-            )
-            e = nxt
-            if changed == 0:
-                converged = True
-                break
-    finally:
-        for key, old in ((_CP, old_cp), (_AQE, old_aqe), (_SP, old_sp)):
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
+        sess_par = int(job.conf.get(_SP))
+    except ValueError:  # non-numeric ('auto')
+        sess_par = 200
+    job.conf.set(_SP, str(max(1, min(n_e // 16_384 + 1, sess_par))))
+    converged = False
+    rounds = 0
+    for rounds in range(1, max_rounds + 1):
+        # the large-star output is checkpointed before small-star
+        # consumes it: small-star references its input in two branches
+        # (the join side and the min aggregation), and without
+        # materialization Spark evaluates the entire large-star subtree
+        # once per reference (r6 plan audit: the LS aggregation exchange
+        # appeared 3x in one round's physical plan). The checkpoint is
+        # lazy: small-star's first aggregation stage materializes it; an
+        # eager checkpoint would spend a whole extra pass per round just
+        # to cache. (If the planner ever picks a sort-merge join inside
+        # small-star, its two exchanges may both compute a partition of
+        # `ls` before it is cached — duplicated work, never wrong
+        # results.)
+        ls = _large_star(e).localCheckpoint(eager=False)
+        nxt = _small_star(ls).localCheckpoint(eager=False)
+        # Convergence = the edge set is a union of stars, checked
+        # DIRECTLY on nxt (r6): with u < v canonical edges, e is a star
+        # union iff no node appears as both a parent and a child and no
+        # child has two parents — and every star union is a fixpoint of
+        # both operators (LS: children have no larger neighbors besides
+        # none, the root keeps its edges; SS: every child's min-neighbor
+        # IS its root), so stopping here returns the same labels the
+        # edge-set-stability probe did, one round earlier (the old probe
+        # needed an extra confirming round to see "no change") and in
+        # ONE map-side-combined aggregation job instead of the two
+        # exceptAll shuffles of both full sides this ran before r6.
+        # Connectivity is invariant under both operators (Kiveris et
+        # al.), so the star union reached is exactly the component
+        # structure of the input.
+        changed = (
+            nxt.select(F.explode(F.array(
+                F.struct(F.col("u").alias("n"), F.lit(0).alias("c")),
+                F.struct(F.col("v").alias("n"), F.lit(1).alias("c")),
+            )).alias("x"))
+            .groupBy("x.n")
+            .agg(F.sum("x.c").alias("as_child"),
+                 F.count(F.lit(1)).alias("tot"))
+            .where((F.col("as_child") > 1)
+                   | ((F.col("as_child") > 0)
+                      & (F.col("tot") > F.col("as_child"))))
+            .limit(1).count()
+        )
+        e = nxt
+        if changed == 0:
+            converged = True
+            break
     if _round_counter is not None:
         _round_counter.append(rounds)
     if not converged:

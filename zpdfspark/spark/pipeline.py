@@ -52,7 +52,9 @@ Design for 10^12 documents (SURVEY.md §4):
   map-only directly on scan splits (split sizing via
   ``spark.sql.files.maxPartitionBytes``), with a single opt-in salting
   exchange for skewed layouts. The split size comes from the file
-  source's listed size, not one stat per file. Measured on the 60k-doc
+  source's listed size, not one stat per file, and is set only in the
+  job's clone of the caller's session (``session.job_session``), so the
+  caller's other queries never plan with it. Measured on the 60k-doc
   heavy corpus at pinned local[16], skipping the blob exchange cuts the
   end-to-end single-pass job from ~22 s to ~17 s.
 - **Writer sizing**: extracted rows reach the parquet writer through one
@@ -81,13 +83,14 @@ import uuid
 from typing import List, Optional
 
 import pyspark.sql.functions as F
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Observation, SparkSession
 
 # absolute import so this file also works as a spark-submit primary
 # script (run as __main__ with zpdfspark shipped via --py-files)
-from zpdfspark.spark.session import PARQUET_COMPRESSION, hadoop_path_exists
-from zpdfspark.spark.udfs import EXTRACT_SCHEMA, extract_arrow_batches
+from zpdfspark.spark.session import (PARQUET_COMPRESSION, hadoop_path_exists,
+                                     job_session)
+from zpdfspark.spark.udfs import (EXTRACT_SCHEMA, BucketSums,
+                                  extract_arrow_batches)
 
 # (lineage field, extraction column it sums per bucket); n_docs counts rows
 _LINEAGE_SUMS = (
@@ -152,20 +155,6 @@ def salted(df: DataFrame, partitions: int, salt: int = 0,
     return small.unionByName(big)
 
 
-class _BucketSums(AccumulatorParam):
-    """Accumulator value ``{bucket: [n_docs, *_LINEAGE_SUMS sums]}``."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, sums, more):
-        for bucket, add in more.items():
-            have = sums.get(bucket)
-            sums[bucket] = list(add) if have is None else [
-                a + b for a, b in zip(have, add)]
-        return sums
-
-
 def _lineage_rollup(df: DataFrame):
     """``df`` passed through one ``mapInArrow`` that adds each Arrow
     batch's per-bucket lineage sums (row count plus the ``_LINEAGE_SUMS``
@@ -181,7 +170,7 @@ def _lineage_rollup(df: DataFrame):
     update of every map task that is re-run (a fetch failure, an
     executor loss, speculation). Accumulators need classic PySpark:
     Spark Connect has none."""
-    acc = df.sparkSession.sparkContext.accumulator({}, _BucketSums())
+    acc = df.sparkSession.sparkContext.accumulator({}, BucketSums())
     cols = [c for _, c in _LINEAGE_SUMS]
 
     def rollup(batches):
@@ -262,7 +251,7 @@ def _append_lineage(spark: SparkSession, rows: List[dict],
 
 
 def _tune_scan_splits(spark: SparkSession, df: DataFrame,
-                      partitions: int):
+                      partitions: int) -> None:
     """Size parquet scan splits so the source yields ≈``partitions``
     map tasks. The map-only design hinges on this: with no repartition
     exchange, scan splits ARE the work units, and the default 128 MB
@@ -271,20 +260,15 @@ def _tune_scan_splits(spark: SparkSession, df: DataFrame,
     ``partitions`` ≈ 4× the core count (the run_extraction_job default
     and bench.py's measured sweep optimum) so every core gets ~4 waves.
 
-    Returns the previous ``maxPartitionBytes`` value (or None if
-    untouched) so the caller can restore the session-global conf after
-    the job — the blob-sized splits must not leak into other scans on
-    the same session."""
+    Every scan of ``spark`` plans with the size set here, so
+    run_extraction_job passes its job's clone of the caller's session."""
     try:
         total = partitions and _input_bytes(spark, df)
         if total:
-            prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
             target = max(total // partitions + 1, 1 << 20)
             spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
-            return prev
     except Exception:
         pass  # stats unavailable (e.g. some catalogs) — keep defaults
-    return None
 
 
 def _input_bytes(spark: SparkSession, df: DataFrame) -> int:
@@ -446,6 +430,9 @@ def run_extraction_job(
     input_format="iceberg" loads an Iceberg table name instead of a
     parquet path (same code path at scale: the warc_ts predicate then
     prunes bucket(warc_ts) partitions at the snapshot level).
+
+    The job runs in a clone of ``spark`` (``session.job_session``), which
+    keeps the split size it tunes: the caller's conf is never set.
     """
     if partitions is None:
         # ~4 map work-units per core: amortizes the wave tail whether
@@ -454,6 +441,7 @@ def run_extraction_job(
         partitions = 4 * spark.sparkContext.defaultParallelism
     lineage_path = os.path.join(output_path, "_lineage")
     data_path = os.path.join(output_path, "data")
+    spark = job_session(spark)
 
     if input_format == "warc" and single_pass and not since and not until:
         # fused shape (the scale path): parse + extract in ONE Python
@@ -466,10 +454,11 @@ def run_extraction_job(
         from zpdfspark.spark.warc_source import (binary_files,
                                                  warc_extract_arrow_batches)
         binary = binary_files(spark, input_path)
-        prebuilt_result = binary.select("path", "content").mapInArrow(
+        prebuilt_result = _extracted(
+            binary.select("path", "content"),
             warc_extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes,
                                        http_ok_only=http_ok_only),
-            EXTRACT_SCHEMA,
+            quality_gate,
         ).withColumn("bucket", bucket_of(F.col("url"), n_buckets))
         # split sizing reads only this binaryFile relation's file listing
         # (the archives the two-stage reader would list too), so no
@@ -487,35 +476,27 @@ def run_extraction_job(
             # bucket-granular idempotent overwrite is strictly better
             single_pass = False
         scan = df
-    prev_split_conf = None
     if not wants_blob_shuffle(repartition_blobs, salt, big_doc_bytes):
         # map-only path: scan splits are the work units — size them
-        prev_split_conf = _tune_scan_splits(spark, scan, partitions)
-
-    try:
-        return _run_buckets(spark, df, n_buckets, partitions, salt, resume,
-                            mode, max_doc_bytes, big_doc_bytes, single_pass,
-                            repartition_blobs, data_path, lineage_path,
-                            prebuilt_result=prebuilt_result,
-                            quality_gate=quality_gate)
-    finally:
-        if prev_split_conf is not None:
-            spark.conf.set("spark.sql.files.maxPartitionBytes",
-                           prev_split_conf)
+        _tune_scan_splits(spark, scan, partitions)
+    return _run_buckets(spark, df, n_buckets, partitions, salt, resume,
+                        extract_arrow_batches(mode,
+                                              max_doc_bytes=max_doc_bytes),
+                        big_doc_bytes, single_pass, repartition_blobs,
+                        data_path, lineage_path,
+                        prebuilt_result=prebuilt_result,
+                        quality_gate=quality_gate)
 
 
-def _document_frame(spark: SparkSession, input_path: str, input_format: str,
-                    n_buckets: int, since: Optional[str],
-                    until: Optional[str], http_ok_only: bool):
-    """The (url, html, bucket) frame the per-bucket and two-stage
-    single-pass paths extract from, and whether the input already carried
-    the bucket column."""
+def _load_documents(spark: SparkSession, input_path: str, input_format: str,
+                    since: Optional[str], until: Optional[str],
+                    http_ok_only: bool = False) -> DataFrame:
+    """The input's documents (url, warc_ts, html, ...) within
+    ``--since/--until``: an Iceberg table, the records of ``.warc.gz``
+    archives (one task per file, warc_source.py), or a parquet path."""
     if input_format == "iceberg":
         df = spark.read.format("iceberg").load(input_path)
     elif input_format == "warc":
-        # Common-Crawl-style ingestion: extraction straight off the
-        # .warc.gz archives (file = unit of parallelism; records parsed
-        # in-task, warc_source.py)
         from zpdfspark.spark.warc_source import warc_documents
         df = warc_documents(spark, input_path, http_ok_only=http_ok_only)
     else:
@@ -525,6 +506,17 @@ def _document_frame(spark: SparkSession, input_path: str, input_format: str,
         df = df.where(F.col("warc_ts") >= F.lit(since))
     if until:
         df = df.where(F.col("warc_ts") < F.lit(until))
+    return df
+
+
+def _document_frame(spark: SparkSession, input_path: str, input_format: str,
+                    n_buckets: int, since: Optional[str],
+                    until: Optional[str], http_ok_only: bool):
+    """The (url, html, bucket) frame the per-bucket and two-stage
+    single-pass paths extract from, and whether the input already carried
+    the bucket column."""
+    df = _load_documents(spark, input_path, input_format, since, until,
+                         http_ok_only)
     if "bucket" not in df.columns:
         return df.select("url", "html").withColumn(
             "bucket", bucket_of(F.col("url"), n_buckets)), False
@@ -544,62 +536,66 @@ def _document_frame(spark: SparkSession, input_path: str, input_format: str,
     return df, True
 
 
-def _run_buckets(spark, df, n_buckets, partitions, salt, resume, mode,
-                 max_doc_bytes, big_doc_bytes, single_pass,
-                 repartition_blobs, data_path, lineage_path,
-                 prebuilt_result=None,
+def _extracted(df: DataFrame, kernel, quality_gate: bool) -> DataFrame:
+    """``df`` through the extraction ``kernel`` (one ``mapInArrow`` to
+    EXTRACT_SCHEMA rows), plus the pure-JVM ``quality_keep`` column when
+    ``quality_gate`` (run_extraction_job docstring)."""
+    result = df.mapInArrow(kernel, EXTRACT_SCHEMA)
+    if quality_gate:
+        from zpdfspark.spark.streaming import gopher_keep_expr
+        result = result.withColumn("quality_keep", gopher_keep_expr())
+    return result
+
+
+def _run_buckets(spark, df, n_buckets, partitions, salt, resume, kernel,
+                 big_doc_bytes, single_pass, repartition_blobs, data_path,
+                 lineage_path, prebuilt_result=None,
                  quality_gate=False) -> dict:
     done = set(completed_buckets(spark, lineage_path)) if resume else set()
     todo = [b for b in range(n_buckets) if b not in done]
-    summary = {"buckets_total": n_buckets, "buckets_skipped": len(done),
-               "buckets_run": 0, "docs": 0, "errors": 0}
-
     if single_pass and todo:
-        return _run_single_pass(spark, df, todo, n_buckets, partitions, salt,
-                                mode, max_doc_bytes, big_doc_bytes, data_path,
-                                lineage_path, summary, repartition_blobs,
+        rows = _run_single_pass(spark, df, todo, n_buckets, partitions, salt,
+                                kernel, big_doc_bytes, data_path,
+                                lineage_path, repartition_blobs,
                                 prebuilt_result=prebuilt_result,
                                 quality_gate=quality_gate)
-
-    for bucket in todo:
-        t0 = time.time()
-        part = maybe_salted(df.where(F.col("bucket") == bucket).drop("bucket"),
-                            partitions, salt=salt, big_doc_bytes=big_doc_bytes,
-                            repartition_blobs=repartition_blobs)
-        result = part.mapInArrow(
-            extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes), EXTRACT_SCHEMA
-        )
-        if quality_gate:
-            from zpdfspark.spark.streaming import gopher_keep_expr
-            result = result.withColumn("quality_keep", gopher_keep_expr())
-        out_dir = os.path.join(data_path, f"bucket={bucket}")
-        # per-bucket lineage rolls up during the write, in the result
-        # stage above the writer exchange (a keyless REBALANCE that AQE
-        # sizes by bytes, module docstring) — see _lineage_rollup
-        out, sums = _lineage_rollup(
-            result.hint("rebalance").withColumn("bucket", F.lit(bucket)))
-        out.drop("bucket").write.mode("overwrite") \
-            .option("compression", PARQUET_COMPRESSION).parquet(out_dir)
-        lineage_row = _lineage_rows(
-            sums.value, [bucket], time.time() - t0,
-            time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            keep_empty=True)[0]
-        _append_lineage(spark, [lineage_row], lineage_path)
-        summary["buckets_run"] += 1
-        summary["docs"] += lineage_row["n_docs"]
-        summary["errors"] += lineage_row["n_errors"]
-    return summary
+    else:
+        rows = []
+        for bucket in todo:
+            t0 = time.time()
+            part = maybe_salted(
+                df.where(F.col("bucket") == bucket).drop("bucket"),
+                partitions, salt=salt, big_doc_bytes=big_doc_bytes,
+                repartition_blobs=repartition_blobs)
+            result = _extracted(part, kernel, quality_gate)
+            out_dir = os.path.join(data_path, f"bucket={bucket}")
+            # per-bucket lineage rolls up during the write, in the result
+            # stage above the writer exchange (a keyless REBALANCE that
+            # AQE sizes by bytes, module docstring) — see _lineage_rollup
+            out, sums = _lineage_rollup(
+                result.hint("rebalance").withColumn("bucket", F.lit(bucket)))
+            out.drop("bucket").write.mode("overwrite") \
+                .option("compression", PARQUET_COMPRESSION).parquet(out_dir)
+            rows += _lineage_rows(
+                sums.value, [bucket], time.time() - t0,
+                time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+                keep_empty=True)
+            _append_lineage(spark, rows[-1:], lineage_path)
+    return {"buckets_total": n_buckets, "buckets_skipped": len(done),
+            "buckets_run": len(rows), "docs": sum(r["n_docs"] for r in rows),
+            "errors": sum(r["n_errors"] for r in rows)}
 
 
-def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, mode,
-                     max_doc_bytes, big_doc_bytes, data_path, lineage_path,
-                     summary, repartition_blobs: bool = False,
-                     prebuilt_result=None,
-                     quality_gate=False) -> dict:
+def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, kernel,
+                     big_doc_bytes, data_path, lineage_path,
+                     repartition_blobs: bool = False, prebuilt_result=None,
+                     quality_gate=False) -> List[dict]:
     """One job over all pending buckets: a single source scan, output
-    partitioned by bucket, lineage appended per bucket afterwards.
-    `prebuilt_result` (fused-source kernels, e.g. WARC parse+extract)
-    skips the extraction step here and enters at the bucket filter."""
+    partitioned by bucket, lineage appended per bucket afterwards and
+    returned.
+    `prebuilt_result` (fused-source kernels, e.g. WARC parse+extract,
+    quality gate included) skips the extraction step here and enters at
+    the bucket filter."""
     t0 = time.time()
     if prebuilt_result is not None:
         result = prebuilt_result.where(F.col("bucket").isin(todo))
@@ -611,13 +607,8 @@ def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, mode,
         # than widening the kernel schema): the bucket expression is a
         # pure function of url, so recomputing it after extraction is
         # exact
-        result = part.drop("bucket").mapInArrow(
-            extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes),
-            EXTRACT_SCHEMA
-        ).withColumn("bucket", bucket_of(F.col("url"), n_buckets))
-    if quality_gate:
-        from zpdfspark.spark.streaming import gopher_keep_expr
-        result = result.withColumn("quality_keep", gopher_keep_expr())
+        result = _extracted(part.drop("bucket"), kernel, quality_gate) \
+            .withColumn("bucket", bucket_of(F.col("url"), n_buckets))
     # shuffle the EXTRACTED rows (text — ~10x smaller than the raw
     # blobs, which stay map-only) into one bucket-keyed exchange that AQE
     # sizes by bytes (module docstring): each bucket is written as one
@@ -640,13 +631,9 @@ def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, mode,
     wall = time.time() - t0
     finished = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
     lineage_rows = _lineage_rows(sums.value, todo, wall, finished)
-    for row in lineage_rows:
-        summary["buckets_run"] += 1
-        summary["docs"] += row["n_docs"]
-        summary["errors"] += row["n_errors"]
     if lineage_rows:
         _append_lineage(spark, lineage_rows, lineage_path)
-    return summary
+    return lineage_rows
 
 
 def parse_page_range(spec: str):
@@ -677,114 +664,88 @@ def run_format_job(spark: SparkSession, input_path: str, output_path: str,
                                       markdown_dataframe, metadata_dataframe,
                                       pages_dataframe)
 
-    if output_format == "cdx":
-        # CDX(J) index rows straight off the archives (the warc_cdx
-        # query as a CLI sink): sorted parquet under output/data — the
-        # relational form; --format zipnum is the clustered file form
-        if input_format != "warc":
-            raise ValueError("--format cdx requires --input-format warc")
-        if page_range is not None:
-            raise ValueError("--pages does not apply to --format cdx")
-        if since or until:
-            raise ValueError(
-                "--since/--until do not apply to --format cdx")
-        from zpdfspark.spark.warc_source import warc_cdx
-
-        data_path = os.path.join(output_path, "data")
-        out = warc_cdx(spark, input_path).orderBy("urlkey", "cdx_ts")
-        obs = Observation("cdx")
-        out.observe(obs, F.count(F.lit(1)).alias("rows")) \
-            .write.mode("overwrite") \
-            .option("compression", PARQUET_COMPRESSION).parquet(data_path)
-        return {"format": output_format, "rows": int(obs.get["rows"]),
-                "output": data_path}
-    if output_format == "zipnum":
-        # ZipNum-clustered CDX + cluster.idx (the CC secondary-index
-        # derivative); derives from archives, so the input must be WARC
-        if input_format != "warc":
-            raise ValueError("--format zipnum requires "
-                             "--input-format warc")
-        if page_range is not None:
-            raise ValueError("--pages does not apply to --format zipnum")
-        if since or until:
-            # the index is built straight from the archives (warc_cdx),
-            # not the filtered document frame — refuse rather than
-            # silently ignore the bounds
-            raise ValueError(
-                "--since/--until do not apply to --format zipnum")
-        from zpdfspark.spark.warc_sink import (write_cluster_idx,
-                                               write_zipnum)
-        from zpdfspark.spark.warc_source import warc_cdx
-
-        data_path = os.path.join(output_path, "data")
-        idx = write_zipnum(warc_cdx(spark, input_path), data_path,
-                           partitions=partitions).cache()
-        try:
-            blocks = idx.count()
-            n_lines = (idx.agg(F.sum("n_lines")).collect()[0][0]
-                       if blocks else 0)
-            cluster = write_cluster_idx(idx, data_path)
-        finally:
-            idx.unpersist()
-        return {"format": output_format, "rows": int(n_lines or 0),
-                "blocks": int(blocks), "cluster_idx": cluster,
-                "output": data_path}
-    if input_format == "iceberg":
-        df = spark.read.format("iceberg").load(input_path)
-    elif input_format == "warc":
-        # archive -> derivative in one job (the canonical Common Crawl
-        # WARC -> WET/WAT conversion); warc_documents yields the same
-        # (url, warc_ts, html) shape the parquet path reads
-        from zpdfspark.spark.warc_source import warc_documents
-
-        df = warc_documents(spark, input_path)
-    else:
-        df = spark.read.parquet(input_path)
-    if since:
-        df = df.where(F.col("warc_ts") >= F.lit(since))
-    if until:
-        df = df.where(F.col("warc_ts") < F.lit(until))
-    if output_format == "json":
-        out = document_json_dataframe(df, page_range=page_range)
-    elif output_format == "markdown":
-        out = markdown_dataframe(df, page_range=page_range)
-    elif output_format == "info":
-        # the `zpdf info` analog (main.zig:98-160): metadata + page
-        # count + encryption flag per document. Like the reference,
-        # info is a document-level report — a page range is a usage
-        # error, not something to silently ignore.
-        if page_range is not None:
-            raise ValueError("--pages does not apply to --format info")
-        out = metadata_dataframe(df)
-    elif output_format in ("wet", "wat", "jsonl"):
-        # derivative exports: *.warc.wet.gz conversion records /
-        # *.warc.wat.gz metadata records / *.jsonl.gz dataset-release
-        # shards (spark/warc_sink.py — fused mine+serialize+write, one
-        # file per partition, deterministic + idempotent)
-        if page_range is not None:
-            raise ValueError(
-                f"--pages does not apply to --format {output_format}")
-        from zpdfspark.spark.warc_sink import (write_jsonl, write_wat,
-                                               write_wet)
-
-        data_path = os.path.join(output_path, "data")
-        if output_format == "wet":
-            sink = write_wet(df, data_path, mode=mode,
-                             partitions=partitions)
-        elif output_format == "jsonl":
-            if "lang" not in df.columns:
-                df = df.withColumn("lang", F.lit(None).cast("string"))
-            sink = write_jsonl(df, data_path, mode=mode,
-                               partitions=partitions)
-        else:
-            sink = write_wat(df, data_path, partitions=partitions)
-        summaries = sink.collect()
-        return {"format": output_format,
-                "rows": int(sum(r["n_records"] for r in summaries)),
-                "files": len(summaries), "output": data_path}
-    else:  # per-page text rows for an explicit --pages range
-        out = pages_dataframe(df, page_range=page_range)
     data_path = os.path.join(output_path, "data")
+    if output_format in ("cdx", "zipnum"):
+        # CDX(J) index rows straight off the archives (the warc_cdx query
+        # as a CLI sink): cdx writes them as sorted parquet, the
+        # relational form; zipnum as ZipNum-clustered blocks plus
+        # cluster.idx, the CC secondary-index file form. Both read the
+        # archives, not the filtered document frame, so page ranges and
+        # --since/--until are refused rather than silently ignored.
+        if input_format != "warc":
+            raise ValueError(
+                f"--format {output_format} requires --input-format warc")
+        if page_range is not None:
+            raise ValueError(f"--pages does not apply to --format "
+                             f"{output_format}")
+        if since or until:
+            raise ValueError(f"--since/--until do not apply to --format "
+                             f"{output_format}")
+        from zpdfspark.spark.warc_source import warc_cdx
+
+        if output_format == "cdx":
+            out = warc_cdx(spark, input_path).orderBy("urlkey", "cdx_ts")
+        else:
+            from zpdfspark.spark.warc_sink import (write_cluster_idx,
+                                                   write_zipnum)
+
+            idx = write_zipnum(warc_cdx(spark, input_path), data_path,
+                               partitions=partitions).cache()
+            try:
+                blocks = idx.count()
+                n_lines = (idx.agg(F.sum("n_lines")).collect()[0][0]
+                           if blocks else 0)
+                cluster = write_cluster_idx(idx, data_path)
+            finally:
+                idx.unpersist()
+            return {"format": output_format, "rows": int(n_lines or 0),
+                    "blocks": int(blocks), "cluster_idx": cluster,
+                    "output": data_path}
+    else:
+        # WARC input converts archive -> derivative in one job (the
+        # canonical Common Crawl WARC -> WET/WAT conversion):
+        # warc_documents yields the same (url, warc_ts, html) shape the
+        # parquet path reads
+        df = _load_documents(spark, input_path, input_format, since, until)
+        if output_format == "json":
+            out = document_json_dataframe(df, page_range=page_range)
+        elif output_format == "markdown":
+            out = markdown_dataframe(df, page_range=page_range)
+        elif output_format == "info":
+            # the `zpdf info` analog (main.zig:98-160): metadata + page
+            # count + encryption flag per document. Like the reference,
+            # info is a document-level report — a page range is a usage
+            # error, not something to silently ignore.
+            if page_range is not None:
+                raise ValueError("--pages does not apply to --format info")
+            out = metadata_dataframe(df)
+        elif output_format in ("wet", "wat", "jsonl"):
+            # derivative exports: *.warc.wet.gz conversion records /
+            # *.warc.wat.gz metadata records / *.jsonl.gz dataset-release
+            # shards (spark/warc_sink.py — fused mine+serialize+write,
+            # one file per partition, deterministic + idempotent)
+            if page_range is not None:
+                raise ValueError(
+                    f"--pages does not apply to --format {output_format}")
+            from zpdfspark.spark.warc_sink import (write_jsonl, write_wat,
+                                                   write_wet)
+
+            if output_format == "wet":
+                sink = write_wet(df, data_path, mode=mode,
+                                 partitions=partitions)
+            elif output_format == "jsonl":
+                if "lang" not in df.columns:
+                    df = df.withColumn("lang", F.lit(None).cast("string"))
+                sink = write_jsonl(df, data_path, mode=mode,
+                                   partitions=partitions)
+            else:
+                sink = write_wat(df, data_path, partitions=partitions)
+            summaries = sink.collect()
+            return {"format": output_format,
+                    "rows": int(sum(r["n_records"] for r in summaries)),
+                    "files": len(summaries), "output": data_path}
+        else:  # per-page text rows for an explicit --pages range
+            out = pages_dataframe(df, page_range=page_range)
     obs = Observation("fmt")
     out.observe(obs, F.count(F.lit(1)).alias("rows")) \
         .write.mode("overwrite") \

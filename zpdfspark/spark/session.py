@@ -71,6 +71,16 @@ def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
+def job_session(spark: SparkSession) -> SparkSession:
+    """A copy of ``spark`` for one library job to set its tuned conf on:
+    the JVM's ``cloneSession()``, reached through py4j (PySpark does not
+    expose it). It starts with the caller's runtime conf (which
+    ``newSession()`` drops), copies the caller's temp views when it first
+    resolves a name, and shares the SparkContext, worker daemon and
+    cache. Conf set on it never reaches the caller's queries."""
+    return SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+
+
 def get_spark(
     cores: int | str = "*",
     app_name: str = "zpdfspark",

@@ -24,6 +24,7 @@ import json
 import time
 
 import pyarrow as pa
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -75,6 +76,23 @@ def _errors_pa_type():
             ("kind", pa.string()), ("offset", pa.int64()), ("message", pa.string()),
         ]))
     return _ERRORS_PA_TYPE
+
+
+class BucketSums(AccumulatorParam):
+    """pipeline._lineage_rollup's accumulator: ``{bucket: [n_docs,
+    *_LINEAGE_SUMS sums]}``. Defined here, a module every Python worker
+    already imports, because a worker unpickling the accumulator imports
+    its class's module: pipeline.py would cost a fresh worker ~10 ms."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, sums, more):
+        for bucket, add in more.items():
+            have = sums.get(bucket)
+            sums[bucket] = list(add) if have is None else [
+                a + b for a, b in zip(have, add)]
+        return sums
 
 
 def extract_arrow_batches(mode: str = "accuracy", max_doc_bytes: int = 0,
