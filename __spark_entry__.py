@@ -11,7 +11,9 @@ tables. Extraction kernels operate on the self-carried-oracle PDF
 corpus (FIXTURES.md §1) generated deterministically at a scale matched
 to the sf directory; the accuracy/fast queries additionally compute the
 byte-parity verdict IN-KERNEL (`matches_oracle`), keeping those queries
-map-only.
+map-only. The per-format metadata queries (video_stats, mp3_stats and
+the Python-kernel *_meta queries) are declared as one ``_parsed_meta``
+row each in the "per-format metadata queries" section below.
 """
 
 from __future__ import annotations
@@ -360,26 +362,10 @@ def _q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kernel/tiff.py, all four fixture compressions); mp3/ogg/flac
     audio frames and video remain honestly stubbed (no codec libs in
     this container) while the Spark-side schema/batching is the same
-    either way."""
-    from zpdfspark.kernel.bmp import BmpError
-    from zpdfspark.kernel.docx import DocxError
-    from zpdfspark.kernel.epub import EpubError
-    from zpdfspark.kernel.gif import GifError
-    from zpdfspark.kernel.ico import IcoError
-    from zpdfspark.kernel.odp import OdpError
-    from zpdfspark.kernel.ods import OdsError
-    from zpdfspark.kernel.odt import OdtError
-    from zpdfspark.kernel.pptx import PptxError
-    from zpdfspark.kernel.rtf import RtfError
-    from zpdfspark.kernel.svg import SvgError
-    from zpdfspark.kernel.tar import TarError
-    from zpdfspark.kernel.xlsx import XlsxError
+    either way. Any decoder error (media.DECODE_ERRORS) gives
+    decode_ok=False, never a task failure."""
     from zpdfspark.kernel.htmltext import looks_like_html
-    from zpdfspark.kernel.jpeg import JpegError
-    from zpdfspark.kernel.png import PngError
-    from zpdfspark.kernel.tiff import TiffError
-    from zpdfspark.kernel.wav import WavError
-    from zpdfspark.spark.media import decode_media, sniff_kind
+    from zpdfspark.spark.media import DECODE_ERRORS, decode_media, sniff_kind
 
     def per_row(url, raw):
         # the shared magic-byte sniffer, plus the corpus kinds it does
@@ -391,10 +377,7 @@ def _q_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         if kind != "pdf":
             try:
                 decode_media(raw, kind)
-            except (NotImplementedError, PngError, JpegError, WavError,
-                    GifError, TiffError, BmpError, DocxError, EpubError,
-                    XlsxError, OdtError, OdsError, OdpError, PptxError,
-                    RtfError, SvgError, IcoError, TarError):
+            except DECODE_ERRORS:
                 ok = False
         yield url, len(raw), kind, ok
 
@@ -412,11 +395,7 @@ def _q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a decoder dimension/upsample/channel bug breaks the hash. Map-only:
     the kernel filters by magic bytes before decoding; blobs never
     shuffle."""
-    from zpdfspark.kernel.bmp import BmpError
-    from zpdfspark.kernel.gif import GifError
-    from zpdfspark.kernel.jpeg import JpegError
-    from zpdfspark.kernel.png import PngError
-    from zpdfspark.spark.media import decode_media, sniff_kind
+    from zpdfspark.spark.media import DECODE_ERRORS, decode_media, sniff_kind
 
     def per_row(url, raw):
         kind = sniff_kind(raw)
@@ -424,7 +403,7 @@ def _q_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         try:
             w, h, c, _px = decode_media(raw, kind)
-        except (PngError, JpegError, GifError, BmpError):
+        except DECODE_ERRORS:
             return
         yield (url, w, h, c)
 
@@ -4429,31 +4408,6 @@ def _q_media_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embed_dataframe(d).orderBy("doc_id")
 
 
-def _q_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video METADATA extraction for MP4 payloads (kernel/mp4.py
-    ISO BMFF box walk): duration, track count, display dims per
-    container — the layer a crawl pipeline extracts from video WITHOUT
-    codecs (frame decode remains the honest stub in spark/media.py).
-    Map-only: the kernel filters by the ftyp magic before parsing;
-    blobs never shuffle. Oracle: the corpus-carried columns from an
-    INDEPENDENT fixtures-side box re-read (fixtures._mp4_expected)."""
-    from zpdfspark.kernel.mp4 import Mp4Error, parse_mp4
-
-    def per_row(url, raw):
-        if len(raw) < 12 or raw[4:8] != b"ftyp":
-            return
-        try:
-            meta = parse_mp4(raw)
-        except Mp4Error:
-            return
-        yield (url, meta["duration_ms"], meta["n_tracks"], meta["width"],
-               meta["height"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, duration_ms long, n_tracks int, width int, height int")
-
-
 def _q_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXIF metadata for JPEG payloads (kernel/exif.py APP1/TIFF IFD
     walk): orientation (rotation-aware dedup needs it), camera make,
@@ -4535,470 +4489,253 @@ def _q_mime_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_djvu_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DjVu container census (r5) — the legacy scanned-book format
-    archive crawls still hit (kernel/djvu.py: IFF85 chunk walk with
-    even-padding, DIRM component count for multipage, INFO geometry
-    with the format's little-endian dpi quirk). Page-image decode is
-    IW44/JB2 — honestly out of scope (the PostScript rule): census
-    only. Map-only map_rows on the pruned (url, html) scan.
-    Oracle: corpus-carried columns from the INDEPENDENT fixtures-side
-    flat offset re-read (fixtures._djvu_expected)."""
-    from zpdfspark.kernel.djvu import DjvuError, is_djvu, parse_djvu
-
-    def per_row(url, raw):
-        if not is_djvu(raw):
-            return
-        try:
-            m = parse_djvu(raw)
-        except DjvuError:
-            return
-        yield (url, m["is_multi"], m["n_pages"], m["width"], m["height"],
-               m["dpi"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, is_multi boolean, n_pages int, width int, "
-        "height int, dpi int")
-
-
-def _q_mp3_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio METADATA extraction for MP3 payloads (kernel/mp3.py
-    frame-header walk): frames, rate, channels, duration, mean bitrate
-    per stream — without any audio decode (the codec layer stays
-    honestly stubbed). Map-only, magic-filtered in-kernel; oracle: the
-    corpus-carried columns from an INDEPENDENT fixtures-side header
-    walk (fixtures._mp3_expected)."""
-    from zpdfspark.kernel.mp3 import Mp3Error, parse_mp3
-
-    def per_row(url, raw):
-        is_mp3 = raw[:3] == b"ID3" or (
-            len(raw) >= 2 and raw[0] == 0xFF
-            and (raw[1] & 0xE0) == 0xE0)
-        if not is_mp3:
-            return
-        try:
-            meta = parse_mp3(raw)
-        except Mp3Error:
-            return
-        yield (url, meta["n_frames"], meta["sample_rate"], meta["channels"],
-               meta["duration_ms"], meta["mean_bitrate_kbps"], meta["title"],
-               meta["artist"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_frames int, sample_rate int, n_channels int, "
-        "duration_ms long, kbps int, title string, artist string")
-
-
-def _q_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio METADATA extraction for FLAC payloads (kernel/flac.py
-    block walk, r5): stream identity (rate/channels/bits/samples/
-    duration) + Vorbis-comment tags, without any audio-frame decode
-    (the codec layer stays honestly stubbed). Map-only, magic-filtered
-    in-kernel; oracle: corpus-carried columns from the INDEPENDENT
-    fixtures-side block re-read (fixtures._flac_expected)."""
-    from zpdfspark.kernel.flac import FlacError, parse_flac
-
-    def per_row(url, raw):
-        if raw[:4] != b"fLaC":
-            return
-        try:
-            m = parse_flac(raw)
-        except FlacError:
-            return
-        yield (url, m["sample_rate"], m["channels"], m["bits_per_sample"],
-               m["total_samples"], m["duration_ms"], m["title"], m["artist"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, sample_rate int, n_channels int, bits int, "
-        "total_samples long, duration_ms long, title string, artist string")
-
-
-def _q_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL container METADATA extraction for Ogg payloads
-    (kernel/ogg.py, r5): CRC-verified page walk + Vorbis/Opus
-    identification and comment headers — codec, channels, rate,
-    page count, terminal-granule duration, tags. Packet audio decode
-    stays honestly stubbed. Map-only, magic-filtered in-kernel;
-    oracle: corpus-carried columns from the INDEPENDENT fixtures-side
-    page re-read (fixtures._ogg_expected)."""
-    from zpdfspark.kernel.ogg import OggError, parse_ogg
-
-    def per_row(url, raw):
-        if raw[:4] != b"OggS":
-            return
-        try:
-            m = parse_ogg(raw)
-        except OggError:
-            return
-        yield (url, m["codec"], m["channels"], m["sample_rate"], m["n_pages"],
-               m["duration_ms"], m["title"], m["artist"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, codec string, n_channels int, sample_rate int, "
-        "n_pages int, duration_ms long, title string, artist string")
-
-
-def _q_tiff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image METADATA extraction for standalone TIFF payloads
-    (kernel/tiff.py IFD-chain walk, r5 — the same structure
-    kernel/exif.py walks inside JPEG APP1, unwrapped): dimensions,
-    depth, compression scheme, page count, description. Strip/pixel
-    decode stays honestly stubbed. Map-only, magic-filtered in-kernel;
-    oracle: corpus-carried columns from the INDEPENDENT fixtures-side
-    flat IFD re-read (fixtures._tiff_expected)."""
-    from zpdfspark.kernel.tiff import TiffError, parse_tiff
-
-    def per_row(url, raw):
-        if raw[:4] not in (b"II*\x00", b"MM\x00*"):
-            return
-        try:
-            m = parse_tiff(raw)
-        except TiffError:
-            return
-        yield (url, m["width"], m["height"], m["bits_per_sample"],
-               m["compression"], m["n_pages"], m["description"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, width int, height int, bits int, "
-        "compression string, n_pages int, description string")
-
-
-def _q_docx_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Office-document (DOCX) structure + core-property extraction over
-    the from-scratch ZIP walk (kernel/ziparc.py central directory +
-    kernel/docx.py WordprocessingML parse, r5). The extracted TEXT
-    itself rides the flagship extraction family — extract_any
-    dispatches PK packages to parse_docx, so extract_accuracy/fast/
-    parity already value-pin docx text against generator truth; this
-    query pins the package-level facts. Map-only map_rows on the
-    pruned (url, html) scan, magic-filtered in-kernel — the 100 TB
-    plan is a scan + project, no exchange before the sink. Oracle:
-    corpus-carried columns from the INDEPENDENT fixtures-side re-read
-    (fixtures._docx_expected — stdlib zipfile container + narrow
-    regexes; the Spark path never touches stdlib zipfile)."""
-    from zpdfspark.kernel.docx import DocxError, is_docx, parse_docx
-
-    def per_row(url, raw):
-        if raw[:4] != b"PK\x03\x04" or not is_docx(raw):
-            return
-        try:
-            m = parse_docx(raw)
-        except DocxError:
-            return
-        yield (url, m["n_paragraphs"], m["n_entries"], m["title"],
-               m["creator"], len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_paragraphs int, n_entries int, title string, "
-        "creator string, n_text_chars int")
-
-
-def _q_epub_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EPUB package extraction (kernel/epub.py spine walk over the
-    from-scratch kernel/ziparc.py container read, r5): chapter count,
-    entry count, OPF dc:title/dc:creator, text length. The spine-
-    ordered TEXT itself (chapters joined \\x0c — the PDF page-join
-    rule) rides the flagship extraction family via extract_any.
-    Map-only map_rows on the pruned (url, html) scan. Oracle:
-    corpus-carried columns from the INDEPENDENT fixtures-side stdlib
-    re-read (fixtures._epub_expected)."""
-    from zpdfspark.kernel.epub import EpubError, is_epub, parse_epub
-
-    def per_row(url, raw):
-        if raw[:4] != b"PK\x03\x04" or not is_epub(raw):
-            return
-        try:
-            m = parse_epub(raw)
-        except EpubError:
-            return
-        yield (url, m["n_chapters"], m["n_entries"], m["title"], m["creator"],
-               len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_chapters int, n_entries int, title string, "
-        "creator string, n_text_chars int")
-
-
-def _q_xlsx_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SpreadsheetML extraction facts (kernel/xlsx.py over the
-    from-scratch ziparc walk, r5): sheet/cell/entry counts, workbook-
-    ordered sheet names (resolved through workbook.xml.rels), core
-    title, text length. Sheet TEXT (cells TAB-joined, rows newline-
-    joined, sheets \\x0c-joined) rides the flagship extraction family
-    via extract_any. Map-only map_rows on the pruned (url, html)
-    scan. Oracle: corpus-carried columns from the INDEPENDENT
-    fixtures-side stdlib re-read (fixtures._xlsx_expected)."""
-    from zpdfspark.kernel.xlsx import XlsxError, is_xlsx, parse_xlsx
-
-    def per_row(url, raw):
-        if raw[:4] != b"PK\x03\x04" or not is_xlsx(raw):
-            return
-        try:
-            m = parse_xlsx(raw)
-        except XlsxError:
-            return
-        yield (url, m["n_sheets"], m["n_cells"], m["n_entries"], m["title"],
-               m["sheet_names"], len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_sheets int, n_cells int, n_entries int, "
-        "title string, sheet_names array<string>, n_text_chars int")
-
-
-def _q_pptx_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PresentationML extraction facts (kernel/pptx.py over the
-    from-scratch ziparc walk, r5 — completes the OOXML trio with
-    docx/xlsx): slide/shape/entry counts, core title, text length.
-    Slide TEXT (shape paragraphs newline-joined, slides \\x0c-joined)
-    rides the flagship extraction family via extract_any. Map-only
-    map_rows on the pruned (url, html) scan. Oracle: corpus-carried
-    columns from the INDEPENDENT fixtures-side stdlib re-read
-    (fixtures._pptx_expected)."""
-    from zpdfspark.kernel.pptx import PptxError, is_pptx, parse_pptx
-
-    def per_row(url, raw):
-        if raw[:4] != b"PK\x03\x04" or not is_pptx(raw):
-            return
-        try:
-            m = parse_pptx(raw)
-        except PptxError:
-            return
-        yield (url, m["n_slides"], m["n_shapes"], m["n_entries"], m["title"],
-               len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_slides int, n_shapes int, n_entries int, "
-        "title string, n_text_chars int")
-
-
-def _q_rtf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RTF extraction facts (kernel/rtf.py, r5 — the legacy rich-text
-    format crawls still carry): paragraph count (\\par tokens), info
-    title, text length. Visible TEXT (codepage \\'hh + \\uN/\\uc
-    decode, destination skipping, \\page -> \\x0c) rides the flagship
-    extraction family via extract_any. Map-only map_rows on the
-    pruned (url, html) scan. Oracle: corpus-carried columns from the
-    INDEPENDENT fixtures-side narrow regex re-read
-    (fixtures._rtf_expected)."""
-    from zpdfspark.kernel.rtf import RtfError, is_rtf, parse_rtf
-
-    def per_row(url, raw):
-        if not is_rtf(raw):
-            return
-        try:
-            m = parse_rtf(raw)
-        except RtfError:
-            return
-        yield (url, m["n_paragraphs"], m["title"], len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_paragraphs int, title string, n_text_chars int")
-
-
-def _q_odt_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OpenDocument text extraction facts (kernel/odt.py, r5):
-    paragraph/entry counts, meta.xml dc:title/dc:creator, text
-    length; paragraph TEXT rides the flagship extraction family via
-    extract_any. Map-only map_rows on the pruned (url, html) scan.
-    Oracle: corpus-carried columns from the INDEPENDENT fixtures-side
-    stdlib re-read (fixtures._odt_expected)."""
-    from zpdfspark.kernel.odt import OdtError, is_odt, parse_odt
-
-    def per_row(url, raw):
-        if raw[:4] != b"PK\x03\x04" or not is_odt(raw):
-            return
-        try:
-            m = parse_odt(raw)
-        except OdtError:
-            return
-        yield (url, m["n_paragraphs"], m["n_entries"], m["title"],
-               m["creator"], len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_paragraphs int, n_entries int, title string, "
-        "creator string, n_text_chars int")
-
-
-def _q_ods_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OpenDocument spreadsheet extraction facts (kernel/ods.py, r5 —
-    completes the ODF trio): sheet/expanded-cell/entry counts,
-    meta.xml dc:title/dc:creator, text length; grid TEXT (cells TAB,
-    rows newline, sheets \\x0c — the kernel/xlsx.py reduction rule)
-    rides the flagship extraction family via extract_any. Map-only
-    map_rows on the pruned (url, html) scan. Oracle: corpus-carried
-    columns from the INDEPENDENT fixtures-side stdlib re-read
-    (fixtures._ods_expected)."""
-    from zpdfspark.kernel.ods import OdsError, is_ods, parse_ods
-
-    def per_row(url, raw):
-        if raw[:4] != b"PK\x03\x04" or not is_ods(raw):
-            return
-        try:
-            m = parse_ods(raw)
-        except OdsError:
-            return
-        yield (url, m["n_sheets"], m["n_cells"], m["n_entries"], m["title"],
-               m["creator"], len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_sheets int, n_cells int, n_entries int, "
-        "title string, creator string, n_text_chars int")
-
-
-def _q_odp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OpenDocument presentation extraction facts (kernel/odp.py, r5 —
-    the ODF sibling of pptx_meta): slide/frame/entry counts, meta.xml
-    dc:title/dc:creator, text length; slide TEXT (paragraphs/frames
-    newline, slides \\x0c — the kernel/pptx.py reduction rule) rides
-    the flagship extraction family via extract_any. Map-only
-    map_rows on the pruned (url, html) scan. Oracle: corpus-carried
-    columns from the INDEPENDENT fixtures-side stdlib re-read
-    (fixtures._odp_expected)."""
-    from zpdfspark.kernel.odp import OdpError, is_odp, parse_odp
-
-    def per_row(url, raw):
-        if raw[:4] != b"PK\x03\x04" or not is_odp(raw):
-            return
-        try:
-            m = parse_odp(raw)
-        except OdpError:
-            return
-        yield (url, m["n_slides"], m["n_frames"], m["n_entries"], m["title"],
-               m["creator"], len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_slides int, n_frames int, n_entries int, "
-        "title string, creator string, n_text_chars int")
-
-
-def _q_eml_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MIME email extraction facts (kernel/eml.py, r5 — mailing-list
-    archives are a classic LLM-training text source): RFC 2047-decoded
-    subject, sender address, RFC 5322 date as epoch seconds, MIME part
-    count (the stdlib email.walk() convention), text length. Body TEXT
-    (qp/base64 transfer decode, multipart walk, plain-over-html
-    selection) rides the flagship extraction family via extract_any.
-    Map-only map_rows on the pruned (url, html) scan. Oracle:
-    corpus-carried columns from the INDEPENDENT stdlib email-package
-    re-read (fixtures._eml_expected)."""
-    from zpdfspark.kernel.eml import EmlError, is_eml, parse_eml
-
-    def per_row(url, raw):
-        if not is_eml(raw):
-            return
-        try:
-            m = parse_eml(raw)
-        except EmlError:
-            return
-        yield (url, m["subject"], m["from_addr"], m["date_ts"], m["n_parts"],
-               len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, subject string, from_addr string, date_ts long, "
-        "n_parts int, n_text_chars int")
-
-
-def _q_mbox_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mbox archive census (kernel/eml.py::parse_mbox, r5): message
-    count, first subject/sender, span of parseable RFC 5322 dates. An
-    archive of messages is not one document (the tar rule) — census
-    only, mboxrd >From-quoting reversed per message. Map-only
-    map_rows on the pruned (url, html) scan. Oracle: corpus-carried
-    columns from the INDEPENDENT stdlib mailbox.mbox re-read
-    (fixtures._mbox_expected)."""
-    from zpdfspark.kernel.eml import EmlError, is_mbox, parse_mbox
-
-    def per_row(url, raw):
-        if not is_mbox(raw):
-            return
-        try:
-            m = parse_mbox(raw)
-        except EmlError:
-            return
-        yield (url, m["n_messages"], m["first_subject"], m["first_from"],
-               m["min_date_ts"], m["max_date_ts"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_messages int, first_subject string, "
-        "first_from string, min_date_ts long, max_date_ts long")
-
-
-
-def _q_subtitle_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Subtitle extraction facts (kernel/subtitles.py, r5 — the
-    OpenSubtitles/caption lineage of LLM training text): container
-    kind (srt/vtt), cue count, last-cue end as duration. Transcript
-    TEXT (tag/override strip, NOTE/STYLE skip, karaoke timestamps)
-    rides the flagship extraction family via extract_any. Map-only
-    map_rows on the pruned (url, html) scan. Oracle: corpus-carried
-    columns from the INDEPENDENT fixtures-side flat regex re-read
-    (fixtures._subtitle_expected)."""
-    from zpdfspark.kernel.subtitles import (SubtitleError,
-                                            looks_like_srt,
-                                            looks_like_vtt,
-                                            parse_subtitles)
-
-    def per_row(url, raw):
-        if not (looks_like_vtt(raw) or looks_like_srt(raw)):
-            return
-        try:
-            m = parse_subtitles(raw)
-        except SubtitleError:
-            return
-        yield (url, m["kind"], m["n_cues"], m["duration_ms"], len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, kind string, n_cues int, duration_ms long, "
-        "n_text_chars int")
-
-
-
-def _q_ipynb_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jupyter notebook mining (kernel/ipynb.py, r5 — the code-LLM
-    data source): cell census, kernel language (kernelspec precedence,
-    language_info fallback), nbformat version. Cell-source TEXT
-    (markdown+code, raw/outputs excluded) rides the flagship
-    extraction family via extract_any. Map-only map_rows on the
-    pruned (url, html) scan. Oracle: GENUINELY TWO-ENGINE — DuckDB
-    re-mines the same bytes with its own JSON engine
-    (decode(html)::JSON + json_array_length/json_extract), no carried
-    truth for any JSON-derived field."""
-    from zpdfspark.kernel.ipynb import (IpynbError, looks_like_ipynb,
-                                        parse_ipynb)
-
-    def per_row(url, raw):
-        if not looks_like_ipynb(raw):
-            return
-        try:
-            m = parse_ipynb(raw)
-        except IpynbError:
-            return
-        yield (url, m["n_cells"], m["n_code"], m["n_markdown"], m["language"],
-               m["nbformat"], len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_cells int, n_code int, n_markdown int, "
-        "language string, nbformat int, n_text_chars int")
-
-
-
+# =========================================================================
+# per-format metadata queries
+# =========================================================================
+
+
+def _parsed_meta(kernel: str, accept, parse: str, error: str, row,
+                 schema: str):
+    """The query shape of one per-format metadata kernel. ``per_row``
+    keeps the payloads ``accept(k, raw)`` admits, where ``k`` is the
+    module ``zpdfspark.kernel.<kernel>``; parses each with
+    ``k.<parse>``; drops the ones that raise ``k.<error>``; and yields
+    ``(url, *row(m))`` typed ``url string, <schema>``. The kernel module
+    is imported when the query runs, never when this file loads, and
+    ``_map_blobs`` (map-only map_rows on the pruned (url, html) scan) is
+    looked up then too."""
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        import importlib
+
+        k = importlib.import_module(f"zpdfspark.kernel.{kernel}")
+        fn, err = getattr(k, parse), getattr(k, error)
+
+        def per_row(url, raw):
+            if not accept(k, raw):
+                return
+            try:
+                m = fn(raw)
+            except err:
+                return
+            yield (url, *row(m))
+
+        return _map_blobs(spark, sf_dir, per_row, "url string, " + schema)
+
+    return query
+
+
+# The per-format metadata queries, one _parsed_meta row each: kernel
+# module, accept predicate, parse function, error class, output fields
+# and their schema. Each accept predicate is the query's own magic-byte
+# filter, not ``sniff_kind(raw) == kind``, whose precedence differs.
+# Container and header facts only: the extracted TEXT of the document
+# kinds rides the extraction family (extract_any), and no codec decodes
+# audio, video or pixels here. Unless a row says otherwise, the oracle
+# is corpus-carried columns from an independent fixtures-side re-read
+# (fixtures._<kind>_expected), never the kernel.
+_ZIP = b"PK\x03\x04"
+
+# MP4 ISO BMFF box walk; frame decode stubbed. Oracle: _mp4_expected
+_q_video_stats = _parsed_meta(
+    "mp4", lambda k, raw: len(raw) >= 12 and raw[4:8] == b"ftyp",
+    "parse_mp4", "Mp4Error",
+    lambda m: (m["duration_ms"], m["n_tracks"], m["width"], m["height"]),
+    "duration_ms long, n_tracks int, width int, height int")
+# MP3 frame-header walk; audio decode stubbed. Oracle: _mp3_expected
+_q_mp3_stats = _parsed_meta(
+    "mp3", lambda k, raw: raw[:3] == b"ID3" or (
+        len(raw) >= 2 and raw[0] == 0xFF and (raw[1] & 0xE0) == 0xE0),
+    "parse_mp3", "Mp3Error",
+    lambda m: (m["n_frames"], m["sample_rate"], m["channels"],
+               m["duration_ms"], m["mean_bitrate_kbps"], m["title"],
+               m["artist"]),
+    "n_frames int, sample_rate int, n_channels int, duration_ms long, "
+    "kbps int, title string, artist string")
+# DjVu IFF85 census; IW44/JB2 page decode out of scope. Oracle: _djvu_expected
+_q_djvu_meta = _parsed_meta(
+    "djvu", lambda k, raw: k.is_djvu(raw), "parse_djvu", "DjvuError",
+    lambda m: (m["is_multi"], m["n_pages"], m["width"], m["height"],
+               m["dpi"]),
+    "is_multi boolean, n_pages int, width int, height int, dpi int")
+# FLAC blocks + Vorbis comments; frame decode stubbed. Oracle: _flac_expected
+_q_flac_meta = _parsed_meta(
+    "flac", lambda k, raw: raw[:4] == b"fLaC", "parse_flac", "FlacError",
+    lambda m: (m["sample_rate"], m["channels"], m["bits_per_sample"],
+               m["total_samples"], m["duration_ms"], m["title"],
+               m["artist"]),
+    "sample_rate int, n_channels int, bits int, total_samples long, "
+    "duration_ms long, title string, artist string")
+# Ogg pages + Vorbis/Opus headers; packet decode stubbed. Oracle: _ogg_expected
+_q_ogg_meta = _parsed_meta(
+    "ogg", lambda k, raw: raw[:4] == b"OggS", "parse_ogg", "OggError",
+    lambda m: (m["codec"], m["channels"], m["sample_rate"], m["n_pages"],
+               m["duration_ms"], m["title"], m["artist"]),
+    "codec string, n_channels int, sample_rate int, n_pages int, "
+    "duration_ms long, title string, artist string")
+# TIFF IFD chain (strips decode in media.decode_media). Oracle: _tiff_expected
+_q_tiff_meta = _parsed_meta(
+    "tiff", lambda k, raw: raw[:4] in (b"II*\x00", b"MM\x00*"),
+    "parse_tiff", "TiffError",
+    lambda m: (m["width"], m["height"], m["bits_per_sample"],
+               m["compression"], m["n_pages"], m["description"]),
+    "width int, height int, bits int, compression string, n_pages int, "
+    "description string")
+# DOCX over the kernel/ziparc.py walk. Oracle: _docx_expected (stdlib zipfile)
+_q_docx_meta = _parsed_meta(
+    "docx", lambda k, raw: raw[:4] == _ZIP and k.is_docx(raw),
+    "parse_docx", "DocxError",
+    lambda m: (m["n_paragraphs"], m["n_entries"], m["title"], m["creator"],
+               len(m["text"])),
+    "n_paragraphs int, n_entries int, title string, creator string, "
+    "n_text_chars int")
+# EPUB spine walk. Oracle: _epub_expected (stdlib re-read)
+_q_epub_meta = _parsed_meta(
+    "epub", lambda k, raw: raw[:4] == _ZIP and k.is_epub(raw),
+    "parse_epub", "EpubError",
+    lambda m: (m["n_chapters"], m["n_entries"], m["title"], m["creator"],
+               len(m["text"])),
+    "n_chapters int, n_entries int, title string, creator string, "
+    "n_text_chars int")
+# SpreadsheetML. Oracle: _xlsx_expected (stdlib re-read)
+_q_xlsx_meta = _parsed_meta(
+    "xlsx", lambda k, raw: raw[:4] == _ZIP and k.is_xlsx(raw),
+    "parse_xlsx", "XlsxError",
+    lambda m: (m["n_sheets"], m["n_cells"], m["n_entries"], m["title"],
+               m["sheet_names"], len(m["text"])),
+    "n_sheets int, n_cells int, n_entries int, title string, "
+    "sheet_names array<string>, n_text_chars int")
+# PresentationML. Oracle: _pptx_expected (stdlib re-read)
+_q_pptx_meta = _parsed_meta(
+    "pptx", lambda k, raw: raw[:4] == _ZIP and k.is_pptx(raw),
+    "parse_pptx", "PptxError",
+    lambda m: (m["n_slides"], m["n_shapes"], m["n_entries"], m["title"],
+               len(m["text"])),
+    "n_slides int, n_shapes int, n_entries int, title string, "
+    "n_text_chars int")
+# RTF. Oracle: _rtf_expected (narrow regex re-read)
+_q_rtf_meta = _parsed_meta(
+    "rtf", lambda k, raw: k.is_rtf(raw), "parse_rtf", "RtfError",
+    lambda m: (m["n_paragraphs"], m["title"], len(m["text"])),
+    "n_paragraphs int, title string, n_text_chars int")
+# OpenDocument text. Oracle: _odt_expected (stdlib re-read)
+_q_odt_meta = _parsed_meta(
+    "odt", lambda k, raw: raw[:4] == _ZIP and k.is_odt(raw),
+    "parse_odt", "OdtError",
+    lambda m: (m["n_paragraphs"], m["n_entries"], m["title"], m["creator"],
+               len(m["text"])),
+    "n_paragraphs int, n_entries int, title string, creator string, "
+    "n_text_chars int")
+# OpenDocument spreadsheet. Oracle: _ods_expected (stdlib re-read)
+_q_ods_meta = _parsed_meta(
+    "ods", lambda k, raw: raw[:4] == _ZIP and k.is_ods(raw),
+    "parse_ods", "OdsError",
+    lambda m: (m["n_sheets"], m["n_cells"], m["n_entries"], m["title"],
+               m["creator"], len(m["text"])),
+    "n_sheets int, n_cells int, n_entries int, title string, "
+    "creator string, n_text_chars int")
+# OpenDocument presentation. Oracle: _odp_expected (stdlib re-read)
+_q_odp_meta = _parsed_meta(
+    "odp", lambda k, raw: raw[:4] == _ZIP and k.is_odp(raw),
+    "parse_odp", "OdpError",
+    lambda m: (m["n_slides"], m["n_frames"], m["n_entries"], m["title"],
+               m["creator"], len(m["text"])),
+    "n_slides int, n_frames int, n_entries int, title string, "
+    "creator string, n_text_chars int")
+# MIME email. Oracle: _eml_expected (stdlib email package)
+_q_eml_meta = _parsed_meta(
+    "eml", lambda k, raw: k.is_eml(raw), "parse_eml", "EmlError",
+    lambda m: (m["subject"], m["from_addr"], m["date_ts"], m["n_parts"],
+               len(m["text"])),
+    "subject string, from_addr string, date_ts long, n_parts int, "
+    "n_text_chars int")
+# mbox census (an archive is not one document). Oracle: _mbox_expected
+_q_mbox_meta = _parsed_meta(
+    "eml", lambda k, raw: k.is_mbox(raw), "parse_mbox", "EmlError",
+    lambda m: (m["n_messages"], m["first_subject"], m["first_from"],
+               m["min_date_ts"], m["max_date_ts"]),
+    "n_messages int, first_subject string, first_from string, "
+    "min_date_ts long, max_date_ts long")
+# SRT/VTT cues. Oracle: _subtitle_expected (flat regex re-read)
+_q_subtitle_meta = _parsed_meta(
+    "subtitles", lambda k, raw: k.looks_like_vtt(raw) or k.looks_like_srt(raw),
+    "parse_subtitles", "SubtitleError",
+    lambda m: (m["kind"], m["n_cues"], m["duration_ms"], len(m["text"])),
+    "kind string, n_cues int, duration_ms long, n_text_chars int")
+# Jupyter notebook. Oracle: DuckDB's own JSON engine re-mines the bytes
+_q_ipynb_meta = _parsed_meta(
+    "ipynb", lambda k, raw: k.looks_like_ipynb(raw), "parse_ipynb",
+    "IpynbError",
+    lambda m: (m["n_cells"], m["n_code"], m["n_markdown"], m["language"],
+               m["nbformat"], len(m["text"])),
+    "n_cells int, n_code int, n_markdown int, language string, "
+    "nbformat int, n_text_chars int")
+# LaTeX source. Oracle: DuckDB re-runs the same regexes; text length carried
+_q_tex_meta = _parsed_meta(
+    "latex", lambda k, raw: k.looks_like_tex(raw), "parse_latex",
+    "LatexError",
+    lambda m: (m["documentclass"], m["title"], m["n_sections"],
+               m["n_cites"], m["n_equations"], len(m["text"])),
+    "documentclass string, title string, n_sections int, n_cites int, "
+    "n_equations int, n_text_chars int")
+# MediaWiki XML export. Oracle: DuckDB re-runs the same regexes; length carried
+_q_wiki_meta = _parsed_meta(
+    "wikitext", lambda k, raw: k.looks_like_wiki(raw), "parse_wiki",
+    "WikiError",
+    lambda m: (m["n_pages"], m["n_redirects"], m["first_title"], m["n_refs"],
+               len(m["text"])),
+    "n_pages int, n_redirects int, first_title string, n_refs int, "
+    "n_text_chars int")
+# SQLite header of files stdlib sqlite3 wrote. Oracle: _sqlite_expected
+_q_sqlite_meta = _parsed_meta(
+    "sqlitedb", lambda k, raw: k.is_sqlite(raw), "parse_sqlite",
+    "SqliteError",
+    lambda m: (m["page_size"], m["n_pages"], m["encoding"],
+               m["user_version"], m["valid_size"]),
+    "page_size int, n_pages int, encoding string, user_version int, "
+    "valid_size boolean")
+# Font census; glyphs and WOFF2 Brotli out of scope. Oracle: _font_expected
+_q_font_meta = _parsed_meta(
+    "font", lambda k, raw: k.looks_like_font(raw), "parse_font", "FontError",
+    lambda m: (m["kind"], m["flavor"], m["n_tables"], m["sfnt_size"]),
+    "kind string, flavor string, n_tables int, sfnt_size long")
+# ustar member census, nothing unpacked. Oracle: _tar_expected (stdlib tarfile)
+_q_tar_meta = _parsed_meta(
+    "tar", lambda k, raw: raw[257:262] == b"ustar" and k.is_tar(raw),
+    "parse_tar", "TarError",
+    lambda m: (m["n_members"], m["n_dirs"], m["n_bytes"], m["first_name"]),
+    "n_members int, n_dirs int, n_bytes long, first_name string")
+# WebM/Matroska EBML walk; VP8/VP9/AV1 decode stubbed. Oracle: _webm_expected
+_q_webm_meta = _parsed_meta(
+    "webm", lambda k, raw: k.is_webm(raw), "parse_webm", "WebmError",
+    lambda m: (m["doc_type"], m["duration_ms"], m["n_tracks"], m["width"],
+               m["height"], m["video_codec"], m["audio_codec"]),
+    "doc_type string, duration_ms long, n_tracks int, width int, "
+    "height int, video_codec string, audio_codec string")
+# ICO directory. Oracle: _ico_expected (directory re-read)
+_q_ico_meta = _parsed_meta(
+    "ico", lambda k, raw: k.is_ico(raw), "parse_ico", "IcoError",
+    lambda m: (m["n_images"], m["width"], m["height"], m["any_png"]),
+    "n_images int, width int, height int, any_png boolean")
+# WebP VP8/VP8L/VP8X header dims; pixel decode stubbed. Oracle: _image_expected
+_q_webp_meta = _parsed_meta(
+    "webp", lambda k, raw: raw[:4] == b"RIFF" and raw[8:12] == b"WEBP",
+    "webp_dims", "WebpError", lambda m: m[:2], "width int, height int")
+# AVIF primary item (pitm/ipma/ipco); AV1 stubbed. Oracle: _image_expected
+_q_avif_meta = _parsed_meta(
+    "mp4", lambda k, raw: len(raw) >= 12 and raw[4:8] == b"ftyp"
+    and raw[8:12] in (b"avif", b"avis"), "parse_avif", "Mp4Error",
+    lambda m: (m["width"], m["height"], m["channels"]),
+    "width int, height int, n_channels int")
+# HEIC primary item, the same walk; HEVC stubbed. Oracle: _image_expected
+_q_heic_meta = _parsed_meta(
+    "mp4", lambda k, raw: len(raw) >= 12 and raw[4:8] == b"ftyp"
+    and raw[8:12] in (b"heic", b"heix"), "parse_avif", "Mp4Error",
+    lambda m: (m["width"], m["height"], m["channels"]),
+    "width int, height int, n_channels int")
+
+
+# csv_meta keeps its own function: its accept predicate reads
+# media.sniff_kind and htmltext.looks_like_html besides kernel/csvdoc.py.
 def _q_csv_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delimited-table mining (kernel/csvdoc.py, r5): dialect,
     record/column census, header heuristic. Grid TEXT (tab/newline
@@ -5030,66 +4767,6 @@ def _q_csv_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_header boolean, n_text_chars int")
 
 
-
-def _q_tex_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LaTeX source mining (kernel/latex.py, r5 — the arXiv-source
-    payload class of the Pile/RedPajama slices): documentclass, title,
-    section/citation/equation counts. Detexed TEXT (scoped reduction:
-    math dropped, skip-environments, kept-arg prose commands) rides
-    the flagship extraction family via extract_any. Map-only
-    map_rows on the pruned (url, html) scan. Oracle: TWO-ENGINE —
-    DuckDB re-mines the same bytes with the IDENTICAL regex set (the
-    svg_meta pattern); text length is generator truth."""
-    from zpdfspark.kernel.latex import (LatexError, looks_like_tex,
-                                        parse_latex)
-
-    def per_row(url, raw):
-        if not looks_like_tex(raw):
-            return
-        try:
-            m = parse_latex(raw)
-        except LatexError:
-            return
-        yield (url, m["documentclass"], m["title"], m["n_sections"],
-               m["n_cites"], m["n_equations"], len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, documentclass string, title string, "
-        "n_sections int, n_cites int, n_equations int, n_text_chars int")
-
-
-
-def _q_wiki_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MediaWiki XML-export mining (kernel/wikitext.py, r5 — the
-    Wikipedia-dump / Special:Export payload class behind the
-    Pile/Dolma wiki slices): page/redirect census, first title,
-    escaped-ref count. Reduced wikitext (WikiExtractor-lineage scoped
-    reduction: templates/tables/refs/File/Category dropped, links to
-    labels, redirect pages skipped) rides the flagship extraction
-    family via extract_any. Map-only map_rows on the pruned
-    (url, html) scan. Oracle: TWO-ENGINE — DuckDB re-mines the same
-    bytes with the IDENTICAL regex set (the tex_meta pattern); text
-    length is generator truth."""
-    from zpdfspark.kernel.wikitext import (WikiError, looks_like_wiki,
-                                           parse_wiki)
-
-    def per_row(url, raw):
-        if not looks_like_wiki(raw):
-            return
-        try:
-            m = parse_wiki(raw)
-        except WikiError:
-            return
-        yield (url, m["n_pages"], m["n_redirects"], m["first_title"],
-               m["n_refs"], len(m["text"]))
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_pages int, n_redirects int, first_title string, "
-        "n_refs int, n_text_chars int")
-
-
 def _q_ps_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PostScript DSC header census (r5) — legacy academic/print
     payloads crawls still carry. Text extraction from PS needs an
@@ -5114,34 +4791,6 @@ def _q_ps_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("url")
     )
-
-
-def _q_sqlite_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQLite database-file census (r5) — kernel/sqlitedb.py header
-    parse over payloads the REAL SQLite library wrote (the fixture
-    generator uses stdlib sqlite3, the format's reference producer —
-    a true real-producer differential). valid_size cross-checks
-    page_size × n_pages against the payload length (torn downloads).
-    Map-only map_rows on the pruned (url, html) scan. Oracle:
-    corpus-carried columns from the INDEPENDENT fixtures-side flat
-    struct re-read (fixtures._sqlite_expected)."""
-    from zpdfspark.kernel.sqlitedb import (SqliteError, is_sqlite,
-                                           parse_sqlite)
-
-    def per_row(url, raw):
-        if not is_sqlite(raw):
-            return
-        try:
-            m = parse_sqlite(raw)
-        except SqliteError:
-            return
-        yield (url, m["page_size"], m["n_pages"], m["encoding"],
-               m["user_version"], m["valid_size"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, page_size int, n_pages int, encoding string, "
-        "user_version int, valid_size boolean")
 
 
 def _q_md_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5285,111 +4934,6 @@ def _q_code_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("url")
     )
-
-
-def _q_font_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web-font payload census (kernel/font.py, r5): every page fetch
-    pulls TTF/OTF/WOFF/WOFF2 files — a payload classifier that cannot
-    name them misfiles a visible slice of crawl bytes. Container kind,
-    wrapped flavor, table count, declared sfnt size; glyph data never
-    read (WOFF2's Brotli stage honestly out of scope, the zstd
-    posture). Map-only map_rows on the pruned (url, html) scan.
-    Oracle: corpus-carried columns from the INDEPENDENT fixtures-side
-    flat struct re-read (fixtures._font_expected)."""
-    from zpdfspark.kernel.font import (FontError, looks_like_font,
-                                       parse_font)
-
-    def per_row(url, raw):
-        if not looks_like_font(raw):
-            return
-        try:
-            m = parse_font(raw)
-        except FontError:
-            return
-        yield (url, m["kind"], m["flavor"], m["n_tables"], m["sfnt_size"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, kind string, flavor string, n_tables int, "
-        "sfnt_size long")
-
-
-
-def _q_tar_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tarball census (kernel/tar.py, r5) — crawls carry source
-    releases and dataset drops; the pipeline keeps the member census
-    (count/dirs/bytes/first regular name) without unpacking. Standalone
-    .tar reaches here by sniff; .tar.gz reaches the same walk through
-    extract_any's bounded gzip re-dispatch. Map-only map_rows on
-    the pruned (url, html) scan. Oracle: corpus-carried columns from
-    the INDEPENDENT fixtures-side stdlib tarfile re-read
-    (fixtures._tar_expected)."""
-    from zpdfspark.kernel.tar import TarError, is_tar, parse_tar
-
-    def per_row(url, raw):
-        if raw[257:262] != b"ustar" or not is_tar(raw):
-            return
-        try:
-            m = parse_tar(raw)
-        except TarError:
-            return
-        yield (url, m["n_members"], m["n_dirs"], m["n_bytes"], m["first_name"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_members int, n_dirs int, n_bytes long, "
-        "first_name string")
-
-
-def _q_webm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebM/Matroska facts (kernel/webm.py, r5) — the web's royalty-
-    free video container, the EBML sibling of video_stats/mp4:
-    DocType, duration from TimestampScale×Duration, track census,
-    video dims + codec ids. Frame decode honestly stubbed (no
-    VP8/VP9/AV1 codecs here), like mp4. Map-only map_rows on the
-    pruned (url, html) scan. Oracle: corpus-carried columns from the
-    INDEPENDENT fixtures-side explicit-stack EBML scan
-    (fixtures._webm_expected)."""
-    from zpdfspark.kernel.webm import WebmError, is_webm, parse_webm
-
-    def per_row(url, raw):
-        if not is_webm(raw):
-            return
-        try:
-            m = parse_webm(raw)
-        except WebmError:
-            return
-        yield (url, m["doc_type"], m["duration_ms"], m["n_tracks"], m["width"],
-               m["height"], m["video_codec"], m["audio_codec"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, doc_type string, duration_ms long, n_tracks int, "
-        "width int, height int, video_codec string, audio_codec string")
-
-
-def _q_ico_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ICO favicon facts (kernel/ico.py, r5) — every crawler fetches
-    /favicon.ico per host: entry count, largest rendition's dims (the
-    directory's u8 dims where 0 means 256), whether any entry is a
-    modern embedded-PNG stream (kernel-decodable via entry_png).
-    Map-only map_rows on the pruned (url, html) scan. Oracle:
-    corpus-carried columns from the INDEPENDENT fixtures-side
-    directory re-read (fixtures._ico_expected)."""
-    from zpdfspark.kernel.ico import IcoError, is_ico, parse_ico
-
-    def per_row(url, raw):
-        if not is_ico(raw):
-            return
-        try:
-            m = parse_ico(raw)
-        except IcoError:
-            return
-        yield (url, m["n_images"], m["width"], m["height"], m["any_png"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, n_images int, width int, height int, any_png boolean")
 
 
 _BM25_TERMS = ("spark", "scan", "window")
@@ -5632,74 +5176,6 @@ def _q_warc_revisit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("body_md5").alias("original_md5"))
         .orderBy("url", "revisit_date")
     )
-
-
-def _q_webp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebP header dims (kernel/webp.py: VP8/VP8L/VP8X) — the no-codec
-    metadata layer for the modern web's image format; pixel decode is
-    honestly stubbed (no VP8 codec in this container). Map-only,
-    magic-filtered in-kernel; oracle: the corpus-carried dims from the
-    independent fixtures-side header re-read (_image_expected)."""
-    from zpdfspark.kernel.webp import WebpError, webp_dims
-
-    def per_row(url, raw):
-        if raw[:4] != b"RIFF" or raw[8:12] != b"WEBP":
-            return
-        try:
-            w, h, _flavor = webp_dims(raw)
-        except WebpError:
-            return
-        yield (url, w, h)
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, width int, height int")
-
-
-def _q_avif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AVIF primary-item metadata (kernel/mp4.py parse_avif: HEIF
-    pitm/ipma/ipco resolution, so thumbnail items never leak their
-    dims) — the no-codec metadata layer for the web's newest image
-    format; AV1 sample decode is honestly stubbed. Map-only,
-    magic-filtered in-kernel; oracle: the corpus-carried dims/channels
-    from the independent fixtures-side box walk (_image_expected)."""
-    from zpdfspark.kernel.mp4 import Mp4Error, parse_avif
-
-    def per_row(url, raw):
-        if (len(raw) < 12 or raw[4:8] != b"ftyp"
-                or raw[8:12] not in (b"avif", b"avis")):
-            return
-        try:
-            m = parse_avif(raw)
-        except Mp4Error:
-            return
-        yield (url, m["width"], m["height"], m["channels"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, width int, height int, n_channels int")
-
-
-def _q_heic_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HEIC primary-item metadata — the HEVC-coded HEIF sibling of
-    avif_meta (same kernel/mp4.py parse_avif pitm/ipma/ipco walk;
-    hvcC instead of av1C identifies the codec; HEVC sample decode is
-    honestly stubbed). Map-only, brand-gated in-kernel."""
-    from zpdfspark.kernel.mp4 import Mp4Error, parse_avif
-
-    def per_row(url, raw):
-        if (len(raw) < 12 or raw[4:8] != b"ftyp"
-                or raw[8:12] not in (b"heic", b"heix")):
-            return
-        try:
-            m = parse_avif(raw)
-        except Mp4Error:
-            return
-        yield (url, m["width"], m["height"], m["channels"])
-
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, width int, height int, n_channels int")
 
 
 def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1609,6 +1609,10 @@ class TestWarc:
             assert got == [("http://e.com/a", b"BODY-A"),
                            ("http://e.com/gone", b"BODY-404"),
                            ("http://e.com/z", b"BODY-Z")], gz
+            # a view of the archive (the fused kernel reads Arrow's
+            # buffer) reads the same records
+            assert [(r.target_uri, r.body)
+                    for r in W.iter_responses(memoryview(raw))] == got, gz
             ok = [r.target_uri for r in W.iter_responses(raw, True)]
             assert ok == ["http://e.com/a", "http://e.com/z"], gz
         for blob in (b"not a warc", b"\x1f\x8bnot gzip", b""):
@@ -1965,6 +1969,24 @@ class TestTiff:
         for bad in (b"", b"II\x2b\x00" + bytes(8), b"XX" + bytes(8)):
             with pytest.raises(TiffError):
                 parse_tiff(bad)
+
+    def test_multi_valued_dimension_raises(self):
+        """A width or height entry with a count above 1 is not a
+        dimension: TiffError, not a tuple (which broke decode_tiff's
+        arithmetic with a TypeError and tiff_meta's int column)."""
+        import pytest
+        from zpdfspark.kernel.tiff import TiffError, build_tiff, \
+            decode_tiff, parse_tiff
+        for tag in (0x0100, 0x0101):
+            raw = bytearray(build_tiff(10, 10))
+            n = raw[8] | (raw[9] << 8)
+            e = next(8 + 2 + 12 * i for i in range(n)
+                     if raw[10 + 12 * i] | (raw[11 + 12 * i] << 8) == tag)
+            raw[e + 4:e + 8] = (2).to_bytes(4, "little")  # count 2
+            raw[e + 8:e + 12] = (8).to_bytes(4, "little")  # values at 8
+            for fn in (parse_tiff, decode_tiff):
+                with pytest.raises(TiffError):
+                    fn(bytes(raw))
 
     def test_hostile_mutations_raise_tifferror_only(self):
         import random

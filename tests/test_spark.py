@@ -908,6 +908,39 @@ def test_decode_every_corpus_kind(spark, corpus_path):
             assert r.decode_ok and r.width >= 1 and r.height >= 1, r
 
 
+def test_corrupt_documents_decode_as_data(spark, tmp_path, monkeypatch):
+    """A document whose kernel raises its own error class (any of
+    media.DECODE_ERRORS) is a decode_ok=False row through
+    decode_dataframe and the media_stats query, not a failed task."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+    from zpdfspark import fixtures
+    from zpdfspark.spark import media
+
+    docx = fixtures.docx_doc(0)[0]
+    i = docx.index(b"word/document.xml") - 30  # its local file header
+    bad = {
+        "https://t.example/docx": docx[:i] + b"PK\x03\x05" + docx[i + 4:],
+        # an invalid UTF-8 byte in a cell source
+        "https://t.example/ipynb": fixtures.ipynb_doc(0)[0].replace(
+            b"# Notebook", b"# \xb5otebook", 1),
+    }
+    path = str(tmp_path / "corrupt.parquet")
+    pq.write_table(pa.table({"url": list(bad),
+                             "html": pa.array(list(bad.values()),
+                                              pa.binary())}), path)
+    got = {r.url: (r.media_kind, r.decode_ok) for r in
+           media.decode_dataframe(spark.read.parquet(path)).collect()}
+    assert got == {"https://t.example/docx": ("docx", False),
+                   "https://t.example/ipynb": ("ipynb", False)}
+    monkeypatch.setattr(E, "_corpus_path", lambda sf_dir: path)
+    stats = {r.url: (r.media_kind, r.decode_ok) for r in
+             E.queries()["media_stats"](spark, "unused").collect()}
+    assert stats == got
+
+
 def test_format_job_json_and_pages(spark, tmp_path, corpus_path,
                                    assert_zstd):
     """CLI -f json / -p a-b (main.zig:173-177, 252-339): json docs carry

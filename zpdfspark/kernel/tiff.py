@@ -134,8 +134,10 @@ def parse_tiff(raw: bytes) -> dict:
         if nxt + 4 > len(raw):
             raise TiffError("truncated next-IFD pointer")
         (ifd_off,) = struct.unpack(endian + "I", raw[nxt:nxt + 4])
-    if out["width"] is None or out["height"] is None:
-        raise TiffError("IFD0 lacks dimensions")
+    # a dimension entry whose count is not 1 reads as a tuple
+    if not (isinstance(out["width"], int)
+            and isinstance(out["height"], int)):
+        raise TiffError("IFD0 lacks single-valued dimensions")
     return out
 
 

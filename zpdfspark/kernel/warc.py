@@ -277,7 +277,8 @@ def iter_warc_records_spans(raw: bytes) -> Iterator[Tuple[WarcRecord,
     MAX_HEADER_BYTES is an error record; the walk resumes at the next
     member."""
     gz = raw[:2] == b"\x1f\x8b"
-    members = _gzip_members(raw) if gz else ((0, len(raw), raw),)
+    # bytes() copies only a memoryview: the plain parse needs bytes methods
+    members = _gzip_members(raw) if gz else ((0, len(raw), bytes(raw)),)
     # unparsed (plain bytes, stored offset, stored end) of members; the
     # first parse waits for the 5 bytes of the magic check
     held, need, first = [], 5, True

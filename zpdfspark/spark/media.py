@@ -32,6 +32,10 @@ import hashlib
 
 from pyspark.sql import DataFrame
 
+from zpdfspark.kernel import (bmp, csvdoc, djvu, docx, eml, epub, font, gif,
+                              htmltext, ico, ipynb, jpeg, jsondoc, latex, odp,
+                              ods, odt, png, pptx, rtf, sqlitedb, subtitles,
+                              svg, tar, tiff, wav, wikitext, xlsx)
 from zpdfspark.spark.udfs import map_rows
 
 DECODE_SCHEMA = ("url string, media_kind string, n_bytes long, "
@@ -71,9 +75,7 @@ def sniff_kind(raw: bytes) -> str:
         return "tiff"
     if raw[:2] == b"BM" and len(raw) >= 34 and raw[14] == 40:
         return "bmp"
-    from zpdfspark.kernel.ico import is_ico
-
-    if is_ico(raw):
+    if ico.is_ico(raw):
         return "ico"
     if raw[:3] == b"ID3" or (len(raw) >= 2 and raw[0] == 0xFF
                              and (raw[1] & 0xE0) == 0xE0):
@@ -82,12 +84,9 @@ def sniff_kind(raw: bytes) -> str:
         return "rtf"
     if raw[:4] == b"%!PS":
         return "ps"
-    from zpdfspark.kernel.djvu import is_djvu
-    from zpdfspark.kernel.sqlitedb import is_sqlite
-
-    if is_djvu(raw):
+    if djvu.is_djvu(raw):
         return "djvu"
-    if is_sqlite(raw):
+    if sqlitedb.is_sqlite(raw):
         return "sqlite"
     if raw[:2] == b"\x1f\x8b":
         return "gz"
@@ -97,192 +96,113 @@ def sniff_kind(raw: bytes) -> str:
         return "xz"
     if raw[:4] == b"\x28\xb5\x2f\xfd":
         return "zstd"
-    from zpdfspark.kernel.tar import is_tar
-
-    if raw[257:262] == b"ustar" and is_tar(raw):
+    if raw[257:262] == b"ustar" and tar.is_tar(raw):
         return "tar"
     if raw[:4] == b"PK\x03\x04":
-        from zpdfspark.kernel.docx import is_docx
-        from zpdfspark.kernel.epub import is_epub
-        from zpdfspark.kernel.odt import odf_class
-        from zpdfspark.kernel.xlsx import is_xlsx
-
-        if is_docx(raw):
+        if docx.is_docx(raw):
             return "docx"
-        if is_epub(raw):
+        if epub.is_epub(raw):
             return "epub"
-        if is_xlsx(raw):
+        if xlsx.is_xlsx(raw):
             return "xlsx"
-        from zpdfspark.kernel.pptx import is_pptx
-
-        if is_pptx(raw):
+        if pptx.is_pptx(raw):
             return "pptx"
         return {"text": "odt", "spreadsheet": "ods",
-                "presentation": "odp"}.get(odf_class(raw), "zip")
-    from zpdfspark.kernel.eml import is_eml, is_mbox
-    from zpdfspark.kernel.htmltext import looks_like_feed
-    from zpdfspark.kernel.svg import looks_like_svg
-
-    if is_eml(raw):
+                "presentation": "odp"}.get(odt.odf_class(raw), "zip")
+    if eml.is_eml(raw):
         return "eml"
-    if is_mbox(raw):
+    if eml.is_mbox(raw):
         return "mbox"
-    from zpdfspark.kernel.subtitles import looks_like_srt, looks_like_vtt
-
-    if looks_like_vtt(raw):
+    if subtitles.looks_like_vtt(raw):
         return "vtt"
-    if looks_like_srt(raw):
+    if subtitles.looks_like_srt(raw):
         return "srt"
-    from zpdfspark.kernel.ipynb import looks_like_ipynb
-
-    if looks_like_ipynb(raw):
+    if ipynb.looks_like_ipynb(raw):
         return "ipynb"
-    from zpdfspark.kernel.jsondoc import looks_like_json, looks_like_jsonl
-
-    if looks_like_jsonl(raw):
+    if jsondoc.looks_like_jsonl(raw):
         return "jsonl"
-    if looks_like_json(raw):
+    if jsondoc.looks_like_json(raw):
         return "json"
-    from zpdfspark.kernel.font import looks_like_font
-
-    if looks_like_font(raw):
-        from zpdfspark.kernel.font import parse_font
-
+    if font.looks_like_font(raw):
         try:
-            return parse_font(raw)["kind"]
+            return font.parse_font(raw)["kind"]
         except Exception:
             return "font"
     if raw[:6] == b"Rar!\x1a\x07":
         return "rar"
     if raw[:6] == b"7z\xbc\xaf\x27\x1c":
         return "7z"
-    from zpdfspark.kernel.latex import looks_like_tex
-
-    if looks_like_tex(raw):
+    if latex.looks_like_tex(raw):
         return "tex"
-    from zpdfspark.kernel.wikitext import looks_like_wiki
-
-    if looks_like_wiki(raw):
+    if wikitext.looks_like_wiki(raw):
         return "wiki"
-    if looks_like_svg(raw):
+    if svg.looks_like_svg(raw):
         return "svg"
-    if looks_like_feed(raw):
+    if htmltext.looks_like_feed(raw):
         return "feed"
-    from zpdfspark.kernel.csvdoc import looks_like_csv
-    from zpdfspark.kernel.htmltext import looks_like_html
-
-    if not looks_like_html(raw) and looks_like_csv(raw):
+    if not htmltext.looks_like_html(raw) and csvdoc.looks_like_csv(raw):
         return "csv"
-    from zpdfspark.kernel.htmltext import looks_like_text
-
-    if not looks_like_html(raw) and looks_like_text(raw):
+    if not htmltext.looks_like_html(raw) and htmltext.looks_like_text(raw):
         return "txt"
     return "binary"
 
 
-def decode_media(raw: bytes, kind: str):
-    """Decode an opaque media payload.
+# kind -> (decoder, error class) for every kind decoded for real: images
+# to (width, height, channels, pixels), WAV to (rate, channels, samples),
+# documents, archives and fonts to their kernel's parse dict.
+_DECODERS = {
+    "png": (png.decode_png, png.PngError),
+    "jpeg": (jpeg.decode_jpeg, jpeg.JpegError),
+    "wav": (wav.decode_wav, wav.WavError),
+    "gif": (gif.decode_gif, gif.GifError),
+    "tiff": (tiff.decode_tiff, tiff.TiffError),
+    "bmp": (bmp.decode_bmp, bmp.BmpError),
+    "docx": (docx.parse_docx, docx.DocxError),
+    "epub": (epub.parse_epub, epub.EpubError),
+    "xlsx": (xlsx.parse_xlsx, xlsx.XlsxError),
+    "pptx": (pptx.parse_pptx, pptx.PptxError),
+    "rtf": (rtf.parse_rtf, rtf.RtfError),
+    "odt": (odt.parse_odt, odt.OdtError),
+    "ods": (ods.parse_ods, ods.OdsError),
+    "odp": (odp.parse_odp, odp.OdpError),
+    "svg": (svg.parse_svg, svg.SvgError),
+    "ico": (ico.parse_ico, ico.IcoError),
+    "tar": (tar.parse_tar, tar.TarError),
+    "eml": (eml.parse_eml, eml.EmlError),
+    "mbox": (eml.parse_mbox, eml.EmlError),
+    "ipynb": (ipynb.parse_ipynb, ipynb.IpynbError),
+    "csv": (csvdoc.parse_csv, csvdoc.CsvError),
+    "tex": (latex.parse_latex, latex.LatexError),
+    **dict.fromkeys(("srt", "vtt"),
+                    (subtitles.parse_subtitles, subtitles.SubtitleError)),
+    **dict.fromkeys(("ttf", "otf", "woff", "woff2"),
+                    (font.parse_font, font.FontError)),
+}
+# what decode_media raises on a payload it cannot decode
+DECODE_ERRORS = (NotImplementedError,
+                 *dict.fromkeys(err for _fn, err in _DECODERS.values()))
 
-    REAL for PNG, baseline+progressive JPEG, GIF, (r5) grayscale
-    strip TIFF and (r5) BMP — (width, height, channels,
-    pixels ndarray) via kernel/{png,jpeg,gif,tiff,bmp}.py — and for WAV — (sample_rate,
-    channels, samples ndarray) via kernel/wav.py. STUB for every
-    codec kind the container lacks libraries for (mp3/ogg/flac
-    audio frames, video): NotImplementedError — callers must treat a
-    failed decode as data, not as a task failure."""
-    if kind == "png":
-        from zpdfspark.kernel.png import decode_png
-        return decode_png(raw)
-    if kind == "jpeg":
-        from zpdfspark.kernel.jpeg import decode_jpeg
-        return decode_jpeg(raw)
-    if kind == "wav":
-        from zpdfspark.kernel.wav import decode_wav
-        return decode_wav(raw)
-    if kind == "gif":
-        from zpdfspark.kernel.gif import decode_gif
-        return decode_gif(raw)
-    if kind == "tiff":
-        from zpdfspark.kernel.tiff import decode_tiff
-        return decode_tiff(raw)
-    if kind == "bmp":
-        from zpdfspark.kernel.bmp import decode_bmp
-        return decode_bmp(raw)
-    if kind == "docx":
-        from zpdfspark.kernel.docx import parse_docx
-        return parse_docx(raw)
-    if kind == "epub":
-        from zpdfspark.kernel.epub import parse_epub
-        return parse_epub(raw)
-    if kind == "xlsx":
-        from zpdfspark.kernel.xlsx import parse_xlsx
-        return parse_xlsx(raw)
-    if kind == "pptx":
-        from zpdfspark.kernel.pptx import parse_pptx
-        return parse_pptx(raw)
-    if kind == "rtf":
-        from zpdfspark.kernel.rtf import parse_rtf
-        return parse_rtf(raw)
-    if kind == "odt":
-        from zpdfspark.kernel.odt import parse_odt
-        return parse_odt(raw)
-    if kind == "ods":
-        from zpdfspark.kernel.ods import parse_ods
-        return parse_ods(raw)
-    if kind == "odp":
-        from zpdfspark.kernel.odp import parse_odp
-        return parse_odp(raw)
-    if kind == "svg":
-        from zpdfspark.kernel.svg import parse_svg
-        return parse_svg(raw)
-    if kind == "ico":
-        from zpdfspark.kernel.ico import parse_ico
-        return parse_ico(raw)
-    if kind == "gz":
-        from zpdfspark.kernel.htmltext import _gunzip_capped
-        inner = _gunzip_capped(raw)
+
+def decode_media(raw: bytes, kind: str):
+    """Decode an opaque media payload through its kind's _DECODERS
+    kernel; gz/bz2/xz unwrap to the (capped) inner bytes and txt to its
+    extracted text. A payload that does not decode raises one of
+    DECODE_ERRORS: the kernel's error class, or NotImplementedError for
+    every kind the container has no codec for (mp3/ogg/flac audio
+    frames, video). Callers must treat a failed decode as data, not as
+    a task failure."""
+    if kind in _DECODERS:
+        return _DECODERS[kind][0](raw)
+    if kind in ("gz", "bz2", "xz"):
+        unwrap = {"gz": htmltext._gunzip_capped,
+                  "bz2": htmltext._bunzip2_capped,
+                  "xz": htmltext._unxz_capped}[kind]
+        inner = unwrap(raw)
         if inner is None:
-            raise NotImplementedError("gzip payload corrupt or over cap")
+            raise NotImplementedError(f"{kind} payload corrupt or over cap")
         return inner
-    if kind == "bz2":
-        from zpdfspark.kernel.htmltext import _bunzip2_capped
-        inner = _bunzip2_capped(raw)
-        if inner is None:
-            raise NotImplementedError("bzip2 payload corrupt or over cap")
-        return inner
-    if kind == "xz":
-        from zpdfspark.kernel.htmltext import _unxz_capped
-        inner = _unxz_capped(raw)
-        if inner is None:
-            raise NotImplementedError("xz payload corrupt or over cap")
-        return inner
-    if kind == "tar":
-        from zpdfspark.kernel.tar import parse_tar
-        return parse_tar(raw)
-    if kind == "eml":
-        from zpdfspark.kernel.eml import parse_eml
-        return parse_eml(raw)
-    if kind == "mbox":
-        from zpdfspark.kernel.eml import parse_mbox
-        return parse_mbox(raw)
-    if kind in ("srt", "vtt"):
-        from zpdfspark.kernel.subtitles import parse_subtitles
-        return parse_subtitles(raw)
-    if kind == "ipynb":
-        from zpdfspark.kernel.ipynb import parse_ipynb
-        return parse_ipynb(raw)
-    if kind == "csv":
-        from zpdfspark.kernel.csvdoc import parse_csv
-        return parse_csv(raw)
-    if kind == "tex":
-        from zpdfspark.kernel.latex import parse_latex
-        return parse_latex(raw)
-    if kind in ("ttf", "otf", "woff", "woff2"):
-        from zpdfspark.kernel.font import parse_font
-        return parse_font(raw)
     if kind == "txt":
-        from zpdfspark.kernel.htmltext import extract_any
-        return extract_any(raw)[0]
+        return htmltext.extract_any(raw)[0]
     raise NotImplementedError(f"media decode for {kind!r} not available "
                               "in this environment")
 
@@ -295,16 +215,10 @@ def _fake_decode(raw: bytes):
 
 
 def decode_dataframe(df: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode kernel plumbing over df(url, html): per-row (width,
-    height, ok) with the stub (ok=False everywhere) or the
-    deterministic fake (tests)."""
-    from zpdfspark.kernel.bmp import BmpError
-    from zpdfspark.kernel.gif import GifError
-    from zpdfspark.kernel.jpeg import JpegError
-    from zpdfspark.kernel.png import PngError
-    from zpdfspark.kernel.tiff import TiffError
-    from zpdfspark.kernel.wav import WavError
-
+    """Decode kernel plumbing over df(url, html): per-row (kind, size,
+    width, height, ok) from decode_media or the deterministic fake
+    (tests). A payload that raises any of DECODE_ERRORS is an ok=False
+    row with no dims, never a task failure."""
     def per_row(url, raw):
         kind = sniff_kind(raw)
         try:
@@ -317,8 +231,7 @@ def decode_dataframe(df: DataFrame, fake: bool = False) -> DataFrame:
                 is_image = isinstance(res, tuple) and len(res) == 4
                 w, h = res[:2] if is_image else (0, 0)
             ok = True
-        except (NotImplementedError, PngError, JpegError,
-                WavError, GifError, TiffError, BmpError):
+        except DECODE_ERRORS:
             w = h = 0
             ok = False
         yield url, kind, len(raw), w, h, ok
@@ -335,17 +248,15 @@ def audio_stats_dataframe(df: DataFrame) -> DataFrame:
     one row per decodable WAV with rate/channels/length and the integer
     RMS over the ACTUAL decoded samples. Non-WAV rows emit nothing —
     the kernel filters by magic bytes before decoding, map-only."""
-    from zpdfspark.kernel.wav import WavError, audio_rms_x1000, decode_wav
-
     def per_row(url, raw):
         if sniff_kind(raw) != "wav":
             return
         try:
-            sr, ch, samples = decode_wav(raw)
-        except WavError:
+            sr, ch, samples = wav.decode_wav(raw)
+        except wav.WavError:
             return
         n = samples.shape[0]
-        yield url, sr, ch, n, n * 1000 // sr, audio_rms_x1000(samples)
+        yield url, sr, ch, n, n * 1000 // sr, wav.audio_rms_x1000(samples)
 
     return map_rows(df.select("url", "html"), per_row, AUDIO_SCHEMA)
 
@@ -391,10 +302,6 @@ def resize_dataframe(df: DataFrame, width: int, height: int,
     resample for PNG, JPEG and GIF payloads (out_bytes = actual resized
     array size); every other kind is resize_ok=False/0; the fake path
     sizes the output deterministically (w*h*3 RGB bytes) for tests."""
-    from zpdfspark.kernel.gif import GifError
-    from zpdfspark.kernel.jpeg import JpegError
-    from zpdfspark.kernel.png import PngError, resize_nearest
-
     def per_row(url, raw):
         out_bytes = 0
         ok = True
@@ -407,8 +314,8 @@ def resize_dataframe(df: DataFrame, width: int, height: int,
                     raise NotImplementedError(
                         f"resize for {kind!r} not available")
                 px = decode_media(raw, kind)[3]
-                out_bytes = int(resize_nearest(px, width, height).nbytes)
-            except (NotImplementedError, PngError, JpegError, GifError):
+                out_bytes = int(png.resize_nearest(px, width, height).nbytes)
+            except DECODE_ERRORS:
                 ok = False
         yield url, width, height, out_bytes, ok
 

@@ -230,8 +230,11 @@ def warc_extract_arrow_batches(mode: str = "accuracy",
             for rb in batches:
                 contents = rb.column("content")
                 for j in range(len(contents)):
-                    for rec in iter_responses(contents[j].as_py(),
-                                              http_ok_only):
+                    # a byte view of Arrow's buffer (whose own format is
+                    # signed 'b'): as_py() would copy the whole archive
+                    # into the worker's heap
+                    raw = memoryview(contents[j].as_buffer()).cast("B")
+                    for rec in iter_responses(raw, http_ok_only):
                         urls.append(rec.target_uri)
                         bodies.append(rec.body)
                         if len(urls) >= chunk_records:
