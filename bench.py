@@ -206,7 +206,7 @@ def _load_mp_blobs(sf_dir: str, n_docs: int = 16000):
 
 
 def _mp_warm():
-    import zpdfspark.kernel  # noqa: F401
+    import zpdfspark.kernel.htmltext  # noqa: F401
 
 
 def _mp_extract(args):
@@ -215,9 +215,10 @@ def _mp_extract(args):
         os.sched_setaffinity(0, {cpu})
     except OSError:
         pass
-    from zpdfspark.kernel import Document
+    # the function the Spark path maps (udfs.extract_arrow_batches)
+    from zpdfspark.kernel.htmltext import extract_any
     for b in chunk:
-        Document(b).extract_all("accuracy")
+        extract_any(b, "accuracy")
     return len(chunk)
 
 

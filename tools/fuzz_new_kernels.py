@@ -1,5 +1,6 @@
 """Adversarial mutation sweep over the round-5 session kernels
-(eml/mbox, srt/vtt, ipynb, csv, tex, bz2/xz re-dispatch) — the same
+(eml/mbox, srt/vtt, ipynb, csv, tex, bz2/xz re-dispatch) and the ZIP
+packages (docx/xlsx/pptx/odt/ods/odp/epub) — the same
 evidence protocol as the earlier rounds' million-mutant sweeps:
 random point mutations, truncations and cross-format splices driven
 through extract_any under a per-document watchdog. Zero crashes and
@@ -30,7 +31,11 @@ GENS = [fixtures.eml_doc, fixtures.mbox_archive, fixtures.srt_doc,
         # txt fallback, json/jsonl, PostScript, sqlite header walk)
         fixtures.wiki_doc, fixtures.code_doc, fixtures.md_doc,
         fixtures.json_doc, fixtures.ps_doc, fixtures.sqlite_doc,
-        fixtures.djvu_doc]
+        fixtures.djvu_doc,
+        # the ZIP packages (kernel/package.py and its seven kernels)
+        fixtures.docx_doc, fixtures.xlsx_doc, fixtures.pptx_doc,
+        fixtures.odt_doc, fixtures.ods_doc, fixtures.odp_doc,
+        fixtures.epub_doc]
 
 WATCHDOG_S = 3
 

@@ -11,7 +11,8 @@ concatenated in document order, `<w:tab/>` as TAB, `<w:br/>`/`<w:cr/>`
 as newline, paragraphs joined with newline (the \x0c-join rule's
 WordprocessingML sibling, kernel/document.py:414's shape). Core
 properties (docProps/core.xml dc:title/dc:creator) mirror the PDF
-metadata family (kernel/document.py metadata()).
+metadata family (kernel/document.py metadata()). The container probe,
+read and Dublin Core read are kernel/package.py's.
 
 Parsing is regex-token based, not a DOM: document.xml is
 machine-emitted, and the token walk is O(n) with no recursion to
@@ -23,7 +24,8 @@ from __future__ import annotations
 
 import re
 
-from .ziparc import ZipError, parse_zip, zip_names
+from .package import dc_field, has_member, read_package
+from .ziparc import zip_names
 
 
 class DocxError(ValueError):
@@ -45,7 +47,9 @@ _ENTITY = re.compile(r"&(#x[0-9A-Fa-f]{1,6}|#[0-9]{1,7}|amp|lt|gt|quot|apos);")
 _NAMED = {"amp": "&", "lt": "<", "gt": ">", "quot": '"', "apos": "'"}
 
 
-def _unescape(s: str) -> str:
+def _unescape(bs: bytes) -> str:
+    """UTF-8 (bad bytes replaced), then the 5 named XML entities and
+    numeric references; a code point that is no character is U+FFFD."""
     def repl(m: "re.Match") -> str:
         e = m.group(1)
         if e.startswith("#x") or e.startswith("#X"):
@@ -58,18 +62,13 @@ def _unescape(s: str) -> str:
             return "�"
         return chr(cp)
 
-    return _ENTITY.sub(repl, s)
+    return _ENTITY.sub(repl, bs.decode("utf-8", "replace"))
 
 
 def is_docx(raw: bytes) -> bool:
     """Cheap container probe: a ZIP whose directory names
     word/document.xml. Names-only walk — no decompression."""
-    if raw[:4] != b"PK\x03\x04":
-        return False
-    try:
-        return _DOC_XML in zip_names(raw)
-    except ZipError:
-        return False
+    return has_member(raw, _DOC_XML)
 
 
 def _para_text(chunk: bytes) -> str:
@@ -77,7 +76,7 @@ def _para_text(chunk: bytes) -> str:
     for m in _TOKEN.finditer(chunk):
         run = m.group(1)
         if run is not None:
-            parts.append(_unescape(run.decode("utf-8", "replace")))
+            parts.append(_unescape(run))
         else:
             tok = m.group(0)
             parts.append("\t" if tok.startswith(b"<w:tab") else "\n")
@@ -92,29 +91,18 @@ def parse_docx(raw: bytes) -> dict:
     WordprocessingML package — callers treat that as data, not as a
     task failure (the PDF kernel's tolerant-open posture).
     """
-    try:
-        members = parse_zip(raw, want={_DOC_XML, _CORE_XML})
-        n_entries = len(zip_names(raw))
-    except ZipError as e:
-        raise DocxError(f"container: {e}") from e
+    members = read_package(raw, DocxError, want={_DOC_XML, _CORE_XML})
+    # cannot raise: parse_zip has already checked the directory it walks
+    n_entries = len(zip_names(raw))
     doc = members.get(_DOC_XML)
     if doc is None:
         raise DocxError("no word/document.xml in package")
     paras = [_para_text(m.group(0)) for m in _PARA.finditer(doc)]
-    title = creator = None
     core = members.get(_CORE_XML)
-    if core:
-        t = re.search(rb"<dc:title(?:\s[^>]*)?>(.*?)</dc:title>", core, re.S)
-        c = re.search(rb"<dc:creator(?:\s[^>]*)?>(.*?)</dc:creator>",
-                      core, re.S)
-        if t:
-            title = _unescape(t.group(1).decode("utf-8", "replace"))
-        if c:
-            creator = _unescape(c.group(1).decode("utf-8", "replace"))
     return {
         "text": "\n".join(paras),
         "n_paragraphs": len(paras),
         "n_entries": n_entries,
-        "title": title,
-        "creator": creator,
+        "title": dc_field(core, "title", _unescape),
+        "creator": dc_field(core, "creator", _unescape),
     }

@@ -14,15 +14,15 @@ pruning and no <main>/<article> narrowing: a book chapter IS the main
 content.
 
 Metadata mirrors the PDF family: dc:title / dc:creator from the OPF.
+The container probe, read and Dublin Core read are kernel/package.py's.
 """
 
 from __future__ import annotations
 
-import html as html_mod
 import posixpath
 import re
 
-from .ziparc import ZipError, parse_zip, zip_names
+from .package import dc_field, has_member, read_package, unesc
 
 _CONTAINER = "META-INF/container.xml"
 _MAX_CHAPTERS = 2048
@@ -37,8 +37,6 @@ _ITEM = re.compile(rb"<item\b[^>]*>")
 _ITEMREF = re.compile(rb'<itemref\b[^>]*idref="([^"]+)"')
 _ATTR_ID = re.compile(rb'\bid="([^"]+)"')
 _ATTR_HREF = re.compile(rb'\bhref="([^"]+)"')
-_DC_TITLE = re.compile(rb"<dc:title(?:\s[^>]*)?>(.*?)</dc:title>", re.S)
-_DC_CREATOR = re.compile(rb"<dc:creator(?:\s[^>]*)?>(.*?)</dc:creator>", re.S)
 
 _COMMENT = re.compile(rb"<!--.*?-->", re.S)
 _DROP = re.compile(rb"<(script|style)\b.*?</\1\s*>", re.S | re.I)
@@ -53,12 +51,7 @@ _WS = re.compile(r"[ \t\r\f\v]+")
 def is_epub(raw: bytes) -> bool:
     """Container probe: a ZIP whose directory names the OCF
     container.xml. Names-only walk — no decompression."""
-    if raw[:4] != b"PK\x03\x04":
-        return False
-    try:
-        return _CONTAINER in zip_names(raw)
-    except ZipError:
-        return False
+    return has_member(raw, _CONTAINER)
 
 
 def _xhtml_text(raw: bytes) -> str:
@@ -73,8 +66,7 @@ def _xhtml_text(raw: bytes) -> str:
     data = _BLOCK.sub(b"\n", data)
     lines = []
     for raw_line in data.split(b"\n"):
-        visible = html_mod.unescape(
-            _TAG.sub(b"", raw_line).decode("utf-8", "replace"))
+        visible = unesc(_TAG.sub(b"", raw_line))
         for piece in visible.split("\n"):
             piece = _WS.sub(" ", piece).strip()
             if piece:
@@ -88,10 +80,7 @@ def parse_epub(raw: bytes) -> dict:
     Returns {text, n_chapters, n_entries, title, creator}; raises
     EpubError on anything that is not a readable package — callers
     treat that as data, not as a task failure."""
-    try:
-        members = parse_zip(raw)
-    except ZipError as e:
-        raise EpubError(f"container: {e}") from e
+    members = read_package(raw, EpubError)
     container = members.get(_CONTAINER)
     if container is None:
         raise EpubError("no META-INF/container.xml")
@@ -124,17 +113,10 @@ def parse_epub(raw: bytes) -> dict:
         if len(chapters) > _MAX_CHAPTERS:
             raise EpubError("spine exceeds chapter cap")
 
-    title = creator = None
-    t = _DC_TITLE.search(opf)
-    c = _DC_CREATOR.search(opf)
-    if t:
-        title = html_mod.unescape(t.group(1).decode("utf-8", "replace"))
-    if c:
-        creator = html_mod.unescape(c.group(1).decode("utf-8", "replace"))
     return {
         "text": "\x0c".join(chapters),
         "n_chapters": len(chapters),
         "n_entries": len(members),
-        "title": title,
-        "creator": creator,
+        "title": dc_field(opf, "title"),
+        "creator": dc_field(opf, "creator"),
     }

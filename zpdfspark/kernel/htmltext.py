@@ -29,12 +29,21 @@ semantics (the spec for the fixture oracles):
    byte-domain tag processing), then <meta charset> in the spec's
    1024-byte prescan window via the WHATWG alias table (the iso-8859-1
    label MEANS windows-1252 on the web), else utf-8 with replacement
+
+`extract_any` (end of file) dispatches every payload kind, HTML among
+them, to its kernel; its `_KINDS` table is the one document of which
+kernel reads which payload.
 """
 
 from __future__ import annotations
 
 import html as html_mod
 import re
+
+from . import (csvdoc, djvu, docx, eml, epub, font, ipynb, jsondoc, latex,
+               odp, ods, odt, pptx, rtf, sqlitedb, subtitles, wikitext, xlsx)
+from .document import Document
+from .package import package_kind
 
 _DROP_ELEMENTS = ("script", "style", "template", "noscript",
                   "head", "nav", "header", "footer", "aside")
@@ -276,233 +285,150 @@ def _unxz_capped(raw: bytes):
         return None
 
 
+def _unwrap(kind: str, decompress):
+    """Handler of a standalone compression wrapper (.html.gz, .tar.bz2,
+    .xz dumps; servers ship them as files, distinct from the
+    Content-Encoding layer kernel/warc.py strips): unpack bounded and
+    re-dispatch the inner bytes once, reported as "<kind>+<inner kind>".
+    A nested wrapper, a corrupt stream or a bomb reports `kind` alone."""
+    def handler(raw, mode, depth):
+        inner = decompress(raw) if depth == 0 else None
+        if inner is None:
+            return "", kind, None
+        text, inner_kind, doc = extract_any(inner, mode, 1)
+        return text, f"{kind}+{inner_kind}", doc
+    return handler
+
+
+def _pdf(raw, mode, _depth):
+    doc = Document(raw)
+    return doc.extract_all(mode), "pdf", doc
+
+
+def _subtitles(raw, _mode, _depth):
+    try:
+        m = subtitles.parse_subtitles(raw)
+        return m["text"], m["kind"], None
+    except subtitles.SubtitleError:
+        return "", "srt", None
+
+
+def _parsed(parse, error):
+    """Text of a kernel whose parse returns {"text": ...}; a payload
+    it rejects with its own `error` extracts empty (tolerant-open
+    posture: data, not a task failure)."""
+    def text(raw):
+        try:
+            return parse(raw)["text"]
+        except error:
+            return ""
+    return text
+
+
+def _plain_text(raw: bytes) -> str:
+    # newlines normalize, trailing whitespace strips; byte content is
+    # otherwise untouched
+    text = raw.decode(sniff_charset(raw), "replace")
+    if text[:1] == "\ufeff":
+        text = text[1:]
+    return text.replace("\r\n", "\n").replace("\r", "\n").rstrip()
+
+
+# package kind -> its kernel's text
+_PACKAGES = {
+    "docx": _parsed(docx.parse_docx, docx.DocxError),
+    "epub": _parsed(epub.parse_epub, epub.EpubError),
+    "xlsx": _parsed(xlsx.parse_xlsx, xlsx.XlsxError),
+    "pptx": _parsed(pptx.parse_pptx, pptx.PptxError),
+    "odt": _parsed(odt.parse_odt, odt.OdtError),
+    "ods": _parsed(ods.parse_ods, ods.OdsError),
+    "odp": _parsed(odp.parse_odp, odp.OdpError),
+}
+
+
+def _package(raw, _mode, _depth):
+    # one names-only directory walk decides the package kind; a ZIP
+    # that is no package falls through to the rows below
+    kind = package_kind(raw)
+    return None if kind is None else (_PACKAGES[kind](raw), kind, None)
+
+
+# The payload-kind precedence of extract_any: the first row whose probe
+# admits the payload decides. Each row is (probe, kind, text): text(raw)
+# is the extracted text, None marks a census-only kind (detected and
+# named, never reduced to text). A row with kind None is a handler
+# (raw, mode, depth) that returns the whole (text, kind, doc) triple
+# itself, or None to fall through.
+_KINDS = (
+    # compression wrappers first: the inner payload re-dispatches once
+    (lambda raw: raw[:2] == b"\x1f\x8b", None, _unwrap("gz", _gunzip_capped)),
+    (lambda raw: raw[:3] == b"BZh" and raw[3:4].isdigit(), None,
+     _unwrap("bz2", _bunzip2_capped)),
+    (lambda raw: raw[:6] == b"\xfd7zXZ\x00", None,
+     _unwrap("xz", _unxz_capped)),
+    # zstd (RFC 8878, live as Content-Encoding on the modern web): no
+    # zstd library here and its FSE/Huffman stage is out of from-scratch
+    # scope, so it is reported at any depth, never guessed at
+    (lambda raw: raw[:4] == b"\x28\xb5\x2f\xfd", "zstd", None),
+    (lambda raw: raw.startswith(b"%PDF-"), None, _pdf),
+    # DOCX, EPUB, XLSX, PPTX, then the OpenDocument trio (package_kind)
+    (lambda raw: raw[:4] == b"PK\x03\x04", None, _package),
+    # an archive of documents is not a document: census via kernel/tar.py
+    # (tar_meta), no text reduction
+    (lambda raw: raw[257:262] == b"ustar" and not looks_like_html(raw),
+     "tar", None),
+    (lambda raw: raw[:5] == b"{\\rtf", "rtf",
+     _parsed(rtf.parse_rtf, rtf.RtfError)),
+    # PostScript needs an interpreter (the reference has none) and DjVu
+    # page decode is IW44/JB2: both out of scope, census only
+    (lambda raw: raw[:4] == b"%!PS", "ps", None),
+    (djvu.is_djvu, "djvu", None),
+    # a database is data, not a document (the tar rule)
+    (sqlitedb.is_sqlite, "sqlite", None),
+    # mail sniffs BEFORE the generous html check (an html body part
+    # satisfies it); an archive of messages is census only
+    (eml.is_eml, "eml", _parsed(eml.parse_eml, eml.EmlError)),
+    (eml.is_mbox, "mbox", None),
+    # web fonts, and archive formats named honestly, never unpacked
+    (font.looks_like_font, "font", None),
+    (lambda raw: raw[:6] == b"Rar!\x1a\x07", "rar", None),
+    (lambda raw: raw[:6] == b"7z\xbc\xaf\x27\x1c", "7z", None),
+    # notebooks are json WITH text, so they sniff before json/jsonl;
+    # dataset shards and API dumps are data, not prose (the tar rule)
+    (ipynb.looks_like_ipynb, "ipynb",
+     _parsed(ipynb.parse_ipynb, ipynb.IpynbError)),
+    (jsondoc.looks_like_jsonl, "jsonl", None),
+    (jsondoc.looks_like_json, "json", None),
+    # arXiv sources (scoped detex), MediaWiki XML exports (export XML
+    # satisfies the generous html check) and subtitle transcripts
+    (latex.looks_like_tex, "tex",
+     _parsed(latex.parse_latex, latex.LatexError)),
+    (wikitext.looks_like_wiki, "wiki",
+     _parsed(wikitext.parse_wiki, wikitext.WikiError)),
+    (lambda raw: (subtitles.looks_like_vtt(raw)
+                  or subtitles.looks_like_srt(raw)), None, _subtitles),
+    (looks_like_html, "html", extract_main_text),
+    # delimited tables: tab/newline grid reduction (the xlsx rule)
+    (csvdoc.looks_like_csv, "csv", _parsed(csvdoc.parse_csv, csvdoc.CsvError)),
+    # text/plain is a huge crawl class and IS training text: the last
+    # resort once every structured sniff has passed
+    (looks_like_text, "txt", _plain_text),
+)
+
+
 def extract_any(raw: bytes, mode: str = "accuracy", _depth: int = 0):
-    """Dispatch on the payload: PDF bytes -> the PDF kernel, DOCX /
-    XLSX / ODT -> the office-package walks (kernel/{docx,xlsx,odt}.py,
-    r5), EPUB -> the spine walk (kernel/epub.py, r5), HTML ->
-    boilerplate strip. Standalone gzip payloads (.html.gz / .txt.gz /
-    .tar.gz — servers ship them as files, distinct from the
-    Content-Encoding layer kernel/warc.py already strips) gunzip
-    bounded and re-dispatch ONCE (_depth guards nesting bombs).
+    """Extract the text of any payload: the first _KINDS row whose
+    probe admits it picks the kernel; a payload no row admits goes
+    through the PDF kernel as kind "unknown". `_depth` is the wrapper
+    nesting level (a wrapper inside a wrapper is never unpacked).
     Returns (text, kind, doc_or_None)."""
-    if raw[:2] == b"\x1f\x8b":
-        if _depth > 0:       # nested wrapper: report, never unpack
-            return "", "gz", None
-        inner = _gunzip_capped(raw)
-        if inner is None:
-            return "", "gz", None
-        text, kind, doc = extract_any(inner, mode, _depth=1)
-        return text, "gz+" + kind, doc
-    if raw[:3] == b"BZh" and raw[3:4].isdigit():
-        if _depth > 0:
-            return "", "bz2", None
-        inner = _bunzip2_capped(raw)
-        if inner is None:
-            return "", "bz2", None
-        text, kind, doc = extract_any(inner, mode, _depth=1)
-        return text, "bz2+" + kind, doc
-    if raw[:6] == b"\xfd7zXZ\x00":
-        if _depth > 0:
-            return "", "xz", None
-        inner = _unxz_capped(raw)
-        if inner is None:
-            return "", "xz", None
-        text, kind, doc = extract_any(inner, mode, _depth=1)
-        return text, "xz+" + kind, doc
-    if raw[:4] == b"\x28\xb5\x2f\xfd":
-        # zstd (RFC 8878): Content-Encoding zstd is live on the modern
-        # web, but this container has no zstd library and the format's
-        # FSE/Huffman entropy stage is out of honest from-scratch scope
-        # — detect and report, never guess at bytes
-        return "", "zstd", None
-    if raw.startswith(b"%PDF-"):
-        from .document import Document
-
-        doc = Document(raw)
-        return doc.extract_all(mode), "pdf", doc
-    if raw[:4] == b"PK\x03\x04":
-        # one names-only directory walk decides the package kind;
-        # tolerant-open posture throughout: a broken package extracts
-        # empty, it does not fail the task
-        from .docx import DocxError, parse_docx
-        from .epub import EpubError, parse_epub
-        from .ziparc import ZipError, zip_names
-
-        try:
-            names = zip_names(raw)
-        except ZipError:
-            names = []
-        if "word/document.xml" in names:
-            try:
-                return parse_docx(raw)["text"], "docx", None
-            except DocxError:
-                return "", "docx", None
-        if "META-INF/container.xml" in names:
-            try:
-                return parse_epub(raw)["text"], "epub", None
-            except EpubError:
-                return "", "epub", None
-        if "xl/workbook.xml" in names:
-            from .xlsx import XlsxError, parse_xlsx
-
-            try:
-                return parse_xlsx(raw)["text"], "xlsx", None
-            except XlsxError:
-                return "", "xlsx", None
-        if "ppt/presentation.xml" in names:
-            from .pptx import PptxError, parse_pptx
-
-            try:
-                return parse_pptx(raw)["text"], "pptx", None
-            except PptxError:
-                return "", "pptx", None
-        if "content.xml" in names and "mimetype" in names:
-            from .odt import OdtError, odf_class, parse_odt
-
-            cls = odf_class(raw)
-            if cls == "text":
-                try:
-                    return parse_odt(raw)["text"], "odt", None
-                except OdtError:
-                    return "", "odt", None
-            if cls == "spreadsheet":
-                from .ods import OdsError, parse_ods
-
-                try:
-                    return parse_ods(raw)["text"], "ods", None
-                except OdsError:
-                    return "", "ods", None
-            if cls == "presentation":
-                from .odp import OdpError, parse_odp
-
-                try:
-                    return parse_odp(raw)["text"], "odp", None
-                except OdpError:
-                    return "", "odp", None
-    if raw[257:262] == b"ustar" and not looks_like_html(raw):
-        # an archive of documents is not a document: census via
-        # kernel/tar.py (tar_meta), no text reduction
-        return "", "tar", None
-    if raw[:5] == b"{\\rtf":
-        from .rtf import RtfError, parse_rtf
-
-        try:
-            return parse_rtf(raw)["text"], "rtf", None
-        except RtfError:
-            return "", "rtf", None
-    if raw[:4] == b"%!PS":
-        # PostScript: text extraction needs an interpreter (honestly
-        # out of scope; the reference has none) — census-only posture
-        return "", "ps", None
-    from .djvu import is_djvu
-
-    if is_djvu(raw):
-        # legacy scanned-document container: page decode is IW44/JB2
-        # (out of scope) — census-only posture
-        return "", "djvu", None
-    from .sqlitedb import is_sqlite
-
-    if is_sqlite(raw):
-        # a database is data, not a document (the tar rule)
-        return "", "sqlite", None
-    from .eml import EmlError, is_eml, is_mbox
-
-    if is_eml(raw):
-        # mailing-list archive mail: must sniff BEFORE the generous
-        # html check (an html body part satisfies it)
-        from .eml import parse_eml
-
-        try:
-            return parse_eml(raw)["text"], "eml", None
-        except EmlError:
-            return "", "eml", None
-    if is_mbox(raw):
-        # an archive of messages is not a document (the tar rule)
-        return "", "mbox", None
-    from .font import looks_like_font
-
-    if looks_like_font(raw):
-        # web-font payloads: census only, never text
-        return "", "font", None
-    if raw[:6] == b"Rar!\x1a\x07" or raw[:6] == b"7z\xbc\xaf\x27\x1c":
-        # proprietary/complex archive containers: detected and named
-        # honestly, never guessed at (the zstd posture)
-        return "", ("rar" if raw[:1] == b"R" else "7z"), None
-    from .ipynb import looks_like_ipynb
-
-    if looks_like_ipynb(raw):
-        # notebooks: markdown+code cell sources are training text
-        from .ipynb import IpynbError, parse_ipynb
-
-        try:
-            return parse_ipynb(raw)["text"], "ipynb", None
-        except IpynbError:
-            return "", "ipynb", None
-    from .jsondoc import looks_like_json, looks_like_jsonl
-
-    if looks_like_jsonl(raw):
-        # dataset shards / API dumps: data, not prose (the tar rule);
-        # must run AFTER looks_like_ipynb (notebooks are json WITH text)
-        return "", "jsonl", None
-    if looks_like_json(raw):
-        return "", "json", None
-    from .latex import looks_like_tex
-
-    if looks_like_tex(raw):
-        # arXiv-source payloads: scoped detex reduction
-        from .latex import LatexError, parse_latex
-
-        try:
-            return parse_latex(raw)["text"], "tex", None
-        except LatexError:
-            return "", "tex", None
-    from .wikitext import looks_like_wiki
-
-    if looks_like_wiki(raw):
-        # MediaWiki XML exports (the Pile/Dolma wiki-slice shape):
-        # scoped wikitext reduction; must sniff BEFORE the generous
-        # html check (export XML satisfies it)
-        from .wikitext import WikiError, parse_wiki
-
-        try:
-            return parse_wiki(raw)["text"], "wiki", None
-        except WikiError:
-            return "", "wiki", None
-    from .subtitles import looks_like_srt, looks_like_vtt
-
-    if looks_like_vtt(raw) or looks_like_srt(raw):
-        # subtitle transcripts ARE training text (the OpenSubtitles /
-        # caption lineage)
-        from .subtitles import SubtitleError, parse_subtitles
-
-        try:
-            m = parse_subtitles(raw)
-            return m["text"], m["kind"], None
-        except SubtitleError:
-            return "", "srt", None
-    if looks_like_html(raw):
-        return extract_main_text(raw), "html", None
-    from .csvdoc import CsvError, looks_like_csv
-
-    if looks_like_csv(raw):
-        # delimited tables: tab/newline grid reduction (the xlsx rule)
-        from .csvdoc import parse_csv
-
-        try:
-            return parse_csv(raw)["text"], "csv", None
-        except CsvError:
-            return "", "csv", None
-    if looks_like_text(raw):
-        # text/plain payloads are a huge crawl class and ARE training
-        # text: last-resort fallback once every structured sniff has
-        # passed. Newlines normalize, trailing whitespace strips —
-        # byte content otherwise untouched.
-        text = raw.decode(sniff_charset(raw), "replace")
-        if text[:1] == "﻿":
-            text = text[1:]
-        return text.replace("\r\n", "\n").replace("\r", "\n").rstrip(), \
-            "txt", None
-    from .document import Document
-
+    for probe, kind, text in _KINDS:
+        if probe(raw):
+            if kind is None:
+                out = text(raw, mode, _depth)
+                if out is not None:
+                    return out
+            else:
+                return ("" if text is None else text(raw)), kind, None
     doc = Document(raw)
     return doc.extract_all(mode), "unknown", doc

@@ -86,6 +86,8 @@ def parse_mp4(raw: bytes) -> dict:
                 if not timescale:
                     raise Mp4Error("zero timescale")
                 duration_ms = dur * 1000 // timescale
+                if duration_ms >> 63:     # a 64-bit duration can overflow
+                    raise Mp4Error("duration out of range")
             elif t2 == b"trak":
                 n_tracks += 1
                 for t3, s3, e3 in _boxes(raw, s2, e2, budget):
@@ -222,6 +224,8 @@ def parse_avif(raw: bytes) -> dict:
             codec = "hvc1"
     if not width or not height:
         raise Mp4Error("primary item has no ispe")
+    if width >> 31 or height >> 31:
+        raise Mp4Error("ispe dimension out of range")
     return {
         "brand": brand, "width": width, "height": height,
         "depth": depth, "channels": channels, "n_items": n_items,

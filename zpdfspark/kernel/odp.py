@@ -10,22 +10,19 @@ deck presents downstream like a 5-page document.
 Slides are <draw:page> elements in document order; visible text
 lives in <draw:frame> shapes (title/outline/text-box placeholders
 all carry a <draw:text-box> whose <text:p> paragraphs run through
-the shared ODT token walk: tab / line-break / run-length spaces /
-invisible spans). Frames with no paragraph text (image frames,
-OLE objects) contribute nothing, matching the pptx a:t-only rule.
+the shared ODT token walk, kernel/package.py's odf_paragraphs: tab /
+line-break / run-length spaces / invisible spans). Frames with no
+paragraph text (image frames, OLE objects) contribute nothing,
+matching the pptx a:t-only rule.
 """
 
 from __future__ import annotations
 
 import re
 
-from .odt import _para_text, _unesc
-from .ziparc import ZipError, parse_zip
+from .package import dc_field, odf_class, odf_paragraphs, open_odf
 
-_MIME = "mimetype"
-_CONTENT = "content.xml"
 _META = "meta.xml"
-_ODF_ODP = b"application/vnd.oasis.opendocument.presentation"
 _MAX_SLIDES = 4096
 
 
@@ -35,16 +32,9 @@ class OdpError(ValueError):
 
 _PAGE = re.compile(rb"<draw:page\b[^>]*>.*?</draw:page>", re.S)
 _FRAME = re.compile(rb"<draw:frame\b[^>]*>.*?</draw:frame>", re.S)
-_PARA = re.compile(
-    rb"<text:(p|h)\b[^>]*/>|<text:(p|h)\b[^>]*>.*?</text:\2>", re.S)
-_DC_TITLE = re.compile(rb"<dc:title(?:\s[^>]*)?>(.*?)</dc:title>", re.S)
-_DC_CREATOR = re.compile(rb"<dc:creator(?:\s[^>]*)?>(.*?)</dc:creator>",
-                         re.S)
 
 
 def is_odp(raw: bytes) -> bool:
-    from .odt import odf_class
-
     return odf_class(raw) == "presentation"
 
 
@@ -56,18 +46,7 @@ def parse_odp(raw: bytes) -> dict:
     presentation — callers treat that as data, not a task failure.
     n_frames counts draw:frame shapes across all slides (text-bearing
     or not, the deck's shape census)."""
-    try:
-        members = parse_zip(raw)
-    except ZipError as e:
-        raise OdpError(f"container: {e}") from e
-    if members.get(_MIME, b"").strip() != _ODF_ODP:
-        raise OdpError("not an OpenDocument presentation package")
-    content = members.get(_CONTENT)
-    if content is None:
-        raise OdpError("no content.xml in package")
-    body = re.search(rb"<office:body\b[^>]*>(.*)</office:body>", content,
-                     re.S)
-    scope = body.group(1) if body else content
+    members, scope = open_odf(raw, "presentation", OdpError)
 
     slides = []
     n_frames = 0
@@ -77,29 +56,17 @@ def parse_odp(raw: bytes) -> dict:
         frames = []
         for fm in _FRAME.finditer(pm.group(0)):
             n_frames += 1
-            paras = []
-            for m in _PARA.finditer(fm.group(0)):
-                paras.append("" if m.group(1) is not None
-                             else _para_text(m.group(0)))
-            txt = "\n".join(paras)
+            txt = "\n".join(odf_paragraphs(fm.group(0)))
             if txt:
                 frames.append(txt)
         slides.append("\n".join(frames))
 
-    title = creator = None
     meta = members.get(_META)
-    if meta:
-        t = _DC_TITLE.search(meta)
-        c = _DC_CREATOR.search(meta)
-        if t:
-            title = _unesc(t.group(1))
-        if c:
-            creator = _unesc(c.group(1))
     return {
         "text": "\x0c".join(slides),
         "n_slides": len(slides),
         "n_frames": n_frames,
         "n_entries": len(members),
-        "title": title,
-        "creator": creator,
+        "title": dc_field(meta, "title"),
+        "creator": dc_field(meta, "creator"),
     }

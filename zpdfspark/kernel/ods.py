@@ -15,7 +15,8 @@ ODF spreadsheet specifics the walk honors:
   and TRAILING empty cells are stripped per row (the text a user
   sees, not the grid padding).
 - cell display text is the cell's <text:p> content (the ODT token
-  walk: tab / line-break / run-length spaces / invisible spans);
+  walk, kernel/package.py's odf_paragraphs: tab / line-break /
+  run-length spaces / invisible spans);
   value-typed cells (float/date) carry their formatted display text
   in the same <text:p>, so no office:value re-formatting is needed.
 - <table:covered-table-cell/> (under a merge) counts as an empty
@@ -26,13 +27,9 @@ from __future__ import annotations
 
 import re
 
-from .odt import _para_text, _unesc
-from .ziparc import ZipError, parse_zip
+from .package import dc_field, odf_class, odf_paragraphs, open_odf, unesc
 
-_MIME = "mimetype"
-_CONTENT = "content.xml"
 _META = "meta.xml"
-_ODF_ODS = b"application/vnd.oasis.opendocument.spreadsheet"
 _MAX_SHEETS = 1024
 _MAX_REPEAT = 1024          # DoS cap: LibreOffice pads to 16384 cols
 _MAX_CELLS = 1 << 20        # per-document expanded-cell budget
@@ -52,16 +49,9 @@ _CELL = re.compile(
     rb"|<table:(?:covered-)?table-cell\b([^>]*)>(.*?)</table:"
     rb"(?:covered-)?table-cell>", re.S)
 _REPEAT = re.compile(rb'\btable:number-columns-repeated="(\d{1,9})"')
-_PARA = re.compile(
-    rb"<text:(p|h)\b[^>]*/>|<text:(p|h)\b[^>]*>.*?</text:\2>", re.S)
-_DC_TITLE = re.compile(rb"<dc:title(?:\s[^>]*)?>(.*?)</dc:title>", re.S)
-_DC_CREATOR = re.compile(rb"<dc:creator(?:\s[^>]*)?>(.*?)</dc:creator>",
-                         re.S)
 
 
 def is_ods(raw: bytes) -> bool:
-    from .odt import odf_class
-
     return odf_class(raw) == "spreadsheet"
 
 
@@ -69,11 +59,7 @@ def _cell_text(body: bytes) -> str:
     # a cell's display text: its <text:p> paragraphs through the ODT
     # token walk, multi-paragraph cells joined with a space (the cell
     # must stay on its row line — TAB/newline are the grid separators)
-    paras = []
-    for m in _PARA.finditer(body):
-        paras.append("" if m.group(1) is not None
-                     else _para_text(m.group(0)))
-    return " ".join(p for p in paras if p)
+    return " ".join(p for p in odf_paragraphs(body) if p)
 
 
 def parse_ods(raw: bytes) -> dict:
@@ -84,18 +70,7 @@ def parse_ods(raw: bytes) -> dict:
     OpenDocument spreadsheet — callers treat that as data, not a task
     failure. n_cells counts expanded grid slots after trailing-empty
     stripping (what the text actually carries)."""
-    try:
-        members = parse_zip(raw)
-    except ZipError as e:
-        raise OdsError(f"container: {e}") from e
-    if members.get(_MIME, b"").strip() != _ODF_ODS:
-        raise OdsError("not an OpenDocument spreadsheet package")
-    content = members.get(_CONTENT)
-    if content is None:
-        raise OdsError("no content.xml in package")
-    body = re.search(rb"<office:body\b[^>]*>(.*)</office:body>", content,
-                     re.S)
-    scope = body.group(1) if body else content
+    members, scope = open_odf(raw, "spreadsheet", OdsError)
 
     sheets = []       # (name, text)
     n_cells = 0
@@ -120,24 +95,16 @@ def parse_ods(raw: bytes) -> dict:
             if n_cells > _MAX_CELLS:
                 raise OdsError("spreadsheet exceeds cell cap")
             lines.append("\t".join(cells))
-        sheets.append((_unesc(nm.group(1)) if nm else "",
+        sheets.append((unesc(nm.group(1)) if nm else "",
                        "\n".join(lines)))
 
-    title = creator = None
     meta = members.get(_META)
-    if meta:
-        t = _DC_TITLE.search(meta)
-        c = _DC_CREATOR.search(meta)
-        if t:
-            title = _unesc(t.group(1))
-        if c:
-            creator = _unesc(c.group(1))
     return {
         "text": "\x0c".join(s[1] for s in sheets),
         "n_sheets": len(sheets),
         "n_cells": n_cells,
         "n_entries": len(members),
         "sheet_names": [s[0] for s in sheets],
-        "title": title,
-        "creator": creator,
+        "title": dc_field(meta, "title"),
+        "creator": dc_field(meta, "creator"),
     }

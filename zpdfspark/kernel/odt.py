@@ -9,94 +9,25 @@ stripped, <text:tab/> as TAB, <text:line-break/> as newline,
 <text:s text:c="N"/> as N spaces (the format's explicit run-length
 space), entities decoded; paragraphs joined with newline (the
 WordprocessingML rule). Metadata (dc:title / dc:creator) comes from
-meta.xml, mirroring the PDF/DOCX metadata family.
+meta.xml, mirroring the PDF/DOCX metadata family. The package open,
+the paragraph walk and the class probe are kernel/package.py's, shared
+with kernel/ods.py and kernel/odp.py; `odf_class` is re-exported here
+for the fixtures' reference sniffer.
 """
 
 from __future__ import annotations
 
-import html as html_mod
-import re
+from .package import dc_field, odf_class, odf_paragraphs, open_odf
 
-from .ziparc import ZipError, parse_zip, zip_names
-
-_MIME = "mimetype"
-_CONTENT = "content.xml"
 _META = "meta.xml"
-_ODF_TEXT = b"application/vnd.oasis.opendocument.text"
 
 
 class OdtError(ValueError):
     pass
 
 
-_PARA = re.compile(
-    rb"<text:(p|h)\b[^>]*/>|<text:(p|h)\b[^>]*>.*?</text:\2>", re.S)
-_TOKEN = re.compile(
-    rb"<text:tab\b[^>]*/>"
-    rb"|<text:line-break\b[^>]*/>"
-    rb"|<text:s\b[^>]*/>"
-    rb"|<[^>]*>"
-    rb"|[^<]+", re.S)
-_S_COUNT = re.compile(rb'\btext:c="(\d{1,4})"')
-_DC_TITLE = re.compile(rb"<dc:title(?:\s[^>]*)?>(.*?)</dc:title>", re.S)
-_DC_CREATOR = re.compile(rb"<dc:creator(?:\s[^>]*)?>(.*?)</dc:creator>",
-                         re.S)
-
-
-def _unesc(bs: bytes) -> str:
-    return html_mod.unescape(bs.decode("utf-8", "replace"))
-
-
-# the three OASIS document classes this engine extracts; the shared
-# probe reads the declared mimetype once and each class module gates
-# its parser on its own constant (kernel/ods.py, kernel/odp.py)
-_ODF_CLASSES = {
-    b"application/vnd.oasis.opendocument.text": "text",
-    b"application/vnd.oasis.opendocument.spreadsheet": "spreadsheet",
-    b"application/vnd.oasis.opendocument.presentation": "presentation",
-}
-
-
-def odf_class(raw: bytes):
-    """Container probe shared by the ODF trio: names-only walk for
-    content.xml + mimetype, then ONE stored-member read to resolve the
-    declared class. Returns 'text' | 'spreadsheet' | 'presentation' |
-    None — dispatchers read the mimetype once instead of three times."""
-    if raw[:4] != b"PK\x03\x04":
-        return None
-    try:
-        names = zip_names(raw)
-        if _CONTENT not in names or _MIME not in names:
-            return None
-        mime = parse_zip(raw, want={_MIME})[_MIME]
-    except ZipError:
-        return None
-    return _ODF_CLASSES.get(mime.strip())
-
-
 def is_odt(raw: bytes) -> bool:
     return odf_class(raw) == "text"
-
-
-def _para_text(chunk: bytes) -> str:
-    parts = []
-    for m in _TOKEN.finditer(chunk):
-        tok = m.group(0)
-        # bare-prefix dispatch is wrong here: <text:span startswith
-        # <text:s and <text:table startswith <text:tab — the element
-        # name must END (space or /) right after the prefix
-        if tok.startswith(b"<text:tab/") or tok.startswith(b"<text:tab "):
-            parts.append("\t")
-        elif tok.startswith(b"<text:line-break"):
-            parts.append("\n")
-        elif tok.startswith(b"<text:s/") or tok.startswith(b"<text:s "):
-            c = _S_COUNT.search(tok)
-            parts.append(" " * (int(c.group(1)) if c else 1))
-        elif tok.startswith(b"<"):
-            continue  # any other tag (spans, bookmarks) is invisible
-        else:
-            parts.append(_unesc(tok))
-    return "".join(parts)
 
 
 def parse_odt(raw: bytes) -> dict:
@@ -105,38 +36,13 @@ def parse_odt(raw: bytes) -> dict:
     Returns {text, n_paragraphs, n_entries, title, creator}; raises
     OdtError on anything that is not a readable OpenDocument text
     package — callers treat that as data, not a task failure."""
-    try:
-        members = parse_zip(raw)
-    except ZipError as e:
-        raise OdtError(f"container: {e}") from e
-    if members.get(_MIME, b"").strip() != _ODF_TEXT:
-        raise OdtError("not an OpenDocument text package")
-    content = members.get(_CONTENT)
-    if content is None:
-        raise OdtError("no content.xml in package")
-    # only body paragraphs: styles.xml content never leaks in, and
-    # office:body scoping drops any header declarations in content.xml
-    body = re.search(rb"<office:body\b[^>]*>(.*)</office:body>", content,
-                     re.S)
-    scope = body.group(1) if body else content
-    paras = []
-    for m in _PARA.finditer(scope):
-        # group 1 set = the self-closing (empty) alternative matched
-        paras.append("" if m.group(1) is not None
-                     else _para_text(m.group(0)))
-    title = creator = None
+    members, body = open_odf(raw, "text", OdtError)
+    paras = odf_paragraphs(body)
     meta = members.get(_META)
-    if meta:
-        t = _DC_TITLE.search(meta)
-        c = _DC_CREATOR.search(meta)
-        if t:
-            title = _unesc(t.group(1))
-        if c:
-            creator = _unesc(c.group(1))
     return {
         "text": "\n".join(paras),
         "n_paragraphs": len(paras),
         "n_entries": len(members),
-        "title": title,
-        "creator": creator,
+        "title": dc_field(meta, "title"),
+        "creator": dc_field(meta, "creator"),
     }

@@ -6,9 +6,10 @@ carries (conference decks, lecture slides, corporate reports).
 Discovery follows the OPC package layout the way the xlsx reader
 does: ppt/presentation.xml's <p:sldIdLst> lists <p:sldId> elements in
 DECK order, each r:id resolved through
-ppt/_rels/presentation.xml.rels to its slide part — zip member order
-is deliberately not trusted (slide9.xml sorts before slide10.xml
-lexically, and repackagers reorder members freely).
+ppt/_rels/presentation.xml.rels to its slide part (kernel/package.py's
+opc_parts) — zip member order is deliberately not trusted (slide9.xml
+sorts before slide10.xml lexically, and repackagers reorder members
+freely).
 
 Slide text is DrawingML: every <p:txBody> (one per shape) contributes
 its <a:p> paragraphs; a paragraph's text is its <a:t> runs
@@ -26,14 +27,11 @@ repo's charter (SURVEY.md §2.11).
 
 from __future__ import annotations
 
-import html as html_mod
-import posixpath
 import re
 
-from .ziparc import ZipError, parse_zip, zip_names
+from .package import dc_field, has_member, opc_parts, read_package, unesc
 
 _PRES = "ppt/presentation.xml"
-_RELS = "ppt/_rels/presentation.xml.rels"
 _CORE = "docProps/core.xml"
 _MAX_SLIDES = 2048
 
@@ -43,38 +41,24 @@ class PptxError(ValueError):
 
 
 _SLDID = re.compile(rb"<p:sldId\b[^>]*>")
-_ATTR_RID = re.compile(rb'\br:id="([^"]+)"')
-_REL = re.compile(rb"<Relationship\b[^>]*>")
-_ATTR_ID = re.compile(rb'\bId="([^"]+)"')
-_ATTR_TARGET = re.compile(rb'\bTarget="([^"]+)"')
 _TXBODY = re.compile(rb"<p:txBody(?:\s[^>]*)?>(.*?)</p:txBody>", re.S)
 # paragraphs: paired <a:p>…</a:p> or self-closing <a:p/> (empty line)
 _AP = re.compile(rb"<a:p(?:\s[^>]*)?>(.*?)</a:p>|<a:p(?:\s[^>]*)?/>",
                  re.S)
 # within a paragraph, text runs and soft line breaks in document order
 _RUN = re.compile(rb"<a:t(?:\s[^>]*)?>(.*?)</a:t>|<a:br\s*/>", re.S)
-_DC_TITLE = re.compile(rb"<dc:title(?:\s[^>]*)?>(.*?)</dc:title>", re.S)
-
-
-def _unesc(bs: bytes) -> str:
-    return html_mod.unescape(bs.decode("utf-8", "replace"))
 
 
 def is_pptx(raw: bytes) -> bool:
     """Names-only container probe."""
-    if raw[:4] != b"PK\x03\x04":
-        return False
-    try:
-        return _PRES in zip_names(raw)
-    except ZipError:
-        return False
+    return has_member(raw, _PRES)
 
 
 def _para_text(body: bytes) -> str:
     parts = []
     for m in _RUN.finditer(body):
         if m.group(1) is not None:
-            parts.append(_unesc(m.group(1)))
+            parts.append(unesc(m.group(1)))
         else:
             parts.append("\n")
     return "".join(parts)
@@ -86,33 +70,13 @@ def parse_pptx(raw: bytes) -> dict:
     Returns {text, n_slides, n_shapes, n_entries, title}; raises
     PptxError on anything that is not a readable deck — callers treat
     that as data, not as a task failure."""
-    try:
-        members = parse_zip(raw)
-    except ZipError as e:
-        raise PptxError(f"container: {e}") from e
-    pres = members.get(_PRES)
-    if pres is None:
+    members = read_package(raw, PptxError)
+    if _PRES not in members:
         raise PptxError("no ppt/presentation.xml in package")
-
-    rels = {}
-    for m in _REL.finditer(members.get(_RELS, b"")):
-        tag = m.group(0)
-        i = _ATTR_ID.search(tag)
-        t = _ATTR_TARGET.search(tag)
-        if i and t:
-            target = t.group(1).decode("utf-8", "replace")
-            rels[i.group(1)] = posixpath.normpath(
-                posixpath.join("ppt", target))
 
     slides = []          # per-slide text
     n_shapes = 0
-    for m in _SLDID.finditer(pres):
-        rid = _ATTR_RID.search(m.group(0))
-        if not rid:
-            continue
-        part = members.get(rels.get(rid.group(1), ""))
-        if part is None:
-            continue
+    for _tag, part in opc_parts(members, _PRES, _SLDID):
         if len(slides) >= _MAX_SLIDES:
             raise PptxError("deck exceeds slide cap")
         lines = []
@@ -123,16 +87,10 @@ def parse_pptx(raw: bytes) -> dict:
                 lines.append(_para_text(body))
         slides.append("\n".join(lines))
 
-    title = None
-    core = members.get(_CORE)
-    if core:
-        t = _DC_TITLE.search(core)
-        if t:
-            title = _unesc(t.group(1))
     return {
         "text": "\x0c".join(slides),
         "n_slides": len(slides),
         "n_shapes": n_shapes,
         "n_entries": len(members),
-        "title": title,
+        "title": dc_field(members.get(_CORE), "title"),
     }

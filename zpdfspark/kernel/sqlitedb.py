@@ -44,6 +44,8 @@ def parse_sqlite(raw: bytes) -> Dict[str, object]:
     if ps < 512 or ps & (ps - 1):
         raise SqliteError("invalid page size")
     n_pages = struct.unpack(">I", raw[28:32])[0]
+    if n_pages >> 31:
+        raise SqliteError("page count out of range")
     enc_code = struct.unpack(">I", raw[56:60])[0]
     user_version = struct.unpack(">i", raw[60:64])[0]
     encoding = {1: "utf-8", 2: "utf-16le", 3: "utf-16be"}.get(

@@ -138,6 +138,12 @@ def parse_tiff(raw: bytes) -> dict:
     if not (isinstance(out["width"], int)
             and isinstance(out["height"], int)):
         raise TiffError("IFD0 lacks single-valued dimensions")
+    # a LONG entry reaches 2**32 - 1, which no int column holds, and a
+    # description entry of a numeric type reads as numbers
+    if (any(v is not None and v >> 31
+            for v in (out["width"], out["height"], out["bits_per_sample"]))
+            or not isinstance(out["description"], (str, type(None)))):
+        raise TiffError("IFD0 value out of range or of the wrong type")
     return out
 
 

@@ -26,6 +26,7 @@ every declared size is clamped against the enclosing span.
 
 from __future__ import annotations
 
+import math
 import struct
 
 _MAX_ELEMENTS = 100_000
@@ -173,7 +174,10 @@ def parse_webm(raw: bytes) -> dict:
             elif eid == _PIXEL_HEIGHT and out["height"] is None:
                 out["height"] = _uint(payload)
             elif eid == _SAMPLING_FREQ and out["sample_rate"] is None:
-                out["sample_rate"] = int(_float(payload))
+                rate = _float(payload)
+                if not math.isfinite(rate):      # int() raises on it
+                    raise WebmError("sampling frequency not finite")
+                out["sample_rate"] = int(rate)
             elif eid == _CHANNELS and out["channels"] is None:
                 out["channels"] = _uint(payload)
             pos = payload_end
@@ -195,6 +199,12 @@ def parse_webm(raw: bytes) -> dict:
         return 0
 
     walk(0, len(raw), 0, 0)
+    # EBML uints are unbounded: a value no int column holds is damage
+    if any(v is not None and v >> 31 for v in (out["width"], out["height"])):
+        raise WebmError("pixel dimension out of range")
     if duration[0] is not None:
-        out["duration_ms"] = int(duration[0] * scale[0] / 1_000_000)
+        ms = duration[0] * scale[0] / 1_000_000
+        if not abs(ms) < 1 << 63:          # also NaN and infinity
+            raise WebmError("duration out of range")
+        out["duration_ms"] = int(ms)
     return out

@@ -10,7 +10,8 @@ sheet, sheets joined with \x0c (the PDF page-join rule) — so a
 
 The discovery chain is the OPC package layout: xl/workbook.xml lists
 <sheet> elements in workbook order, each resolved through
-xl/_rels/workbook.xml.rels (Relationship Id -> worksheet part).
+xl/_rels/workbook.xml.rels (Relationship Id -> worksheet part; the
+walk is kernel/package.py's opc_parts, shared with kernel/pptx.py).
 Cell values resolve per the SpreadsheetML type attribute: t="s" is an
 index into xl/sharedStrings.xml (<si> items, rich-text runs
 concatenated), t="inlineStr" carries an inline <is><t> payload, and
@@ -20,14 +21,11 @@ everything else (numbers, t="str" formula results, booleans) is the
 
 from __future__ import annotations
 
-import html as html_mod
-import posixpath
 import re
 
-from .ziparc import ZipError, parse_zip, zip_names
+from .package import dc_field, has_member, opc_parts, read_package, unesc
 
 _WORKBOOK = "xl/workbook.xml"
-_RELS = "xl/_rels/workbook.xml.rels"
 _SHARED = "xl/sharedStrings.xml"
 _CORE = "docProps/core.xml"
 _MAX_SHEETS = 1024
@@ -39,31 +37,17 @@ class XlsxError(ValueError):
 
 _SHEET = re.compile(rb"<sheet\b[^>]*>")
 _ATTR_NAME = re.compile(rb'\bname="([^"]*)"')
-_ATTR_RID = re.compile(rb'\br:id="([^"]+)"')
-_REL = re.compile(rb"<Relationship\b[^>]*>")
-_ATTR_ID = re.compile(rb'\bId="([^"]+)"')
-_ATTR_TARGET = re.compile(rb'\bTarget="([^"]+)"')
 _SI = re.compile(rb"<si>(.*?)</si>", re.S)
 _T = re.compile(rb"<t(?:\s[^>]*)?>(.*?)</t>", re.S)
 _ROW = re.compile(rb"<row\b[^>]*>(.*?)</row>", re.S)
 _CELL = re.compile(rb"<c\b([^>]*)>(.*?)</c>|<c\b([^>]*)/>", re.S)
 _V = re.compile(rb"<v(?:\s[^>]*)?>(.*?)</v>", re.S)
 _ATTR_T = re.compile(rb'\bt="([^"]+)"')
-_DC_TITLE = re.compile(rb"<dc:title(?:\s[^>]*)?>(.*?)</dc:title>", re.S)
-
-
-def _unesc(bs: bytes) -> str:
-    return html_mod.unescape(bs.decode("utf-8", "replace"))
 
 
 def is_xlsx(raw: bytes) -> bool:
     """Names-only container probe."""
-    if raw[:4] != b"PK\x03\x04":
-        return False
-    try:
-        return _WORKBOOK in zip_names(raw)
-    except ZipError:
-        return False
+    return has_member(raw, _WORKBOOK)
 
 
 def _cell_text(attrs: bytes, body: bytes, shared: list) -> str:
@@ -78,9 +62,9 @@ def _cell_text(attrs: bytes, body: bytes, shared: list) -> str:
         except (ValueError, IndexError):
             return ""
     if kind == b"inlineStr":
-        return "".join(_unesc(m.group(1)) for m in _T.finditer(body))
+        return "".join(unesc(m.group(1)) for m in _T.finditer(body))
     v = _V.search(body)
-    return _unesc(v.group(1)) if v else ""
+    return unesc(v.group(1)) if v else ""
 
 
 def parse_xlsx(raw: bytes) -> dict:
@@ -89,41 +73,19 @@ def parse_xlsx(raw: bytes) -> dict:
     Returns {text, n_sheets, n_cells, n_entries, sheet_names, title};
     raises XlsxError on anything that is not a readable workbook —
     callers treat that as data, not as a task failure."""
-    try:
-        members = parse_zip(raw)
-    except ZipError as e:
-        raise XlsxError(f"container: {e}") from e
-    wb = members.get(_WORKBOOK)
-    if wb is None:
+    members = read_package(raw, XlsxError)
+    if _WORKBOOK not in members:
         raise XlsxError("no xl/workbook.xml in package")
-
-    rels = {}
-    for m in _REL.finditer(members.get(_RELS, b"")):
-        tag = m.group(0)
-        i = _ATTR_ID.search(tag)
-        t = _ATTR_TARGET.search(tag)
-        if i and t:
-            target = t.group(1).decode("utf-8", "replace")
-            rels[i.group(1)] = posixpath.normpath(
-                posixpath.join("xl", target))
 
     shared = []
     ss = members.get(_SHARED)
     if ss:
-        shared = ["".join(_unesc(t.group(1)) for t in _T.finditer(si.group(1)))
+        shared = ["".join(unesc(t.group(1)) for t in _T.finditer(si.group(1)))
                   for si in _SI.finditer(ss)]
 
-    sheets = []       # (name, text, n_cells)
+    sheets = []       # (name, text)
     n_cells = 0
-    for m in _SHEET.finditer(wb):
-        tag = m.group(0)
-        nm = _ATTR_NAME.search(tag)
-        rid = _ATTR_RID.search(tag)
-        if not rid:
-            continue
-        part = members.get(rels.get(rid.group(1), ""))
-        if part is None:
-            continue
+    for tag, part in opc_parts(members, _WORKBOOK, _SHEET):
         if len(sheets) >= _MAX_SHEETS:
             raise XlsxError("workbook exceeds sheet cap")
         lines = []
@@ -135,19 +97,14 @@ def parse_xlsx(raw: bytes) -> dict:
                 cells.append(_cell_text(attrs, body, shared))
             n_cells += len(cells)
             lines.append("\t".join(cells))
-        sheets.append((_unesc(nm.group(1)) if nm else "", "\n".join(lines)))
+        nm = _ATTR_NAME.search(tag)
+        sheets.append((unesc(nm.group(1)) if nm else "", "\n".join(lines)))
 
-    title = None
-    core = members.get(_CORE)
-    if core:
-        t = _DC_TITLE.search(core)
-        if t:
-            title = _unesc(t.group(1))
     return {
         "text": "\x0c".join(s[1] for s in sheets),
         "n_sheets": len(sheets),
         "n_cells": n_cells,
         "n_entries": len(members),
         "sheet_names": [s[0] for s in sheets],
-        "title": title,
+        "title": dc_field(members.get(_CORE), "title"),
     }

@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame
 
 from zpdfspark.kernel import (bmp, csvdoc, djvu, docx, eml, epub, font, gif,
                               htmltext, ico, ipynb, jpeg, jsondoc, latex, odp,
-                              ods, odt, png, pptx, rtf, sqlitedb, subtitles,
-                              svg, tar, tiff, wav, wikitext, xlsx)
+                              ods, odt, package, png, pptx, rtf, sqlitedb,
+                              subtitles, svg, tar, tiff, wav, wikitext, xlsx)
 from zpdfspark.spark.udfs import map_rows
 
 DECODE_SCHEMA = ("url string, media_kind string, n_bytes long, "
@@ -99,16 +99,7 @@ def sniff_kind(raw: bytes) -> str:
     if raw[257:262] == b"ustar" and tar.is_tar(raw):
         return "tar"
     if raw[:4] == b"PK\x03\x04":
-        if docx.is_docx(raw):
-            return "docx"
-        if epub.is_epub(raw):
-            return "epub"
-        if xlsx.is_xlsx(raw):
-            return "xlsx"
-        if pptx.is_pptx(raw):
-            return "pptx"
-        return {"text": "odt", "spreadsheet": "ods",
-                "presentation": "odp"}.get(odt.odf_class(raw), "zip")
+        return package.package_kind(raw) or "zip"
     if eml.is_eml(raw):
         return "eml"
     if eml.is_mbox(raw):
