@@ -4494,16 +4494,54 @@ def _q_mime_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =========================================================================
 
 
+# Arrow type of a carried field -> Spark SQL type of its query column
+_SQL_TYPES = {"int32": "int", "int64": "long", "string": "string",
+              "bool": "boolean", "list<string>": "array<string>"}
+
+
+def _carried_schema(table: str) -> str:
+    """The output columns of the query over the fixtures' carried field
+    table ``table`` (``zpdfspark.fixtures.CARRIED``), as DDL: each field
+    under its query name, then ``n_text_chars`` when the table has it."""
+    from zpdfspark.fixtures import CARRIED
+
+    t = CARRIED[table]
+    return ", ".join([f"{name} {_SQL_TYPES[typ]}" for _, typ, name in t.fields]
+                     + ["n_text_chars int"] * t.text_chars)
+
+
+def _carried_oracles(corpus: str) -> dict[str, str]:
+    """The oracle SQL of every carried field table that names a query:
+    the table's carried columns under their query names (then the
+    carried text's length as ``n_text_chars`` when the table has it),
+    over the rows of the table's media kinds."""
+    from zpdfspark.fixtures import CARRIED
+
+    out = {}
+    for t in CARRIED.values():
+        if t.query is None:
+            continue
+        cols = ([f"{col} AS {name}" for col, _, name in t.fields]
+                + ["CAST(length(text) AS INTEGER) AS n_text_chars"]
+                * t.text_chars)
+        kinds = ", ".join(f"'{k}'" for k in t.kinds)
+        where = (f"= {kinds}" if len(t.kinds) == 1 else f"IN ({kinds})")
+        out[t.query] = (f"SELECT url, {', '.join(cols)} FROM {corpus} "
+                        f"WHERE media_kind {where} ORDER BY url")
+    return out
+
+
 def _parsed_meta(kernel: str, accept, parse: str, error: str, row,
-                 schema: str):
+                 schema: str | None = None, carried: str | None = None):
     """The query shape of one per-format metadata kernel. ``per_row``
     keeps the payloads ``accept(k, raw)`` admits, where ``k`` is the
     module ``zpdfspark.kernel.<kernel>``; parses each with
     ``k.<parse>``; drops the ones that raise ``k.<error>``; and yields
-    ``(url, *row(m))`` typed ``url string, <schema>``. The kernel module
-    is imported when the query runs, never when this file loads, and
-    ``_map_blobs`` (map-only map_rows on the pruned (url, html) scan) is
-    looked up then too."""
+    ``(url, *row(m))`` typed ``url string, <schema>``, or typed by the
+    carried field table named ``carried`` (``_carried_schema``). The
+    kernel module is imported when the query runs, never when this file
+    loads, and ``_map_blobs`` (map-only map_rows on the pruned
+    (url, html) scan) is looked up then too."""
     def query(spark: SparkSession, sf_dir: str) -> DataFrame:
         import importlib
 
@@ -4519,19 +4557,22 @@ def _parsed_meta(kernel: str, accept, parse: str, error: str, row,
                 return
             yield (url, *row(m))
 
-        return _map_blobs(spark, sf_dir, per_row, "url string, " + schema)
+        cols = schema if carried is None else _carried_schema(carried)
+        return _map_blobs(spark, sf_dir, per_row, "url string, " + cols)
 
     return query
 
 
 # The per-format metadata queries, one _parsed_meta row each: kernel
 # module, accept predicate, parse function, error class, output fields
-# and their schema. Each accept predicate is the query's own magic-byte
-# filter, not ``sniff_kind(raw) == kind``, whose precedence differs.
-# Container and header facts only: the extracted TEXT of the document
-# kinds rides the extraction family (extract_any), and no codec decodes
-# audio, video or pixels here. Unless a row says otherwise, the oracle
-# is corpus-carried columns from an independent fixtures-side re-read
+# and their schema: a DDL string, or the name of the fixtures' carried
+# field table from which both the schema and the oracle SQL derive. Each
+# accept predicate is the query's own magic-byte filter, not
+# ``sniff_kind(raw) == kind``, whose precedence differs. Container and
+# header facts only: the extracted TEXT of the document kinds rides the
+# extraction family (extract_any), and no codec decodes audio, video or
+# pixels here. Unless a row says otherwise, the oracle is
+# corpus-carried columns from an independent fixtures-side re-read
 # (fixtures._<kind>_expected), never the kernel.
 _ZIP = b"PK\x03\x04"
 
@@ -4540,7 +4581,7 @@ _q_video_stats = _parsed_meta(
     "mp4", lambda k, raw: len(raw) >= 12 and raw[4:8] == b"ftyp",
     "parse_mp4", "Mp4Error",
     lambda m: (m["duration_ms"], m["n_tracks"], m["width"], m["height"]),
-    "duration_ms long, n_tracks int, width int, height int")
+    carried="video")
 # MP3 frame-header walk; audio decode stubbed. Oracle: _mp3_expected
 _q_mp3_stats = _parsed_meta(
     "mp3", lambda k, raw: raw[:3] == b"ID3" or (
@@ -4549,118 +4590,105 @@ _q_mp3_stats = _parsed_meta(
     lambda m: (m["n_frames"], m["sample_rate"], m["channels"],
                m["duration_ms"], m["mean_bitrate_kbps"], m["title"],
                m["artist"]),
-    "n_frames int, sample_rate int, n_channels int, duration_ms long, "
-    "kbps int, title string, artist string")
+    carried="mp3")
 # DjVu IFF85 census; IW44/JB2 page decode out of scope. Oracle: _djvu_expected
 _q_djvu_meta = _parsed_meta(
     "djvu", lambda k, raw: k.is_djvu(raw), "parse_djvu", "DjvuError",
     lambda m: (m["is_multi"], m["n_pages"], m["width"], m["height"],
                m["dpi"]),
-    "is_multi boolean, n_pages int, width int, height int, dpi int")
+    carried="djvu")
 # FLAC blocks + Vorbis comments; frame decode stubbed. Oracle: _flac_expected
 _q_flac_meta = _parsed_meta(
     "flac", lambda k, raw: raw[:4] == b"fLaC", "parse_flac", "FlacError",
     lambda m: (m["sample_rate"], m["channels"], m["bits_per_sample"],
                m["total_samples"], m["duration_ms"], m["title"],
                m["artist"]),
-    "sample_rate int, n_channels int, bits int, total_samples long, "
-    "duration_ms long, title string, artist string")
+    carried="flac")
 # Ogg pages + Vorbis/Opus headers; packet decode stubbed. Oracle: _ogg_expected
 _q_ogg_meta = _parsed_meta(
     "ogg", lambda k, raw: raw[:4] == b"OggS", "parse_ogg", "OggError",
     lambda m: (m["codec"], m["channels"], m["sample_rate"], m["n_pages"],
                m["duration_ms"], m["title"], m["artist"]),
-    "codec string, n_channels int, sample_rate int, n_pages int, "
-    "duration_ms long, title string, artist string")
+    carried="ogg")
 # TIFF IFD chain (strips decode in media.decode_media). Oracle: _tiff_expected
 _q_tiff_meta = _parsed_meta(
     "tiff", lambda k, raw: raw[:4] in (b"II*\x00", b"MM\x00*"),
     "parse_tiff", "TiffError",
     lambda m: (m["width"], m["height"], m["bits_per_sample"],
                m["compression"], m["n_pages"], m["description"]),
-    "width int, height int, bits int, compression string, n_pages int, "
-    "description string")
+    carried="tiff")
 # DOCX over the kernel/ziparc.py walk. Oracle: _docx_expected (stdlib zipfile)
 _q_docx_meta = _parsed_meta(
     "docx", lambda k, raw: raw[:4] == _ZIP and k.is_docx(raw),
     "parse_docx", "DocxError",
     lambda m: (m["n_paragraphs"], m["n_entries"], m["title"], m["creator"],
                len(m["text"])),
-    "n_paragraphs int, n_entries int, title string, creator string, "
-    "n_text_chars int")
+    carried="docx")
 # EPUB spine walk. Oracle: _epub_expected (stdlib re-read)
 _q_epub_meta = _parsed_meta(
     "epub", lambda k, raw: raw[:4] == _ZIP and k.is_epub(raw),
     "parse_epub", "EpubError",
     lambda m: (m["n_chapters"], m["n_entries"], m["title"], m["creator"],
                len(m["text"])),
-    "n_chapters int, n_entries int, title string, creator string, "
-    "n_text_chars int")
+    carried="epub")
 # SpreadsheetML. Oracle: _xlsx_expected (stdlib re-read)
 _q_xlsx_meta = _parsed_meta(
     "xlsx", lambda k, raw: raw[:4] == _ZIP and k.is_xlsx(raw),
     "parse_xlsx", "XlsxError",
     lambda m: (m["n_sheets"], m["n_cells"], m["n_entries"], m["title"],
                m["sheet_names"], len(m["text"])),
-    "n_sheets int, n_cells int, n_entries int, title string, "
-    "sheet_names array<string>, n_text_chars int")
+    carried="xlsx")
 # PresentationML. Oracle: _pptx_expected (stdlib re-read)
 _q_pptx_meta = _parsed_meta(
     "pptx", lambda k, raw: raw[:4] == _ZIP and k.is_pptx(raw),
     "parse_pptx", "PptxError",
     lambda m: (m["n_slides"], m["n_shapes"], m["n_entries"], m["title"],
                len(m["text"])),
-    "n_slides int, n_shapes int, n_entries int, title string, "
-    "n_text_chars int")
+    carried="pptx")
 # RTF. Oracle: _rtf_expected (narrow regex re-read)
 _q_rtf_meta = _parsed_meta(
     "rtf", lambda k, raw: k.is_rtf(raw), "parse_rtf", "RtfError",
     lambda m: (m["n_paragraphs"], m["title"], len(m["text"])),
-    "n_paragraphs int, title string, n_text_chars int")
+    carried="rtf")
 # OpenDocument text. Oracle: _odt_expected (stdlib re-read)
 _q_odt_meta = _parsed_meta(
     "odt", lambda k, raw: raw[:4] == _ZIP and k.is_odt(raw),
     "parse_odt", "OdtError",
     lambda m: (m["n_paragraphs"], m["n_entries"], m["title"], m["creator"],
                len(m["text"])),
-    "n_paragraphs int, n_entries int, title string, creator string, "
-    "n_text_chars int")
+    carried="odt")
 # OpenDocument spreadsheet. Oracle: _ods_expected (stdlib re-read)
 _q_ods_meta = _parsed_meta(
     "ods", lambda k, raw: raw[:4] == _ZIP and k.is_ods(raw),
     "parse_ods", "OdsError",
     lambda m: (m["n_sheets"], m["n_cells"], m["n_entries"], m["title"],
                m["creator"], len(m["text"])),
-    "n_sheets int, n_cells int, n_entries int, title string, "
-    "creator string, n_text_chars int")
+    carried="ods")
 # OpenDocument presentation. Oracle: _odp_expected (stdlib re-read)
 _q_odp_meta = _parsed_meta(
     "odp", lambda k, raw: raw[:4] == _ZIP and k.is_odp(raw),
     "parse_odp", "OdpError",
     lambda m: (m["n_slides"], m["n_frames"], m["n_entries"], m["title"],
                m["creator"], len(m["text"])),
-    "n_slides int, n_frames int, n_entries int, title string, "
-    "creator string, n_text_chars int")
+    carried="odp")
 # MIME email. Oracle: _eml_expected (stdlib email package)
 _q_eml_meta = _parsed_meta(
     "eml", lambda k, raw: k.is_eml(raw), "parse_eml", "EmlError",
     lambda m: (m["subject"], m["from_addr"], m["date_ts"], m["n_parts"],
                len(m["text"])),
-    "subject string, from_addr string, date_ts long, n_parts int, "
-    "n_text_chars int")
+    carried="eml")
 # mbox census (an archive is not one document). Oracle: _mbox_expected
 _q_mbox_meta = _parsed_meta(
     "eml", lambda k, raw: k.is_mbox(raw), "parse_mbox", "EmlError",
     lambda m: (m["n_messages"], m["first_subject"], m["first_from"],
                m["min_date_ts"], m["max_date_ts"]),
-    "n_messages int, first_subject string, first_from string, "
-    "min_date_ts long, max_date_ts long")
+    carried="mbox")
 # SRT/VTT cues. Oracle: _subtitle_expected (flat regex re-read)
 _q_subtitle_meta = _parsed_meta(
     "subtitles", lambda k, raw: k.looks_like_vtt(raw) or k.looks_like_srt(raw),
     "parse_subtitles", "SubtitleError",
     lambda m: (m["kind"], m["n_cues"], m["duration_ms"], len(m["text"])),
-    "kind string, n_cues int, duration_ms long, n_text_chars int")
+    carried="subtitle")
 # Jupyter notebook. Oracle: DuckDB's own JSON engine re-mines the bytes
 _q_ipynb_meta = _parsed_meta(
     "ipynb", lambda k, raw: k.looks_like_ipynb(raw), "parse_ipynb",
@@ -4691,31 +4719,29 @@ _q_sqlite_meta = _parsed_meta(
     "SqliteError",
     lambda m: (m["page_size"], m["n_pages"], m["encoding"],
                m["user_version"], m["valid_size"]),
-    "page_size int, n_pages int, encoding string, user_version int, "
-    "valid_size boolean")
+    carried="sqlite")
 # Font census; glyphs and WOFF2 Brotli out of scope. Oracle: _font_expected
 _q_font_meta = _parsed_meta(
     "font", lambda k, raw: k.looks_like_font(raw), "parse_font", "FontError",
     lambda m: (m["kind"], m["flavor"], m["n_tables"], m["sfnt_size"]),
-    "kind string, flavor string, n_tables int, sfnt_size long")
+    carried="font")
 # ustar member census, nothing unpacked. Oracle: _tar_expected (stdlib tarfile)
 _q_tar_meta = _parsed_meta(
     "tar", lambda k, raw: raw[257:262] == b"ustar" and k.is_tar(raw),
     "parse_tar", "TarError",
     lambda m: (m["n_members"], m["n_dirs"], m["n_bytes"], m["first_name"]),
-    "n_members int, n_dirs int, n_bytes long, first_name string")
+    carried="tar")
 # WebM/Matroska EBML walk; VP8/VP9/AV1 decode stubbed. Oracle: _webm_expected
 _q_webm_meta = _parsed_meta(
     "webm", lambda k, raw: k.is_webm(raw), "parse_webm", "WebmError",
     lambda m: (m["doc_type"], m["duration_ms"], m["n_tracks"], m["width"],
                m["height"], m["video_codec"], m["audio_codec"]),
-    "doc_type string, duration_ms long, n_tracks int, width int, "
-    "height int, video_codec string, audio_codec string")
+    carried="webm")
 # ICO directory. Oracle: _ico_expected (directory re-read)
 _q_ico_meta = _parsed_meta(
     "ico", lambda k, raw: k.is_ico(raw), "parse_ico", "IcoError",
     lambda m: (m["n_images"], m["width"], m["height"], m["any_png"]),
-    "n_images int, width int, height int, any_png boolean")
+    carried="ico")
 # WebP VP8/VP8L/VP8X header dims; pixel decode stubbed. Oracle: _image_expected
 _q_webp_meta = _parsed_meta(
     "webp", lambda k, raw: raw[:4] == b"RIFF" and raw[8:12] == b"WEBP",
@@ -4761,10 +4787,8 @@ def _q_csv_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield (url, m["delimiter"], m["n_records"], m["n_cols"],
                m["has_header"], len(m["text"]))
 
-    return _map_blobs(
-        spark, sf_dir, per_row,
-        "url string, delimiter string, n_records int, n_cols int, "
-        "has_header boolean, n_text_chars int")
+    return _map_blobs(spark, sf_dir, per_row,
+                      "url string, " + _carried_schema("csv"))
 
 
 def _q_ps_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6030,14 +6054,6 @@ def oracle_sql() -> dict[str, str]:
             f"FROM {corpus} WHERE media_kind IN ('png', 'jpeg', 'gif', 'bmp') "
             f"ORDER BY url"
         ),
-        "video_stats": (
-            # carried ground truth from the independent fixtures-side
-            # box re-read (_mp4_expected) — NOT kernel/mp4.py
-            f"SELECT url, video_duration_ms AS duration_ms, "
-            f"video_n_tracks AS n_tracks, video_width AS width, "
-            f"video_height AS height "
-            f"FROM {corpus} WHERE media_kind = 'mp4' ORDER BY url"
-        ),
         "warc_ingest": (
             # generator-side expected records (pre-wrap payload bytes)
             f"SELECT url, warc_date, n_bytes, body_md5 "
@@ -6058,14 +6074,6 @@ def oracle_sql() -> dict[str, str]:
             # generator-authored status/mime per capture
             f"SELECT url, http_status, mime "
             f"FROM read_parquet('{_warc_expected}') ORDER BY url"
-        ),
-        "djvu_meta": (
-            # carried facts from the independent fixtures-side flat
-            # offset re-read (_djvu_expected)
-            f"SELECT url, djvu_is_multi AS is_multi, "
-            f"djvu_n_pages AS n_pages, djvu_w AS width, "
-            f"djvu_h AS height, djvu_dpi AS dpi "
-            f"FROM {corpus} WHERE media_kind = 'djvu' ORDER BY url"
         ),
         "mime_audit": (
             # generator truth on BOTH sides: authored envelope mime
@@ -6094,42 +6102,6 @@ def oracle_sql() -> dict[str, str]:
             f"exif_make AS make, exif_w, exif_h "
             f"FROM {corpus} WHERE exif_orientation IS NOT NULL "
             f"ORDER BY url"
-        ),
-        "mp3_stats": (
-            # carried ground truth from the independent fixtures-side
-            # frame-header walk (_mp3_expected) — NOT kernel/mp3.py
-            f"SELECT url, mp3_n_frames AS n_frames, mp3_sr AS sample_rate, "
-            f"mp3_channels AS n_channels, mp3_duration_ms AS duration_ms, "
-            f"mp3_kbps AS kbps, mp3_title AS title, "
-            f"mp3_artist AS artist "
-            f"FROM {corpus} WHERE media_kind = 'mp3' ORDER BY url"
-        ),
-        "flac_meta": (
-            # carried ground truth from the independent fixtures-side
-            # block re-read (_flac_expected) — NOT kernel/flac.py
-            f"SELECT url, flac_sr AS sample_rate, "
-            f"flac_channels AS n_channels, flac_bits AS bits, "
-            f"flac_total_samples AS total_samples, "
-            f"flac_duration_ms AS duration_ms, flac_title AS title, "
-            f"flac_artist AS artist "
-            f"FROM {corpus} WHERE media_kind = 'flac' ORDER BY url"
-        ),
-        "ogg_meta": (
-            # carried ground truth from the independent fixtures-side
-            # page re-read (_ogg_expected) — NOT kernel/ogg.py
-            f"SELECT url, ogg_codec AS codec, "
-            f"ogg_channels AS n_channels, ogg_sr AS sample_rate, "
-            f"ogg_n_pages AS n_pages, ogg_duration_ms AS duration_ms, "
-            f"ogg_title AS title, ogg_artist AS artist "
-            f"FROM {corpus} WHERE media_kind = 'ogg' ORDER BY url"
-        ),
-        "tiff_meta": (
-            # carried ground truth from the independent fixtures-side
-            # flat IFD re-read (_tiff_expected) — NOT kernel/tiff.py
-            f"SELECT url, tiff_w AS width, tiff_h AS height, "
-            f"tiff_bits AS bits, tiff_compression AS compression, "
-            f"tiff_n_pages AS n_pages, tiff_desc AS description "
-            f"FROM {corpus} WHERE media_kind = 'tiff' ORDER BY url"
         ),
         "webp_meta": (
             # carried dims from the independent header re-read
@@ -6269,39 +6241,6 @@ def oracle_sql() -> dict[str, str]:
             "round(abs(est - n_distinct_true) / n_distinct_true, 3) "
             "AS rel_err_r3 FROM f ORDER BY host"
         ),
-        "docx_meta": (
-            # carried package facts from the independent fixtures-side
-            # stdlib-zipfile re-read (_docx_expected) — NOT
-            # kernel/ziparc.py / kernel/docx.py; n_text_chars pins the
-            # kernel's extracted text length against the
-            # generator-truth text column
-            f"SELECT url, docx_n_paras AS n_paragraphs, "
-            f"docx_n_entries AS n_entries, docx_title AS title, "
-            f"docx_creator AS creator, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind = 'docx' ORDER BY url"
-        ),
-        "epub_meta": (
-            # carried package facts from the independent fixtures-side
-            # stdlib-zipfile re-read (_epub_expected) — NOT
-            # kernel/ziparc.py / kernel/epub.py; n_text_chars pins the
-            # spine-ordered extracted text length against the
-            # generator-truth text column
-            f"SELECT url, epub_n_chapters AS n_chapters, "
-            f"epub_n_entries AS n_entries, epub_title AS title, "
-            f"epub_creator AS creator, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind = 'epub' ORDER BY url"
-        ),
-        "xlsx_meta": (
-            # carried package facts from the independent fixtures-side
-            # stdlib-zipfile re-read (_xlsx_expected)
-            f"SELECT url, xlsx_n_sheets AS n_sheets, "
-            f"xlsx_n_cells AS n_cells, xlsx_n_entries AS n_entries, "
-            f"xlsx_title AS title, xlsx_sheet_names AS sheet_names, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind = 'xlsx' ORDER BY url"
-        ),
         "feed_meta": (
             # IDENTICAL regex set over the same bytes — two-engine
             # re-extraction (RE2 here, Java regex in Spark; the
@@ -6320,50 +6259,6 @@ def oracle_sql() -> dict[str, str]:
             "THEN regexp_extract(s, '<item[ >].*?<link>([^<]*)</link>', 1) "
             "ELSE regexp_extract(s, '<entry[ >].*?<link href=\"([^\"]*)\"', 1) "
             "END AS first_link FROM f ORDER BY url"
-        ),
-        "pptx_meta": (
-            # carried package facts from the independent fixtures-side
-            # stdlib-zipfile re-read (_pptx_expected)
-            f"SELECT url, pptx_n_slides AS n_slides, "
-            f"pptx_n_shapes AS n_shapes, pptx_n_entries AS n_entries, "
-            f"pptx_title AS title, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind = 'pptx' ORDER BY url"
-        ),
-        "rtf_meta": (
-            # carried facts from the independent fixtures-side narrow
-            # regex re-read (_rtf_expected)
-            f"SELECT url, rtf_n_pars AS n_paragraphs, "
-            f"rtf_title AS title, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind = 'rtf' ORDER BY url"
-        ),
-        "odt_meta": (
-            # carried package facts from the independent fixtures-side
-            # stdlib-zipfile re-read (_odt_expected)
-            f"SELECT url, odt_n_paras AS n_paragraphs, "
-            f"odt_n_entries AS n_entries, odt_title AS title, "
-            f"odt_creator AS creator, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind = 'odt' ORDER BY url"
-        ),
-        "ods_meta": (
-            # carried package facts from the independent fixtures-side
-            # stdlib re-read w/ its own repeat-expansion (_ods_expected)
-            f"SELECT url, ods_n_sheets AS n_sheets, "
-            f"ods_n_cells AS n_cells, ods_n_entries AS n_entries, "
-            f"ods_title AS title, ods_creator AS creator, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind = 'ods' ORDER BY url"
-        ),
-        "odp_meta": (
-            # carried package facts from the independent fixtures-side
-            # stdlib re-read (_odp_expected)
-            f"SELECT url, odp_n_slides AS n_slides, "
-            f"odp_n_frames AS n_frames, odp_n_entries AS n_entries, "
-            f"odp_title AS title, odp_creator AS creator, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind = 'odp' ORDER BY url"
         ),
         "bm25_topk": (
             # identical arithmetic via list lambdas; quantized integer
@@ -6415,30 +6310,6 @@ def oracle_sql() -> dict[str, str]:
             "content=\"([^\"]*)\"', 1), '') AS author "
             "FROM f ORDER BY url"
         ),
-        "tar_meta": (
-            # carried census from the independent fixtures-side stdlib
-            # tarfile re-read (_tar_expected)
-            f"SELECT url, tar_n_members AS n_members, "
-            f"tar_n_dirs AS n_dirs, tar_n_bytes AS n_bytes, "
-            f"tar_first_name AS first_name "
-            f"FROM {corpus} WHERE media_kind = 'tar' ORDER BY url"
-        ),
-        "eml_meta": (
-            # carried facts from the independent stdlib email-package
-            # re-read (_eml_expected)
-            f"SELECT url, eml_subject AS subject, eml_from AS from_addr, "
-            f"eml_date_ts AS date_ts, eml_n_parts AS n_parts, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind = 'eml' ORDER BY url"
-        ),
-        "font_meta": (
-            # carried census from the independent fixtures-side flat
-            # struct re-read (_font_expected)
-            f"SELECT url, font_kind AS kind, font_flavor AS flavor, "
-            f"font_n_tables AS n_tables, font_sfnt_size AS sfnt_size "
-            f"FROM {corpus} WHERE media_kind IN "
-            f"('ttf', 'otf', 'woff', 'woff2') ORDER BY url"
-        ),
         "tex_meta": (
             # TWO-ENGINE: identical regex set re-mined by DuckDB
             f"SELECT url, "
@@ -6488,15 +6359,6 @@ def oracle_sql() -> dict[str, str]:
             f"nullif(regexp_extract(decode(html), "
             f"'%%Title: *([^\\n]*)', 1), '') AS title "
             f"FROM {corpus} WHERE media_kind = 'ps' ORDER BY url"
-        ),
-        "sqlite_meta": (
-            # carried facts from the independent fixtures-side flat
-            # struct re-read (_sqlite_expected)
-            f"SELECT url, sqlite_page_size AS page_size, "
-            f"sqlite_n_pages AS n_pages, sqlite_encoding AS encoding, "
-            f"sqlite_user_version AS user_version, "
-            f"sqlite_valid_size AS valid_size "
-            f"FROM {corpus} WHERE media_kind = 'sqlite' ORDER BY url"
         ),
         "md_meta": (
             # TWO-ENGINE: identical regex set re-mined by DuckDB
@@ -6578,15 +6440,6 @@ def oracle_sql() -> dict[str, str]:
             f"AS has_license "
             f"FROM t ORDER BY url"
         ),
-        "csv_meta": (
-            # carried facts from the independent stdlib csv re-read
-            # (_csv_expected)
-            f"SELECT url, csv_delim AS delimiter, "
-            f"csv_n_records AS n_records, csv_n_cols AS n_cols, "
-            f"csv_has_header AS has_header, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind = 'csv' ORDER BY url"
-        ),
         "ipynb_meta": (
             # TWO-ENGINE: DuckDB's own JSON functions re-mine the bytes
             f"SELECT url, "
@@ -6606,41 +6459,6 @@ def oracle_sql() -> dict[str, str]:
             f"AS INTEGER) AS nbformat, "
             f"CAST(length(text) AS INTEGER) AS n_text_chars "
             f"FROM {corpus} WHERE media_kind = 'ipynb' ORDER BY url"
-        ),
-        "subtitle_meta": (
-            # carried facts from the independent fixtures-side flat
-            # regex re-read (_subtitle_expected)
-            f"SELECT url, sub_kind AS kind, sub_n_cues AS n_cues, "
-            f"sub_duration_ms AS duration_ms, "
-            f"CAST(length(text) AS INTEGER) AS n_text_chars "
-            f"FROM {corpus} WHERE media_kind IN ('srt', 'vtt') "
-            f"ORDER BY url"
-        ),
-        "mbox_meta": (
-            # carried census from the independent stdlib mailbox.mbox
-            # re-read (_mbox_expected)
-            f"SELECT url, mbox_n_messages AS n_messages, "
-            f"mbox_first_subject AS first_subject, "
-            f"mbox_first_from AS first_from, mbox_min_ts AS min_date_ts, "
-            f"mbox_max_ts AS max_date_ts "
-            f"FROM {corpus} WHERE media_kind = 'mbox' ORDER BY url"
-        ),
-        "webm_meta": (
-            # carried EBML facts from the independent fixtures-side
-            # explicit-stack scan (_webm_expected)
-            f"SELECT url, webm_doc_type AS doc_type, "
-            f"webm_duration_ms AS duration_ms, "
-            f"webm_n_tracks AS n_tracks, webm_w AS width, "
-            f"webm_h AS height, webm_vcodec AS video_codec, "
-            f"webm_acodec AS audio_codec "
-            f"FROM {corpus} WHERE media_kind = 'webm' ORDER BY url"
-        ),
-        "ico_meta": (
-            # carried directory facts from the independent
-            # fixtures-side offset re-read (_ico_expected)
-            f"SELECT url, ico_n_images AS n_images, ico_w AS width, "
-            f"ico_h AS height, ico_any_png AS any_png "
-            f"FROM {corpus} WHERE media_kind = 'ico' ORDER BY url"
         ),
         "svg_meta": (
             # IDENTICAL regex set over the same bytes — two-engine
@@ -8294,4 +8112,7 @@ def oracle_sql() -> dict[str, str]:
             "FROM prev FULL OUTER JOIN cur ON prev.doc_id = cur.doc_id "
             "ORDER BY doc_id"
         ),
+        # the single-shape oracles of the per-format metadata queries,
+        # generated from the fixtures' carried field tables
+        **_carried_oracles(corpus),
     }

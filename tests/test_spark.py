@@ -3,6 +3,7 @@ pipeline lineage + checkpoint/resume."""
 
 import json
 import os
+import re
 import shutil
 
 import pytest
@@ -375,10 +376,12 @@ def test_pipeline_single_pass(spark, corpus_path, tmp_path, assert_zstd):
 
 
 def test_single_pass_partial_resume_keeps_session_conf(spark, corpus_path,
-                                                        tmp_path):
+                                                        tmp_path, monkeypatch):
     """A single-pass rerun after one bucket's lineage was lost overwrites
     only that bucket=K partition (dynamic overwrite, set per write) and
     leaves the session's partitionOverwriteMode as it found it."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from zpdfspark.spark.pipeline import run_extraction_job
 
     key = "spark.sql.sources.partitionOverwriteMode"
@@ -390,15 +393,50 @@ def test_single_pass_partial_resume_keeps_session_conf(spark, corpus_path,
     assert spark.conf.get(key) == before
 
     _drop_lineage_bucket(spark, out, 2)
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     s2 = run_extraction_job(spark, corpus_path, out, n_buckets=4,
                             partitions=4, single_pass=True)
     assert s2["buckets_skipped"] == 3 and s2["buckets_run"] == 1
+    # the rerun keeps only the pending bucket's rows
+    plan = written[-1]._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r" IN \(2\)|= 2\)", plan), plan
     assert spark.conf.get(key) == before
     data = os.path.join(out, "data")
     assert sorted(n for n in os.listdir(data) if n.startswith("bucket=")) \
         == [f"bucket={b}" for b in range(4)]
     result = spark.read.parquet(data)
     assert result.count() == result.select("url").distinct().count() == 150
+
+
+def test_arrow_batches_capped_by_bytes(spark):
+    """64 records of 1 MiB in one partition reach a Python UDF in several
+    batches of at most the session's byte cap plus one record, measured
+    inside the UDF, not as one 64 MiB batch."""
+    from zpdfspark.spark.session import ARROW_BATCH_BYTES
+
+    def sizes(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            blobs = b.column("blob").to_pylist()
+            yield pa.RecordBatch.from_pydict({
+                "rows": [b.num_rows],
+                "blob_bytes": [sum(len(v) for v in blobs)]})
+
+    record = 1 << 20
+    blobs = spark.range(0, 64, 1, 1).select(
+        F.expr(f"unhex(repeat('ab', {record}))").alias("blob"))
+    got = blobs.mapInArrow(sizes, "rows long, blob_bytes long").collect()
+    assert sum(r["rows"] for r in got) == 64
+    assert len(got) >= 64 * record // (ARROW_BATCH_BYTES + record)
+    assert max(r["blob_bytes"] for r in got) <= ARROW_BATCH_BYTES + record, got
 
 
 def test_lineage_rollup_matches_groupby(spark):
@@ -725,6 +763,8 @@ def test_single_pass_writer_sized_by_bytes(spark, tmp_path, monkeypatch):
     assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan
     assert -1 < plan.index("MapInArrow") < plan.index("Exchange"), plan
     assert "CollectMetrics" not in plan, plan
+    # a fresh run has no complete bucket: no pending-bucket filter
+    assert not re.search(r" IN \(|INSET", plan), plan
 
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     prev = spark.conf.get(key)

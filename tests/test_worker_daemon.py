@@ -92,8 +92,9 @@ def test_task_does_not_reread_pyspark_zip(spark):
         pytest.skip("this Python's zipimport has no _io to count reads with")
     row = spark.range(0, 1, 1, 1).mapInArrow(
         probe, "importers long, reads long").collect()[0]
-    # the worker imported pyspark from the zip, so the stock daemon would
-    # re-read it once per importer per call
+    # an importer of the zip is cached (the daemon module's search went
+    # through it, and pyspark's own modules when the zip is kept), so the
+    # stock daemon would re-read it once per importer per call
     assert row["importers"] > 0
     assert row["reads"] == 0
 
@@ -179,3 +180,54 @@ def test_daemon_imports_pandas_before_forking():
                          text=True, timeout=120)
     assert out.returncode == 0, out.stderr[-3000:]
     assert out.stdout.split() == ["False", "True"]
+
+
+def test_task_imports_compiled_pyspark(spark):
+    """Workers import pyspark from the installed package, whose compiled
+    bytecode is cached, not from Spark's pyspark.zip, when both hold the
+    same version."""
+    from zpdfspark.spark.worker_daemon import _version
+
+    zipped = os.path.join(os.environ.get("SPARK_HOME", ""), "python", "lib",
+                          "pyspark.zip")
+    if not os.path.isfile(zipped):
+        pytest.skip("no pyspark.zip under SPARK_HOME")
+    with zipfile.ZipFile(zipped) as z:
+        if _version(z.read("pyspark/version.py")) != \
+                pyspark.__version__.encode():
+            pytest.skip("the installed pyspark is not the zip's version")
+
+    def probe(batches):
+        import pyspark as p
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"file": [p.__file__]})
+
+    path = spark.range(0, 1, 1, 1).mapInArrow(probe, "file string") \
+        .collect()[0]["file"]
+    assert os.path.isfile(path) and ".zip" not in path, path
+
+
+def _fake_pyspark_zip(path, version: str) -> str:
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr("pyspark/__init__.py", "")
+        z.writestr("pyspark/version.py", f"__version__: str = {version!r}\n")
+    return str(path)
+
+
+@pytest.mark.parametrize("same", [True, False])
+def test_prefer_installed_pyspark(tmp_path, monkeypatch, same):
+    """Without Spark: the zip leaves sys.path only when the installed
+    pyspark has its version; a mismatch keeps the zip."""
+    from zpdfspark.spark.worker_daemon import prefer_installed_pyspark
+
+    version = pyspark.__version__ if same else "0.0.0"
+    archive = _fake_pyspark_zip(tmp_path / "pyspark.zip", version)
+    path = [archive, *sys.path]
+    monkeypatch.setattr(sys, "path", path)
+    monkeypatch.delitem(sys.modules, "pyspark")
+    assert prefer_installed_pyspark() is same
+    assert (archive in sys.path) is not same
+    assert sys.path is path

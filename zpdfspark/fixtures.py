@@ -18,7 +18,7 @@ import hashlib
 import os
 import zlib
 from datetime import datetime, timedelta, timezone
-from typing import Callable, Dict, List, Optional, Tuple
+from typing import Callable, Dict, List, NamedTuple, Optional, Tuple
 
 
 class _PdfBuilder:
@@ -3682,67 +3682,6 @@ def _sniff_media_kind(raw: bytes) -> str:
     return "unknown"
 
 
-# expected-column names carried by the mixed-profile corpus (beyond the
-# input_hint's five columns). Split by provenance:
-#  - GENERATOR-DERIVED ground truth: text (the generators' own expected
-#    extraction), search_hello (independent scanner above, over text),
-#    media_kind (magic bytes the generator wrote)
-#  - EAGER-KERNEL differential: everything else — computed once at
-#    generation time by running the pinned pure-Python kernel on the
-#    generated bytes (SURVEY.md §5.4's "pinned eager reference"), then
-#    value-pinned to handwritten literals per generator family in
-#    tests/test_features.py. The driver oracle then proves the
-#    DISTRIBUTED pipeline byte-equals the eager kernel; the pytest
-#    literals pin the eager kernel to the spec.
-EXPECTED_COLUMNS = (
-    "text_fast", "n_pages", "n_chars_acc", "n_chars_fast", "is_enc",
-    "err_n", "acc_structured", "acc_stream", "acc_geometric", "fast_stream",
-    "meta_title", "meta_author", "meta_subject", "meta_keywords",
-    "meta_creator", "meta_producer", "meta_creation_date", "meta_mod_date",
-    "n_outline", "n_links", "n_form_fields", "n_images", "labels",
-    "markdown", "markdown_structured", "spans", "page_texts", "doc_json",
-    "search_hello", "media_kind",
-    "audio_sr", "audio_channels", "audio_n_samples", "audio_rms_x1000",
-    "video_duration_ms", "video_n_tracks", "video_width", "video_height",
-    "mp3_n_frames", "mp3_sr", "mp3_channels", "mp3_duration_ms",
-    "mp3_kbps", "mp3_title", "mp3_artist",
-    "flac_sr", "flac_channels", "flac_bits", "flac_total_samples",
-    "flac_duration_ms", "flac_title", "flac_artist",
-    "ogg_codec", "ogg_channels", "ogg_sr", "ogg_n_pages",
-    "ogg_duration_ms", "ogg_title", "ogg_artist",
-    "tiff_w", "tiff_h", "tiff_bits", "tiff_compression",
-    "tiff_n_pages", "tiff_desc",
-    "exif_orientation", "exif_make", "exif_w", "exif_h",
-    "img_width", "img_height", "img_channels",
-    "img_ahash", "img_dhash",
-    "blocks", "block_labels",
-    "docx_n_paras", "docx_n_entries", "docx_title", "docx_creator",
-    "epub_n_chapters", "epub_n_entries", "epub_title", "epub_creator",
-    "xlsx_n_sheets", "xlsx_n_cells", "xlsx_n_entries", "xlsx_title",
-    "xlsx_sheet_names",
-    "pptx_n_slides", "pptx_n_shapes", "pptx_n_entries", "pptx_title",
-    "rtf_n_pars", "rtf_title",
-    "odt_n_paras", "odt_n_entries", "odt_title", "odt_creator",
-    "ods_n_sheets", "ods_n_cells", "ods_n_entries", "ods_title",
-    "ods_creator",
-    "odp_n_slides", "odp_n_frames", "odp_n_entries", "odp_title",
-    "odp_creator",
-    "ico_n_images", "ico_w", "ico_h", "ico_any_png",
-    "webm_doc_type", "webm_duration_ms", "webm_n_tracks", "webm_w",
-    "webm_h", "webm_vcodec", "webm_acodec",
-    "tar_n_members", "tar_n_dirs", "tar_n_bytes", "tar_first_name",
-    "eml_subject", "eml_from", "eml_date_ts", "eml_n_parts",
-    "mbox_n_messages", "mbox_first_subject", "mbox_first_from",
-    "mbox_min_ts", "mbox_max_ts",
-    "sub_kind", "sub_n_cues", "sub_duration_ms",
-    "csv_delim", "csv_n_records", "csv_n_cols", "csv_has_header",
-    "font_kind", "font_flavor", "font_n_tables", "font_sfnt_size",
-    "text_zlib_len",
-    "sqlite_page_size", "sqlite_n_pages", "sqlite_encoding",
-    "sqlite_user_version", "sqlite_valid_size",
-    "djvu_is_multi", "djvu_n_pages", "djvu_w", "djvu_h", "djvu_dpi",
-)
-
 
 def _wav_expected(raw: bytes):
     """INDEPENDENT ground truth for the audio oracle: a 12-line re-read
@@ -5654,6 +5593,207 @@ def _check_generator_truth(gen: str, exp: dict, url: str) -> None:
                 f"{exp[col]!r}, generator wrote {want!r}")
 
 
+class Carried(NamedTuple):
+    """The field table of one carried kind: per-format metadata the
+    corpus stores for the rows whose ``media_kind`` is in ``kinds`` (null
+    on every other row). ``reread(raw)`` is the fixtures' independent
+    re-read of the payload, never a kernel, and returns one value per
+    field. Each field is (carried column, Arrow type, the metadata
+    query's name for it). ``query`` names the query whose oracle selects
+    exactly these fields, renamed, over the rows of ``kinds`` (plus
+    ``n_text_chars``, the length of the carried ``text``, when
+    ``text_chars``); None when the oracles that read the columns are
+    hand-written. The table names columns and computes nothing: the
+    oracle SQL and the query's schema are derived from it in
+    __spark_entry__.py."""
+    query: Optional[str]
+    kinds: Tuple[str, ...]
+    reread: Callable[[bytes], tuple]
+    fields: Tuple[Tuple[str, str, str], ...]
+    text_chars: bool = False
+
+
+def _carried(query, kinds, reread, fields: str, text_chars=False) -> Carried:
+    """A Carried table whose ``fields`` are written as one string of
+    comma-separated ``column type name`` triples."""
+    return Carried(query, kinds, reread,
+                   tuple(tuple(f.split()) for f in fields.split(", ")),
+                   text_chars)
+
+
+# The carried field tables, in corpus column order. The audio, image,
+# exif and phash columns feed hand-written oracles: audio_stats computes
+# a duration, image_stats/webp_meta/avif_meta/heic_meta share the image
+# columns, exif_meta keeps only the rows with an orientation, and
+# image_phash gates on the interlace byte.
+CARRIED = {
+    "audio": _carried(
+        None, ("wav",), _wav_expected,
+        "audio_sr int32 sample_rate, audio_channels int32 n_channels, "
+        "audio_n_samples int64 n_samples, audio_rms_x1000 int64 rms_x1000"),
+    "video": _carried(
+        "video_stats", ("mp4",), _mp4_expected,
+        "video_duration_ms int64 duration_ms, video_n_tracks int32 n_tracks, "
+        "video_width int32 width, video_height int32 height"),
+    "mp3": _carried(
+        "mp3_stats", ("mp3",),
+        lambda raw: _mp3_expected(raw) + _id3_expected(raw),
+        "mp3_n_frames int32 n_frames, mp3_sr int32 sample_rate, "
+        "mp3_channels int32 n_channels, mp3_duration_ms int64 duration_ms, "
+        "mp3_kbps int32 kbps, mp3_title string title, "
+        "mp3_artist string artist"),
+    "flac": _carried(
+        "flac_meta", ("flac",), _flac_expected,
+        "flac_sr int32 sample_rate, flac_channels int32 n_channels, "
+        "flac_bits int32 bits, flac_total_samples int64 total_samples, "
+        "flac_duration_ms int64 duration_ms, flac_title string title, "
+        "flac_artist string artist"),
+    "ogg": _carried(
+        "ogg_meta", ("ogg",), _ogg_expected,
+        "ogg_codec string codec, ogg_channels int32 n_channels, "
+        "ogg_sr int32 sample_rate, ogg_n_pages int32 n_pages, "
+        "ogg_duration_ms int64 duration_ms, ogg_title string title, "
+        "ogg_artist string artist"),
+    "tiff": _carried(
+        "tiff_meta", ("tiff",), _tiff_expected,
+        "tiff_w int32 width, tiff_h int32 height, tiff_bits int32 bits, "
+        "tiff_compression string compression, tiff_n_pages int32 n_pages, "
+        "tiff_desc string description"),
+    "exif": _carried(
+        None, ("jpeg",), _exif_expected,
+        "exif_orientation int32 orientation, exif_make string make, "
+        "exif_w int32 exif_w, exif_h int32 exif_h"),
+    "image": _carried(
+        None, ("png", "jpeg", "gif", "webp", "bmp", "avif", "heic"),
+        lambda raw: _image_expected(raw, _sniff_media_kind(raw)),
+        "img_width int32 width, img_height int32 height, "
+        "img_channels int32 n_channels"),
+    "phash": _carried(
+        None, ("png",), _phash_expected,
+        "img_ahash int64 ahash, img_dhash int64 dhash"),
+    "docx": _carried(
+        "docx_meta", ("docx",), _docx_expected,
+        "docx_n_paras int32 n_paragraphs, docx_n_entries int32 n_entries, "
+        "docx_title string title, docx_creator string creator",
+        text_chars=True),
+    "epub": _carried(
+        "epub_meta", ("epub",), _epub_expected,
+        "epub_n_chapters int32 n_chapters, epub_n_entries int32 n_entries, "
+        "epub_title string title, epub_creator string creator",
+        text_chars=True),
+    "xlsx": _carried(
+        "xlsx_meta", ("xlsx",), _xlsx_expected,
+        "xlsx_n_sheets int32 n_sheets, xlsx_n_cells int32 n_cells, "
+        "xlsx_n_entries int32 n_entries, xlsx_title string title, "
+        "xlsx_sheet_names list<string> sheet_names", text_chars=True),
+    "pptx": _carried(
+        "pptx_meta", ("pptx",), _pptx_expected,
+        "pptx_n_slides int32 n_slides, pptx_n_shapes int32 n_shapes, "
+        "pptx_n_entries int32 n_entries, pptx_title string title",
+        text_chars=True),
+    "rtf": _carried(
+        "rtf_meta", ("rtf",), _rtf_expected,
+        "rtf_n_pars int32 n_paragraphs, rtf_title string title",
+        text_chars=True),
+    "odt": _carried(
+        "odt_meta", ("odt",), _odt_expected,
+        "odt_n_paras int32 n_paragraphs, odt_n_entries int32 n_entries, "
+        "odt_title string title, odt_creator string creator",
+        text_chars=True),
+    "ods": _carried(
+        "ods_meta", ("ods",), _ods_expected,
+        "ods_n_sheets int32 n_sheets, ods_n_cells int32 n_cells, "
+        "ods_n_entries int32 n_entries, ods_title string title, "
+        "ods_creator string creator", text_chars=True),
+    "odp": _carried(
+        "odp_meta", ("odp",), _odp_expected,
+        "odp_n_slides int32 n_slides, odp_n_frames int32 n_frames, "
+        "odp_n_entries int32 n_entries, odp_title string title, "
+        "odp_creator string creator", text_chars=True),
+    "ico": _carried(
+        "ico_meta", ("ico",), _ico_expected,
+        "ico_n_images int32 n_images, ico_w int32 width, ico_h int32 height, "
+        "ico_any_png bool any_png"),
+    "webm": _carried(
+        "webm_meta", ("webm",), _webm_expected,
+        "webm_doc_type string doc_type, webm_duration_ms int64 duration_ms, "
+        "webm_n_tracks int32 n_tracks, webm_w int32 width, "
+        "webm_h int32 height, webm_vcodec string video_codec, "
+        "webm_acodec string audio_codec"),
+    "tar": _carried(
+        "tar_meta", ("tar",), _tar_expected,
+        "tar_n_members int32 n_members, tar_n_dirs int32 n_dirs, "
+        "tar_n_bytes int64 n_bytes, tar_first_name string first_name"),
+    "eml": _carried(
+        "eml_meta", ("eml",), _eml_expected,
+        "eml_subject string subject, eml_from string from_addr, "
+        "eml_date_ts int64 date_ts, eml_n_parts int32 n_parts",
+        text_chars=True),
+    "mbox": _carried(
+        "mbox_meta", ("mbox",), _mbox_expected,
+        "mbox_n_messages int32 n_messages, "
+        "mbox_first_subject string first_subject, "
+        "mbox_first_from string first_from, mbox_min_ts int64 min_date_ts, "
+        "mbox_max_ts int64 max_date_ts"),
+    "subtitle": _carried(
+        "subtitle_meta", ("srt", "vtt"), _subtitle_expected,
+        "sub_kind string kind, sub_n_cues int32 n_cues, "
+        "sub_duration_ms int64 duration_ms", text_chars=True),
+    "csv": _carried(
+        "csv_meta", ("csv",), _csv_expected,
+        "csv_delim string delimiter, csv_n_records int32 n_records, "
+        "csv_n_cols int32 n_cols, csv_has_header bool has_header",
+        text_chars=True),
+    "font": _carried(
+        "font_meta", ("ttf", "otf", "woff", "woff2"), _font_expected,
+        "font_kind string kind, font_flavor string flavor, "
+        "font_n_tables int32 n_tables, font_sfnt_size int64 sfnt_size"),
+    "sqlite": _carried(
+        "sqlite_meta", ("sqlite",), _sqlite_expected,
+        "sqlite_page_size int32 page_size, sqlite_n_pages int32 n_pages, "
+        "sqlite_encoding string encoding, "
+        "sqlite_user_version int32 user_version, "
+        "sqlite_valid_size bool valid_size"),
+    "djvu": _carried(
+        "djvu_meta", ("djvu",), _djvu_expected,
+        "djvu_is_multi bool is_multi, djvu_n_pages int32 n_pages, "
+        "djvu_w int32 width, djvu_h int32 height, djvu_dpi int32 dpi"),
+}
+
+
+def _carried_columns(*names: str) -> Tuple[str, ...]:
+    return tuple(col for n in names for col, _, _ in CARRIED[n].fields)
+
+
+# The expected columns the mixed-profile corpus carries beyond its five
+# input columns, in corpus column order. By provenance:
+#  - generator-derived ground truth: text (the generators' own expected
+#    extraction), search_hello (the independent scanner above, over
+#    text), media_kind (the magic bytes the generator wrote);
+#  - the carried tables' columns: the independent re-reads in CARRIED;
+#  - the pinned eager kernel for the rest (SURVEY.md §5.4), computed
+#    once at generation time and value-pinned to handwritten literals
+#    per generator family in tests/test_features.py, so the oracle
+#    proves the distributed pipeline byte-equals the eager kernel.
+EXPECTED_COLUMNS = (
+    "text_fast", "n_pages", "n_chars_acc", "n_chars_fast", "is_enc",
+    "err_n", "acc_structured", "acc_stream", "acc_geometric", "fast_stream",
+    "meta_title", "meta_author", "meta_subject", "meta_keywords",
+    "meta_creator", "meta_producer", "meta_creation_date", "meta_mod_date",
+    "n_outline", "n_links", "n_form_fields", "n_images", "labels",
+    "markdown", "markdown_structured", "spans", "page_texts", "doc_json",
+    "search_hello", "media_kind",
+    *_carried_columns("audio", "video", "mp3", "flac", "ogg", "tiff",
+                      "exif", "image", "phash"),
+    "blocks", "block_labels",
+    *_carried_columns("docx", "epub", "xlsx", "pptx", "rtf", "odt", "ods",
+                      "odp", "ico", "webm", "tar", "eml", "mbox",
+                      "subtitle", "csv", "font"),
+    "text_zlib_len",
+    *_carried_columns("sqlite", "djvu"),
+)
+
+
 def expected_row(raw: bytes, text: Optional[str]) -> dict:
     """Compute every EXPECTED_COLUMNS value for one document."""
     from .kernel import Document
@@ -5711,80 +5851,11 @@ def expected_row(raw: bytes, text: Optional[str]) -> dict:
         for p in range(doc.page_count)]
     row["doc_json"] = document_json(doc)
     row["search_hello"] = search_matches_expected(text)
-    row["media_kind"] = _sniff_media_kind(raw)
-    if row["media_kind"] == "wav":
-        sr, ch, n, rms = _wav_expected(raw)
-        row.update({"audio_sr": sr, "audio_channels": ch,
-                    "audio_n_samples": n, "audio_rms_x1000": rms})
-    else:
-        row.update({"audio_sr": None, "audio_channels": None,
-                    "audio_n_samples": None, "audio_rms_x1000": None})
-    if row["media_kind"] in ("png", "jpeg", "gif", "webp", "bmp",
-                             "avif", "heic"):
-        iw, ih, ic = _image_expected(raw, row["media_kind"])
-        row.update({"img_width": iw, "img_height": ih, "img_channels": ic})
-    else:
-        row.update({"img_width": None, "img_height": None,
-                    "img_channels": None})
-    if row["media_kind"] == "png":
-        ah, dh = _phash_expected(raw)
-        row.update({"img_ahash": ah, "img_dhash": dh})
-    else:
-        row.update({"img_ahash": None, "img_dhash": None})
-    if row["media_kind"] == "jpeg":
-        eo, emk, ew, eh = _exif_expected(raw)
-        row.update({"exif_orientation": eo, "exif_make": emk,
-                    "exif_w": ew, "exif_h": eh})
-    else:
-        row.update({"exif_orientation": None, "exif_make": None,
-                    "exif_w": None, "exif_h": None})
-    if row["media_kind"] == "mp4":
-        dur, nt, vw, vh = _mp4_expected(raw)
-        row.update({"video_duration_ms": dur, "video_n_tracks": nt,
-                    "video_width": vw, "video_height": vh})
-    else:
-        row.update({"video_duration_ms": None, "video_n_tracks": None,
-                    "video_width": None, "video_height": None})
-    if row["media_kind"] == "mp3":
-        fr, sr, ch, dur, kbps = _mp3_expected(raw)
-        title, artist = _id3_expected(raw)
-        row.update({"mp3_n_frames": fr, "mp3_sr": sr, "mp3_channels": ch,
-                    "mp3_duration_ms": dur, "mp3_kbps": kbps,
-                    "mp3_title": title, "mp3_artist": artist})
-    else:
-        row.update({"mp3_n_frames": None, "mp3_sr": None,
-                    "mp3_channels": None, "mp3_duration_ms": None,
-                    "mp3_kbps": None, "mp3_title": None,
-                    "mp3_artist": None})
-    if row["media_kind"] == "flac":
-        sr, ch, bits, total, dur, title, artist = _flac_expected(raw)
-        row.update({"flac_sr": sr, "flac_channels": ch, "flac_bits": bits,
-                    "flac_total_samples": total, "flac_duration_ms": dur,
-                    "flac_title": title, "flac_artist": artist})
-    else:
-        row.update({"flac_sr": None, "flac_channels": None,
-                    "flac_bits": None, "flac_total_samples": None,
-                    "flac_duration_ms": None, "flac_title": None,
-                    "flac_artist": None})
-    if row["media_kind"] == "ogg":
-        codec, ch, sr, np_, dur, title, artist = _ogg_expected(raw)
-        row.update({"ogg_codec": codec, "ogg_channels": ch, "ogg_sr": sr,
-                    "ogg_n_pages": np_, "ogg_duration_ms": dur,
-                    "ogg_title": title, "ogg_artist": artist})
-    else:
-        row.update({"ogg_codec": None, "ogg_channels": None,
-                    "ogg_sr": None, "ogg_n_pages": None,
-                    "ogg_duration_ms": None, "ogg_title": None,
-                    "ogg_artist": None})
-    if row["media_kind"] == "tiff":
-        w, h, bits, comp, np_, desc = _tiff_expected(raw)
-        row.update({"tiff_w": w, "tiff_h": h, "tiff_bits": bits,
-                    "tiff_compression": comp, "tiff_n_pages": np_,
-                    "tiff_desc": desc})
-    else:
-        row.update({"tiff_w": None, "tiff_h": None, "tiff_bits": None,
-                    "tiff_compression": None, "tiff_n_pages": None,
-                    "tiff_desc": None})
+    kind = row["media_kind"] = _sniff_media_kind(raw)
+    for t in CARRIED.values():
+        values = (t.reread(raw) if kind in t.kinds
+                  else (None,) * len(t.fields))
+        row.update(zip((c for c, _, _ in t.fields), values, strict=True))
     if looks_like_html(raw):
         from .kernel.htmlblocks import classify_blocks
 
@@ -5803,148 +5874,12 @@ def expected_row(raw: bytes, text: Optional[str]) -> dict:
     else:
         row["blocks"] = None
         row["block_labels"] = None
-    if row["media_kind"] == "docx":
-        np_, ne, title, creator = _docx_expected(raw)
-        row.update({"docx_n_paras": np_, "docx_n_entries": ne,
-                    "docx_title": title, "docx_creator": creator})
-    else:
-        row.update({"docx_n_paras": None, "docx_n_entries": None,
-                    "docx_title": None, "docx_creator": None})
-    if row["media_kind"] == "epub":
-        nc, ne, title, creator = _epub_expected(raw)
-        row.update({"epub_n_chapters": nc, "epub_n_entries": ne,
-                    "epub_title": title, "epub_creator": creator})
-    else:
-        row.update({"epub_n_chapters": None, "epub_n_entries": None,
-                    "epub_title": None, "epub_creator": None})
-    if row["media_kind"] == "xlsx":
-        ns, nc, ne, title, snames = _xlsx_expected(raw)
-        row.update({"xlsx_n_sheets": ns, "xlsx_n_cells": nc,
-                    "xlsx_n_entries": ne, "xlsx_title": title,
-                    "xlsx_sheet_names": snames})
-    else:
-        row.update({"xlsx_n_sheets": None, "xlsx_n_cells": None,
-                    "xlsx_n_entries": None, "xlsx_title": None,
-                    "xlsx_sheet_names": None})
-    if row["media_kind"] == "pptx":
-        ns, nsh, ne, title = _pptx_expected(raw)
-        row.update({"pptx_n_slides": ns, "pptx_n_shapes": nsh,
-                    "pptx_n_entries": ne, "pptx_title": title})
-    else:
-        row.update({"pptx_n_slides": None, "pptx_n_shapes": None,
-                    "pptx_n_entries": None, "pptx_title": None})
-    if row["media_kind"] == "rtf":
-        np_, title = _rtf_expected(raw)
-        row.update({"rtf_n_pars": np_, "rtf_title": title})
-    else:
-        row.update({"rtf_n_pars": None, "rtf_title": None})
-    if row["media_kind"] == "tar":
-        nm, nd, nb, fn = _tar_expected(raw)
-        row.update({"tar_n_members": nm, "tar_n_dirs": nd,
-                    "tar_n_bytes": nb, "tar_first_name": fn})
-    else:
-        row.update({"tar_n_members": None, "tar_n_dirs": None,
-                    "tar_n_bytes": None, "tar_first_name": None})
-    if row["media_kind"] == "eml":
-        subj, frm, dts, np_ = _eml_expected(raw)
-        row.update({"eml_subject": subj, "eml_from": frm,
-                    "eml_date_ts": dts, "eml_n_parts": np_})
-    else:
-        row.update({"eml_subject": None, "eml_from": None,
-                    "eml_date_ts": None, "eml_n_parts": None})
-    if row["media_kind"] in ("srt", "vtt"):
-        sk, snc, sdm = _subtitle_expected(raw)
-        row.update({"sub_kind": sk, "sub_n_cues": snc,
-                    "sub_duration_ms": sdm})
-    else:
-        row.update({"sub_kind": None, "sub_n_cues": None,
-                    "sub_duration_ms": None})
-    if row["media_kind"] in ("ttf", "otf", "woff", "woff2"):
-        fk, ff, fn, fs = _font_expected(raw)
-        row.update({"font_kind": fk, "font_flavor": ff,
-                    "font_n_tables": fn, "font_sfnt_size": fs})
-    else:
-        row.update({"font_kind": None, "font_flavor": None,
-                    "font_n_tables": None, "font_sfnt_size": None})
-    if row["media_kind"] == "csv":
-        cd, cnr, cnc, chh = _csv_expected(raw)
-        row.update({"csv_delim": cd, "csv_n_records": cnr,
-                    "csv_n_cols": cnc, "csv_has_header": chh})
-    else:
-        row.update({"csv_delim": None, "csv_n_records": None,
-                    "csv_n_cols": None, "csv_has_header": None})
-    if row["media_kind"] == "mbox":
-        nm, fs, ff, lo, hi = _mbox_expected(raw)
-        row.update({"mbox_n_messages": nm, "mbox_first_subject": fs,
-                    "mbox_first_from": ff, "mbox_min_ts": lo,
-                    "mbox_max_ts": hi})
-    else:
-        row.update({"mbox_n_messages": None, "mbox_first_subject": None,
-                    "mbox_first_from": None, "mbox_min_ts": None,
-                    "mbox_max_ts": None})
-    if row["media_kind"] == "webm":
-        dt, dms, nt, ww, wh, vc, ac = _webm_expected(raw)
-        row.update({"webm_doc_type": dt, "webm_duration_ms": dms,
-                    "webm_n_tracks": nt, "webm_w": ww, "webm_h": wh,
-                    "webm_vcodec": vc, "webm_acodec": ac})
-    else:
-        row.update({"webm_doc_type": None, "webm_duration_ms": None,
-                    "webm_n_tracks": None, "webm_w": None, "webm_h": None,
-                    "webm_vcodec": None, "webm_acodec": None})
-    if row["media_kind"] == "ico":
-        ni, iw, ih, ap = _ico_expected(raw)
-        row.update({"ico_n_images": ni, "ico_w": iw, "ico_h": ih,
-                    "ico_any_png": ap})
-    else:
-        row.update({"ico_n_images": None, "ico_w": None, "ico_h": None,
-                    "ico_any_png": None})
-    if row["media_kind"] == "ods":
-        ns, nc, ne, title, creator = _ods_expected(raw)
-        row.update({"ods_n_sheets": ns, "ods_n_cells": nc,
-                    "ods_n_entries": ne, "ods_title": title,
-                    "ods_creator": creator})
-    else:
-        row.update({"ods_n_sheets": None, "ods_n_cells": None,
-                    "ods_n_entries": None, "ods_title": None,
-                    "ods_creator": None})
-    if row["media_kind"] == "odp":
-        ns, nf, ne, title, creator = _odp_expected(raw)
-        row.update({"odp_n_slides": ns, "odp_n_frames": nf,
-                    "odp_n_entries": ne, "odp_title": title,
-                    "odp_creator": creator})
-    else:
-        row.update({"odp_n_slides": None, "odp_n_frames": None,
-                    "odp_n_entries": None, "odp_title": None,
-                    "odp_creator": None})
-    if row["media_kind"] == "odt":
-        np_, ne, title, creator = _odt_expected(raw)
-        row.update({"odt_n_paras": np_, "odt_n_entries": ne,
-                    "odt_title": title, "odt_creator": creator})
-    else:
-        row.update({"odt_n_paras": None, "odt_n_entries": None,
-                    "odt_title": None, "odt_creator": None})
     # compressibility ground truth (eager differential, same pinned
     # zlib level 6 the distributed query uses — the curation signal is
     # the RATIO; both sides run CPython's bundled zlib, documented)
     row["text_zlib_len"] = (
         len(zlib.compress(text.encode("utf-8"), 6))
         if text is not None else None)
-    if row["media_kind"] == "sqlite":
-        sp, sn, se, suv, sv = _sqlite_expected(raw)
-        row.update({"sqlite_page_size": sp, "sqlite_n_pages": sn,
-                    "sqlite_encoding": se, "sqlite_user_version": suv,
-                    "sqlite_valid_size": sv})
-    else:
-        row.update({"sqlite_page_size": None, "sqlite_n_pages": None,
-                    "sqlite_encoding": None, "sqlite_user_version": None,
-                    "sqlite_valid_size": None})
-    if row["media_kind"] == "djvu":
-        dm, dn, dw, dh, dd = _djvu_expected(raw)
-        row.update({"djvu_is_multi": dm, "djvu_n_pages": dn,
-                    "djvu_w": dw, "djvu_h": dh, "djvu_dpi": dd})
-    else:
-        row.update({"djvu_is_multi": None, "djvu_n_pages": None,
-                    "djvu_w": None, "djvu_h": None, "djvu_dpi": None})
     return row
 
 
@@ -6012,30 +5947,6 @@ def write_corpus_parquet(path: str, n_docs: int, seed: int = 42,
         "spans": spans_type, "page_texts": pa.list_(pa.string()),
         "doc_json": pa.string(), "search_hello": search_type,
         "media_kind": pa.string(),
-        "audio_sr": pa.int32(), "audio_channels": pa.int32(),
-        "audio_n_samples": pa.int64(), "audio_rms_x1000": pa.int64(),
-        "img_width": pa.int32(), "img_height": pa.int32(),
-        "img_channels": pa.int32(),
-        "img_ahash": pa.int64(), "img_dhash": pa.int64(),
-        "video_duration_ms": pa.int64(), "video_n_tracks": pa.int32(),
-        "video_width": pa.int32(), "video_height": pa.int32(),
-        "mp3_n_frames": pa.int32(), "mp3_sr": pa.int32(),
-        "mp3_channels": pa.int32(), "mp3_duration_ms": pa.int64(),
-        "mp3_kbps": pa.int32(), "mp3_title": pa.string(),
-        "mp3_artist": pa.string(),
-        "flac_sr": pa.int32(), "flac_channels": pa.int32(),
-        "flac_bits": pa.int32(), "flac_total_samples": pa.int64(),
-        "flac_duration_ms": pa.int64(), "flac_title": pa.string(),
-        "flac_artist": pa.string(),
-        "ogg_codec": pa.string(), "ogg_channels": pa.int32(),
-        "ogg_sr": pa.int32(), "ogg_n_pages": pa.int32(),
-        "ogg_duration_ms": pa.int64(), "ogg_title": pa.string(),
-        "ogg_artist": pa.string(),
-        "tiff_w": pa.int32(), "tiff_h": pa.int32(),
-        "tiff_bits": pa.int32(), "tiff_compression": pa.string(),
-        "tiff_n_pages": pa.int32(), "tiff_desc": pa.string(),
-        "exif_orientation": pa.int32(), "exif_make": pa.string(),
-        "exif_w": pa.int32(), "exif_h": pa.int32(),
         "blocks": pa.list_(pa.struct([
             ("idx", pa.int32()), ("n_chars", pa.int32()),
             ("n_words", pa.int32()), ("ld_x1000", pa.int32()),
@@ -6043,52 +5954,12 @@ def write_corpus_parquet(path: str, n_docs: int, seed: int = 42,
             ("label", pa.string()),
         ])),
         "block_labels": pa.list_(pa.string()),
-        "docx_n_paras": pa.int32(), "docx_n_entries": pa.int32(),
-        "docx_title": pa.string(), "docx_creator": pa.string(),
-        "epub_n_chapters": pa.int32(), "epub_n_entries": pa.int32(),
-        "epub_title": pa.string(), "epub_creator": pa.string(),
-        "xlsx_n_sheets": pa.int32(), "xlsx_n_cells": pa.int32(),
-        "xlsx_n_entries": pa.int32(), "xlsx_title": pa.string(),
-        "xlsx_sheet_names": pa.list_(pa.string()),
-        "pptx_n_slides": pa.int32(), "pptx_n_shapes": pa.int32(),
-        "pptx_n_entries": pa.int32(), "pptx_title": pa.string(),
-        "rtf_n_pars": pa.int32(), "rtf_title": pa.string(),
-        "odt_n_paras": pa.int32(), "odt_n_entries": pa.int32(),
-        "odt_title": pa.string(), "odt_creator": pa.string(),
-        "ods_n_sheets": pa.int32(), "ods_n_cells": pa.int32(),
-        "ods_n_entries": pa.int32(), "ods_title": pa.string(),
-        "ods_creator": pa.string(),
-        "odp_n_slides": pa.int32(), "odp_n_frames": pa.int32(),
-        "odp_n_entries": pa.int32(), "odp_title": pa.string(),
-        "odp_creator": pa.string(),
-        "ico_n_images": pa.int32(), "ico_w": pa.int32(),
-        "ico_h": pa.int32(), "ico_any_png": pa.bool_(),
-        "webm_doc_type": pa.string(), "webm_duration_ms": pa.int64(),
-        "webm_n_tracks": pa.int32(), "webm_w": pa.int32(),
-        "webm_h": pa.int32(), "webm_vcodec": pa.string(),
-        "webm_acodec": pa.string(),
-        "tar_n_members": pa.int32(), "tar_n_dirs": pa.int32(),
-        "tar_n_bytes": pa.int64(), "tar_first_name": pa.string(),
-        "eml_subject": pa.string(), "eml_from": pa.string(),
-        "eml_date_ts": pa.int64(), "eml_n_parts": pa.int32(),
-        "mbox_n_messages": pa.int32(), "mbox_first_subject": pa.string(),
-        "mbox_first_from": pa.string(), "mbox_min_ts": pa.int64(),
-        "mbox_max_ts": pa.int64(),
-        "sub_kind": pa.string(), "sub_n_cues": pa.int32(),
-        "sub_duration_ms": pa.int64(),
-        "csv_delim": pa.string(), "csv_n_records": pa.int32(),
-        "csv_n_cols": pa.int32(), "csv_has_header": pa.bool_(),
-        "font_kind": pa.string(), "font_flavor": pa.string(),
-        "font_n_tables": pa.int32(), "font_sfnt_size": pa.int64(),
         "text_zlib_len": pa.int32(),
-        "sqlite_page_size": pa.int32(), "sqlite_n_pages": pa.int32(),
-        "sqlite_encoding": pa.string(),
-        "sqlite_user_version": pa.int32(),
-        "sqlite_valid_size": pa.bool_(),
-        "djvu_is_multi": pa.bool_(), "djvu_n_pages": pa.int32(),
-        "djvu_w": pa.int32(), "djvu_h": pa.int32(),
-        "djvu_dpi": pa.int32(),
     }
+    for t in CARRIED.values():
+        for col, typ, _ in t.fields:
+            types[col] = (pa.list_(pa.string()) if typ == "list<string>"
+                          else pa.type_for_alias(typ))
     table = pa.table({k: pa.array(v, types[k]) for k, v in cols.items()})
     # Small row groups so a Spark scan can split the file across tasks —
     # one giant row group serializes the whole read into a single task

@@ -597,10 +597,18 @@ def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, kernel,
     quality gate included) skips the extraction step here and enters at
     the bucket filter."""
     t0 = time.time()
+
+    def pending(d: DataFrame) -> DataFrame:
+        # every bucket value is in range(n_buckets) (bucket_of, or the
+        # validated input layout), so with none complete the filter is
+        # always true: leave it out of the plan
+        return d if len(todo) == n_buckets else d.where(
+            F.col("bucket").isin(todo))
+
     if prebuilt_result is not None:
-        result = prebuilt_result.where(F.col("bucket").isin(todo))
+        result = pending(prebuilt_result)
     else:
-        part = maybe_salted(df.where(F.col("bucket").isin(todo)), partitions,
+        part = maybe_salted(pending(df), partitions,
                             salt=salt, big_doc_bytes=big_doc_bytes,
                             repartition_blobs=repartition_blobs)
         # carry the bucket through the kernel via re-derivation (cheaper

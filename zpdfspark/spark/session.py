@@ -1,10 +1,12 @@
 """SparkSession builder tuned for the extraction workload.
 
 Tuning rationale (SURVEY.md §4):
-- Arrow batches carry whole PDFs: maxRecordsPerBatch is kept small so a
-  batch of large documents fits in the Python worker (each record can be
-  up to hundreds of MiB; 64 blobs/batch bounds peak memory while still
-  amortizing Arrow IPC overhead).
+- Arrow batches carry whole PDFs, so each batch is capped twice: at 256
+  records (``maxRecordsPerBatch``), which amortizes Arrow IPC overhead
+  over small documents, and at ``ARROW_BATCH_BYTES`` (``maxBytesPerBatch``),
+  which bounds a batch of large ones: Spark closes a batch once it holds
+  that many bytes, so a batch is at most the cap plus one record. The
+  cap is above every batch either benchmark builds.
 - AQE enabled: coalesces the post-shuffle partitions of the relational
   shell (metrics rollups, dedup joins); the extraction stage itself is a
   map-only pipeline and is sized explicitly via repartition.
@@ -15,7 +17,11 @@ Tuning rationale (SURVEY.md §4):
   directory ~16 times per task (``importlib.invalidate_caches()`` in
   ``worker.main``), about 0.3 s before every UDF starts; the daemon
   memoizes that read and forks workers from a frozen heap with the
-  kernel already imported (see its module docstring).
+  kernel already imported (see its module docstring). It also starts
+  from compiled pyspark: when an installed pyspark has the zip's
+  version, it drops the zip from its path before importing pyspark, so
+  the daemon's imports read cached bytecode instead of compiling
+  pyspark's sources from the zip at every start.
   Only ``get_spark`` names the daemon, and only when zpdfspark was
   imported from a plain directory, which it also puts on the workers'
   PYTHONPATH. Spark starts the daemon before any task, so with
@@ -52,6 +58,11 @@ DAEMON_MODULE = "zpdfspark.spark.worker_daemon"
 # text), noise beside a kernel of >= 300 us per document; loading
 # zstd-jni's native library costs up to ~0.3 s once per JVM.
 PARQUET_COMPRESSION = "zstd"
+
+# Byte cap of one Arrow batch into a Python UDF (module docstring).
+# Without it, 64 records of 1 MiB in one partition reach the UDF as one
+# 64 MiB batch.
+ARROW_BATCH_BYTES = 16 << 20
 
 
 def _package_root() -> str | None:
@@ -98,6 +109,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_records))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         .config("spark.sql.files.maxPartitionBytes", "64m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
