@@ -123,17 +123,22 @@ NOTES = {
 
 
 def stable_ids(plan: str) -> str:
-    """Renumber the expression ids (``#N``) and exchange ``plan_id=N``
-    of one plan in order of first appearance. Spark hands both out
-    session-wide, so raw ids shift with everything planned before and
-    would make every regeneration rewrite PLANS.md."""
+    """Renumber the expression ids (``#N``), the exchange ``plan_id=N``
+    and the lambda variables (``lambda x_N``) of one plan in order of
+    first appearance. Spark hands all three out JVM-wide, so raw ids
+    shift with everything planned before: one more lambda in an early
+    query would otherwise rewrite the plan of every later one."""
     for prefix in ("#", "plan_id="):
         ids: dict = {}
         plan = re.sub(re.escape(prefix) + r"(\d+)",
                       lambda m: prefix + str(ids.setdefault(m.group(1),
                                                             len(ids))),
                       plan)
-    return plan
+    names: dict = {}
+    return re.sub(r"(lambda (\w+)_)(\d+)\b",
+                  lambda m: m.group(1) + str(names.setdefault(
+                      (m.group(2), m.group(3)), len(names))),
+                  plan)
 
 
 def main() -> None:
