@@ -1,6 +1,8 @@
 """Local stand-in for the driver's correctness gate: run each
 queries()[name] on Spark and oracle_sql()[name] on DuckDB at the given
-sf, compare row count + schema-insensitive sorted values.
+sf, compare row count + schema-insensitive sorted values, then the row
+order itself: every oracle ends in ORDER BY (or returns one row), so a
+query that emits its rows in another order fails.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 
@@ -29,7 +31,14 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def normalize(rows, cols):
+# queries whose row order may differ from the oracle's although the
+# values match, each with the reason; every other query's order is checked
+ORDER_EXEMPT: dict[str, str] = {}
+
+
+def normalize(rows, cols, ordered=False):
+    """One string per row, columns in name order, floats rounded to 6
+    places; sorted unless ``ordered``."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = []
     for r in rows:
@@ -40,8 +49,7 @@ def normalize(rows, cols):
                 v = round(v, 6)
             vals.append(str(v))
         out.append("|".join(vals))
-    out.sort()
-    return out
+    return out if ordered else sorted(out)
 
 
 def duckdb_views(sf_dir: str):
@@ -72,8 +80,9 @@ def compare(con, name: str, df, sql: str) -> tuple[bool, list[str]]:
     """Check one Spark query result against its DuckDB oracle SQL.
 
     Returns (ok, report lines). The check is: same column names, no
-    integer-vs-decimal Arrow type drift, same row count, and equal
-    sorted normalized values."""
+    integer-vs-decimal Arrow type drift, same row count, equal sorted
+    normalized values, and the same normalized rows in sequence (unless
+    the query is in ``ORDER_EXEMPT``)."""
     cols = df.columns
     rows = [tuple(r) for r in df.collect()]
     try:
@@ -107,15 +116,20 @@ def compare(con, name: str, df, sql: str) -> tuple[bool, list[str]]:
                           f"duckdb={dt} spark={st}")
     except Exception as e:  # pragma: no cover - audit best-effort
         report.append(f"[warn] {name}: type audit skipped: {e}")
-    a = normalize(rows, cols)
-    b = normalize(orows, ocols)
+    a = normalize(rows, cols, ordered=True)
+    b = normalize(orows, ocols, ordered=True)
     if len(a) != len(b):
         return False, report + [
             f"[FAIL] {name}: row count {len(a)} vs {len(b)}"]
-    if a != b:
-        diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+    if sorted(a) != sorted(b):
+        diff = [(x, y) for x, y in zip(sorted(a), sorted(b)) if x != y][:3]
         return False, report + [
             f"[FAIL] {name}: value mismatch, first diffs: {diff}"]
+    if a != b and name not in ORDER_EXEMPT:
+        i = next(i for i, (x, y) in enumerate(zip(a, b)) if x != y)
+        return False, report + [
+            f"[FAIL] {name}: same rows in another order, first at row "
+            f"{i}: {a[i]!r} vs {b[i]!r}"]
     return True, report + [f"[OK]   {name}: {len(a)} rows match"]
 
 
