@@ -112,6 +112,33 @@ def test_map_rows_several_rows_per_input_and_null_blob(spark):
         ("a", 2, "bytes", 3, False), ("b", 0, "bytes", 0, True)]
 
 
+def test_image_neardup_finds_seeded_pair(spark, tmp_path, monkeypatch):
+    """The sf0.01 corpus holds no near-duplicate png pair, so its
+    oracle returns no rows. Here the query reads png 4, the one-pixel
+    clone of png 3, next to png 8 (interlaced, out of scope) and png 9
+    (the clone of 8, far from 3 and 4): exactly the seeded pair comes
+    back, at the distances the independent re-read gives."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+    from zpdfspark.fixtures import _phash_expected, png_image
+
+    ids = (3, 4, 8, 9)
+    path = str(tmp_path / "pngs.parquet")
+    pq.write_table(pa.table({
+        "url": [f"https://img.example/{i}.png" for i in ids],
+        "html": [png_image(i)[0] for i in ids],
+        "media_kind": ["png"] * len(ids)}), path)
+    monkeypatch.setattr(E, "_corpus_path", lambda sf_dir: path)
+
+    (a3, d3), (a4, d4) = (_phash_expected(png_image(i)[0]) for i in (3, 4))
+    assert (bin(a3 ^ a4).count("1"), bin(d3 ^ d4).count("1")) == (1, 0)
+    rows = E.queries()["image_neardup"](spark, str(tmp_path)).collect()
+    assert [tuple(r) for r in rows] == [
+        ("https://img.example/3.png", "https://img.example/4.png", 1, 0)]
+
+
 def test_udfs_and_pipeline_import_without_pandas():
     import subprocess
     import sys
