@@ -50,6 +50,9 @@ def _name(node: ast.stmt) -> str | None:
 
 
 def main(argv: list[str]) -> int:
+    if not argv:
+        print(__doc__.strip(), file=sys.stderr)
+        return 2
     path, names = argv[0], set(argv[1:])
     with open(path) as f:
         src = f.read()
