@@ -177,6 +177,34 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spread(spark, spark.read.parquet(p), p, min_rows=64)
 
 
+SALT = 8  # partitions one hot key of a salted keeper join spreads over
+
+
+def _salted(df: DataFrame, key) -> DataFrame:
+    """The fact side of a salted keeper join: ``df`` plus
+    ``salt = pmod(key, SALT)``; the keeper side goes through
+    ``_replicated`` and the two join on (key columns, salt).
+
+    Why salt (round 4, measured on this Spark): AQE's
+    OptimizeSkewedJoin only splits a sort-merge join whose BOTH
+    children are plain shuffle reads. A keeper side fed by an
+    aggregate (one row per key: the first occurrence, a count, a
+    vocabulary entry) puts a final aggregate between its shuffle and
+    the join, so the hot key's fact partition is never split
+    (tests/test_plans.py test_aqe_skew_split_pattern_limits pins both
+    directions). A key occurring 10^9 times would land on one
+    reducer; salted, it spreads over SALT partitions by construction,
+    at the cost of SALT copies of each keeper row."""
+    return df.withColumn("salt", F.pmod(key, F.lit(SALT)))
+
+
+def _replicated(df: DataFrame) -> DataFrame:
+    """The keeper side of a ``_salted`` join: each row once per salt
+    value 0..SALT-1."""
+    return df.withColumn("salt", F.explode(
+        F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>")))
+
+
 # =========================================================================
 # flagship
 # =========================================================================
@@ -536,24 +564,15 @@ def _q_dedup_exact_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate page pins one sort partition. When the consumer only
     needs keeper/is_dup — the common crawl-dedup case — the keeper is
     min(doc_id) per hash via groupBy (partial combine collapses the
-    hot hash map-side) and the join back is EXPLICITLY SALTED, the
-    span_dedup pattern: AQE's OptimizeSkewedJoin cannot split an
-    agg-fed join side (tests/test_plans.py pins this), so the fact
-    carries salt = pmod(doc_id, S) and the 1-row-per-hash keeper side
-    replicates S times. A hot hash spreads over S partitions by
-    construction; no window anywhere in the plan (plan-guarded).
+    hot hash map-side) and the join back is salted on doc_id
+    (``_salted``). No window anywhere in the plan (plan-guarded).
     """
-    SALT = 8
     d = _docs(spark, sf_dir, spread=False).select(  # md5-only map
         "doc_id", F.md5(F.col("text")).alias("h"))
-    fact = d.withColumn("salt", F.pmod(F.col("doc_id"), F.lit(SALT)))
-    keepers = (
-        d.groupBy("h").agg(F.min("doc_id").alias("keeper_doc_id"))
-        .withColumn("salt", F.explode(
-            F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>")))
-    )
+    keepers = _replicated(
+        d.groupBy("h").agg(F.min("doc_id").alias("keeper_doc_id")))
     return (
-        fact.join(keepers, ["h", "salt"])
+        _salted(d, "doc_id").join(keepers, ["h", "salt"])
         .withColumn(
             "is_dup",
             (F.col("doc_id") != F.col("keeper_doc_id")).cast("int"))
@@ -907,37 +926,22 @@ def _q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort every occurrence (AQE cannot split a window), and the
     aggregation collapses the hot span map-side (partial combine).
 
-    The join back is EXPLICITLY SALTED (round 4): measured on this
-    Spark, AQE's OptimizeSkewedJoin only matches a sort-merge join
-    whose BOTH children are plain shuffle reads — a final aggregate
-    sitting between the keeper's shuffle and the join (exactly this
-    keeper shape) breaks the pattern, so the hot span's fact-side
-    partition would NOT be auto-split (tests/test_plans.py
-    test_aqe_skew_split_pattern_limits pins both directions). The
-    classic fix for a fact x 1-row-per-key dim join is salting: the
-    fact side carries salt = pmod(doc_id + span_idx, S), the keeper
-    (exactly one row per span) is replicated S times, and the join key
-    becomes (span, salt) — a 10^9-occurrence span now spreads over S
-    partitions by construction, at the cost of S x keeper rows. All
-    exchanges carry only (span, doc_id, idx) rows — never the original
-    blobs — which is the C4-at-scale shape.
+    The join back is salted (``_salted``) on doc_id + span_idx, so a
+    10^9-occurrence span spreads over SALT partitions. All exchanges
+    carry only (span, doc_id, idx) rows — never the original blobs —
+    which is the C4-at-scale shape.
     """
-    SALT = 8
     d = _docs(spark, sf_dir)
     words = F.split(F.col("text"), " ")
     n_words = F.size(words)
     chunks = F.transform(
         F.sequence(F.lit(0), F.floor((n_words - 1) / 10).cast("int")),
         lambda i: F.concat_ws(" ", F.slice(words, i * 10 + 1, 10)))
-    spans = d.select(
-        "doc_id", F.posexplode(chunks).alias("span_idx", "span")
-    ).withColumn("salt", F.pmod(F.col("doc_id") + F.col("span_idx"), SALT))
-    keepers = (
-        spans.groupBy("span").agg(
-            F.min(F.struct("doc_id", "span_idx")).alias("k"))
-        .withColumn("salt", F.explode(
-            F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>")))
-    )
+    spans = _salted(
+        d.select("doc_id", F.posexplode(chunks).alias("span_idx", "span")),
+        F.col("doc_id") + F.col("span_idx"))
+    keepers = _replicated(spans.groupBy("span").agg(
+        F.min(F.struct("doc_id", "span_idx")).alias("k")))
     flagged = spans.join(keepers, ["span", "salt"]).withColumn(
         "keep", (F.col("doc_id") == F.col("k.doc_id"))
         & (F.col("span_idx") == F.col("k.span_idx")))
@@ -1038,8 +1042,7 @@ def _q_quality_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         return ((b * 2654435761) % 2001) / 1000.0 - 1.0
 
     def mean_w(arr, cnt):
-        s = F.aggregate(F.transform(arr, w_of), F.lit(0.0),
-                        lambda acc, x: acc + x)
+        s = _fsum(F.transform(arr, w_of))
         return F.coalesce(s / F.nullif(cnt, F.lit(0)), F.lit(0.0))
 
     bigrams = F.when(n >= 2, F.zip_with(
@@ -1065,26 +1068,17 @@ def _q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scale skeleton as span_dedup, one level finer: keeper =
     min(struct(url, line_idx)) via groupBy — never a row_number
     window (a 10^9-occurrence cookie-banner line must collapse
-    map-side, not sort in one partition) — and the join back is
-    EXPLICITLY SALTED because AQE's skew split cannot act on an
-    agg-fed join side (the measured r4 finding, pinned in
-    tests/test_plans.py). Only (line, url, idx) rows ever shuffle;
-    blobs stay in the scan."""
-    SALT = 8
+    map-side, not sort in one partition) — and the join back is salted
+    (``_salted``) on the url hash + line index. Only (line, url, idx)
+    rows ever shuffle; blobs stay in the scan."""
     c = _corpus(spark, sf_dir).where(F.col("text").isNotNull())
-    lines = (
+    lines = _salted(
         c.select("url", F.posexplode(F.split(F.col("text"), "\n"))
-         .alias("line_idx", "line"))
-        .where(F.length("line") > 0)
-        .withColumn("salt", F.pmod(
-            F.abs(F.xxhash64("url")) + F.col("line_idx"), SALT))
-    )
-    keepers = (
-        lines.groupBy("line").agg(
-            F.min(F.struct("url", "line_idx")).alias("k"))
-        .withColumn("salt", F.explode(
-            F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>")))
-    )
+                 .alias("line_idx", "line"))
+        .where(F.length("line") > 0),
+        F.abs(F.xxhash64("url")) + F.col("line_idx"))
+    keepers = _replicated(lines.groupBy("line").agg(
+        F.min(F.struct("url", "line_idx")).alias("k")))
     flagged = lines.join(keepers, ["line", "salt"]).withColumn(
         "keep", (F.col("url") == F.col("k.url"))
         & (F.col("line_idx") == F.col("k.line_idx")))
@@ -1128,13 +1122,11 @@ def _q_host_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: line df = one groupBy(host, line) count-distinct
     (map-side combining); host doc counts are a ~|hosts|-row aggregate
     joined BROADCAST; the template set joins back to the exploded
-    lines via an EXPLICITLY SALTED equi-join (the agg-fed side again —
-    AQE's skew split cannot act on it, the measured r4 finding; a
-    banner shared by 10^9 pages of one host is exactly the hot key).
-    Only (host, line, idx) rows shuffle; blobs stay in the scan. No
-    window anywhere — the per-doc reassembly is an array_sort over
-    collect_list, bounded by lines-per-document."""
-    SALT = 8
+    lines via a salted equi-join (``_salted``: a banner shared by 10^9
+    pages of one host is exactly the hot key). Only (host, line, idx)
+    rows shuffle; blobs stay in the scan. No window anywhere — the
+    per-doc reassembly is an array_sort over collect_list, bounded by
+    lines-per-document."""
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     host = F.concat(
         F.lit("host"),
@@ -1159,23 +1151,19 @@ def _q_host_template(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunks)
     base = d.where(F.size(toks) > 0).select(
         "doc_id", host.alias("host"), lines_arr.alias("la"))
-    lines = base.select(
-        "doc_id", "host",
-        F.posexplode("la").alias("line_idx", "line"),
-    ).withColumn("salt", F.pmod(
-        F.abs(F.xxhash64("doc_id")) + F.col("line_idx"), SALT))
+    lines = _salted(
+        base.select("doc_id", "host",
+                    F.posexplode("la").alias("line_idx", "line")),
+        F.abs(F.xxhash64("doc_id")) + F.col("line_idx"))
     host_docs = base.groupBy("host").agg(
         F.count("*").alias("n_host_docs"))
     freq = lines.groupBy("host", "line").agg(
         F.countDistinct("doc_id").alias("df"))
-    templates = (
+    templates = _replicated(
         freq.join(F.broadcast(host_docs), "host")
         .where((F.col("df") * 2 >= F.col("n_host_docs"))
                & (F.col("n_host_docs") >= 2))
-        .select("host", "line", F.lit(True).alias("is_template"))
-        .withColumn("salt", F.explode(
-            F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>")))
-    )
+        .select("host", "line", F.lit(True).alias("is_template")))
     flagged = lines.join(templates, ["host", "line", "salt"], "left")
     kept_struct = F.when(F.col("is_template").isNull(),
                          F.struct("line_idx", "line"))
@@ -1326,10 +1314,9 @@ def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape at 100 TB: only (doc_id, i, 16-char hash) rows ever
     shuffle — document text never leaves the scan stage.  The
-    dup-hash set is agg-fed, so the join back is EXPLICITLY SALTED
-    (the measured r4 finding: AQE's skew split cannot act on an
-    agg-fed side — a boilerplate window occurring 10^9 times lands
-    on one reducer otherwise).  The span merge is a per-document
+    dup-hash set is agg-fed, so the join back is salted (``_salted``:
+    a boilerplate window occurring 10^9 times lands on one reducer
+    otherwise).  The span merge is a per-document
     window over that doc's duplicated windows only — bounded by doc
     length, splittable across docs.  Output: per-doc token/window
     counts plus how many windows and how many tokens (merged-span
@@ -1338,7 +1325,6 @@ def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     W = 20
-    SALT = 8
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     toks = d.select(
         "doc_id",
@@ -1350,7 +1336,7 @@ def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 16-hex-char form the oracle replays, while the groupBy/join
     # key drops from a 16-byte string to 8 fixed-width bytes (r6:
     # smaller exchange, cheaper hash-aggregate probes)
-    wins = (
+    wins = _salted(
         toks.select(
             "doc_id",
             F.posexplode(
@@ -1360,17 +1346,12 @@ def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.md5(F.array_join(F.slice("ts", i + 1, W), " ")),
                         1, 16), 16, -10).cast("long")))
                 .otherwise(F.array().cast("array<long>"))
-            ).alias("i", "h"))
-        .withColumn("salt", F.pmod(
-            F.abs(F.xxhash64("doc_id")) + F.col("i"), F.lit(SALT)))
-    )
-    dup = (
+            ).alias("i", "h")),
+        F.abs(F.xxhash64("doc_id")) + F.col("i"))
+    dup = _replicated(
         wins.groupBy("h").agg(F.count("*").alias("c"))
         .where(F.col("c") > 1)
-        .select("h")
-        .withColumn("salt", F.explode(
-            F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>")))
-    )
+        .select("h"))
     hits = wins.join(dup, ["h", "salt"]).select("doc_id", "i")
     wseq = Window.partitionBy("doc_id").orderBy("i")
     isl = (
@@ -1449,21 +1430,14 @@ def _q_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-identical pages that differ only in case/punctuation/
     formatting, the bridge between exact and MinHash dedup. Keeper =
     min(doc_id) per normalized hash via groupBy (never a window), and
-    the join back is EXPLICITLY SALTED (agg-fed side, the measured r4
-    AQE finding) — only (doc_id, 32-char hash) rows shuffle, the text
-    column never leaves the scan."""
-    SALT = 8
+    the join back is salted on doc_id (``_salted``) — only (doc_id,
+    32-char hash) rows shuffle, the text column never leaves the scan."""
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     norm = F.trim(F.regexp_replace(F.regexp_replace(
         F.lower(F.col("text")), "[^a-z0-9 ]", " "), " +", " "))
-    hashed = d.select(
-        "doc_id", F.md5(norm).alias("h"),
-        F.pmod(F.col("doc_id"), F.lit(SALT)).alias("salt"))
-    keepers = (
-        hashed.groupBy("h").agg(F.min("doc_id").alias("keeper"))
-        .withColumn("salt", F.explode(
-            F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>")))
-    )
+    hashed = _salted(d.select("doc_id", F.md5(norm).alias("h")), "doc_id")
+    keepers = _replicated(
+        hashed.groupBy("h").agg(F.min("doc_id").alias("keeper")))
     return (
         hashed.join(keepers, ["h", "salt"])
         .select("doc_id", F.col("h").alias("norm_md5"), "keeper",
@@ -1485,10 +1459,8 @@ def _q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (list lambdas inside whole-stage codegen — the per-doc arrays
     are doc-bounded); only the distinct (doc_id, hash) pairs shuffle
     for the cross-doc share count, and that agg-fed join back is
-    SALTED like every keeper join in this repo (the measured r4 AQE
-    finding). Text never leaves the scan."""
+    salted on doc_id (``_salted``). Text never leaves the scan."""
     K, W = 8, 4
-    SALT = 8
     d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
     n = F.length("text")
     n_grams = F.greatest(n - (K - 1), F.lit(0))
@@ -1523,16 +1495,13 @@ def _q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + F.array_min(F.slice("g", j, W)))))
             .otherwise(F.array().cast("array<bigint>")))
         .alias("fp"))
-    pairs = (fps.select("doc_id", F.explode("fp").alias("f"))
-             .select("doc_id",
-                     F.pmod("f", F.lit(4294967296)).alias("h"))
-             .distinct()
-             .withColumn("salt", F.pmod(F.col("doc_id"), F.lit(SALT))))
-    shared = (pairs.groupBy("h").agg(
+    pairs = _salted(fps.select("doc_id", F.explode("fp").alias("f"))
+                    .select("doc_id",
+                            F.pmod("f", F.lit(4294967296)).alias("h"))
+                    .distinct(), "doc_id")
+    shared = _replicated(pairs.groupBy("h").agg(
         F.countDistinct("doc_id").alias("nd"))
-        .where(F.col("nd") > 1).select("h")
-        .withColumn("salt", F.explode(
-            F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>"))))
+        .where(F.col("nd") > 1).select("h"))
     per_doc_shared = (pairs.join(shared, ["h", "salt"])
                       .groupBy("doc_id")
                       .agg(F.count("*").alias("sh")))
@@ -2013,17 +1982,15 @@ def _q_curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_exact_agg's salted agg-join keeper) so the composite and the
     components cannot drift. Plan shape at 100 TB: all flags are
     map-side projections on one scan; the only exchanges are the dup
-    keeper's map-side-combining groupBy and the explicitly SALTED join
-    back (AQE cannot skew-split an agg-fed join side — the measured r4
-    finding), and the fact side carries only (doc_id, h, 3 booleans):
-    text never shuffles.
+    keeper's map-side-combining groupBy and the salted join back
+    (``_salted``), and the fact side carries only (doc_id, h, 3
+    booleans): text never shuffles.
 
     The synthetic corpus has no exact duplicates, so every 31st doc is
     replaced by a shared filter-passing boilerplate page (the
     pii_scrub/c4_filters seeding convention, replayed identically by
     the oracle) — all four reject reasons AND the keep branch have
     live positives at sf0.01."""
-    SALT = 8
     DUP_SEED = ("The quick brown fox jumps over the lazy dog near the "
                 "quiet river bank. It walks on. It runs on. It rests "
                 "now. It sleeps well.")
@@ -2075,14 +2042,10 @@ def _q_curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.md5(F.col("text")).alias("h"),
         lang_ok.alias("lang_ok"), gopher_ok.alias("gopher_ok"),
         c4_ok.alias("c4_ok"))
-    fact = flags.withColumn("salt", F.pmod(F.col("doc_id"), F.lit(SALT)))
-    keepers = (
+    keepers = _replicated(
         d.select("doc_id", F.md5(F.col("text")).alias("h"))
-        .groupBy("h").agg(F.min("doc_id").alias("keeper_doc_id"))
-        .withColumn("salt", F.explode(
-            F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>")))
-    )
-    j = fact.join(keepers, ["h", "salt"])
+        .groupBy("h").agg(F.min("doc_id").alias("keeper_doc_id")))
+    j = _salted(flags, "doc_id").join(keepers, ["h", "salt"])
     is_dup = F.col("doc_id") != F.col("keeper_doc_id")
     reason = (F.when(~F.col("lang_ok"), "language")
               .when(~F.col("gopher_ok"), "gopher")
@@ -2371,21 +2334,17 @@ def _q_unigram_logprob(spark: SparkSession, sf_dir: str,
 def _unigram_scored(spark: SparkSession, sf_dir: str,
                     min_count: int = 2) -> DataFrame:
     """(doc_id, n_words, avg_neg_logprob_r3) without the determinism
-    orderBy — shared by unigram_logprob and ppl_buckets."""
-    SALT = 8  # round 4: "the" is ~5% of any corpus's tokens, and AQE
-    # cannot skew-split an agg-fed join side (see span_dedup) — salt
-    # the scoring join so a hot word spreads by construction; the
-    # floored-vocab side (1 row per word) replicates S times, which is
-    # cheap next to a 5%-of-corpus single partition
+    orderBy — shared by unigram_logprob and ppl_buckets. The scoring
+    join is salted (``_salted``): "the" is ~5% of any corpus's tokens,
+    and the floored vocabulary (1 row per word) replicating SALT times
+    is cheap next to a 5%-of-corpus single partition."""
     d = _docs(spark, sf_dir)
-    words = d.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
-    ).withColumn("salt", F.pmod(F.col("doc_id"), SALT))
+    words = _salted(d.select(
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")),
+        "doc_id")
     vocab = words.groupBy("word").agg(F.count("*").alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))
-    floored = vocab.where(F.col("cnt") >= int(min_count)).withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(SALT - 1))
-                          .cast("array<bigint>")))
+    floored = _replicated(vocab.where(F.col("cnt") >= int(min_count)))
     return (
         words.join(floored, ["word", "salt"], "left")
         .join(F.broadcast(total))
@@ -2461,7 +2420,8 @@ def _q_bigram_logprob(spark: SparkSession, sf_dir: str,
     self-join would shuffle the corpus twice); the bigram and context
     tables are map-side-combining aggregations; both scoring joins are
     hint-free (AQE sizes them — crawl-scale n-gram tables exceed any
-    broadcast budget)."""
+    broadcast budget) and salted (``_salted``) against a hot context
+    word, as in unigram_logprob."""
     d = _docs(spark, sf_dir)
     arr = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     pairs_col = F.zip_with(
@@ -2470,21 +2430,15 @@ def _q_bigram_logprob(spark: SparkSession, sf_dir: str,
                "size(filter(split(text, ' '), w -> w != '')) - 1)"),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
-    SALT = 8  # hot-context salt, same round-4 rule as unigram_logprob
-    pairs = (
+    pairs = _salted(
         d.where(F.size(arr) >= 2)
         .select("doc_id", F.explode(pairs_col).alias("p"))
         .select("doc_id", F.col("p.w1").alias("w1"),
-                F.col("p.w2").alias("w2"))
-        .withColumn("salt", F.pmod(F.col("doc_id"), SALT))
-    )
-    _salts = F.explode(
-        F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>"))
-    ctx = (pairs.groupBy("w1").agg(F.count("*").alias("c1"))
-           .withColumn("salt", _salts))
-    big = (pairs.groupBy("w1", "w2").agg(F.count("*").alias("c2"))
-           .where(F.col("c2") >= int(min_count))
-           .withColumn("salt", _salts))
+                F.col("p.w2").alias("w2")), "doc_id")
+    ctx = _replicated(pairs.groupBy("w1").agg(F.count("*").alias("c1")))
+    big = _replicated(
+        pairs.groupBy("w1", "w2").agg(F.count("*").alias("c2"))
+        .where(F.col("c2") >= int(min_count)))
     scored = (
         pairs.join(big, ["w1", "w2", "salt"], "left")
         .join(ctx, ["w1", "salt"])
@@ -2600,18 +2554,11 @@ def _q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # group size via aggregation + join, NOT a per-canonical window: a
     # boilerplate canonical shared by 10^9 raw urls would pin one
     # un-splittable window partition, while the aggregation collapses
-    # map-side (partial combine). The join back is SALTED like
-    # span_dedup's keeper join (round 4): AQE's skew-join pattern
-    # does not match an agg-fed join side, so the hot canonical's
-    # fact partition must be spread explicitly — counts (1 row per
-    # canonical) replicate S=8 times, fact rows salt on doc_id.
-    SALT = 8
-    base = base.withColumn("salt", F.pmod(F.col("doc_id"), SALT))
-    counts = (
-        base.groupBy("canonical_url").agg(F.count("*").alias("n_sharing"))
-        .withColumn("salt", F.explode(
-            F.sequence(F.lit(0), F.lit(SALT - 1)).cast("array<bigint>")))
-    )
+    # map-side (partial combine). The join back is salted on doc_id
+    # (_salted), so the hot canonical's fact partition spreads too.
+    base = _salted(base, "doc_id")
+    counts = _replicated(
+        base.groupBy("canonical_url").agg(F.count("*").alias("n_sharing")))
     return (
         base.join(counts, ["canonical_url", "salt"])
         .select(
@@ -3834,14 +3781,100 @@ def _q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+# =========================================================================
+# vector kit: the embedding projection and the distance folds of the
+# vector / ANN queries. Every in-row fold is sequential (left to right
+# from 0.0), so it is bit-identical across partitionings and to the
+# DuckDB list-lambda replays.
+# =========================================================================
+
+PQ_M, PQ_SUB, PQ_K = 4, 16, 8  # 4 subspaces x 16 dims, 8 codes each
+
+
+def _vectors(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The embedding table as (vec_id, *cols, v: array<double>)."""
+    return _emb(spark, sf_dir).select(
+        "vec_id", *cols,
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+
+
+def _query_vector(frame: DataFrame) -> list:
+    """The ANN query vector (vec_id 0, the ann_topk convention),
+    collected to the driver."""
+    return frame.where(F.col("vec_id") == 0).collect()[0]["v"]
+
+
+def _fsum(arr):
+    """Sum of an array<double> column, folded in order from 0.0."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _dot(a, b):
+    return _fsum(F.zip_with(a, b, lambda x, y: x * y))
+
+
+def _norm(a):
+    return F.sqrt(_fsum(F.transform(a, lambda x: x * x)))
+
+
+def _sqdists(arr, points):
+    """Array of the squared distances from array column ``arr`` to each
+    driver-side point, the points broadcast as plan literals."""
+    return F.array(*[
+        _fsum(F.zip_with(arr, F.array(*[F.lit(float(x)) for x in c]),
+                         lambda a, b: (a - b) * (a - b)))
+        for c in points])
+
+
+def _argmin(d):
+    """1-based position of the smallest entry of array column ``d``
+    (element_at's index; the first wins ties). A cluster id is
+    ``_argmin(d) - 1``."""
+    return F.array_position(d, F.array_min(d))
+
+
+def _seq_sqdist(a, b) -> float:
+    """Driver-side squared distance, summed in the order ``_sqdists``
+    folds it."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += (x - y) * (x - y)
+    return acc
+
+
+def _probes(qv, cent, nprobe: int) -> list[int]:
+    """The ``nprobe`` cells whose centroids lie nearest the query.
+    Distances round to 1e-6 before ranking and ties go to the lower
+    cell, so a last-ulp difference cannot flip the probe set."""
+    qd = [round(_seq_sqdist(qv, c), 6) for c in cent]
+    return sorted(range(len(cent)), key=lambda c: (qd[c], c))[:nprobe]
+
+
+def _sub(arr, s: int):
+    """Subspace ``s`` (PQ_SUB dims) of array column ``arr``."""
+    return F.slice(arr, s * PQ_SUB + 1, PQ_SUB)
+
+
+def _adc(v, books, q):
+    """PQ asymmetric distance from array column ``v`` to the driver-side
+    query ``q``: per subspace, ``q``'s distances to the codewords form
+    a literal table, looked up at ``v``'s sub-code."""
+    adc = F.lit(0.0)
+    for s in range(PQ_M):
+        qs = q[s * PQ_SUB:(s + 1) * PQ_SUB]
+        table = F.array(*[F.lit(float(_seq_sqdist(qs, c)))
+                          for c in books[s]])
+        code = _argmin(_sqdists(_sub(v, s), books[s]))
+        adc = adc + F.element_at(table, code.cast("int"))
+    return adc
+
+
 def _q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector norms over the embeddings table, rounded for fp-stable
     oracle comparison."""
     e = _emb(spark, sf_dir)
-    norm = F.sqrt(F.aggregate(
-        F.transform(F.col("embedding"), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    ))
+    norm = F.sqrt(_fsum(F.transform(
+        F.col("embedding"), lambda x: x.cast("double") * x.cast("double"))))
     return e.select(
         "vec_id", "label", F.round(norm, 3).alias("norm_r3")
     ).orderBy("vec_id")
@@ -3850,14 +3883,9 @@ def _q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k against a fixed query vector (vec_id 0):
     the exact-baseline of the similarity-search family."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    e = _vectors(spark, sf_dir)
     q = e.where(F.col("vec_id") == 0).select(F.col("v").alias("q"))
-    dot = F.aggregate(F.zip_with("v", "q", lambda a, b: a * b), F.lit(0.0),
-                      lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    cos = dot / (norm(F.col("v")) * norm(F.col("q")))
+    cos = _dot("v", "q") / (_norm(F.col("v")) * _norm(F.col("q")))
     return (
         e.crossJoin(q)
         .where(F.col("vec_id") != 0)
@@ -3954,16 +3982,9 @@ def _lloyd_train(e: DataFrame, k: int = 8, iters: int = 2,
     cent = [r["v"] for r in
             t.where(F.col("vec_id") < k).orderBy("vec_id").collect()]
 
-    def dist_to(c_arr):
-        lit = F.array(*[F.lit(float(x)) for x in c_arr])
-        return F.aggregate(
-            F.zip_with("v", lit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
     def assign(cents):
-        d = F.array(*[dist_to(c) for c in cents])
-        best = F.array_min(d)
-        return d, F.array_position(d, best) - 1  # first (smallest id) wins ties
+        d = _sqdists("v", cents)
+        return d, _argmin(d) - 1  # first (smallest id) wins ties
 
     for _ in range(iters - 1):
         _, cluster = assign(cent)
@@ -4006,9 +4027,7 @@ def _q_kmeans_semdedup(spark: SparkSession, sf_dir: str,
     assignment depend on partitioning; rounding restores run-to-run
     AND engine-to-engine determinism. Oracle: DuckDB replays the same
     iterations with 1-based list lambdas."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id", "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    e = _vectors(spark, sf_dir, "label")
     cent, assign = _lloyd_train(e, k, iters)
     d, cluster = assign(cent)
     return (
@@ -4017,9 +4036,6 @@ def _q_kmeans_semdedup(spark: SparkSession, sf_dir: str,
             F.round(F.array_min(d), 3).alias("dist_r3"))
         .orderBy("vec_id")
     )
-
-
-PQ_M, PQ_SUB, PQ_K = 4, 16, 8  # 4 subspaces x 16 dims, 8 codes each
 
 
 def _pq_train(spark: SparkSession, sf_dir: str,
@@ -4045,25 +4061,16 @@ def _pq_train(spark: SparkSession, sf_dir: str,
     the plain parquet-backed scan, so every RETURNED query plan is
     unchanged (training is eager scratch work; the checkpoint never
     appears in a returned plan)."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    e = _vectors(spark, sf_dir)
     t = scratch if scratch is not None else e.localCheckpoint(eager=False)
     seeds = t.where(F.col("vec_id") < PQ_K).orderBy("vec_id").collect()
     books = [[list(r["v"][s * PQ_SUB:(s + 1) * PQ_SUB]) for r in seeds]
              for s in range(PQ_M)]
 
-    def dist_to(sub_col, c_arr):
-        lit = F.array(*[F.lit(float(x)) for x in c_arr])
-        return F.aggregate(
-            F.zip_with(sub_col, lit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
     parts = None
     for s in range(PQ_M):
-        sub = F.slice("v", s * PQ_SUB + 1, PQ_SUB)
-        d = F.array(*[dist_to(sub, c) for c in books[s]])
-        cl = (F.array_position(d, F.array_min(d)) - 1).alias("cluster")
+        sub = _sub("v", s)
+        cl = (_argmin(_sqdists(sub, books[s])) - 1).alias("cluster")
         # one branch per subspace, cluster expr and explode in the SAME
         # projection (the per-input-row evaluation shape — an outer
         # select referencing the cluster column gets inlined through
@@ -4085,21 +4092,6 @@ def _pq_train(spark: SparkSession, sf_dir: str,
     return e, new_books
 
 
-def _pq_sub_dists(s: int, book):
-    """Distance array (len PQ_K) from slice s of column v to each
-    codeword — a map-only sequential fold against broadcast literals
-    (the _lloyd_train determinism rules)."""
-    sub = F.slice("v", s * PQ_SUB + 1, PQ_SUB)
-
-    def dist_to(c_arr):
-        lit = F.array(*[F.lit(float(x)) for x in c_arr])
-        return F.aggregate(
-            F.zip_with(sub, lit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    return F.array(*[dist_to(c) for c in book])
-
-
 def _q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (r5) — the memory side of IVF-PQ, the
     index family trillion-vector ANN actually runs (Jégou et al.
@@ -4110,8 +4102,9 @@ def _q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~256 TB while PQ codes are a few TB that fit an executor fleet's
     memory — the difference between an index and a full-scan.
 
-    Scale shape: training is M runs of the shared Lloyd trainer
-    (aggregation-shaped, k*dim cells shuffle, never vectors);
+    Scale shape: training (_pq_train) is one fused Lloyd update job
+    over all M subspaces (aggregation-shaped, M*K*dim cells shuffle,
+    never vectors);
     encoding is map-only against broadcast codebook literals —
     zero joins, zero vector shuffles. Determinism: the _lloyd_train
     rules (seed = vec_id 0..K-1 subvectors, rounded centroid updates,
@@ -4123,10 +4116,8 @@ def _q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     code_cols = []
     err_total = F.lit(0.0)
     for s in range(PQ_M):
-        d = _pq_sub_dists(s, books[s])
-        code_cols.append(
-            (F.array_position(d, F.array_min(d)) - 1).cast("int")
-            .alias(f"code{s}"))
+        d = _sqdists(_sub("v", s), books[s])
+        code_cols.append((_argmin(d) - 1).cast("int").alias(f"code{s}"))
         err_total = err_total + F.array_min(d)
     return (
         e.select("vec_id", *code_cols,
@@ -4158,25 +4149,9 @@ def _q_ann_pq_adc(spark: SparkSession, sf_dir: str,
     # one checkpointed materialization serves PQ training AND the
     # query-vector collect (r6); the returned scan frame stays
     # parquet-backed
-    scratch = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    ).localCheckpoint(eager=False)
+    scratch = _vectors(spark, sf_dir).localCheckpoint(eager=False)
     e, books = _pq_train(spark, sf_dir, scratch=scratch)
-    q = scratch.where(F.col("vec_id") == 0).collect()[0]["v"]
-    adc = F.lit(0.0)
-    for s in range(PQ_M):
-        qs = q[s * PQ_SUB:(s + 1) * PQ_SUB]
-        table = []
-        for c in books[s]:
-            t = 0.0
-            for a, b in zip(qs, c):
-                t += (a - b) * (a - b)
-            table.append(t)
-        tlit = F.array(*[F.lit(float(x)) for x in table])
-        d = _pq_sub_dists(s, books[s])
-        code = F.array_position(d, F.array_min(d))  # 1-based
-        adc = adc + F.element_at(tlit, code.cast("int"))
+    adc = _adc("v", books, _query_vector(scratch))
     return (
         e.where(F.col("vec_id") != 0)
         .select("vec_id", F.round(adc, 3).alias("adc_r3"))
@@ -4206,39 +4181,17 @@ def _q_ann_ivfpq(spark: SparkSession, sf_dir: str, k: int = 8,
     TakeOrderedAndProject; determinism by the ann_ivf probe rules
     (query-centroid distances rounded 1e-6, ties to the lower cell)
     and the tfidf round-before-rank rule."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    e = _vectors(spark, sf_dir)
     # shared scratch: coarse training, PQ training and the query-vector
     # collect all read one checkpointed materialization (r6)
     scratch = e.localCheckpoint(eager=False)
     cent, assign = _lloyd_train(e, k, iters, scratch=scratch)
-    qv = scratch.where(F.col("vec_id") == 0).collect()[0]["v"]
-
-    def seq_sqdist(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += (x - y) * (x - y)
-        return acc
-
-    qd = [round(seq_sqdist(qv, c), 6) for c in cent]
-    probes = sorted(range(k), key=lambda c: (qd[c], c))[:nprobe]
+    qv = _query_vector(scratch)
+    probes = _probes(qv, cent, nprobe)
     _, cluster = assign(cent)
 
     _, books = _pq_train(spark, sf_dir, scratch=scratch)
-    adc = F.lit(0.0)
-    for s in range(PQ_M):
-        qs = qv[s * PQ_SUB:(s + 1) * PQ_SUB]
-        table = []
-        for c in books[s]:
-            t = 0.0
-            for a, b in zip(qs, c):
-                t += (a - b) * (a - b)
-            table.append(t)
-        tlit = F.array(*[F.lit(float(x)) for x in table])
-        d = _pq_sub_dists(s, books[s])
-        code = F.array_position(d, F.array_min(d))
-        adc = adc + F.element_at(tlit, code.cast("int"))
+    adc = _adc("v", books, qv)
     return (
         e.where(F.col("vec_id") != 0)
         .where(cluster.cast("long").isin([int(p) for p in probes]))
@@ -4267,22 +4220,12 @@ def _q_ann_ivfpq_res(spark: SparkSession, sf_dir: str, k: int = 8,
     the ann_ivf / tfidf rules. Oracle: DuckDB composes the coarse
     replay, a residual-space per-subspace Lloyd replay, per-cell query
     tables and the probed-cell ranking."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    e = _vectors(spark, sf_dir)
     # shared scratch for coarse training + query-vector collect (r6)
     scratch = e.localCheckpoint(eager=False)
     cent, assign = _lloyd_train(e, k, iters, scratch=scratch)
-    qv = scratch.where(F.col("vec_id") == 0).collect()[0]["v"]
-
-    def seq_sqdist(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += (x - y) * (x - y)
-        return acc
-
-    qd = [round(seq_sqdist(qv, c), 6) for c in cent]
-    probes = sorted(range(k), key=lambda c: (qd[c], c))[:nprobe]
+    qv = _query_vector(scratch)
+    probes = _probes(qv, cent, nprobe)
     _, cluster = assign(cent)
     cl_long = cluster.cast("long")
 
@@ -4298,41 +4241,12 @@ def _q_ann_ivfpq_res(spark: SparkSession, sf_dir: str, k: int = 8,
     # cheap slice over the cached rows
     e_res = e.select("vec_id", resid.alias("v")).localCheckpoint(
         eager=False)
-    books = []
-    for s in range(PQ_M):
-        sub = e_res.select(
-            "vec_id", F.slice("v", s * PQ_SUB + 1, PQ_SUB).alias("v"))
-        books.append(_lloyd_train(sub, PQ_K, 2)[0])
-
-    def res_sub_dists(s):
-        sub = F.slice(resid, s * PQ_SUB + 1, PQ_SUB)
-
-        def dist_to(c_arr):
-            lit = F.array(*[F.lit(float(x)) for x in c_arr])
-            return F.aggregate(
-                F.zip_with(sub, lit, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x)
-
-        return F.array(*[dist_to(c) for c in books[s]])
-
+    books = [_lloyd_train(e_res.select("vec_id", _sub("v", s).alias("v")),
+                          PQ_K, 2)[0] for s in range(PQ_M)]
     # per-cell query tables: (q - c_cell) residual vs each codeword
-    adc_per_cell = {}
-    for p in probes:
-        qr = [qv[i] - cent[p][i] for i in range(len(qv))]
-        adc = F.lit(0.0)
-        for s in range(PQ_M):
-            qs = qr[s * PQ_SUB:(s + 1) * PQ_SUB]
-            table = []
-            for c in books[s]:
-                t = 0.0
-                for a, b in zip(qs, c):
-                    t += (a - b) * (a - b)
-                table.append(t)
-            tlit = F.array(*[F.lit(float(x)) for x in table])
-            d = res_sub_dists(s)
-            code = F.array_position(d, F.array_min(d))
-            adc = adc + F.element_at(tlit, code.cast("int"))
-        adc_per_cell[p] = adc
+    adc_per_cell = {
+        p: _adc(resid, books, [a - b for a, b in zip(qv, cent[p])])
+        for p in probes}
     routed = F.when(cl_long == int(probes[0]), adc_per_cell[probes[0]])
     for p in probes[1:]:
         routed = routed.when(cl_long == int(p), adc_per_cell[p])
@@ -4352,19 +4266,14 @@ def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from index parity — shuffle-free bucketing, then per-bucket search).
     The alternating-sign projections replay exactly in DuckDB list
     lambdas (verified per-vector), so this has a full value oracle."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    e = _vectors(spark, sf_dir)
+
     # deterministic "hyperplanes": alternating-sign projections by index stride
     def proj(stride):
-        return F.aggregate(
-            F.zip_with(
-                "v",
-                F.transform(F.sequence(F.lit(0), F.size("v") - 1),
-                            lambda i: F.when((i / stride).cast("int") % 2 == 0, 1.0).otherwise(-1.0)),
-                lambda a, s: a * s,
-            ),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
+        return _dot("v", F.transform(
+            F.sequence(F.lit(0), F.size("v") - 1),
+            lambda i: F.when((i / stride).cast("int") % 2 == 0, 1.0)
+            .otherwise(-1.0)))
     bucket = (
         (proj(1) > 0).cast("int") * 8 + (proj(2) > 0).cast("int") * 4
         + (proj(4) > 0).cast("int") * 2 + (proj(8) > 0).cast("int")
@@ -5426,17 +5335,12 @@ def _q_embedding_neardup(spark: SparkSession, sf_dir: str,
     within-cell pair scoring is quadratic in cell size, so the query
     runs on a deterministic vec_id sample (production: cap cell sizes or
     sub-bucket with a second LSH level)."""
-    e = _emb(spark, sf_dir).where(F.col("vec_id") < sample_n).select(
-        "vec_id", "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    e = _vectors(spark, sf_dir, "label").where(F.col("vec_id") < sample_n)
     a = e.select(F.col("vec_id").alias("a_id"), F.col("label"), F.col("v").alias("av"))
     b = e.select(F.col("vec_id").alias("b_id"), F.col("label"), F.col("v").alias("bv"))
     pairs = a.join(b, "label").where(F.col("a_id") < F.col("b_id"))
-    dot = F.aggregate(F.zip_with("av", "bv", lambda x, y: x * y), F.lit(0.0),
-                      lambda acc, x: acc + x)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    cos = F.round(dot / (nrm(F.col("av")) * nrm(F.col("bv"))), 3)
+    cos = F.round(
+        _dot("av", "bv") / (_norm(F.col("av")) * _norm(F.col("bv"))), 3)
     return (
         pairs.select("label", "a_id", "b_id", cos.alias("cos_r3"))
         .where(F.col("cos_r3") >= 0.35)
@@ -5464,31 +5368,17 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str, k: int = 8,
     folds replayed identically in DuckDB, rounded 1e-6 before ranking
     (tie -> lower cell id) so a last-ulp difference cannot flip the
     probe set; final cosines rounded 1e-3 with vec_id tie-break."""
-    e = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    e = _vectors(spark, sf_dir)
     # shared scratch for training + query-vector collect (r6)
     scratch = e.localCheckpoint(eager=False)
     cent, assign = _lloyd_train(e, k, iters, scratch=scratch)
-    qv = scratch.where(F.col("vec_id") == 0).collect()[0]["v"]
-
-    def seq_sqdist(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):  # sequential — replays in DuckDB list_sum
-            acc += (x - y) * (x - y)
-        return acc
-
-    qd = [round(seq_sqdist(qv, c), 6) for c in cent]
-    probes = sorted(range(k), key=lambda c: (qd[c], c))[:nprobe]
+    qv = _query_vector(scratch)
+    probes = _probes(qv, cent, nprobe)
 
     _, cluster = assign(cent)
     qlit = F.array(*[F.lit(float(x)) for x in qv])
-    dot = F.aggregate(F.zip_with("v", qlit, lambda a, b: a * b), F.lit(0.0),
-                      lambda acc, x: acc + x)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    qnorm = math.sqrt(seq_sqdist(qv, [0.0] * len(qv)))
-    cos = F.round(dot / (nrm(F.col("v")) * F.lit(qnorm)), 3)
+    qnorm = math.sqrt(_seq_sqdist(qv, [0.0] * len(qv)))
+    cos = F.round(_dot("v", qlit) / (_norm(F.col("v")) * F.lit(qnorm)), 3)
     return (
         e.where(F.col("vec_id") != 0)
         .where(cluster.cast("long").isin([int(p) for p in probes]))
