@@ -47,12 +47,3 @@ def test_value_mismatch_reported_before_order():
     assert not ok
     assert "value mismatch" in report[-1]
 
-
-def test_exempt_query_skips_only_the_order(monkeypatch):
-    monkeypatch.setitem(check_oracles.ORDER_EXEMPT, "q", "ties")
-    ok, _ = _compare("q", ["doc_id", "s", "x"],
-                     [(3, "c", 2.0), (2, "b", 1.25), (1, "a", 0.5)])
-    assert ok
-    ok, _ = _compare("q", ["doc_id", "s", "x"],
-                     [(3, "c", 2.0), (2, "b", 9.0), (1, "a", 0.5)])
-    assert not ok

@@ -31,14 +31,9 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-# queries whose row order may differ from the oracle's although the
-# values match, each with the reason; every other query's order is checked
-ORDER_EXEMPT: dict[str, str] = {}
-
-
-def normalize(rows, cols, ordered=False):
-    """One string per row, columns in name order, floats rounded to 6
-    places; sorted unless ``ordered``."""
+def normalize(rows, cols):
+    """One string per row, in row order, columns in name order, floats
+    rounded to 6 places."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = []
     for r in rows:
@@ -49,7 +44,7 @@ def normalize(rows, cols, ordered=False):
                 v = round(v, 6)
             vals.append(str(v))
         out.append("|".join(vals))
-    return out if ordered else sorted(out)
+    return out
 
 
 def duckdb_views(sf_dir: str):
@@ -81,8 +76,7 @@ def compare(con, name: str, df, sql: str) -> tuple[bool, list[str]]:
 
     Returns (ok, report lines). The check is: same column names, no
     integer-vs-decimal Arrow type drift, same row count, equal sorted
-    normalized values, and the same normalized rows in sequence (unless
-    the query is in ``ORDER_EXEMPT``)."""
+    normalized values, and the same normalized rows in sequence."""
     cols = df.columns
     rows = [tuple(r) for r in df.collect()]
     try:
@@ -116,16 +110,17 @@ def compare(con, name: str, df, sql: str) -> tuple[bool, list[str]]:
                           f"duckdb={dt} spark={st}")
     except Exception as e:  # pragma: no cover - audit best-effort
         report.append(f"[warn] {name}: type audit skipped: {e}")
-    a = normalize(rows, cols, ordered=True)
-    b = normalize(orows, ocols, ordered=True)
+    a = normalize(rows, cols)
+    b = normalize(orows, ocols)
     if len(a) != len(b):
         return False, report + [
             f"[FAIL] {name}: row count {len(a)} vs {len(b)}"]
-    if sorted(a) != sorted(b):
-        diff = [(x, y) for x, y in zip(sorted(a), sorted(b)) if x != y][:3]
+    sa, sb = sorted(a), sorted(b)
+    if sa != sb:
+        diff = [(x, y) for x, y in zip(sa, sb) if x != y][:3]
         return False, report + [
             f"[FAIL] {name}: value mismatch, first diffs: {diff}"]
-    if a != b and name not in ORDER_EXEMPT:
+    if a != b:
         i = next(i for i, (x, y) in enumerate(zip(a, b)) if x != y)
         return False, report + [
             f"[FAIL] {name}: same rows in another order, first at row "
