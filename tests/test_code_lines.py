@@ -26,3 +26,13 @@ def test_counts_code_lines_only(tmp_path):
                    '    """Doc."""\n    return (X +\n            1)\n')
     assert _run(str(src)).stdout.strip() == "4"
     assert _run(str(src), "f").stdout.strip() == "3"
+
+
+def test_counts_names_bound_by_tuple_targets(tmp_path):
+    src = tmp_path / "m.py"
+    src.write_text("A, (B, C) = 1, (2,\n           3)\nD = E = 4\n"
+                   "F = 5\n")
+    assert _run(str(src), "B").stdout.strip() == "2"
+    assert _run(str(src), "A", "C").stdout.strip() == "2"
+    assert _run(str(src), "E").stdout.strip() == "1"
+    assert _run(str(src), "A", "F").stdout.strip() == "3"

@@ -329,21 +329,45 @@ def test_lineage_rows_written_without_python_scan(spark, tmp_path):
     assert completed_buckets(spark, out) == [0, 3, 5, 6]
 
 
-def test_maybe_salted_map_only_default(spark, corpus_path):
-    """The 100 TB shape: by default no exchange touches the raw blobs —
-    extraction runs on scan splits. Salt / big-doc isolation /
-    --repartition-blobs opt back into the exchange."""
-    from zpdfspark.spark.pipeline import maybe_salted
+def _written_frames(monkeypatch, write=True):
+    """The frames the pipeline hands to ``DataFrameWriter.parquet``,
+    recorded as they are written; with ``write=False`` nothing is
+    written."""
+    from pyspark.sql.readwriter import DataFrameWriter
 
-    df = spark.read.parquet(corpus_path).select("url", "html")
-    plain = maybe_salted(df, 8)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plain
-    forced = maybe_salted(df, 8, repartition_blobs=True) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in forced
-    salted_plan = maybe_salted(df, 8, salt=7) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" in salted_plan
+    frames = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        frames.append(self._df)
+        if write:
+            return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return frames
+
+
+def test_blob_exchange_only_when_asked(spark, corpus_path, tmp_path,
+                                       monkeypatch):
+    """The 100 TB shape: by default no exchange touches the raw blobs —
+    the pass runs the kernel on scan splits. Big-doc isolation and
+    --repartition-blobs each opt back into the exchange below the
+    kernel."""
+    from zpdfspark.spark.pipeline import run_extraction_job
+
+    frames = _written_frames(monkeypatch, write=False)
+
+    def below_kernel(name, **kw):
+        run_extraction_job(spark, corpus_path, str(tmp_path / name),
+                           n_buckets=2, partitions=8, single_pass=True, **kw)
+        plan = frames[-1]._jdf.queryExecution().executedPlan().toString()
+        # the kernel is the lowest MapInArrow (the lineage rollup sits
+        # above the writer exchange): what follows it is its input
+        return plan[plan.rindex("MapInArrow"):]
+
+    assert "Exchange" not in below_kernel("plain")
+    assert "Exchange" in below_kernel("forced", repartition_blobs=True)
+    assert "Exchange" in below_kernel("big", big_doc_bytes=1_000)
 
 
 def test_salted_partitioning_spreads_rows(spark, corpus_path):
@@ -402,13 +426,39 @@ def test_pipeline_single_pass(spark, corpus_path, tmp_path, assert_zstd):
     assert s2["buckets_skipped"] == 4 and s2["buckets_run"] == 0
 
 
+def test_single_pass_rerun_skips_empty_buckets(spark, tmp_path):
+    """A single-pass run records every bucket, one that got no document
+    included (a row of zeros, no bucket=K directory), so a rerun into the
+    finished output skips all of them and starts no extraction job: only
+    the jobs that read the input's schema and the lineage."""
+    from zpdfspark.fixtures import write_corpus_parquet
+    from zpdfspark.spark.pipeline import completed_buckets, run_extraction_job
+
+    src = str(tmp_path / "three.parquet")
+    write_corpus_parquet(src, 3, seed=42)
+    out = str(tmp_path / "out")
+    s1 = run_extraction_job(spark, src, out, n_buckets=8, partitions=4,
+                            single_pass=True)
+    assert s1["buckets_run"] == 8 and s1["docs"] == 3
+    lineage = os.path.join(out, "_lineage")
+    written = [n for n in os.listdir(os.path.join(out, "data"))
+               if n.startswith("bucket=")]
+    assert 0 < len(written) < 8
+    assert completed_buckets(spark, lineage) == list(range(8))
+
+    summary = {}
+    jobs = _jobs_started(spark, lambda: summary.update(run_extraction_job(
+        spark, src, out, n_buckets=8, partitions=4, single_pass=True)))
+    assert summary["buckets_skipped"] == 8 and summary["buckets_run"] == 0
+    assert jobs == _jobs_started(spark, lambda: spark.read.parquet(src)) \
+        + _jobs_started(spark, lambda: completed_buckets(spark, lineage))
+
+
 def test_single_pass_partial_resume_keeps_session_conf(spark, corpus_path,
                                                         tmp_path, monkeypatch):
     """A single-pass rerun after one bucket's lineage was lost overwrites
     only that bucket=K partition (dynamic overwrite, set per write) and
     leaves the session's partitionOverwriteMode as it found it."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
     from zpdfspark.spark.pipeline import run_extraction_job
 
     key = "spark.sql.sources.partitionOverwriteMode"
@@ -420,14 +470,7 @@ def test_single_pass_partial_resume_keeps_session_conf(spark, corpus_path,
     assert spark.conf.get(key) == before
 
     _drop_lineage_bucket(spark, out, 2)
-    written = []
-    parquet = DataFrameWriter.parquet
-
-    def spy(self, path, *args, **kwargs):
-        written.append(self._df)
-        return parquet(self, path, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    written = _written_frames(monkeypatch)
     s2 = run_extraction_job(spark, corpus_path, out, n_buckets=4,
                             partitions=4, single_pass=True)
     assert s2["buckets_skipped"] == 3 and s2["buckets_run"] == 1
@@ -469,7 +512,7 @@ def test_arrow_batches_capped_by_bytes(spark):
 def test_lineage_rollup_matches_groupby(spark):
     """The Arrow per-bucket rollup equals a groupBy reference, with
     null metric values, a boolean is_encrypted and a bucket that has no
-    rows (dropped, or all zeros with keep_empty)."""
+    rows (a row of zeros)."""
     from zpdfspark.spark.pipeline import (_LINEAGE_SUMS, _lineage_rollup,
                                           _lineage_rows)
 
@@ -500,12 +543,10 @@ def test_lineage_rollup_matches_groupby(spark):
         row.update(wall_secs=1.5, status="ok", finished_at="t")
         want.append(row)
     assert [r["bucket"] for r in want] == [0, 2, 3]
+    want.insert(1, {"bucket": 1, "n_docs": 0,
+                    **{f: 0 for f, _ in _LINEAGE_SUMS},
+                    "wall_secs": 1.5, "status": "ok", "finished_at": "t"})
     assert got == want
-
-    empty = _lineage_rows(sums.value, [1], 0.5, "t", keep_empty=True)
-    assert empty == [{"bucket": 1, "n_docs": 0,
-                      **{f: 0 for f, _ in _LINEAGE_SUMS},
-                      "wall_secs": 0.5, "status": "ok", "finished_at": "t"}]
 
 
 def _gateway_commands(spark, monkeypatch, fn):
@@ -751,32 +792,24 @@ def _parquet_files(data):
 
 
 def test_single_pass_writer_sized_by_bytes(spark, tmp_path, monkeypatch):
-    """The single-pass writer exchange is a bucket-keyed REBALANCE that
-    AQE sizes by bytes: one parquet file per non-empty bucket at the
-    default advisory partition size, more files but the same rows once
-    the advisory size is smaller than a bucket, and the lineage rollup's
-    MapInArrow above the exchange, in the result stage, with no
-    CollectMetrics anywhere."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
+    """The writer exchange of a single-pass and of a per-bucket pass is a
+    bucket-keyed REBALANCE that AQE sizes by bytes: one parquet file per
+    non-empty bucket at the default advisory partition size, more files
+    but the same rows once the advisory size is smaller than a bucket,
+    and the lineage rollup's MapInArrow above the exchange, in the result
+    stage, with no CollectMetrics anywhere."""
     from zpdfspark.fixtures import write_warc_fixture
     from zpdfspark.spark.pipeline import run_extraction_job
 
     glob, _ = write_warc_fixture(str(tmp_path / "warc"), 60, seed=41,
                                  shards=4)
-    written = []
-    parquet = DataFrameWriter.parquet
+    written = _written_frames(monkeypatch)
 
-    def spy(self, path, *args, **kwargs):
-        written.append(self._df)
-        return parquet(self, path, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
-
-    def run(name):
+    def run(name, single_pass):
         out = str(tmp_path / name)
         s = run_extraction_job(spark, glob, out, input_format="warc",
-                               n_buckets=4, partitions=4, single_pass=True)
+                               n_buckets=4, partitions=4,
+                               single_pass=single_pass)
         assert s["docs"] == 60
         data = os.path.join(out, "data")
         buckets = [n for n in os.listdir(data) if n.startswith("bucket=")]
@@ -784,24 +817,31 @@ def test_single_pass_writer_sized_by_bytes(spark, tmp_path, monkeypatch):
                       .select("url", "extracted_text").collect())
         return len(_parquet_files(data)), len(buckets), rows
 
-    files, buckets, rows = run("default")
-    assert buckets == 4 and files == buckets
-    plan = written[-1]._jdf.queryExecution().executedPlan().toString()
-    assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan
-    assert -1 < plan.index("MapInArrow") < plan.index("Exchange"), plan
-    assert "CollectMetrics" not in plan, plan
-    # a fresh run has no complete bucket: no pending-bucket filter
-    assert not re.search(r" IN \(|INSET", plan), plan
-
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     prev = spark.conf.get(key)
-    spark.conf.set(key, "1k")
-    try:
-        small_files, small_buckets, small_rows = run("small")
-    finally:
-        spark.conf.set(key, prev)
-    assert small_buckets == buckets and small_files > buckets
-    assert small_rows == rows
+    for single_pass in (True, False):
+        del written[:]
+        files, buckets, rows = run(f"default{single_pass}", single_pass)
+        assert buckets == 4 and files == buckets
+        assert len(written) == (1 if single_pass else 4)
+        for frame in written:
+            plan = frame._jdf.queryExecution().executedPlan().toString()
+            assert "REBALANCE_PARTITIONS_BY_COL" in plan, plan
+            assert -1 < plan.index("MapInArrow") < plan.index("Exchange"), \
+                plan
+            assert "CollectMetrics" not in plan, plan
+        if single_pass:
+            # a fresh run has no complete bucket: no pending-bucket filter
+            assert not re.search(r" IN \(|INSET", plan), plan
+
+        spark.conf.set(key, "1k")
+        try:
+            small_files, small_buckets, small_rows = run(
+                f"small{single_pass}", single_pass)
+        finally:
+            spark.conf.set(key, prev)
+        assert small_buckets == buckets and small_files > buckets
+        assert small_rows == rows
 
 
 def test_warc_single_pass_job_count(spark, tmp_path, assert_zstd):
@@ -1060,7 +1100,7 @@ def test_format_job_json_and_pages(spark, tmp_path, corpus_path,
 
 
 def test_bucketed_input_prunes_per_bucket_scans(spark, corpus_path, tmp_path,
-                                                assert_zstd):
+                                                assert_zstd, monkeypatch):
     """With the input laid out as bucket=K partition dirs (the
     write_bucketed_input preparation job / Iceberg bucket transform),
     each per-bucket resume scan partition-prunes to its own directory —
@@ -1069,23 +1109,25 @@ def test_bucketed_input_prunes_per_bucket_scans(spark, corpus_path, tmp_path,
 
     bsrc = str(tmp_path / "bucketed_src")
     write_bucketed_input(spark, corpus_path, bsrc, n_buckets=4)
-    df = spark.read.parquet(bsrc)
-    assert "bucket" in df.columns
+    assert "bucket" in spark.read.parquet(bsrc).columns
     assert_zstd(bsrc)
 
-    # the physical proof: the bucket filter becomes a PARTITION filter at
-    # the scan (directory pruning), not a post-scan data filter
-    plan = df.where(F.col("bucket") == 2)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"))
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf and "bucket" in pf[0] and "= 2" in pf[0], plan
-
+    written = _written_frames(monkeypatch)
     out = str(tmp_path / "out_bucketed")
     s = run_extraction_job(spark, bsrc, out, n_buckets=4, partitions=4)
     assert s["buckets_run"] == 4 and s["docs"] == 150
     result = spark.read.parquet(os.path.join(out, "data"))
     assert result.select("url").distinct().count() == 150
+
+    # the physical proof: each pass's bucket filter is a PARTITION filter
+    # at the scan (directory pruning), not a post-scan data filter
+    assert len(written) == 4
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
+    for k, frame in enumerate(written):
+        plan = frame._jdf.queryExecution().explainString(mode)
+        pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
+        assert len(pf) == 1 and "bucket" in pf[0] and f"= {k}" in pf[0], plan
 
     # rerun resumes; single_pass is ignored for bucketed inputs (the
     # per-bucket path is already pruned AND bucket-granular idempotent)

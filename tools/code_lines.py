@@ -40,13 +40,15 @@ def code_lines(src: str) -> set[int]:
     return lines
 
 
-def _name(node: ast.stmt) -> str | None:
+def _names(node: ast.stmt) -> set[str]:
+    """The names a top-level statement defines or binds."""
     if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                          ast.ClassDef)):
-        return node.name
-    if isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name):
-        return node.targets[0].id
-    return None
+        return {node.name}
+    if isinstance(node, ast.Assign):
+        return {n.id for t in node.targets for n in ast.walk(t)
+                if isinstance(n, ast.Name)}
+    return set()
 
 
 def main(argv: list[str]) -> int:
@@ -62,7 +64,7 @@ def main(argv: list[str]) -> int:
         return 0
     total = 0
     for node in ast.parse(src).body:
-        if _name(node) in names:
+        if _names(node) & names:
             total += sum(node.lineno <= ln <= node.end_lineno for ln in code)
     print(total)
     return 0

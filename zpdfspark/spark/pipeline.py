@@ -9,45 +9,49 @@ Design for 10^12 documents (SURVEY.md §4):
   on warc_ts buckets; a ``--since/--until`` predicate prunes partitions
   at the scan (Catalyst built-in — nothing custom).
 - **Skew**: one 2 GB PDF in a batch starves a task. Levers: (a)
-  opt-in salted repartition on ``xxhash64(url, salt)``
-  (``--repartition-blobs`` / ``--salt``) spreads documents uniformly
-  when the input file layout is size-correlated — it is OFF by default
-  because it shuffles every raw blob, which a 100 TB job must not do
-  when scan splits are already uniform; (b) optional big-document isolation
-  (``--big-doc-bytes``): blobs above the threshold are unioned in from
-  their own partition space so a giant never co-resides with a share of
-  small docs (costs a second source pass — see ``salted``); (c) small
-  Arrow batches (session.py) bound per-batch latency; (d)
-  ``--max-doc-bytes`` skips pathological blobs with an error record.
+  opt-in salted repartition on a full-width ``xxhash64(url)``
+  (``--repartition-blobs``) spreads documents uniformly when the input
+  file layout is size-correlated — it is OFF by default because it
+  shuffles every raw blob, which a 100 TB job must not do when scan
+  splits are already uniform; (b) optional big-document isolation
+  (``--big-doc-bytes``, which implies the repartition): blobs above the
+  threshold are unioned in from their own partition space so a giant
+  never co-resides with a share of small docs (costs a second source
+  pass — see ``salted``); (c) small Arrow batches (session.py) bound
+  per-batch latency; (d) ``--max-doc-bytes`` skips pathological blobs
+  with an error record.
 - **Lineage + resume**: work is divided into ``n_buckets`` deterministic
   url-hash buckets. Each bucket's output is written under
-  ``out/bucket=K/`` and a lineage row (bucket, counts, error totals,
-  wall time, status) is appended to the sidecar, a JSON file the driver
-  writes through the Hadoop FileSystem API (no Spark job). The counts
-  are summed during the write by one pass-through ``mapInArrow`` above
-  the writer exchange (``_lineage_rollup``): each Arrow batch adds its
-  per-bucket sums to a driver accumulator. That stage is the result
-  stage, where Spark applies a task's accumulator update exactly once
-  (failed attempts' updates are dropped, a re-run map stage cannot
-  repeat them), and the driver cost is the same at any bucket count.
+  ``out/data/bucket=K/`` and a lineage row (bucket, counts, error
+  totals, wall time, status) is appended to the sidecar, a JSON file the
+  driver writes through the Hadoop FileSystem API (no Spark job). A
+  bucket that got no document has a row of zeros but no ``bucket=K``
+  directory. The counts are summed during the write by one
+  pass-through ``mapInArrow`` above the writer exchange
+  (``_lineage_rollup``): each Arrow batch adds its per-bucket sums to a
+  driver accumulator. That stage is the result stage, where Spark
+  applies a task's accumulator update exactly once (failed attempts'
+  updates are dropped, a re-run map stage cannot repeat them), and the
+  driver cost is the same at any bucket count.
   Accumulators need classic PySpark: Spark Connect has none. On
   restart, completed buckets are skipped via an anti-join of the bucket
   domain against the lineage sidecar — the driver-contract "resume
   from checkpoint".
-- **Read amplification**: the per-bucket loop filters the source per
-  bucket. On a raw parquet dump that re-scans the input n_buckets times;
-  at scale the input table must be bucketed on the SAME
+- **Read amplification**: every job is one or more passes of
+  ``_run_pass``, each over a list of pending buckets. By default there
+  is one pass per bucket, each filtering the source to its bucket. On a
+  raw parquet dump that re-scans the input n_buckets times; at scale
+  the input table must be bucketed on the SAME
   ``xxhash64(url) % n_buckets`` expression (Iceberg ``bucket(n, url)``
   partition transform) so each per-bucket scan prunes to its own
   partition — zero amplification AND bucket-granular resume. An input
   carrying a ``bucket`` partition column (one-time preparation:
   ``write_bucketed_input``) is detected and trusted: the per-bucket
   filter then partition-prunes at the scan (plan-tested). For
-  unbucketed inputs, ``--single-pass`` processes all pending buckets in
-  one job (one scan, output partitioned by bucket) at the cost of
-  run-granular rather than bucket-granular checkpointing; with a
-  bucketed input, single_pass is ignored (per-bucket is already pruned
-  and strictly better).
+  unbucketed inputs, ``--single-pass`` runs one pass over all pending
+  buckets (one scan) at the cost of run-granular rather than
+  bucket-granular checkpointing; with a bucketed input, single_pass is
+  ignored (per-bucket is already pruned and strictly better).
 - All shuffles are explicit; by default the extraction stage is
   map-only directly on scan splits (split sizing via
   ``spark.sql.files.maxPartitionBytes``), with a single opt-in salting
@@ -57,15 +61,14 @@ Design for 10^12 documents (SURVEY.md §4):
   caller's other queries never plan with it. Measured on the 60k-doc
   heavy corpus at pinned local[16], skipping the blob exchange cuts the
   end-to-end single-pass job from ~22 s to ~17 s.
-- **Writer sizing**: extracted rows reach the parquet writer through one
-  ``REBALANCE`` exchange (on ``bucket`` in single-pass, keyless per
-  bucket) that AQE sizes by bytes: partitions coalesce up to, and skewed
-  ones split at, ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so
-  writer tasks and files follow data volume — one file per bucket until
-  a bucket outgrows that size. This needs AQE (on by default): with it
-  off, ``REBALANCE`` is a plain hash exchange on ``bucket``, one writer
-  task per bucket (per-bucket loop: round-robin into
-  ``spark.sql.shuffle.partitions`` tasks).
+- **Writer sizing**: in every pass, extracted rows reach the parquet
+  writer through one ``REBALANCE`` exchange on ``bucket`` that AQE sizes
+  by bytes: partitions coalesce up to, and skewed ones split at,
+  ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so writer tasks
+  and files follow data volume — one file per bucket until a bucket
+  outgrows that size. This needs AQE (on by default): with it off,
+  ``REBALANCE`` is a plain hash exchange on ``bucket``, one writer task
+  per bucket.
 - **Sink format**: every parquet file the engine writes (data, bucketed
   input, ``cdx`` and per-document formats, the streaming sink) carries
   zstd column chunks, ``session.PARQUET_COMPRESSION`` passed as a write
@@ -105,50 +108,30 @@ _LINEAGE_SUMS = (
 )
 
 
-def wants_blob_shuffle(repartition_blobs: bool, salt: int,
-                       big_doc_bytes: int) -> bool:
-    """Single source of truth for whether the raw blobs get the salting
-    exchange: explicit opt-in, a non-zero salt, or big-doc isolation
-    (the latter two can't work without it)."""
-    return repartition_blobs or salt != 0 or big_doc_bytes > 0
-
-
-def maybe_salted(df: DataFrame, partitions: int, salt: int = 0,
-                 big_doc_bytes: int = 0, repartition_blobs: bool = False
-                 ) -> DataFrame:
-    """Apply the salting exchange only when asked for (see
-    wants_blob_shuffle); otherwise extraction runs map-only on the scan
-    splits (the default — no shuffle ever touches the raw blobs, the
-    shape a 100 TB job needs)."""
-    if wants_blob_shuffle(repartition_blobs, salt, big_doc_bytes):
-        return salted(df, partitions, salt=salt, big_doc_bytes=big_doc_bytes)
-    return df
-
-
-def salted(df: DataFrame, partitions: int, salt: int = 0,
-           big_doc_bytes: int = 0) -> DataFrame:
+def salted(df: DataFrame, partitions: int, big_doc_bytes: int = 0
+           ) -> DataFrame:
     """Salted repartition of the input, with optional big-document
     isolation.
 
-    Base behavior: repartition on a full-width ``xxhash64(url, salt)``
-    so Spark's hash-partitioner sees a uniform key domain. (Hashing a
+    Base behavior: repartition on a full-width ``xxhash64(url, 0)`` so
+    Spark's hash-partitioner sees a uniform key domain. (Hashing a
     pre-computed pmod value re-hashes a tiny domain and leaves
     partitions empty/skewed — measured in tests.)
 
     With ``big_doc_bytes > 0``, documents above the threshold are split
-    into their OWN partition space (a union of two repartitions), so a
-    giant blob's task carries no share of small documents. Hash
-    partitioning alone cannot provide that isolation — a big doc's
-    partition always co-hosts ~1/partitions of the small docs. The
-    split costs a second pass over the source (the size predicate needs
-    the blob), so it is opt-in; at scale, prefer persisting the bucket
-    or carrying a size column in the table schema.
+    into their OWN partition space (a union of two repartitions, the big
+    side keyed on another seed), so a giant blob's task carries no share
+    of small documents. Hash partitioning alone cannot provide that
+    isolation — a big doc's partition always co-hosts ~1/partitions of
+    the small docs. The split costs a second pass over the source (the
+    size predicate needs the blob), so it is opt-in; at scale, prefer
+    persisting the bucket or carrying a size column in the table schema.
     """
-    small_key = F.xxhash64(F.col("url"), F.lit(salt))
+    small_key = F.xxhash64(F.col("url"), F.lit(0))
     if not big_doc_bytes:
         return df.repartition(partitions, small_key)
     size = F.length("html")
-    big_key = F.xxhash64(F.col("url"), F.lit(salt + 0x9E3779B9))
+    big_key = F.xxhash64(F.col("url"), F.lit(0x9E3779B9))
     small = df.where(size <= big_doc_bytes).repartition(partitions, small_key)
     big = df.where(size > big_doc_bytes).repartition(
         max(partitions // 4, 1), big_key)
@@ -200,18 +183,15 @@ def _lineage_rollup(df: DataFrame):
 
 
 def _lineage_rows(sums: dict, buckets: List[int], wall: float,
-                  finished: str, keep_empty: bool = False) -> List[dict]:
+                  finished: str) -> List[dict]:
     """One lineage row per bucket from the rollup's accumulated ``sums``,
     its keys in sidecar field order (_append_lineage writes them as they
-    come). Buckets that saw no document are dropped unless
-    ``keep_empty``."""
+    come). A bucket that saw no document gets a row of zeros, so a rerun
+    skips it like any other complete bucket."""
+    zeros = [0] * (1 + len(_LINEAGE_SUMS))
     rows = []
     for b in buckets:
-        got = sums.get(b)
-        if got is None:
-            if not keep_empty:
-                continue
-            got = [0] * (1 + len(_LINEAGE_SUMS))
+        got = sums.get(b, zeros)
         row = {"bucket": b, "n_docs": got[0]}
         row.update(zip((f for f, _ in _LINEAGE_SUMS), got[1:]))
         row.update(wall_secs=wall, status="ok", finished_at=finished)
@@ -343,7 +323,7 @@ def _validate_bucket_domain(spark: SparkSession, df, input_path: str,
                             input_format: str, n_buckets: int) -> None:
     """Guard against a mismatched --buckets / unrelated 'bucket' column
     (values outside range(n_buckets) would be silently skipped forever by
-    the per-bucket loop). ADVICE r2: the old full distinct().collect()
+    the per-bucket passes). ADVICE r2: the old full distinct().collect()
     was an extra whole-input Spark job on every run — instead (a) read the
     domain from the partition listing when the layout is bucket=K
     directories, else (b) run an out-of-range FILTER, which
@@ -401,7 +381,6 @@ def run_extraction_job(
     mode: str = "accuracy",
     partitions: Optional[int] = None,
     n_buckets: int = 8,
-    salt: int = 0,
     resume: bool = True,
     since: Optional[str] = None,
     until: Optional[str] = None,
@@ -443,49 +422,46 @@ def run_extraction_job(
     data_path = os.path.join(output_path, "data")
     spark = job_session(spark)
 
+    repartition_blobs = repartition_blobs or big_doc_bytes > 0
+
     if input_format == "warc" and single_pass and not since and not until:
         # fused shape (the scale path): parse + extract in ONE Python
         # task, blobs never round-trip through the JVM between stages
-        # (1.6x end-to-end on the 60k heavy soak); bucket re-derived from
-        # url post-extraction exactly like the parquet single-pass.
-        # Resume still works (pending buckets filter post-extraction) but
-        # re-parses completed archives — the two-stage form
-        # (_document_frame) is the resume-heavy alternative.
+        # (1.6x end-to-end on the 60k heavy soak); the pass derives the
+        # bucket from url after extraction. Resume still works (pending
+        # buckets filter post-extraction) but re-parses completed
+        # archives — the two-stage form (_document_frame) is the
+        # resume-heavy alternative. Split sizing reads only this
+        # binaryFile relation's file listing, so no per-record document
+        # plan is built on this path.
         from zpdfspark.spark.warc_source import (binary_files,
                                                  warc_extract_arrow_batches)
-        binary = binary_files(spark, input_path)
-        prebuilt_result = _extracted(
-            binary.select("path", "content"),
-            warc_extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes,
-                                       http_ok_only=http_ok_only),
-            quality_gate,
-        ).withColumn("bucket", bucket_of(F.col("url"), n_buckets))
-        # split sizing reads only this binaryFile relation's file listing
-        # (the archives the two-stage reader would list too), so no
-        # per-record document plan is built on this path
-        df, scan = None, binary
+        src = binary_files(spark, input_path).select("path", "content")
+        kernel = warc_extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes,
+                                            http_ok_only=http_ok_only)
     else:
-        prebuilt_result = None
-        df, input_bucketed = _document_frame(spark, input_path, input_format,
-                                             n_buckets, since, until,
-                                             http_ok_only)
-        if input_bucketed and single_pass:
-            # single-pass exists FOR unbucketed inputs (one scan instead
-            # of n_buckets scans); with a bucketed layout each per-bucket
-            # scan is already pruned, and the per-bucket path's
-            # bucket-granular idempotent overwrite is strictly better
-            single_pass = False
-        scan = df
-    if not wants_blob_shuffle(repartition_blobs, salt, big_doc_bytes):
+        src, input_bucketed = _document_frame(spark, input_path, input_format,
+                                              n_buckets, since, until,
+                                              http_ok_only)
+        # single-pass exists FOR unbucketed inputs (one scan instead of
+        # n_buckets scans); with a bucketed layout each per-bucket scan is
+        # already pruned, and bucket-granular checkpointing is strictly
+        # better
+        single_pass = single_pass and not input_bucketed
+        kernel = extract_arrow_batches(mode, max_doc_bytes=max_doc_bytes)
+    if not repartition_blobs:
         # map-only path: scan splits are the work units — size them
-        _tune_scan_splits(spark, scan, partitions)
-    return _run_buckets(spark, df, n_buckets, partitions, salt, resume,
-                        extract_arrow_batches(mode,
-                                              max_doc_bytes=max_doc_bytes),
-                        big_doc_bytes, single_pass, repartition_blobs,
-                        data_path, lineage_path,
-                        prebuilt_result=prebuilt_result,
-                        quality_gate=quality_gate)
+        _tune_scan_splits(spark, src, partitions)
+    done = set(completed_buckets(spark, lineage_path)) if resume else set()
+    todo = [b for b in range(n_buckets) if b not in done]
+    rows = []
+    for buckets in ([todo] if single_pass and todo else [[b] for b in todo]):
+        rows += _run_pass(spark, src, kernel, buckets, n_buckets, partitions,
+                          repartition_blobs, big_doc_bytes, quality_gate,
+                          data_path, lineage_path)
+    return {"buckets_total": n_buckets, "buckets_skipped": len(done),
+            "buckets_run": len(rows), "docs": sum(r["n_docs"] for r in rows),
+            "errors": sum(r["n_errors"] for r in rows)}
 
 
 def _load_documents(spark: SparkSession, input_path: str, input_format: str,
@@ -512,9 +488,9 @@ def _load_documents(spark: SparkSession, input_path: str, input_format: str,
 def _document_frame(spark: SparkSession, input_path: str, input_format: str,
                     n_buckets: int, since: Optional[str],
                     until: Optional[str], http_ok_only: bool):
-    """The (url, html, bucket) frame the per-bucket and two-stage
-    single-pass paths extract from, and whether the input already carried
-    the bucket column."""
+    """The (url, html, bucket) document frame every pass but the fused
+    WARC one extracts from, and whether the input already carried the
+    bucket column."""
     df = _load_documents(spark, input_path, input_format, since, until,
                          http_ok_only)
     if "bucket" not in df.columns:
@@ -522,7 +498,7 @@ def _document_frame(spark: SparkSession, input_path: str, input_format: str,
             "bucket", bucket_of(F.col("url"), n_buckets)), False
     # the input table is ALREADY laid out by the resume bucket (a
     # `bucket=K` partition column, written by write_bucketed_input or
-    # an Iceberg bucket transform): trust it — the per-bucket loop's
+    # an Iceberg bucket transform): trust it — a per-bucket pass's
     # `bucket = K` filter then PRUNES the scan to one partition
     # directory (zero read amplification; pipeline docstring). The
     # column must have been produced by the same bucket_of()
@@ -547,55 +523,17 @@ def _extracted(df: DataFrame, kernel, quality_gate: bool) -> DataFrame:
     return result
 
 
-def _run_buckets(spark, df, n_buckets, partitions, salt, resume, kernel,
-                 big_doc_bytes, single_pass, repartition_blobs, data_path,
-                 lineage_path, prebuilt_result=None,
-                 quality_gate=False) -> dict:
-    done = set(completed_buckets(spark, lineage_path)) if resume else set()
-    todo = [b for b in range(n_buckets) if b not in done]
-    if single_pass and todo:
-        rows = _run_single_pass(spark, df, todo, n_buckets, partitions, salt,
-                                kernel, big_doc_bytes, data_path,
-                                lineage_path, repartition_blobs,
-                                prebuilt_result=prebuilt_result,
-                                quality_gate=quality_gate)
-    else:
-        rows = []
-        for bucket in todo:
-            t0 = time.time()
-            part = maybe_salted(
-                df.where(F.col("bucket") == bucket).drop("bucket"),
-                partitions, salt=salt, big_doc_bytes=big_doc_bytes,
-                repartition_blobs=repartition_blobs)
-            result = _extracted(part, kernel, quality_gate)
-            out_dir = os.path.join(data_path, f"bucket={bucket}")
-            # per-bucket lineage rolls up during the write, in the result
-            # stage above the writer exchange (a keyless REBALANCE that
-            # AQE sizes by bytes, module docstring) — see _lineage_rollup
-            out, sums = _lineage_rollup(
-                result.hint("rebalance").withColumn("bucket", F.lit(bucket)))
-            out.drop("bucket").write.mode("overwrite") \
-                .option("compression", PARQUET_COMPRESSION).parquet(out_dir)
-            rows += _lineage_rows(
-                sums.value, [bucket], time.time() - t0,
-                time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                keep_empty=True)
-            _append_lineage(spark, rows[-1:], lineage_path)
-    return {"buckets_total": n_buckets, "buckets_skipped": len(done),
-            "buckets_run": len(rows), "docs": sum(r["n_docs"] for r in rows),
-            "errors": sum(r["n_errors"] for r in rows)}
+def _run_pass(spark, src, kernel, todo, n_buckets, partitions,
+              repartition_blobs, big_doc_bytes, quality_gate, data_path,
+              lineage_path) -> List[dict]:
+    """One job over the pending ``todo`` buckets of ``src``: extraction,
+    one writer exchange, the lineage rollup and a write into the
+    ``bucket=K`` partitions of ``data_path``. Then one lineage row per
+    bucket, an empty one included, is appended, and the rows returned.
 
-
-def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, kernel,
-                     big_doc_bytes, data_path, lineage_path,
-                     repartition_blobs: bool = False, prebuilt_result=None,
-                     quality_gate=False) -> List[dict]:
-    """One job over all pending buckets: a single source scan, output
-    partitioned by bucket, lineage appended per bucket afterwards and
-    returned.
-    `prebuilt_result` (fused-source kernels, e.g. WARC parse+extract,
-    quality gate included) skips the extraction step here and enters at
-    the bucket filter."""
+    ``src`` is a document frame (url, html, bucket), filtered to ``todo``
+    before the kernel, or a fused archive frame (path, content), whose
+    bucket is derived from url and filtered after it."""
     t0 = time.time()
 
     def pending(d: DataFrame) -> DataFrame:
@@ -605,18 +543,21 @@ def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, kernel,
         return d if len(todo) == n_buckets else d.where(
             F.col("bucket").isin(todo))
 
-    if prebuilt_result is not None:
-        result = pending(prebuilt_result)
+    if "bucket" in src.columns:
+        part = pending(src).drop("bucket")
+        if repartition_blobs:
+            part = salted(part, partitions, big_doc_bytes=big_doc_bytes)
+        # carry the bucket through the kernel as a label (cheaper than
+        # widening the kernel schema): one bucket's rows keep the bucket
+        # they were scanned under, so a bucketed input's trusted layout
+        # stands; several buckets re-derive it from url, which is exact
+        label = F.lit(todo[0]) if len(todo) == 1 \
+            else bucket_of(F.col("url"), n_buckets)
+        result = _extracted(part, kernel, quality_gate) \
+            .withColumn("bucket", label)
     else:
-        part = maybe_salted(pending(df), partitions,
-                            salt=salt, big_doc_bytes=big_doc_bytes,
-                            repartition_blobs=repartition_blobs)
-        # carry the bucket through the kernel via re-derivation (cheaper
-        # than widening the kernel schema): the bucket expression is a
-        # pure function of url, so recomputing it after extraction is
-        # exact
-        result = _extracted(part.drop("bucket"), kernel, quality_gate) \
-            .withColumn("bucket", bucket_of(F.col("url"), n_buckets))
+        result = pending(_extracted(src, kernel, quality_gate).withColumn(
+            "bucket", bucket_of(F.col("url"), n_buckets)))
     # shuffle the EXTRACTED rows (text — ~10x smaller than the raw
     # blobs, which stay map-only) into one bucket-keyed exchange that AQE
     # sizes by bytes (module docstring): each bucket is written as one
@@ -628,20 +569,19 @@ def _run_single_pass(spark, df, todo, n_buckets, partitions, salt, kernel,
     # run (job died after some task commits were visible — v2 committer,
     # object-store direct committers, or a prior run whose lineage write
     # failed) re-extracts exactly the pending buckets and OVERWRITES
-    # those bucket=K partitions, so the resume is idempotent like the
-    # per-bucket path; an append would duplicate the partial rows.
-    # Set per write: library code never changes the session conf.
+    # those bucket=K partitions, so the resume is idempotent; an append
+    # would duplicate the partial rows. A bucket with no rows writes no
+    # partition. Set per write: library code never changes the session
+    # conf.
     out.write.mode("overwrite") \
         .option("partitionOverwriteMode", "dynamic") \
         .option("compression", PARQUET_COMPRESSION) \
         .partitionBy("bucket").parquet(data_path)
 
-    wall = time.time() - t0
-    finished = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-    lineage_rows = _lineage_rows(sums.value, todo, wall, finished)
-    if lineage_rows:
-        _append_lineage(spark, lineage_rows, lineage_path)
-    return lineage_rows
+    rows = _lineage_rows(sums.value, todo, time.time() - t0,
+                         time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()))
+    _append_lineage(spark, rows, lineage_path)
+    return rows
 
 
 def parse_page_range(spec: str):
@@ -796,7 +736,6 @@ def main(argv: Optional[List[str]] = None) -> None:
                          "rows instead of whole-document rows")
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--buckets", type=int, default=8)
-    ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--http-ok-only", action="store_true",
                     help="WARC input: drop response records with a "
@@ -818,7 +757,7 @@ def main(argv: Optional[List[str]] = None) -> None:
                          "partitions (0 = off; costs a second source pass)")
     ap.add_argument("--repartition-blobs", action="store_true",
                     help="salted repartition of the raw blobs before "
-                         "extraction (implied by --salt/--big-doc-bytes; "
+                         "extraction (implied by --big-doc-bytes; "
                          "default is map-only on scan splits)")
     args = ap.parse_args(argv)
 
@@ -835,7 +774,7 @@ def main(argv: Optional[List[str]] = None) -> None:
         return
     summary = run_extraction_job(
         spark, args.input, args.output, mode=args.mode,
-        partitions=args.partitions, n_buckets=args.buckets, salt=args.salt,
+        partitions=args.partitions, n_buckets=args.buckets,
         resume=not args.no_resume, since=args.since, until=args.until,
         input_format=args.input_format, max_doc_bytes=args.max_doc_bytes,
         big_doc_bytes=args.big_doc_bytes, single_pass=args.single_pass,
